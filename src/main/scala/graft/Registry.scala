@@ -309,7 +309,8 @@ object Registry {
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Batch twin of q64 — same semantics, same oracle, but a plain
-    // (explainable) batch plan: the PlanAudit surface for the interval join.
+    // (explainable) batch plan: the plan-inspection surface for the
+    // interval join.
     "q77_interval_join" -> Entry((s, d) => Events.intervalJoin(s, d)
       .orderBy("p_event", "v_event"), Some(
       """SELECT p.event_id AS p_event, v.event_id AS v_event,

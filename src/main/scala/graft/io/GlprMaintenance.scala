@@ -1769,23 +1769,6 @@ object GlprMaintenance {
   }
   private val bucketSpjCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q353 join (PlanAudit reads
-    * this): the zero-join-exchange SPJ plan itself. */
-  def bucketSpjPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    bucketSpjPipeline(spark, dir): Unit // ensure staged
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_bj", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_bj.root", bucketSpjCache.get(dir))
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.sql(
-      """SELECT f.lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(f.doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_bj.ns.facts f JOIN glpr_bj.ns.dims d
-        |ON f.doc_id = d.doc_id
-        |GROUP BY 1""".stripMargin)
-  }
 
   /** q354 — IMMUTABLE TAGS as retention overrides, end to end: tag the
     * ingest snapshot, DELETE a slice (copy-on-write — a new version),
@@ -2053,20 +2036,6 @@ object GlprMaintenance {
   }
   private val dedupAuditCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q358 audit (PlanAudit reads
-    * this): the exchange-free GROUP BY doc_id over the bucket classes. */
-  def dedupAuditPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    dedupAuditPipeline(spark, dir): Unit // ensure staged
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_da", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_da.root", dedupAuditCache.get(dir))
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s2.sql(
-      """SELECT doc_id, CAST(count(*) AS BIGINT) AS copies
-        |FROM glpr_da.ns.docs
-        |GROUP BY doc_id HAVING count(*) > 1""".stripMargin)
-  }
 
   /** q360 — METADATA TABLES from plain SQL: two ingests mint versions
     * 1 and 2, then `SELECT version, n_rows FROM cat.ns.docs.history`

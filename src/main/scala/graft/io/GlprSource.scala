@@ -385,8 +385,8 @@ object GlprSource {
     // CatalogManager caches the catalog plugin instance after first use,
     // so re-setting spark.sql.catalog.glpr_cat.root for a DIFFERENT dir
     // on the same session would run DDL against the stale root
-    // (round-15 ADVICE — ScaleProbe iterates three SF dirs on one
-    // session and hit exactly this).
+    // (round 15: a probe iterating three SF dirs on one session hit
+    // exactly this).
     val s2 = freshCatalogSession(spark, "glpr_cat", root)
     val created = new java.io.File(root, "corpus/docs/_glpr_table").isFile
     if (!created) {
@@ -594,20 +594,6 @@ object GlprSource {
   }
   private val dynOwCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q319 join for PlanAudit (the
-    * registry entry collects onto the caller's session). */
-  def spjPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    storagePartitionedJoinPipeline(spark, dir): Unit // ensure staged
-    val root = spjRootCache.get(dir)
-    val s2 = freshCatalogSession(spark, "glpr_spj", root)
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.sql(
-      """SELECT d.lang, count(*) AS n_docs, min(m.doc_id) AS dim_min_id
-        |FROM glpr_spj.corpus.docs d JOIN glpr_spj.corpus.langdim m
-        |ON d.lang = m.lang GROUP BY d.lang""".stripMargin)
-  }
 
   /** The fixed doc_id slice expression behind the DML pipelines (q301/
     * q303): three contiguous id ranges `[min,100) [100,300) [300,max]`,
@@ -1765,27 +1751,6 @@ object GlprSource {
   }
   private val cboStatsCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q340 join (PlanAudit reads
-    * this; the registry entry collects onto the caller's session). */
-  def cboStatsJoinPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    cboStatsJoinPipeline(spark, dir): Unit // ensure staged
-    val root = cboStatsCache.get(dir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    s2.conf.set("spark.sql.cbo.enabled", "true")
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", (32 * 1024).toString)
-    val corpus = s2.read.format("graft.io.GlprSource").load(root)
-      .filter(col("doc_id") < 50L).select(col("doc_id"), col("lang"), col("text"))
-    s2.read.parquet(s"$dir/events.parquet")
-      .select(col("user_id").as("doc_id"))
-      .join(corpus, Seq("doc_id"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
 
   /** q332 — SCHEMA EVOLUTION end to end: the corpus INSERTed under the
     * base schema, `ALTER TABLE ADD COLUMN note STRING`, then a second
@@ -1857,19 +1822,6 @@ object GlprSource {
   }
   private val daysCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Un-rematerialized plan view of the q333 window read (PlanAudit +
-    * the GlprCatalogSpec prune pin read this). */
-  def daysPartitionPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    daysPartitionPipeline(spark, dir): Unit // ensure staged
-    val root = daysCache.get(dir)
-    val s2 = freshCatalogSession(spark, "glpr_days", root)
-    s2.sql("""SELECT substr(ts, 1, 10) AS day, count(*) AS n_docs
-      |FROM glpr_days.corpus.docs
-      |WHERE ts >= '2024-01-03' AND ts < '2024-01-05' GROUP BY 1""".stripMargin)
-  }
-  private[io] def daysStagedRoot(dir: String): String = daysCache.get(dir)
 
   /** q341 — MONTH PARTITIONING, `PARTITIONED BY (months(ts))` (round-17
     * verdict #4): the same prefix-transform channel as q333's days —
@@ -2006,18 +1958,6 @@ object GlprSource {
   }
   private val valueStatsCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q341 window read (PlanAudit +
-    * the GlprCatalogSpec prune pin read this). */
-  def monthsPartitionPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    monthsPartitionPipeline(spark, dir): Unit
-    val s2 = freshCatalogSession(spark, "glpr_mon", monthsCache.get(dir))
-    s2.sql("""SELECT substr(ts, 1, 7) AS month, count(*) AS n_docs
-      |FROM glpr_mon.corpus.docs
-      |WHERE ts >= '2024-02' AND ts <= '2024-02-29T23:59:59'
-      |GROUP BY 1""".stripMargin)
-  }
-  private[io] def monthsStagedRoot(dir: String): String = monthsCache.get(dir)
 
   /** q342 — TRUNCATE PARTITIONING, `PARTITIONED BY (truncate(4,
     * source))` (round-17 verdict #4): prefix width 4 over the src
@@ -2047,17 +1987,6 @@ object GlprSource {
   }
   private val truncCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Un-rematerialized plan view of the q342 probe (PlanAudit + the
-    * GlprCatalogSpec prune pin read this). */
-  def truncatePartitionPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    truncatePartitionPipeline(spark, dir): Unit
-    val s2 = freshCatalogSession(spark, "glpr_trn", truncCache.get(dir))
-    s2.sql("""SELECT source, count(*) AS n_docs
-      |FROM glpr_trn.corpus.docs
-      |WHERE source IN ('src7', 'src12') GROUP BY 1""".stripMargin)
-  }
-  private[io] def truncateStagedRoot(dir: String): String = truncCache.get(dir)
 
   /** q334 — HASH-BUCKET PARTITIONING, `PARTITIONED BY (bucket(8,
     * doc_id))`: bucket id = floorMod(doc_id, 8), tracked per shard at
@@ -2086,7 +2015,6 @@ object GlprSource {
   }
   private val bucketCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[io] def bucketStagedRoot(dir: String): String = bucketCache.get(dir)
 
   /** q335 — `TIMESTAMP AS OF` through the SQL front door: three slice
     * INSERTs, the version files' mtimes (the commit clock — immutable
@@ -2163,8 +2091,6 @@ object GlprSource {
   }
   private val reclusterCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[io] def reclusterStagedRoot(dir: String): String =
-    reclusterCache.get(dir)
 
   /** q337 — STREAMING CHANGE DATA CAPTURE ([[GlprCdfMicroBatchStream]]):
     * the q328 staging's WHOLE history consumed as a CDF stream under
@@ -2281,19 +2207,6 @@ object GlprSource {
   }
   private val streamMergeCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Un-rematerialized plan views of the two partitioned-table reads —
-    * the registry entries collect onto the caller's session (hiding the
-    * scan behind a LocalRelation), so PlanAudit reads these instead. */
-  def partitionedSelectPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    partitionedTableSession(spark, dir).sql(
-      "SELECT source, count(*) AS n_docs FROM glpr_part.corpus.docs " +
-        "WHERE lang = 'en' GROUP BY source")
-  def partitionedCountPlanFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    partitionedTableSession(spark, dir).sql(
-      "SELECT lang, count(*) AS n_docs FROM glpr_part.corpus.docs GROUP BY lang")
 
   /** Shared staging for the partitioned-table entries (q304/q306):
     * CREATE ... PARTITIONED BY (lang) + one clustered INSERT per
@@ -6523,7 +6436,19 @@ private[io] final class GlprChunkCursor(file: String) {
   * standard DSv2 reader contract (downstream operators that buffer rows
   * copy them). The default scan path is [[GlprColumnarReader]]; this
   * reader is the contractual fallback and the parity reference.
-  * Measured in [[graft.tools.GlprDecodeBench]] — see numbers there. */
+  *
+  * Measured decode times (synthetic corpus staged through the DSv2
+  * write path, local[8], min-of-5), three reader generations — r14
+  * `DataInputStream`+`InternalRow.fromSeq`, then this chunk-buffered
+  * UnsafeRowWriter row reader, then [[GlprColumnarReader]]:
+  *
+  *  - 2M rows × 16-md5 text (~1.1 GB): full-schema 0.390 -> 0.210 ->
+  *    0.186s (2.1x total), text-only 0.376 -> 0.170 -> 0.147s (2.6x),
+  *    id-only pruned count 0.313 -> 0.135 -> 0.117s (2.7x).
+  *  - 8M rows × 2-md5 text (~0.9 GB, per-record-overhead-bound):
+  *    full-schema 0.973 -> 0.302 -> 0.192s (5.1x total), text-only
+  *    0.801 -> 0.237 -> 0.160s (5.0x), id-only 0.714 -> 0.181 -> 0.113s
+  *    (6.3x). */
 class GlprReader(file: String, required: StructType, range: GlprSource.IdRange,
     limit: Option[Int] = None, changeType: String = "insert",
     dvMask: Array[Long] = null,
@@ -6655,7 +6580,8 @@ class GlprReader(file: String, required: StructType, range: GlprSource.IdRange,
   * column pruning work unchanged (skipped records never touch the
   * vectors, pruned fields never leave the byte stream). All columns are
   * non-null by format contract. Same diagnostics as the row reader
-  * (shared cursor). Measured in [[graft.tools.GlprDecodeBench]]. */
+  * (shared cursor). Measured decode times are in the [[GlprReader]]
+  * scaladoc (the third generation of each figure). */
 class GlprColumnarReader(file: String, required: StructType,
     range: GlprSource.IdRange,
     limit: Option[Int] = None, changeType: String = "insert",

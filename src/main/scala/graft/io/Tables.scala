@@ -74,29 +74,6 @@ object Tables {
       df.repartition(target, col(key))
     else df
   }
-
-  /** Run `body` with session confs temporarily set, restoring the prior
-    * values (or unsetting) afterwards — scopes an execution-time knob
-    * (e.g. an AQE coalesce floor) to ONE operator's eager materialization
-    * instead of taxing the whole session. Only sound around EAGER work
-    * (localCheckpoint/persist+count): a lazily returned frame executes
-    * after the restore and never sees the override. */
-  def withSessionConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach { case (k, o) =>
-      o.fold(spark.conf.unset(k))(v => spark.conf.set(k, v)) }
-  }
-
-  /** The lineitem-derived COO matrix used to exercise IPF at every scale
-    * factor (FIXTURES.md §2): row = l_partkey, col = month(l_shipdate),
-    * value = Σ l_extendedprice. */
-  def lineitemCoo(spark: SparkSession, dir: String, valueCol: String = "l_extendedprice"): CooMatrix =
-    CooMatrix(
-      apply(spark, dir, "lineitem")
-        .groupBy(col("l_partkey").as(CooMatrix.Row), month(col("l_shipdate")).as(CooMatrix.Col))
-        .agg(sum(valueCol).as(CooMatrix.Value)))
 }
 
 /** Schema-typed CSV I/O for the reference's resource family — replaces

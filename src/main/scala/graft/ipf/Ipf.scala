@@ -9,30 +9,15 @@ import graft.matrix.{CooMatrix, Marginals}
   * rescale rows to the x-marginal and columns to the y-marginal until the
   * imputed marginals converge to the known ones.
   *
-  * Spark shape of one iteration: two fused fit passes, each = one hash
-  * aggregation (map-side partial) + one equi-join (AQE broadcasts the
-  * factor side — it has one row per matrix row-key, tiny next to the
-  * matrix). Transposes are free projections in COO. Per-iteration
+  * Spark shape of one iteration: the fit targets ride on the matrix as two
+  * extra columns, so a sweep is two keyed window sums (rows, then columns)
+  * plus projections — no joins inside the loop. Per-iteration
   * `localCheckpoint` truncates lineage so the plan does not grow
   * O(iterations) — the classic Spark iterative-algorithm pattern.
   */
 object Ipf {
 
   final case class Result(matrix: CooMatrix, loss: Double, iterations: Int)
-
-  /** Inferred `optimize-marginal` (`core.clj:82-87`; see SURVEY.md §0). */
-  def fitRows(marginal: DataFrame, m: CooMatrix): CooMatrix = m.fitRows(marginal)
-
-  /** One IPF sweep. Reference `step` (`core.clj:89-97`). Uses the one-pass
-    * window fit ([[CooMatrix.fitRowsOnePass]]): each fit consumes the
-    * matrix once, so a sweep is one narrow chain (two keyed window sums +
-    * two broadcast joins) instead of the agg+join shape whose double
-    * consumption doubles the plan per fit; within the loop's checkpoint
-    * segments that halves both planning and recompute. Last-ulp sum-order
-    * differences vs the hash agg are inside the loop's loss tolerances
-    * (IpfSpec pins dense-mirror parity at 1e-8). */
-  def step(x: DataFrame, y: DataFrame, m: CooMatrix): CooMatrix =
-    m.fitRowsOnePass(x).transpose.fitRowsOnePass(y).transpose
 
   /** Reference `converge` (`core.clj:99-119`) with its exact stopping
     * semantics: stop when loss < threshold (fit good enough), |Δloss| <
@@ -43,7 +28,8 @@ object Ipf {
     * Initial loss sentinels are Integer/MAX_VALUE (`core.clj:108-109`).
     *
     * `checkpointEvery` controls how often lineage is truncated; 1 is the
-    * safe default, higher values trade driver round-trips for plan size.
+    * safe default, higher values trade driver round-trips for plan size
+    * (q26 runs faster at 2; numbers in `Queries.ipfConverge`).
     *
     * `lossEvery` batches the convergence check (SURVEY.md §7.4 item 1):
     * the loss is a driver-side scalar collect — a full job plus a barrier
@@ -100,13 +86,9 @@ object Ipf {
         .withColumn(Value, col(Value) * (col(Ty) / col("__cs")))
         .drop("__cs")
     }
-    // Same stats-resetting re-wrap as CooMatrix.checkpointed (see the
-    // scaladoc there: LogicalRDD carries the origin plan's size estimate,
-    // which compounds across iterations into BigInteger stats blowup).
-    def ckpt(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint(true)
-      df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    // CooMatrix.checkpointed keeps every column, so the attached targets
+    // survive the stats-resetting re-wrap.
+    def ckpt(df: DataFrame): DataFrame = CooMatrix(df).checkpointed().df
     def asCoo(df: DataFrame): CooMatrix =
       CooMatrix(df.select(col(Row), col(Col), col(Value)))
     var fused = ckpt(seed.df

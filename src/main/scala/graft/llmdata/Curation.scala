@@ -291,7 +291,7 @@ object Curation {
   }
 
   /** Mixture rebalancing by biproportional fitting — the reference's IPF
-    * algorithm ([[graft.ipf.Ipf.step]], core.clj:89-97) applied to the
+    * algorithm (reference `step`, core.clj:89-97) applied to the
     * curation problem it was built for at this engine's scale: given the
     * observed (source × lang) document counts, compute per-cell sampling
     * weights whose weighted corpus hits UNIFORM source and lang marginals

@@ -306,7 +306,7 @@ object Dedup {
     * scale the probe side (a benchmark suite) is tiny next to the corpus:
     * the band join broadcasts it and the corpus is never shuffled.
     *
-    * Measured cost note (round-10 SandwichProbe, sf0.1, local[32]): the
+    * Measured cost note (round 10, sf0.1, local[32]): the
     * round-9 "drift" (bench 1.22s → 2.08s with no code change) is NOT
     * leftover-block residue from earlier bench queries. Two
     * probe/pollute/probe sandwiches in one JVM — pollution = the q94/q121
@@ -653,10 +653,9 @@ object Dedup {
       * at the partial→final exchange and on every sort-based-fallback
       * spill (ObjectHashAggregate falls back beyond 128 in-memory keys,
       * so at corpus cardinality the buffer rides the sorter constantly).
-      * Measured on this buffer (graft.tools.{EncoderBench,SimHashAbBench}):
-      * serialized row 288 B structural vs 280 B kryo, and end-to-end
-      * aggregation time at parity (0.91 s vs 0.98 s min-of-5 interleaved,
-      * 5M rows / 100k groups — inside this box's noise). The swap buys no
+      * Measured on this buffer: serialized row 288 B structural vs 280 B
+      * kryo, and end-to-end aggregation time at parity (0.91 s vs 0.98 s
+      * min-of-5 interleaved, 5M rows / 100k groups — inside noise). The swap buys no
       * measured speed at this scale; it standardizes both typed
       * Aggregators on the flat in-format Tungsten layout and removes the
       * kryo reflective-dispatch dependency from the hottest aggregation
@@ -1157,12 +1156,12 @@ object Dedup {
     * (band keys are per-document — min over the doc's OWN shingles — so
     * indexing history separately from the full corpus changes nothing).
     *
-    * COST ENVELOPE (round-12 tools/SettleProbe, sf0.1, local[32], warm
-    * min-of-3): end-to-end 3.99s = 0.21s staging write + 0.44s micro-batch
-    * harness (null-drain floor) + ~3.3s query logic, dominated by building
-    * and broadcasting the history index (minhash signatures + shingle sets
-    * over ~99% of the corpus). Future drift: re-run SettleProbe and
-    * attribute by phase — only the residual is this operator's plan. */
+    * COST ENVELOPE (round 12, sf0.1, local[32], warm min-of-3):
+    * end-to-end 3.99s = 0.21s staging write + 0.44s micro-batch harness
+    * (null-drain floor) + ~3.3s query logic, dominated by building and
+    * broadcasting the history index (minhash signatures + shingle sets
+    * over ~99% of the corpus). Attribute future drift by phase — only the
+    * residual is this operator's plan. */
   def streamingHistoryNearDup(spark: org.apache.spark.sql.SparkSession, dir: String,
       batchSize: Long = 100L, numHashes: Int = 8, bandRows: Int = 2,
       k: Int = 3, simThreshold: Double = 0.5,
@@ -1177,7 +1176,7 @@ object Dedup {
     // corpus) is the operator's one-time ingest-side artifact — "the
     // corpus so far is indexed once" is the contract above — so it is
     // staged per (JVM, dir, params) like every other cached fixture
-    // (round-12 SettleProbe attributed ~3.3s of the 4s settle to
+    // (a round-12 settle breakdown attributed ~3.3s of the 4s settle to
     // rebuilding it on every call). At 100 TB this index is a maintained
     // TABLE (pre-partitioned by band_key); here the materialized rows
     // re-enter each settle session as local frames.
@@ -1328,8 +1327,8 @@ object Dedup {
     * keys. Same prune + islands tail, same output schema; span parity
     * with the md5 variant is pinned in WindowHashesSpec (identical spans
     * on the fixture — a digest collision would have to strike inside one
-    * corpus to diverge, odds ~1e-18 per pair). Measured (TimeProbe,
-    * sf0.1, local[32], cold): q184 8.45 s → q198 1.80 s, identical 259
+    * corpus to diverge, odds ~1e-18 per pair). Measured (sf0.1,
+    * local[32], cold): q184 8.45 s → q198 1.80 s, identical 259
     * spans — 4.7× from dropping the per-window md5 + concat and shrinking
     * the shuffle key 32 B → 8 B. */
   def duplicatedSpansRolling(docs: DataFrame, windowTokens: Int = 8,

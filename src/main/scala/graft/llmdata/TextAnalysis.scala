@@ -200,10 +200,11 @@ object TextAnalysis {
   private def bpeChain(docs: DataFrame, steps: Int): (DataFrame, Seq[DataFrame]) = {
     require(steps >= 1)
     // Each merge step embeds the prior vocab plan TWICE (pair-count agg +
-    // crossJoin probe) — the same 2^k leaf-doubling UnrollProbe documents
-    // for agg+join IPF chains. A lineage checkpoint every few steps caps
-    // the doubling (values unchanged — truncation only); the shipped
-    // steps=2..3 certification paths never hit it and stay fully lazy.
+    // crossJoin probe) — the same 2^k leaf-doubling measured for agg+join
+    // IPF chains (CooMatrix.fitRowsExactOnePass scaladoc). A lineage
+    // checkpoint every few steps caps the doubling (values unchanged —
+    // truncation only); the shipped steps=2..3 certification paths never
+    // hit it and stay fully lazy.
     val checkpointEvery = 4
     var vocab = docs
       .select(explode(regexp_extract_all(col("text"), lit(bpePattern), lit(0))).as("piece"))

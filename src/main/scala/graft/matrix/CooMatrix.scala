@@ -130,10 +130,10 @@ final case class CooMatrix(df: DataFrame) {
     * subtree + join probe), so an unrolled chain of k fits doubles the
     * logical plan per fit — 2^k leaves, super-linear planning AND
     * execution that lineage checkpoints only cap at ~2s per truncation
-    * barrier (measured; see tools/UnrollProbe). A window fit consumes its
-    * input once, so a k-fit chain stays a linear narrow plan: 2/4/8
-    * unrolled sweeps measured 0.99/1.13/1.06s at sf0.1 vs 2.2/6.1/10.2s
-    * for the checkpointed agg+join chain.
+    * barrier (measured). A window fit consumes its input once, so a k-fit
+    * chain stays a linear narrow plan: 2/4/8 unrolled sweeps measured
+    * 0.99/1.13/1.06s at sf0.1 vs 2.2/6.1/10.2s for the checkpointed
+    * agg+join chain.
     *
     * Scale tradeoff, scaladoc'd deliberately: WindowExec buffers one
     * partition group at a time through a spillable row array, so a fitted

@@ -73,8 +73,4 @@ object EmbeddingPca {
     graft.llmdata.Similarity.ivfTopK(
       project(spark, dir, k).select(col("vec_id"), col("pc").as("embedding")),
       nQueries = nQueries, k = topK, nCells = nCells, nProbe = nProbe)
-
-  /** The explained-variance spectrum as a 1-row-per-component frame. */
-  def varianceSpectrum(emb: DataFrame, k: Int = 8): Seq[Double] =
-    fit(emb, k).explainedVariance.toArray.toSeq
 }

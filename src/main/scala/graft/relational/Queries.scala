@@ -410,7 +410,7 @@ object Queries {
     * 0.99/1.13/1.06s, vs 2.2/6.1/10.2s for the former agg+join chain with
     * every-2nd-sweep checkpoints (the round-10 "weak" q94/q121 cost; the
     * ~2s nonlinearity at each truncation barrier was the checkpoint
-    * itself — see tools/UnrollProbe). */
+    * itself). */
   /** 3-way IPF raking, one sweep (q286): the reference's 2-marginal
     * `step` generalized to THREE marginals — the statistical-agency
     * raking shape (region × month × class cells calibrated to three
@@ -497,43 +497,28 @@ object Queries {
     // 8-deep join/agg lineage costs more in planning than the saved
     // materialization barriers.)
     //
-    // COST ENVELOPE (round-12 IpfSweepProbe, warm JVM, sf0.1, local[32],
-    // one-pass window sweeps) — the baseline future drift in the bench's
-    // slowest query is judged against. Total wall is linear in sweeps:
+    // COST ENVELOPE (round 12, warm JVM, sf0.1, local[32], one-pass window
+    // sweeps). Total wall is linear in sweeps:
     //   total ≈ 0.9s fixed + 0.55s/sweep + 0.63s per loss barrier
     // measured as: maxIter 2/4/8 → 2.27/2.88/5.10s (slope 0.55); 7 extra
     // loss barriers (lossEvery 1 vs 100) → +4.43s (0.63 each); checkpoint
-    // cadence 1 vs 2 within noise (5.25 vs 5.10). Round-10's agg+join
-    // sweeps measured 0.71s/sweep, 6.40s total — the one-pass step
-    // (Ipf.step scaladoc) is where the saving came from. r21 re-tuned the
-    // intercept, not the slope: loop-constant marginals are checkpointed
-    // once inside converge (each sweep's two broadcast builds re-ran the
-    // lineitem scan+agg before) and one loss barrier was dropped; shipped
-    // config (ck=2, loss=maxIter, 8 sweeps, 1 in-loop + 1 final loss)
-    // lands at ~3.2-3.5s warm (BENCH_FULL_r21 vs the 4.37s r21 baseline).
-    // A future q26 outside ~3-6s at sf0.1 with these knobs means a phase
-    // regressed — re-run tools/UnrollProbe and attribute by slope (sweep
+    // cadence 1 vs 2 within noise (5.25 vs 5.10). Re-measured on the
+    // fused r22 sweep, cadence 2 wins clearly: ten alternating warm pairs
+    // at sf0.1, local[4] (4-vCPU VM), converge + count, gave
+    // ck=1 median 5.58s (IQR 5.14-6.05) vs ck=2 4.74s (IQR 4.53-4.97),
+    // ck=2 faster in 10 of 10 pairs. Round-10's agg+join sweeps measured
+    // 0.71s/sweep, 6.40s total — the one-pass window fit is where the
+    // saving came from. r21 re-tuned the intercept, not the slope:
+    // loop-constant marginals are checkpointed once inside converge (each
+    // sweep's two broadcast builds re-ran the lineitem scan+agg before)
+    // and one loss barrier was dropped; this config (ck=2, loss=maxIter,
+    // 8 sweeps, 1 in-loop + 1 final loss) landed at ~3.2-3.5s warm at
+    // local[32] against a 4.37s r21 baseline. A q26 outside ~3-6s at sf0.1
+    // with these knobs means a phase regressed: attribute by slope (sweep
     // cost) vs intercept shift (loss/checkpoint cost) before tuning.
     val r = Ipf.converge(x, y, seed, threshold = 1e-9, maxIter = maxIter,
       checkpointEvery = 2, lossEvery = maxIter)
     named(r.matrix, roundTo = 4)
-  }
-
-  /** One un-checkpointed IPF sweep over the q26 inputs — the plan-audit
-    * surface for `converge`'s inner loop: q26's own result plan is a
-    * checkpoint-truncated LogicalRDD (lineage is cut every 2 sweeps by
-    * design), which hides the sweep shape `explain` should document. Not a
-    * registry entry; PlanAudit renders it alongside the headline queries. */
-  def ipfOneSweepPlan(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val seed = CooMatrix(li.groupBy(col("l_partkey").as(CooMatrix.Row),
-        month(col("l_shipdate")).cast("long").as(CooMatrix.Col))
-      .agg(sum("l_quantity").as(CooMatrix.Value)))
-    val x = li.groupBy(col("l_partkey").as(CooMatrix.Idx))
-      .agg(sum("l_extendedprice").as(CooMatrix.Value))
-    val y = li.groupBy(month(col("l_shipdate")).cast("long").as(CooMatrix.Idx))
-      .agg(sum("l_extendedprice").as(CooMatrix.Value))
-    Ipf.step(x, y, seed).df
   }
 
   /** Hierarchical totals via ROLLUP — subtotal rows per market segment and

@@ -39,9 +39,9 @@ object Events {
     // the fact tables, so 8 partitions bounds that setup cost without
     // losing parallelism. Cluster deployments size this to the stream's
     // real key cardinality. Result-invariant: partition count never
-    // changes query output. Re-measured round 19 (tools/PartProbe, the
-    // q267 outer-join settle at sf0.1, min-of-3 warm): 8 → 3.05s,
-    // 16 → 3.81s, 32 → 6.48s — per-partition store setup/commit
+    // changes query output. Re-measured round 19 (the q267 outer-join
+    // settle at sf0.1, min-of-3 warm): 8 → 3.05s, 16 → 3.81s,
+    // 32 → 6.48s — per-partition store setup/commit
     // dominates at this volume, so 8 stands; the remaining ~3s on the
     // stream-join settles is the stateful machinery itself (null-drain
     // floor ~0.44s + state writes + watermark batches), with no sleeps
@@ -495,7 +495,7 @@ object Events {
     * windowed aggregations (their finals only emit when the watermark
     * passes) or TTL'd state (timeout callbacks fire in no-data batches).
     *
-    * Cost-trend note (measured, local[32] sf0.1, StreamProbe sandwich —
+    * Cost-trend note (measured, local[32] sf0.1, same-JVM probe sandwich —
     * q64's r6→r8 bench drift 2.8→4.3→7.4s with no code change): the
     * micro-batch machinery here is ~1.8× slower when the shared bench JVM
     * has just run the heavy cache-leaving queries (ALS training + factor
@@ -513,11 +513,10 @@ object Events {
     * byte-identical both rounds): a fresh quiet JVM measures q64 at
     * 7.4 / 3.0 / 2.4 / 1.8 / 1.7s — C2 tiering of this machinery spans
     * ~4 executions, so ANY min-of-3 that starts cold reports ~2.4s of
-    * tiering cost, and a SandwichProbe with the heavy cache-leaving
+    * tiering cost, and a probe sandwich with the heavy cache-leaving
     * polluters showed NO residue on top (post_min 1.47s < pre_min
-    * 1.68s). The steady-state floor is ~1.5–1.7s. Bench therefore warms
-    * the settle path untimed before the timed loop (see Bench.main) the
-    * same way it warms the canary. */
+    * 1.68s). The steady-state floor is ~1.5–1.7s, so a timing harness
+    * must warm the settle path untimed before its timed loop. */
   private def settle(spark: SparkSession, dir: String,
       build: DataFrame => DataFrame, outputMode: String = "complete",
       noDataBatches: Boolean = true,
@@ -853,11 +852,11 @@ object Events {
     * key whose state is evicted and later re-keyed would re-admit — the
     * documented TTL trade-off).
     *
-    * COST ENVELOPE (round-12 tools/SettleProbe, sf0.1, local[32], warm
-    * min-of-3): end-to-end 1.06s = 0.61s micro-batch harness (the events
-    * null-drain floor — source listing, offset log, sink) + ~0.45s quota
-    * core. Most of this query's bench time is the settle machinery, not
-    * the stateful operator; attribute drift with SettleProbe first. */
+    * COST ENVELOPE (round 12, sf0.1, local[32], warm min-of-3):
+    * end-to-end 1.06s = 0.61s micro-batch harness (the events null-drain
+    * floor — source listing, offset log, sink) + ~0.45s quota core. Most
+    * of this query's bench time is the settle machinery, not the stateful
+    * operator; attribute drift to the harness before the operator. */
   def streamingQuota(spark: SparkSession, dir: String, n: Int = 20): DataFrame =
     settle(spark, dir, stream => {
       val s2 = stream.sparkSession
@@ -1461,7 +1460,7 @@ object Events {
     * Over this fixture the 365-day TTL spans the whole event range, so the
     * result equals the batch groupBy oracle.
     *
-    * Cost decomposition (SettleProbe, sf0.1, local[32], min of 3): q58
+    * Cost decomposition (sf0.1, local[32], min of 3): q58
     * end-to-end 1.34 s with rep spread 1.34–2.16 s on one JVM; the
     * null-drain-events baseline (trivial projection through the same
     * micro-batch machinery) is 0.67 s. So ~half the wall-clock is fixed

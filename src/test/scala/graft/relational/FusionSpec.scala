@@ -11,8 +11,7 @@ import graft.matrix.CooMatrix
   * q272 window rewrite against in-test rebuilds of the OLD two-scan/join
   * chains, bit-exact (no tolerance): the fusions' equivalence argument is
   * decimal order-independence + identical group supports, so any drift is
-  * a bug, not noise. Complements tools/FusionAbCheck (the same check at
-  * sf0.01/sf0.1) at test-suite speed.
+  * a bug, not noise.
   */
 class FusionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
