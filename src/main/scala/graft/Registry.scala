@@ -23,8 +23,9 @@ object Registry {
       oracle: Option[String])
 
   private def docs(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "documents")
-  /** [[docs]] spread across the spread cap (Tables.spread — gated, a
-    * no-op once the scan carries enough splits). Used ONLY by the
+  /** [[docs]] spread across min(shuffle partitions, 16) tasks
+    * (Tables.spread — gated, a no-op once the scan carries enough
+    * splits). Used ONLY by the
     * registry entries whose scan stage carries heavy per-row CPU
     * (shingle/k-gram explodes, rolling hashes, LSH signatures): there the
     * single-file testdata scan serialized 0.5-4.4s of work on one task
@@ -641,7 +642,7 @@ object Registry {
         |FROM d a JOIN d b ON a.doc_id < b.doc_id ORDER BY doc_a, doc_b""".stripMargin)),
 
     "q43_minhash_neardup" -> Entry(
-      (s, d) => Dedup.minhashNearDupCached(docs(s, d), d, simThreshold = 0.5)
+      (s, d) => Dedup.minhashNearDup(docs(s, d), simThreshold = 0.5)
         .orderBy("doc_a", "doc_b"), Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |s AS (SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
@@ -855,7 +856,7 @@ object Registry {
 
     // ---- ML: ALS ---------------------------------------------------------
     // Both ALS entries draw on ONE shared training (trainedOn's per-(JVM,
-    // dir, seed) cache): q60's CONTRACT is recommendations-from-the-0.8-
+    // dir, seed) memo): q60's CONTRACT is recommendations-from-the-0.8-
     // train-split — training twice bought nothing but wall-clock. AlsSpec
     // asserts the train split covers every rated user, so no user silently
     // drops out of q60 relative to full-data training.
@@ -3666,7 +3667,7 @@ object Registry {
     // (KMeans centroids are iterative floats); pair-agreement envelope vs
     // the exact q254 output pinned in Round14OpsSpec.
     "q269_bitext_ann" -> Entry((s, d) =>
-      Similarity.bitextMarginMiningAnnOn(s, d).orderBy("src_id"), None),
+      Similarity.bitextMarginMiningAnn(emb(s, d)).orderBy("src_id"), None),
 
     // Canonical-form dedup groups: NFC (native codegen'd expression) →
     // casefold → whitespace collapse, then md5-keyed group sizes. The
@@ -6008,7 +6009,7 @@ object Registry {
         |FROM sc CROSS JOIN z ORDER BY source""".stripMargin)),
 
     // Cross-source contamination matrix: the md5-family verified near-dup
-    // pairs (q124's shared cache) rolled up to unordered source-pair
+    // pairs (q124's shared memo) rolled up to unordered source-pair
     // cells — pair counts + DECIMAL-exact mean Jaccard. The between-
     // dataset overlap report a corpus assembler reads before mixing.
     "q270_source_contamination" -> Entry((s, d) =>

@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * (never schema inference — at 100 TB an inference pass is a full extra
   * scan, and a schema drift should fail loudly, not re-type the column),
   * and hash-compare the result against the parquet-loaded original via the
-  * DuckDB oracle (the q57 labeled-CSV pattern). The written layout is
-  * cached per (JVM, dir) so repeated query runs re-read, not re-write, and
-  * scratch dirs are shutdown-hook-deleted ([[TempDirs]]).
+  * DuckDB oracle (the q57 labeled-CSV pattern). Each call writes a fresh
+  * scratch dir, shutdown-hook-deleted ([[TempDirs]]).
   *
   * Scale notes: both writers shard naturally (one file per task — the
   * parallel-write path), both readers split (JSONL by line, ORC by stripe),
@@ -23,23 +22,14 @@ import org.apache.spark.sql.functions._
   * is exactly that conversion, exercised in both directions). */
 object Formats {
 
-  private val jsonlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val orcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def roundtrip(spark: SparkSession, dir: String,
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
       scratchTag: String,
       write: (DataFrame, String) => Unit,
       read: (SparkSession, org.apache.spark.sql.types.StructType, String) => DataFrame)
       : DataFrame = {
     val src = Tables(spark, dir, "documents")
-    val path = cache.computeIfAbsent(dir, _ => {
-      val p = TempDirs.scratch(scratchTag).resolve("documents").toString
-      write(src, p)
-      p
-    })
+    val path = TempDirs.scratch(scratchTag).resolve("documents").toString
+    write(src, path)
     read(spark, src.schema, path)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         md5(col("text")).as("text_md5"))
@@ -47,18 +37,15 @@ object Formats {
 
   /** JSONL round-trip (q195): documents → line-delimited JSON → back. */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(spark, dir, jsonlCache, "graft-jsonl",
+    roundtrip(spark, dir, "graft-jsonl",
       (df, p) => df.write.mode("overwrite").json(p),
       (s, schema, p) => s.read.schema(schema).json(p))
 
   /** ORC round-trip (q196): documents → ORC → back. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(spark, dir, orcCache, "graft-orc",
+    roundtrip(spark, dir, "graft-orc",
       (df, p) => df.write.mode("overwrite").orc(p),
       (s, schema, p) => s.read.schema(schema).orc(p))
-
-  private val textCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Raw line-oriented text round-trip (q204) — the rawest ingestion
     * surface: one record per line (`doc_id \t text`), written with the
@@ -71,12 +58,9 @@ object Formats {
     * text is single-line by construction. */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables(spark, dir, "documents")
-    val path = textCache.computeIfAbsent(dir, _ => {
-      val p = TempDirs.scratch("graft-text").resolve("documents").toString
-      src.select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
-        .write.mode("overwrite").text(p)
-      p
-    })
+    val path = TempDirs.scratch("graft-text").resolve("documents").toString
+    src.select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
+      .write.mode("overwrite").text(path)
     spark.read.text(path)
       .select(split(col("value"), "\t", 2).as("parts"))
       .select(element_at(col("parts"), 1).cast("long").as("doc_id"),

@@ -1033,20 +1033,15 @@ object GlprMaintenance {
   def rowDeletePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = rowDeleteCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-rowdelete").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text").repartition(8), out)
-      deleteIdRange(spark, out, 100L, 299L): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-rowdelete").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text").repartition(8), root)
+    deleteIdRange(spark, root, 100L, 299L): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_id"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val rowDeleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q322 — the merge-on-read delete as a registry entry: range-
     * clustered staging, `deleteIdRangeMergeOnRead(150, 349)` (zero data
@@ -1058,21 +1053,16 @@ object GlprMaintenance {
   def dvDeletePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = dvDeleteCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-dvdelete").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      deleteIdRangeMergeOnRead(out, 150L, 349L): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-dvdelete").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    deleteIdRangeMergeOnRead(root, 150L, 349L): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"))
   }
-  private val dvDeleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q323 — DV materialization: the q322 shape, then
     * [[materializeDeletes]] rewrites the masked shards (fresh names, one
@@ -1083,22 +1073,17 @@ object GlprMaintenance {
   def dvMaterializePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = dvMatCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-dvmat").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      deleteIdRangeMergeOnRead(out, 150L, 349L)
-      materializeDeletes(spark, out): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-dvmat").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    deleteIdRangeMergeOnRead(root, 150L, 349L)
+    materializeDeletes(spark, root): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val dvMatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** COPY-ON-WRITE row-level UPDATE, redaction form (q324) — completes
     * the connector's CRUD ladder: every data shard is rewritten by a
@@ -1197,22 +1182,17 @@ object GlprMaintenance {
   def redactionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = redactCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-redact").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      redactText(spark, out,
-        graft.functions.MultiPatternCounts.BlocklistPatterns, "[REDACTED]"): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-redact").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    redactText(spark, root,
+      graft.functions.MultiPatternCounts.BlocklistPatterns, "[REDACTED]"): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val redactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** EXPIRE old manifest versions (Iceberg's `expire_snapshots`): keep
     * the newest `keepLast` `_manifest.v<n>` files, unlink the rest.
@@ -1551,21 +1531,16 @@ object GlprMaintenance {
   def compactionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = compactCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-compact").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(16, col("doc_id")), out)
-      compact(out, targetBytes = Long.MaxValue / 2): Unit // one merged shard per run
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-compact").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(16, col("doc_id")), root)
+    compact(root, targetBytes = Long.MaxValue / 2): Unit // one merged shard per run
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val compactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q348 — compaction OVER LIVE DELETE-VECTOR MASKS (round-18 verdict
     * #3): the corpus staged as 16 range-clustered shards, an id-range
@@ -1582,33 +1557,28 @@ object GlprMaintenance {
   def maskedCompactionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = maskedCompactCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-maskcompact").toString
-      GlprSource.write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(16, col("doc_id")), out)
-      deleteIdRangeMergeOnRead(out, 100L, 219L): Unit
-      deleteWhereMergeOnRead(spark, out, "lang", Set("de")): Unit
-      val entries = GlprSource.committedEntries(out)
-      compact(out, targetBytes = Long.MaxValue / 2): Unit
-      if (entries.length > 1) {
-        val live = GlprSource.committedEntries(out)
-        require(live.length < entries.length,
-          "q348 contract: compaction must shrink the live shard count")
-        require(live.forall(l => GlprSource.entryDvGen(l).isEmpty),
-          "q348 contract: the compacted live view must be mask-free " +
-            s"(got ${live.mkString(", ")})")
-      }
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-maskcompact").toString
+    GlprSource.write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(16, col("doc_id")), root)
+    deleteIdRangeMergeOnRead(root, 100L, 219L): Unit
+    deleteWhereMergeOnRead(spark, root, "lang", Set("de")): Unit
+    val entries = GlprSource.committedEntries(root)
+    compact(root, targetBytes = Long.MaxValue / 2): Unit
+    if (entries.length > 1) {
+      val live = GlprSource.committedEntries(root)
+      require(live.length < entries.length,
+        "q348 contract: compaction must shrink the live shard count")
+      require(live.forall(l => GlprSource.entryDvGen(l).isEmpty),
+        "q348 contract: the compacted live view must be mask-free " +
+          s"(got ${live.mkString(", ")})")
+    }
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val maskedCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q350 — Z-ORDER RECLUSTER through the catalog (round-18 verdict
     * #5): the corpus INSERTed hash-scattered (every shard spans the
@@ -1623,41 +1593,32 @@ object GlprMaintenance {
   def zorderReclusterPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = zorderCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-zorder").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_zo", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_zo.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      // AQE coalescing would merge the clustered shuffles (both the
-      // hash staging and the z-range rewrite) into one fat shard —
-      // the layout IS the deliverable here (round-16 gotcha)
-      s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      s2.sql("CREATE TABLE glpr_zo.ns.t " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_zo.ns.t " +
-        "SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY xxhash64(doc_id)")
-      s2.sql("CALL glpr_zo.sys.recluster('ns.t', 8, 'lang')").collect(): Unit
-      val tpath = new java.io.File(croot, "ns/t").getAbsolutePath
-      // the rectangle probe must prune post-recluster (it could not
-      // pre-recluster: every hash shard intersected every box)
-      val probe = s2.sql("SELECT count(*) FROM glpr_zo.ns.t " +
-        "WHERE doc_id >= 100 AND doc_id < 200 AND lang = 'en'")
-        .head().getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) has only empty shards,
-      // which always keep — the prune contract only binds on data
-      if (probe > 0)
-        Option(GlprSource.planEvents.get(tpath)).foreach { case (kept, total) =>
-          require(total < 2 || kept < total,
-            s"q350 contract: the z-order layout must prune the rectangle " +
-              s"probe (kept $kept of $total, matched $probe rows)")
-        }
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_zo", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_zo.root", root)
+    val root = TempDirs.scratch("graft-glpr-zorder").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_zo", root)
+    // AQE coalescing would merge the clustered shuffles (both the
+    // hash staging and the z-range rewrite) into one fat shard —
+    // the layout IS the deliverable here (round-16 gotcha)
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s2.sql("CREATE TABLE glpr_zo.ns.t " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_zo.ns.t " +
+      "SELECT doc_id, lang, source, text " +
+      s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY xxhash64(doc_id)")
+    s2.sql("CALL glpr_zo.sys.recluster('ns.t', 8, 'lang')").collect(): Unit
+    val tpath = new java.io.File(root, "ns/t").getAbsolutePath
+    // the rectangle probe must prune post-recluster (it could not
+    // pre-recluster: every hash shard intersected every box)
+    val probe = s2.sql("SELECT count(*) FROM glpr_zo.ns.t " +
+      "WHERE doc_id >= 100 AND doc_id < 200 AND lang = 'en'")
+      .head().getLong(0)
+    // an all-empty corpus (RegistryEmptySpec) has only empty shards,
+    // which always keep — the prune contract only binds on data
+    if (probe > 0)
+      Option(GlprSource.planEvents.get(tpath)).foreach { case (kept, total) =>
+        require(total < 2 || kept < total,
+          s"q350 contract: the z-order layout must prune the rectangle " +
+            s"probe (kept $kept of $total, matched $probe rows)")
+      }
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
@@ -1665,8 +1626,6 @@ object GlprMaintenance {
         | CAST(max(doc_id) AS BIGINT) AS max_id
         |FROM glpr_zo.ns.t GROUP BY lang""".stripMargin))
   }
-  private val zorderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q351 — ZERO-COPY CLONE end to end: the corpus staged as a catalog
     * table, a MoR delete layered on (so the snapshot carries live dv
@@ -1682,27 +1641,18 @@ object GlprMaintenance {
   def clonePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = cloneCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-clone").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_cl", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_cl.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_cl.ns.src " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_cl.ns.src SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY doc_id div 100")
-      val srcPath = new java.io.File(croot, "ns/src").getAbsolutePath
-      deleteIdRangeMergeOnRead(srcPath, 40L, 49L): Unit // pre-clone mask
-      s2.sql("CALL glpr_cl.sys.clone('ns.src', 'ns.dst')").collect(): Unit
-      // diverge the CLONE only
-      s2.sql("CALL glpr_cl.sys.delete_where_mor('ns.dst', 'lang', 'de')")
-        .collect(): Unit
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_cl", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_cl.root", root)
+    val root = TempDirs.scratch("graft-glpr-clone").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_cl", root)
+    s2.sql("CREATE TABLE glpr_cl.ns.src " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_cl.ns.src SELECT doc_id, lang, source, text " +
+      s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY doc_id div 100")
+    val srcPath = new java.io.File(root, "ns/src").getAbsolutePath
+    deleteIdRangeMergeOnRead(srcPath, 40L, 49L): Unit // pre-clone mask
+    s2.sql("CALL glpr_cl.sys.clone('ns.src', 'ns.dst')").collect(): Unit
+    // diverge the CLONE only
+    s2.sql("CALL glpr_cl.sys.delete_where_mor('ns.dst', 'lang', 'de')")
+      .collect(): Unit
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT 'src' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -1712,8 +1662,6 @@ object GlprMaintenance {
         | CAST(sum(doc_id) AS BIGINT)
         |FROM glpr_cl.ns.dst GROUP BY 2""".stripMargin))
   }
-  private val cloneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q353 — BUCKET-TRANSFORM STORAGE-PARTITIONED JOIN, end to end: two
     * tables `PARTITIONED BY (bucket(8, doc_id))` (the writer's required
@@ -1728,24 +1676,15 @@ object GlprMaintenance {
     * relational join rollup over the raw parquet. */
   def bucketSpjPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = bucketSpjCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-bspj").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_bj", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_bj.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      Seq("facts", "dims").foreach(t => s2.sql(s"CREATE TABLE glpr_bj.ns.$t " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (bucket(8, doc_id))"))
-      s2.sql("INSERT INTO glpr_bj.ns.facts SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT INTO glpr_bj.ns.dims SELECT doc_id, lang, 'dim', " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 3 <> 0")
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_bj", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_bj.root", root)
+    val root = TempDirs.scratch("graft-glpr-bspj").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_bj", root)
+    Seq("facts", "dims").foreach(t => s2.sql(s"CREATE TABLE glpr_bj.ns.$t " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (bucket(8, doc_id))"))
+    s2.sql("INSERT INTO glpr_bj.ns.facts SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("INSERT INTO glpr_bj.ns.dims SELECT doc_id, lang, 'dim', " +
+      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 3 <> 0")
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val q = s2.sql(
@@ -1767,8 +1706,6 @@ object GlprMaintenance {
     }
     out
   }
-  private val bucketSpjCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q354 — IMMUTABLE TAGS as retention overrides, end to end: tag the
     * ingest snapshot, DELETE a slice (copy-on-write — a new version),
@@ -1781,27 +1718,18 @@ object GlprMaintenance {
     * pins in GlprCatalogSpec. */
   def tagsPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = tagsCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-tags").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_tg", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_tg.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_tg.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_tg.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      s2.sql("CALL glpr_tg.sys.tag('ns.docs', 'shipped')").collect(): Unit
-      s2.sql("DELETE FROM glpr_tg.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-      // the retention cycle that would have reclaimed the snapshot
-      s2.sql("CALL glpr_tg.sys.expire_versions('ns.docs', 1)").collect(): Unit
-      s2.sql("CALL glpr_tg.sys.vacuum('ns.docs')").collect(): Unit
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_tg", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_tg.root", root)
+    val root = TempDirs.scratch("graft-glpr-tags").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_tg", root)
+    s2.sql("CREATE TABLE glpr_tg.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_tg.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` " +
+      "DISTRIBUTE BY doc_id div 100")
+    s2.sql("CALL glpr_tg.sys.tag('ns.docs', 'shipped')").collect(): Unit
+    s2.sql("DELETE FROM glpr_tg.ns.docs WHERE doc_id BETWEEN 100 AND 199")
+    // the retention cycle that would have reclaimed the snapshot
+    s2.sql("CALL glpr_tg.sys.expire_versions('ns.docs', 1)").collect(): Unit
+    s2.sql("CALL glpr_tg.sys.vacuum('ns.docs')").collect(): Unit
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -1811,8 +1739,6 @@ object GlprMaintenance {
         | CAST(sum(doc_id) AS BIGINT)
         |FROM glpr_tg.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin))
   }
-  private val tagsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q364 — AGE-BASED RETENTION end to end (round-19 verdict #7):
     * three commits pinned to a fixed day-apart clock schedule (the
@@ -1828,41 +1754,32 @@ object GlprMaintenance {
       dir: String): DataFrame = {
     val T0 = 1700000000000L // fixed epoch instant; commits a day apart
     val day = 86400000L
-    val root = ageRetCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-ageret").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_age", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_age.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_age.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      s2.sql("CALL glpr_age.sys.tag('ns.docs', 'shipped')").collect(): Unit
-      s2.sql("DELETE FROM glpr_age.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id + 1000000, lang, " +
-        s"source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE doc_id < 50")
-      val path = new java.io.File(croot, "ns/docs").getAbsolutePath
-      val vs = GlprSource.listManifestVersions(path)
-      vs.zipWithIndex.foreach { case (v, i) =>
-        GlprSource.pinVersionCommitMs(path, v, T0 + i * day) }
-      // cutoff between the 2nd and 3rd commit: the tagged v1 is exempt,
-      // the middle version expires, the head survives on age. An
-      // ALL-EMPTY corpus may collapse the schedule (no-op commits mint
-      // no versions), so the staging sanity check only binds when the
-      // three-commit history actually exists.
-      val dropped = s2.sql("CALL glpr_age.sys.expire_versions('ns.docs', " +
-        s"older_than_ms => ${T0 + day + day / 2})").head().getLong(0)
-      require(vs.length < 3 || dropped >= 1L,
-        s"q364 staging: expected the middle version to expire, dropped $dropped")
-      s2.sql("CALL glpr_age.sys.vacuum('ns.docs')").collect(): Unit
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_age", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_age.root", root)
+    val root = TempDirs.scratch("graft-glpr-ageret").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_age", root)
+    s2.sql("CREATE TABLE glpr_age.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` " +
+      "DISTRIBUTE BY doc_id div 100")
+    s2.sql("CALL glpr_age.sys.tag('ns.docs', 'shipped')").collect(): Unit
+    s2.sql("DELETE FROM glpr_age.ns.docs WHERE doc_id BETWEEN 100 AND 199")
+    s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id + 1000000, lang, " +
+      s"source, text FROM parquet.`$dir/documents.parquet` " +
+      "WHERE doc_id < 50")
+    val path = new java.io.File(root, "ns/docs").getAbsolutePath
+    val vs = GlprSource.listManifestVersions(path)
+    vs.zipWithIndex.foreach { case (v, i) =>
+      GlprSource.pinVersionCommitMs(path, v, T0 + i * day) }
+    // cutoff between the 2nd and 3rd commit: the tagged v1 is exempt,
+    // the middle version expires, the head survives on age. An
+    // ALL-EMPTY corpus may collapse the schedule (no-op commits mint
+    // no versions), so the staging sanity check only binds when the
+    // three-commit history actually exists.
+    val dropped = s2.sql("CALL glpr_age.sys.expire_versions('ns.docs', " +
+      s"older_than_ms => ${T0 + day + day / 2})").head().getLong(0)
+    require(vs.length < 3 || dropped >= 1L,
+      s"q364 staging: expected the middle version to expire, dropped $dropped")
+    s2.sql("CALL glpr_age.sys.vacuum('ns.docs')").collect(): Unit
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -1872,8 +1789,6 @@ object GlprMaintenance {
         | CAST(sum(doc_id) AS BIGINT)
         |FROM glpr_age.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin))
   }
-  private val ageRetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q355 — CHECK CONSTRAINTS end to end: admit `doc_id >= 0 AND text
     * IS NOT NULL` over the empty table, ingest the corpus under it
@@ -1885,56 +1800,45 @@ object GlprMaintenance {
     * drop guards, token survival across ALTER) in GlprCatalogSpec. */
   def constraintsPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = constraintsCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-ck").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_ck", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_ck.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_ck.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("CALL glpr_ck.sys.add_constraint('ns.docs', 'sane-doc', " +
-        "'doc_id >= 0 AND text IS NOT NULL')").collect(): Unit
-      s2.sql("INSERT INTO glpr_ck.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      val before = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-        .head().getLong(0)
-      // the refusal must be THE CHECK GATE's (walk the cause chain for
-      // the constraint diagnostic) — a blanket catch would let any
-      // unrelated failure satisfy the contract vacuously
-      val refused =
-        try {
-          s2.sql("INSERT INTO glpr_ck.ns.docs " +
-            "VALUES (-1, 'xx', 'bad', 'row')")
-          false
-        } catch {
-          case e: Exception =>
-            Iterator.iterate(e: Throwable)(_.getCause)
-              .takeWhile(_ != null).take(10)
-              .exists(t => Option(t.getMessage)
-                .exists(_.contains("GLPR CHECK constraint 'sane-doc'")))
-        }
-      require(refused,
-        "q355 contract: the violating append must refuse WITH the " +
-          "constraint diagnostic")
-      val after = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-        .head().getLong(0)
-      require(after == before,
-        s"q355 contract: a refused write must land NOTHING " +
-          s"($before -> $after)")
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_ck", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_ck.root", root)
+    val root = TempDirs.scratch("graft-glpr-ck").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_ck", root)
+    s2.sql("CREATE TABLE glpr_ck.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("CALL glpr_ck.sys.add_constraint('ns.docs', 'sane-doc', " +
+      "'doc_id >= 0 AND text IS NOT NULL')").collect(): Unit
+    s2.sql("INSERT INTO glpr_ck.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet`")
+    val before = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
+      .head().getLong(0)
+    // the refusal must be THE CHECK GATE's (walk the cause chain for
+    // the constraint diagnostic) — a blanket catch would let any
+    // unrelated failure satisfy the contract vacuously
+    val refused =
+      try {
+        s2.sql("INSERT INTO glpr_ck.ns.docs " +
+          "VALUES (-1, 'xx', 'bad', 'row')")
+        false
+      } catch {
+        case e: Exception =>
+          Iterator.iterate(e: Throwable)(_.getCause)
+            .takeWhile(_ != null).take(10)
+            .exists(t => Option(t.getMessage)
+              .exists(_.contains("GLPR CHECK constraint 'sane-doc'")))
+      }
+    require(refused,
+      "q355 contract: the violating append must refuse WITH the " +
+        "constraint diagnostic")
+    val after = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
+      .head().getLong(0)
+    require(after == before,
+      s"q355 contract: a refused write must land NOTHING " +
+        s"($before -> $after)")
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
         |FROM glpr_ck.ns.docs GROUP BY 1""".stripMargin))
   }
-  private val constraintsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q356 — `sys.files` shard introspection, certified against the
     * data: the pipeline ingests the corpus, reads the table's
@@ -1946,22 +1850,13 @@ object GlprMaintenance {
     * planner prunes and estimates with are exactly right. */
   def filesPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = filesCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-files").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_fl", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_fl.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_fl.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_fl.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_fl", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_fl.root", root)
+    val root = TempDirs.scratch("graft-glpr-files").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_fl", root)
+    s2.sql("CREATE TABLE glpr_fl.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_fl.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` " +
+      "DISTRIBUTE BY doc_id div 100")
     val files = s2.sql("CALL glpr_fl.sys.files('ns.docs')").collect()
     require(files.forall(r => !r.isNullAt(1)),
       "q356 contract: every connector-written shard carries a sidecar")
@@ -1984,8 +1879,6 @@ object GlprMaintenance {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.LongType, nullable = true))))
   }
-  private val filesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q358 — ZERO-SHUFFLE EXACT-DEDUP AUDIT: `GROUP BY doc_id` over a
     * bucket-clustered table plans NO exchange at all — the scan's
@@ -2001,25 +1894,16 @@ object GlprMaintenance {
     * cross-file dedup, not a within-file one). */
   def dedupAuditPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = dedupAuditCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-dedup").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_da", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_da.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_da.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (bucket(8, doc_id))")
-      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      // the duplicate ingest: every fifth document lands again
-      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 5 = 0")
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_da", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_da.root", root)
+    val root = TempDirs.scratch("graft-glpr-dedup").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_da", root)
+    s2.sql("CREATE TABLE glpr_da.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (bucket(8, doc_id))")
+    s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet`")
+    // the duplicate ingest: every fifth document lands again
+    s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 5 = 0")
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val q = s2.sql(
       """SELECT doc_id, CAST(count(*) AS BIGINT) AS copies
@@ -2034,8 +1918,6 @@ object GlprMaintenance {
     }
     out
   }
-  private val dedupAuditCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q360 — METADATA TABLES from plain SQL: two ingests mint versions
     * 1 and 2, then `SELECT version, n_rows FROM cat.ns.docs.history`
@@ -2046,27 +1928,16 @@ object GlprMaintenance {
     * equality certifies the SQL-served history numbers exactly. */
   def metadataTablesPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = metaTablesCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-mdt").toString
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.catalog.glpr_md", "graft.io.GlprCatalog")
-      s2.conf.set("spark.sql.catalog.glpr_md.root", croot)
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.sql("CREATE TABLE glpr_md.ns.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 = 0")
-      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 <> 0")
-      croot
-    })
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.glpr_md", "graft.io.GlprCatalog")
-    s2.conf.set("spark.sql.catalog.glpr_md.root", root)
+    val root = TempDirs.scratch("graft-glpr-mdt").toString
+    val s2 = GlprSource.freshCatalogSession(spark, "glpr_md", root)
+    s2.sql("CREATE TABLE glpr_md.ns.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 = 0")
+    s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
+      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 <> 0")
     GlprSource.rematerialize(spark, s2.sql(
       """SELECT version, n_rows FROM glpr_md.ns.docs.history
         |WHERE version <= 2 ORDER BY version""".stripMargin))
   }
-  private val metaTablesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -335,18 +335,15 @@ object GlprSource {
     docs.select("doc_id", "lang", "source", "text")
       .write.format("graft.io.GlprSource").mode("append").save(path)
 
-  /** One GLPR staging per (JVM, dir) — the cached-sink convention shared
-    * with the format round-trips ([[Formats]]): write the documents table
-    * once, then every reader (registry, specs, bench reps) goes through
-    * the connector against the same shards. */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The documents table staged as GLPR once per dir ([[TempDirs.once]]):
+    * the batch read, the streamed profiles, the relay and the ingest
+    * merge all read these same shards. */
   private[io] def stagedPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    stagedCache.computeIfAbsent(dir, _ => {
+    TempDirs.once(s"glpr-staged#$dir") {
       val root = TempDirs.scratch("graft-glpr").toString
       write(Tables(spark, dir, "documents").select("doc_id", "lang", "source", "text"), root)
       root
-    })
+    }
   def documentsVia(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.format("graft.io.GlprSource").load(stagedPath(spark, dir))
 
@@ -357,30 +354,25 @@ object GlprSource {
     * layout discipline a 100 TB GLPR corpus would be ingested with —
     * identical to clustering parquet files by a join key so min/max
     * indexes prune. */
-  private val rangeStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[io] def rangeStagedPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    rangeStagedCache.computeIfAbsent(dir, _ => {
+    TempDirs.once(s"glpr-ranged#$dir") {
       val root = TempDirs.scratch("graft-glpr-ranged").toString
       write(Tables(spark, dir, "documents")
         .select("doc_id", "lang", "source", "text")
         .repartitionByRange(8, org.apache.spark.sql.functions.col("doc_id")), root)
       root
-    })
+    }
 
   /** q298 — the catalog SQL front door end to end ([[GlprCatalog]]):
     * register the catalog, `CREATE TABLE` through DDL, `INSERT INTO …
     * SELECT` the documents corpus through the two-phase-commit write
     * path, then aggregate back with a plain `SELECT` over the catalog
     * identifier — not one DataFrame-API read or write in the pipeline,
-    * the SQL-only-consumer contract a lakehouse catalog exists for.
-    * Idempotent per (JVM, dir): the INSERT runs once; the SELECT is the
-    * repeatable query. */
+    * the SQL-only-consumer contract a lakehouse catalog exists for. */
   def catalogSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = catalogRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-catalog").toString)
+    val root = TempDirs.scratch("graft-glpr-catalog").toString
     // fresh session per call ([[freshCatalogSession]]): a session's
     // CatalogManager caches the catalog plugin instance after first use,
     // so re-setting spark.sql.catalog.glpr_cat.root for a DIFFERENT dir
@@ -388,21 +380,16 @@ object GlprSource {
     // (round 15: a probe iterating three SF dirs on one session hit
     // exactly this).
     val s2 = freshCatalogSession(spark, "glpr_cat", root)
-    val created = new java.io.File(root, "corpus/docs/_glpr_table").isFile
-    if (!created) {
-      s2.sql("CREATE TABLE glpr_cat.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_cat.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    }
+    s2.sql("CREATE TABLE glpr_cat.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_cat.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
     // re-materialized on the caller's session (bounded: one row per lang)
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM glpr_cat.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val catalogRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q315 — the DSv2 FunctionCatalog front door ([[GlprFunctions]]):
     * `glpr_fn.sys.nfc_bytes` (MAGIC_METHOD scalar — codegen'd Invoke, no
@@ -416,8 +403,7 @@ object GlprSource {
     * GlprCatalogSpec-pinned. */
   def functionCatalogPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = fnRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-fncat").toString)
+    val root = TempDirs.scratch("graft-glpr-fncat").toString
     val s2 = freshCatalogSession(spark, "glpr_fn", root)
     s2.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("fn_docs")
     rematerialize(spark, s2.sql(
@@ -427,8 +413,6 @@ object GlprSource {
         | CAST(count(*) AS BIGINT) AS n_docs
         |FROM fn_docs GROUP BY lang""".stripMargin))
   }
-  private val fnRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q316 — version HISTORY through `CALL <cat>.sys.history('ns.table')`
     * (the DESCRIBE HISTORY analogue, via Spark 4's ProcedureCatalog):
@@ -441,33 +425,28 @@ object GlprSource {
     * partitioning-dependent bookkeeping and projected away. */
   def historyPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = historyRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-history").toString)
+    val root = TempDirs.scratch("graft-glpr-history").toString
     val s2 = freshCatalogSession(spark, "glpr_hist", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_hist.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      // degenerate-SF determinism (round-16 ADVICE): an EMPTY slice may
-      // or may not mint a version (0 input partitions → 0 tasks → no
-      // manifest change), which would make the version numbering
-      // SF-dependent; skip empty slices so versions = nonempty slices,
-      // exactly what the oracle derives (same clamp family as q311/q317)
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          val n = s2.sql("SELECT count(*) AS n FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-          if (n > 0)
-            s2.sql("INSERT INTO glpr_hist.corpus.docs " +
-              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-              s"WHERE $p")
-        }
-    }
+    s2.sql("CREATE TABLE glpr_hist.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    // degenerate-SF determinism (round-16 ADVICE): an EMPTY slice may
+    // or may not mint a version (0 input partitions → 0 tasks → no
+    // manifest change), which would make the version numbering
+    // SF-dependent; skip empty slices so versions = nonempty slices,
+    // exactly what the oracle derives (same clamp family as q311/q317)
+    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+      .foreach { p =>
+        val n = s2.sql("SELECT count(*) AS n FROM " +
+          s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
+        if (n > 0)
+          s2.sql("INSERT INTO glpr_hist.corpus.docs " +
+            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+            s"WHERE $p")
+      }
     rematerialize(spark,
       s2.sql("CALL glpr_hist.sys.history('corpus.docs')")
         .select("version", "n_rows"))
   }
-  private val historyRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q317 — the MAINTENANCE ladder through SQL `CALL`: three slice
     * INSERTs, `restore(2)` (roll the live view back to the first two),
@@ -480,34 +459,29 @@ object GlprSource {
     * rejections are GlprCatalogSpec-pinned. */
   def maintenanceSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = maintRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-maint").toString)
+    val root = TempDirs.scratch("graft-glpr-maint").toString
     val s2 = freshCatalogSession(spark, "glpr_maint", root)
     val tableDir = new java.io.File(root, "corpus/docs")
-    if (!new java.io.File(tableDir, "_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_maint.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          s2.sql("INSERT INTO glpr_maint.corpus.docs " +
-            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-            s"WHERE $p")
-        }
-      // an all-empty corpus mints fewer versions; clamp like q311
-      val pin = math.min(2L,
-        listManifestVersions(tableDir.getAbsolutePath).lastOption.getOrElse(1L))
-      s2.sql(s"CALL glpr_maint.sys.restore('corpus.docs', $pin)").collect()
-      s2.sql(s"CALL glpr_maint.sys.compact('corpus.docs', ${Long.MaxValue / 2})")
-        .collect()
-      s2.sql("CALL glpr_maint.sys.vacuum('corpus.docs')").collect()
-    }
+    s2.sql("CREATE TABLE glpr_maint.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+      .foreach { p =>
+        s2.sql("INSERT INTO glpr_maint.corpus.docs " +
+          s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+          s"WHERE $p")
+      }
+    // an all-empty corpus mints fewer versions; clamp like q311
+    val pin = math.min(2L,
+      listManifestVersions(tableDir.getAbsolutePath).lastOption.getOrElse(1L))
+    s2.sql(s"CALL glpr_maint.sys.restore('corpus.docs', $pin)").collect()
+    s2.sql(s"CALL glpr_maint.sys.compact('corpus.docs', ${Long.MaxValue / 2})")
+      .collect()
+    s2.sql("CALL glpr_maint.sys.vacuum('corpus.docs')").collect()
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM glpr_maint.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val maintRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q319 — STORAGE-PARTITIONED JOIN: two `PARTITIONED BY (lang)` GLPR
     * tables (the corpus and a per-lang dimension), joined on the
@@ -524,8 +498,7 @@ object GlprSource {
     * bytes between executors. */
   def storagePartitionedJoinPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = spjRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-spj").toString)
+    val root = TempDirs.scratch("graft-glpr-spj").toString
     val s2 = freshCatalogSession(spark, "glpr_spj", root)
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -535,28 +508,24 @@ object GlprSource {
     // single-valued sidecars the scan's partitioning report requires)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     s2.conf.set("spark.sql.shuffle.partitions", "32")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_spj.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (lang)")
-      s2.sql("INSERT INTO glpr_spj.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("CREATE TABLE glpr_spj.corpus.langdim " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (lang)")
-      s2.sql("INSERT INTO glpr_spj.corpus.langdim " +
-        "SELECT min(doc_id) AS doc_id, lang, 'dim' AS source, " +
-        "concat('meta-', lang) AS text " +
-        s"FROM parquet.`$dir/documents.parquet` GROUP BY lang")
-    }
+    s2.sql("CREATE TABLE glpr_spj.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (lang)")
+    s2.sql("INSERT INTO glpr_spj.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("CREATE TABLE glpr_spj.corpus.langdim " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (lang)")
+    s2.sql("INSERT INTO glpr_spj.corpus.langdim " +
+      "SELECT min(doc_id) AS doc_id, lang, 'dim' AS source, " +
+      "concat('meta-', lang) AS text " +
+      s"FROM parquet.`$dir/documents.parquet` GROUP BY lang")
     rematerialize(spark, s2.sql(
       """SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(m.doc_id) AS BIGINT) AS dim_min_id
         |FROM glpr_spj.corpus.docs d JOIN glpr_spj.corpus.langdim m
         |ON d.lang = m.lang GROUP BY d.lang""".stripMargin))
   }
-  private val spjRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q325 — DYNAMIC PARTITION OVERWRITE through SQL: the full corpus in
     * a `PARTITIONED BY (lang)` table, then `INSERT OVERWRITE` under
@@ -570,30 +539,25 @@ object GlprSource {
     * refusals pinned in GlprCatalogSpec. */
   def dynamicOverwritePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = dynOwCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-dynow").toString)
+    val root = TempDirs.scratch("graft-glpr-dynow").toString
     val s2 = freshCatalogSession(spark, "glpr_dyn", root)
     s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // clustered-write contract: single-valued shards (q304/q319 note)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     s2.conf.set("spark.sql.shuffle.partitions", "32")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_dyn.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (lang)")
-      s2.sql("INSERT INTO glpr_dyn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT OVERWRITE glpr_dyn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE lang IN ('de', 'zh') AND doc_id < 300")
-    }
+    s2.sql("CREATE TABLE glpr_dyn.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (lang)")
+    s2.sql("INSERT INTO glpr_dyn.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("INSERT OVERWRITE glpr_dyn.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+      "WHERE lang IN ('de', 'zh') AND doc_id < 300")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | max(doc_id) AS max_id
         |FROM glpr_dyn.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val dynOwCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The fixed doc_id slice expression behind the DML pipelines (q301/
     * q303): three contiguous id ranges `[min,100) [100,300) [300,max]`,
@@ -643,8 +607,7 @@ object GlprSource {
     * contract is GlprCatalogSpec-pinned. */
   def deleteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = deleteRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-delete").toString)
+    val root = TempDirs.scratch("graft-glpr-delete").toString
     val s2 = freshCatalogSession(spark, "glpr_del", root)
     // AQE's partition coalescing would merge the small slice partitions
     // of the DISTRIBUTE BY into one task — producing a shard whose
@@ -652,21 +615,17 @@ object GlprSource {
     // refuses. Shard-aligned ingest means the WRITER's partitioning is
     // the contract; pin it for this session.
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_del.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_del.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        s"DISTRIBUTE BY $SliceSql")
-      s2.sql("DELETE FROM glpr_del.corpus.docs WHERE doc_id < 100")
-    }
+    s2.sql("CREATE TABLE glpr_del.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_del.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+      s"DISTRIBUTE BY $SliceSql")
+    s2.sql("DELETE FROM glpr_del.corpus.docs WHERE doc_id < 100")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
         |FROM glpr_del.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val deleteRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q302 — INSERT OVERWRITE through the SQL front door
     * ([[GlprWriteBuilder]] `SupportsTruncate`: truncate-then-append for
@@ -677,25 +636,20 @@ object GlprSource {
     * hash. Shard+sidecar truncation is GlprCatalogSpec-pinned. */
   def overwriteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = overwriteRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-overwrite").toString)
+    val root = TempDirs.scratch("graft-glpr-overwrite").toString
     val s2 = freshCatalogSession(spark, "glpr_ow", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_ow.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_ow.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT OVERWRITE glpr_ow.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE lang IN ('de', 'zh')")
-    }
+    s2.sql("CREATE TABLE glpr_ow.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_ow.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("INSERT OVERWRITE glpr_ow.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+      "WHERE lang IN ('de', 'zh')")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM glpr_ow.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val overwriteRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q303 — `_shard` provenance rollup: the corpus written
     * slice-clustered ([[SliceSql]] via `repartition`, same
@@ -710,13 +664,10 @@ object GlprSource {
   def shardProvenanceRollup(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = provenanceRootCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-prov").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartition(8, expr(SliceSql)), out)
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-prov").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartition(8, expr(SliceSql)), root)
     spark.read.format("graft.io.GlprSource").load(root)
       .select(col("doc_id"), col("_shard"))
       .groupBy(col("_shard"))
@@ -724,8 +675,6 @@ object GlprSource {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .select(col("n_docs"), col("min_id"), col("max_id"))
   }
-  private val provenanceRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q304 — PARTITIONED catalog tables end to end: `CREATE TABLE …
     * PARTITIONED BY (lang)` (identity transform through the SQL front
@@ -771,25 +720,20 @@ object GlprSource {
     * and value-straddling declines are GlprCatalogSpec-pinned. */
   def partitionDeletePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = partitionDeleteRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-pdelete").toString)
+    val root = TempDirs.scratch("graft-glpr-pdelete").toString
     val s2 = freshCatalogSession(spark, "glpr_pdel", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_pdel.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (lang)")
-      s2.sql("INSERT INTO glpr_pdel.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("DELETE FROM glpr_pdel.corpus.docs WHERE lang IN ('de', 'zh')")
-    }
+    s2.sql("CREATE TABLE glpr_pdel.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (lang)")
+    s2.sql("INSERT INTO glpr_pdel.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("DELETE FROM glpr_pdel.corpus.docs WHERE lang IN ('de', 'zh')")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
         |FROM glpr_pdel.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val partitionDeleteRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q310 — MANIFEST commit-point visibility: the corpus written
     * through the job-committed path (manifest published), then a
@@ -804,26 +748,21 @@ object GlprSource {
   def manifestVisibilityPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = manifestCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-manifest").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text"), out)
-      val w = new GlprWriter(out, schema, 999999, 999999L)
-      w.write(org.apache.spark.sql.catalyst.InternalRow(-1L,
-        org.apache.spark.unsafe.types.UTF8String.fromString("xx"),
-        org.apache.spark.unsafe.types.UTF8String.fromString("orphan"),
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          "ORPHAN ROW from a crashed job - must stay invisible")))
-      w.commit(); w.close()
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-manifest").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text"), root)
+    val w = new GlprWriter(root, schema, 999999, 999999L)
+    w.write(org.apache.spark.sql.catalyst.InternalRow(-1L,
+      org.apache.spark.unsafe.types.UTF8String.fromString("xx"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("orphan"),
+      org.apache.spark.unsafe.types.UTF8String.fromString(
+        "ORPHAN ROW from a crashed job - must stay invisible")))
+    w.commit(); w.close()
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q311 — TIME TRAVEL over the append history: the corpus staged in
     * THREE successive batch appends (fixed doc_id slices `< 100`,
@@ -859,7 +798,7 @@ object GlprSource {
     * it, so one staging serves both. */
   private[io] def timeTravelStagedRoot(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    timeTravelCache.computeIfAbsent(dir, _ => {
+    TempDirs.once(s"glpr-timetravel#$dir") {
       import org.apache.spark.sql.functions._
       val out = TempDirs.scratch("graft-glpr-timetravel").toString
       val docs = Tables(spark, dir, "documents")
@@ -868,9 +807,7 @@ object GlprSource {
       write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), out) // v2
       write(docs.filter(col("doc_id") >= 300), out) // version 3
       out
-    })
-  private val timeTravelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** q312 — INCREMENTAL READ between versions (append-only change data
     * capture): `changesFromVersion=m` (+ optional `versionAsOf=n` upper
@@ -909,23 +846,18 @@ object GlprSource {
   def restorePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = restoreCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-restore").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 100), out) // version 1
-      write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), out) // v2
-      write(docs.filter(col("doc_id") >= 300), out) // version 3
-      restoreToVersion(out,
-        math.min(2L, listManifestVersions(out).lastOption.getOrElse(1L)))
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-restore").toString
+    val docs = Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    write(docs.filter(col("doc_id") < 100), root) // version 1
+    write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), root) // v2
+    write(docs.filter(col("doc_id") >= 300), root) // version 3
+    restoreToVersion(root,
+      math.min(2L, listManifestVersions(root).lastOption.getOrElse(1L)))
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"))
   }
-  private val restoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The q328/q329 shared staging: three slice appends (versions 1-3),
     * a shard-aligned CoW DELETE of the middle slice (version 4 — the
@@ -934,7 +866,7 @@ object GlprSource {
     * consumers. */
   private[io] def cdfStagedRoot(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    cdfCache.computeIfAbsent(dir, _ => {
+    TempDirs.once(s"glpr-cdf#$dir") {
       import org.apache.spark.sql.functions._
       val out = TempDirs.scratch("graft-glpr-cdf").toString
       val docs = Tables(spark, dir, "documents")
@@ -954,9 +886,7 @@ object GlprSource {
         write(docs.filter(col("doc_id") < 100), out) // version 5 (re-insert)
       }
       out
-    })
-  private val cdfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** q328 — FULL change data capture ACROSS a DELETE (round-16 verdict
     * gap #2 closed by retention): `changeMode=cdf` +
@@ -1019,26 +949,23 @@ object GlprSource {
   def expireVacuumPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = expireCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-expire").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 100), out)
-      write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), out)
-      write(docs.filter(col("doc_id") >= 300), out)
-      val deletable = docs.filter(col("doc_id") >= 100 && col("doc_id") < 300)
-        .limit(1).count() > 0
-      if (deletable) {
-        GlprMaintenance.deleteIdRange(spark, out, 100L, 299L)
-        GlprMaintenance.expireVersions(out, keepLast = 1)
-        require(GlprMaintenance.vacuum(out) > 0,
-          "vacuum must reclaim the retired slice shards once expired")
-        val gone = intercept(spark.read.format("graft.io.GlprSource")
-          .option("versionAsOf", "1").load(out).count())
-        require(gone, "expired version must fail loudly after vacuum")
-      }
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-expire").toString
+    val docs = Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    write(docs.filter(col("doc_id") < 100), root)
+    write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), root)
+    write(docs.filter(col("doc_id") >= 300), root)
+    val deletable = docs.filter(col("doc_id") >= 100 && col("doc_id") < 300)
+      .limit(1).count() > 0
+    if (deletable) {
+      GlprMaintenance.deleteIdRange(spark, root, 100L, 299L)
+      GlprMaintenance.expireVersions(root, keepLast = 1)
+      require(GlprMaintenance.vacuum(root) > 0,
+        "vacuum must reclaim the retired slice shards once expired")
+      val gone = intercept(spark.read.format("graft.io.GlprSource")
+        .option("versionAsOf", "1").load(root).count())
+      require(gone, "expired version must fail loudly after vacuum")
+    }
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
@@ -1046,8 +973,6 @@ object GlprSource {
   }
   private def intercept(body: => Any): Boolean =
     try { body; false } catch { case _: Exception => true }
-  private val expireCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q331 — TIME TRAVEL OVER DELETE-VECTOR MASKS (round-16 verdict gap
     * #3, closed by dv GENERATIONS): the corpus staged range-clustered
@@ -1063,14 +988,11 @@ object GlprSource {
   def dvTimeTravelPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = dvTtCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-dvtt").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      GlprMaintenance.deleteIdRangeMergeOnRead(out, 150L, 349L): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-dvtt").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    GlprMaintenance.deleteIdRangeMergeOnRead(root, 150L, 349L): Unit
     val last = listManifestVersions(root).lastOption.getOrElse(1L)
     def rollup(v: Long, phase: String): DataFrame =
       spark.read.format("graft.io.GlprSource")
@@ -1082,8 +1004,6 @@ object GlprSource {
     rollup(math.min(1L, last), "pre").unionByName(rollup(last, "post"))
       .select("phase", "lang", "n_docs", "id_sum")
   }
-  private val dvTtCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q344 — MERGE-ON-READ PREDICATE DELETE (`DELETE WHERE lang IN
     * (…)` at zero data movement): the staged corpus value-deleted
@@ -1097,23 +1017,18 @@ object GlprSource {
   def valueDeleteMorPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = valueDelCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-valuedel").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      GlprMaintenance.deleteWhereMergeOnRead(
-        spark, out, "lang", Set("de", "zh")): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-valuedel").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    GlprMaintenance.deleteWhereMergeOnRead(
+      spark, root, "lang", Set("de", "zh")): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val valueDelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q361 — MERGE-ON-READ UPDATE (round-19 verdict #1): the staged
     * corpus normalized (`UPDATE SET lang = 'und' WHERE lang IN ('de',
@@ -1129,23 +1044,18 @@ object GlprSource {
   def updateMorPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = updateMorCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-morupd").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, col("doc_id")), out)
-      GlprMaintenance.updateWhereMergeOnRead(
-        spark, out, "lang", Set("de", "zh"), "lang", "und"): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-morupd").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartitionByRange(8, col("doc_id")), root)
+    GlprMaintenance.updateWhereMergeOnRead(
+      spark, root, "lang", Set("de", "zh"), "lang", "und"): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val updateMorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q365 — MERGE-ON-READ MERGE (CDC-apply priced by the changeset):
     * the corpus `doc_id < 300` staged, then a source slice `[100, 500)`
@@ -1158,25 +1068,20 @@ object GlprSource {
   def mergeMorPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = mergeMorCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-mormerge").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 300L)
-        .repartitionByRange(6, col("doc_id")), out)
-      GlprMaintenance.mergeMergeOnRead(spark, out,
-        docs.filter(col("doc_id") >= 100L && col("doc_id") < 500L)
-          .withColumn("text", upper(col("text")))): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-mormerge").toString
+    val docs = Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    write(docs.filter(col("doc_id") < 300L)
+      .repartitionByRange(6, col("doc_id")), root)
+    GlprMaintenance.mergeMergeOnRead(spark, root,
+      docs.filter(col("doc_id") >= 100L && col("doc_id") < 500L)
+        .withColumn("text", upper(col("text")))): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val mergeMorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q345 — WRITE-AUDIT-PUBLISH (the Iceberg WAP pattern at manifest
     * size): slice 1 INSERTed to main; a branch forked and slice 2
@@ -1193,37 +1098,32 @@ object GlprSource {
   def wapPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = wapCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-wap").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 100L).coalesce(2), out) // main
-      createBranch(out, "staging")
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-        .coalesce(2).write.format("graft.io.GlprSource")
-        .option("branch", "staging").mode("append").save(out)
-      def audit(b: String): Long = spark.read.format("graft.io.GlprSource")
-        .option("branch", b).load(out)
-        .filter(col("lang") === "xx").count()
-      if (audit("staging") == 0L) publishBranch(out, "staging"): Unit
-      createBranch(out, "reject")
-      docs.filter(col("doc_id") < 50L)
-        .select((col("doc_id") + 9000000L).as("doc_id"),
-          lit("xx").as("lang"), col("source"), col("text"))
-        .coalesce(1).write.format("graft.io.GlprSource")
-        .option("branch", "reject").mode("append").save(out)
-      if (audit("reject") == 0L) publishBranch(out, "reject"): Unit
-      else { dropBranch(out, "reject"); GlprMaintenance.vacuum(out): Unit }
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-wap").toString
+    val docs = Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    write(docs.filter(col("doc_id") < 100L).coalesce(2), root) // main
+    createBranch(root, "staging")
+    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
+      .coalesce(2).write.format("graft.io.GlprSource")
+      .option("branch", "staging").mode("append").save(root)
+    def audit(b: String): Long = spark.read.format("graft.io.GlprSource")
+      .option("branch", b).load(root)
+      .filter(col("lang") === "xx").count()
+    if (audit("staging") == 0L) publishBranch(root, "staging"): Unit
+    createBranch(root, "reject")
+    docs.filter(col("doc_id") < 50L)
+      .select((col("doc_id") + 9000000L).as("doc_id"),
+        lit("xx").as("lang"), col("source"), col("text"))
+      .coalesce(1).write.format("graft.io.GlprSource")
+      .option("branch", "reject").mode("append").save(root)
+    if (audit("reject") == 0L) publishBranch(root, "reject"): Unit
+    else { dropBranch(root, "reject"); GlprMaintenance.vacuum(root): Unit }
     spark.read.format("graft.io.GlprSource").load(root)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val wapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q346 — the WAP AUDIT-FIX-PUBLISH loop (round-18 verdict #1): main
     * holds slice 1; a branch forked, slice 2 staged onto it WITH
@@ -1255,109 +1155,99 @@ object GlprSource {
   def branchUpdateFixPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = branchUpdFixCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-branchupd").toString
-      val s2 = freshCatalogSession(spark, "glpr_bu", croot)
-      s2.sql("CREATE TABLE glpr_bu.ns.t " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_bu.ns.t SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      val path = new java.io.File(croot, "ns/t").getAbsolutePath
-      createBranch(path, "relabel")
-      val docs = Tables(s2, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-        .select(col("doc_id"),
-          when(col("doc_id") % 10 === 0L, lit("xx"))
-            .otherwise(col("lang")).as("lang"),
-          col("source"), col("text"))
-        .coalesce(2).write.format("graft.io.GlprSource")
-        .option("branch", "relabel").mode("append").save(path)
-      def badCount(): Long = s2.sql(
-        "SELECT count(*) FROM glpr_bu.ns.t VERSION AS OF 'relabel' " +
-          "WHERE lang = 'xx'").collect()(0).getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) stages no mislabels —
-      // the fix is then a no-op and publish adopts the slice as-is
-      if (badCount() > 0L) {
-        GlprMaintenance.updateWhereMergeOnRead(s2, path,
-          "lang", Set("xx"), "lang", "und",
-          branch = Some("relabel")): Unit
-        require(badCount() == 0L, "q366 branch update left mislabels behind")
-      }
-      // the fix is invisible to main until publish
-      require(spark.read.format("graft.io.GlprSource").load(path)
-        .count() == s2.sql("SELECT count(*) FROM glpr_bu.ns.t " +
-          "WHERE doc_id < 100").collect()(0).getLong(0),
-        "q366 branch staging leaked into main before publish")
-      publishBranch(path, "relabel"): Unit
-      croot
-    })
+    val root = TempDirs.scratch("graft-glpr-branchupd").toString
+    val s2 = freshCatalogSession(spark, "glpr_bu", root)
+    s2.sql("CREATE TABLE glpr_bu.ns.t " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_bu.ns.t SELECT doc_id, lang, source, text " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+    val path = new java.io.File(root, "ns/t").getAbsolutePath
+    createBranch(path, "relabel")
+    val docs = Tables(s2, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
+      .select(col("doc_id"),
+        when(col("doc_id") % 10 === 0L, lit("xx"))
+          .otherwise(col("lang")).as("lang"),
+        col("source"), col("text"))
+      .coalesce(2).write.format("graft.io.GlprSource")
+      .option("branch", "relabel").mode("append").save(path)
+    def badCount(): Long = s2.sql(
+      "SELECT count(*) FROM glpr_bu.ns.t VERSION AS OF 'relabel' " +
+        "WHERE lang = 'xx'").collect()(0).getLong(0)
+    // an all-empty corpus (RegistryEmptySpec) stages no mislabels —
+    // the fix is then a no-op and publish adopts the slice as-is
+    if (badCount() > 0L) {
+      GlprMaintenance.updateWhereMergeOnRead(s2, path,
+        "lang", Set("xx"), "lang", "und",
+        branch = Some("relabel")): Unit
+      require(badCount() == 0L, "q366 branch update left mislabels behind")
+    }
+    // the fix is invisible to main until publish
+    require(spark.read.format("graft.io.GlprSource").load(path)
+      .count() == s2.sql("SELECT count(*) FROM glpr_bu.ns.t " +
+        "WHERE doc_id < 100").collect()(0).getLong(0),
+      "q366 branch staging leaked into main before publish")
+    publishBranch(path, "relabel"): Unit
     spark.read.format("graft.io.GlprSource").load(s"$root/ns/t")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
-  private val branchUpdFixCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def branchFixPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = branchFixCache.computeIfAbsent(dir, _ => {
-      val croot = TempDirs.scratch("graft-glpr-branchfix").toString
-      val s2 = freshCatalogSession(spark, "glpr_fix", croot)
-      s2.sql("CREATE TABLE glpr_fix.ns.t " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_fix.ns.t SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      val path = new java.io.File(croot, "ns/t").getAbsolutePath
-      createBranch(path, "fixup")
-      val docs = Tables(s2, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-        .coalesce(2).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      docs.filter(col("doc_id") < 40L)
-        .select((col("doc_id") + 9000000L).as("doc_id"),
-          lit("xx").as("lang"), col("source"), col("text"))
-        .coalesce(1).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      docs.filter(col("doc_id") < 25L)
-        .select((col("doc_id") + 9500000L).as("doc_id"), col("lang"),
-          col("source"), lit("CORRUPT").as("text"))
-        .coalesce(1).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      def badCount(): Long = s2.sql(
-        "SELECT count(*) FROM glpr_fix.ns.t VERSION AS OF 'fixup' " +
-          "WHERE lang = 'xx' OR doc_id >= 9000000").collect()(0).getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) stages no garbage —
-      // the fix loop is then a no-op and publish flips nothing
-      if (badCount() > 0L) {
-        s2.sql(
-          "CALL glpr_fix.sys.delete_where_mor('ns.t', 'lang', 'xx', 'fixup')")
-          .collect(): Unit
-        GlprMaintenance.deleteIdRangeMergeOnRead(path, 9000000L,
-          Long.MaxValue, Some("fixup")): Unit
-        require(badCount() == 0L, "q346 branch fix left garbage behind")
-      }
-      // main must not have seen the staging OR the masks until publish
-      require(spark.read.format("graft.io.GlprSource").load(path)
-        .count() == s2.sql("SELECT count(*) FROM glpr_fix.ns.t " +
-          "WHERE doc_id < 100").collect()(0).getLong(0),
-        "q346 branch staging leaked into main before publish")
-      publishBranch(path, "fixup"): Unit
-      dropBranch(path, "fixup"): Unit
-      path
-    })
-    spark.read.format("graft.io.GlprSource").load(root)
+    val root = TempDirs.scratch("graft-glpr-branchfix").toString
+    val s2 = freshCatalogSession(spark, "glpr_fix", root)
+    s2.sql("CREATE TABLE glpr_fix.ns.t " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_fix.ns.t SELECT doc_id, lang, source, text " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+    val path = new java.io.File(root, "ns/t").getAbsolutePath
+    createBranch(path, "fixup")
+    val docs = Tables(s2, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
+      .coalesce(2).write.format("graft.io.GlprSource")
+      .option("branch", "fixup").mode("append").save(path)
+    docs.filter(col("doc_id") < 40L)
+      .select((col("doc_id") + 9000000L).as("doc_id"),
+        lit("xx").as("lang"), col("source"), col("text"))
+      .coalesce(1).write.format("graft.io.GlprSource")
+      .option("branch", "fixup").mode("append").save(path)
+    docs.filter(col("doc_id") < 25L)
+      .select((col("doc_id") + 9500000L).as("doc_id"), col("lang"),
+        col("source"), lit("CORRUPT").as("text"))
+      .coalesce(1).write.format("graft.io.GlprSource")
+      .option("branch", "fixup").mode("append").save(path)
+    def badCount(): Long = s2.sql(
+      "SELECT count(*) FROM glpr_fix.ns.t VERSION AS OF 'fixup' " +
+        "WHERE lang = 'xx' OR doc_id >= 9000000").collect()(0).getLong(0)
+    // an all-empty corpus (RegistryEmptySpec) stages no garbage —
+    // the fix loop is then a no-op and publish flips nothing
+    if (badCount() > 0L) {
+      s2.sql(
+        "CALL glpr_fix.sys.delete_where_mor('ns.t', 'lang', 'xx', 'fixup')")
+        .collect(): Unit
+      GlprMaintenance.deleteIdRangeMergeOnRead(path, 9000000L,
+        Long.MaxValue, Some("fixup")): Unit
+      require(badCount() == 0L, "q346 branch fix left garbage behind")
+    }
+    // main must not have seen the staging OR the masks until publish
+    require(spark.read.format("graft.io.GlprSource").load(path)
+      .count() == s2.sql("SELECT count(*) FROM glpr_fix.ns.t " +
+        "WHERE doc_id < 100").collect()(0).getLong(0),
+      "q346 branch staging leaked into main before publish")
+    publishBranch(path, "fixup"): Unit
+    dropBranch(path, "fixup"): Unit
+    spark.read.format("graft.io.GlprSource").load(path)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         max(col("doc_id")).cast("long").as("max_id"))
   }
-  private val branchFixCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q326 — SQL `UPDATE` through the row-level-operation front door
     * (round-16 verdict #2): the corpus in a catalog table, then plain
@@ -1372,25 +1262,20 @@ object GlprSource {
     * spuriously updated. */
   def sqlUpdatePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = sqlUpdateCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-sqlupdate").toString)
+    val root = TempDirs.scratch("graft-glpr-sqlupdate").toString
     val s2 = freshCatalogSession(spark, "glpr_upd", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_upd.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_upd.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("UPDATE glpr_upd.corpus.docs " +
-        "SET source = 'curated', text = concat(text, ' [ok]') " +
-        "WHERE doc_id < 100")
-    }
+    s2.sql("CREATE TABLE glpr_upd.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_upd.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("UPDATE glpr_upd.corpus.docs " +
+      "SET source = 'curated', text = concat(text, ' [ok]') " +
+      "WHERE doc_id < 100")
     rematerialize(spark, s2.sql(
       """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
         |FROM glpr_upd.corpus.docs GROUP BY lang, source""".stripMargin))
   }
-  private val sqlUpdateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q327 — SQL `MERGE INTO` (the lakehouse upsert): a deterministic
     * updates source derived from the documents table — rows
@@ -1402,36 +1287,31 @@ object GlprSource {
     * unmatched row, or a dropped insert all break the hash. */
   def sqlMergePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = sqlMergeCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-sqlmerge").toString)
+    val root = TempDirs.scratch("graft-glpr-sqlmerge").toString
     val s2 = freshCatalogSession(spark, "glpr_mrg", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_mrg.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_mrg.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        s"""MERGE INTO glpr_mrg.corpus.docs t
-           |USING (
-           |  SELECT doc_id, lang, 'merged' AS source, upper(text) AS text
-           |  FROM parquet.`$dir/documents.parquet`
-           |  WHERE doc_id >= 100 AND doc_id < 300
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, lang, 'inserted', text
-           |  FROM parquet.`$dir/documents.parquet` WHERE doc_id < 50
-           |) u
-           |ON t.doc_id = u.doc_id
-           |WHEN MATCHED THEN UPDATE SET t.source = u.source, t.text = u.text
-           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    }
+    s2.sql("CREATE TABLE glpr_mrg.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_mrg.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql(
+      s"""MERGE INTO glpr_mrg.corpus.docs t
+         |USING (
+         |  SELECT doc_id, lang, 'merged' AS source, upper(text) AS text
+         |  FROM parquet.`$dir/documents.parquet`
+         |  WHERE doc_id >= 100 AND doc_id < 300
+         |  UNION ALL
+         |  SELECT doc_id + 1000000, lang, 'inserted', text
+         |  FROM parquet.`$dir/documents.parquet` WHERE doc_id < 50
+         |) u
+         |ON t.doc_id = u.doc_id
+         |WHEN MATCHED THEN UPDATE SET t.source = u.source, t.text = u.text
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     rematerialize(spark, s2.sql(
       """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
         |FROM glpr_mrg.corpus.docs GROUP BY source, lang""".stripMargin))
   }
-  private val sqlMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q338 — CDC-APPLY through ONE SQL MERGE, every clause class in one
     * statement (the first real MERGE a lakehouse user writes after
@@ -1454,64 +1334,59 @@ object GlprSource {
   def cdcMergeSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = cdcMergeCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-cdcmerge").toString)
+    val root = TempDirs.scratch("graft-glpr-cdcmerge").toString
     val s2 = freshCatalogSession(spark, "glpr_cdc", root)
-    if (!new java.io.File(root, "state/compacted/_glpr_table").isFile) {
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val chg = graft.streaming.Events.convertTs(
-          s2.read.parquet(s"$dir/events.parquet"))
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"), col("value"))
-      chg.createOrReplaceTempView("glpr_cdc_changelog")
-      val mm = chg.agg(min("ts_ms"), max("ts_ms"), max("user_id")).head()
-      val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
-      // sentinel keys land strictly past every real user_id at ANY
-      // scale (a fixed base could collide with a larger fixture and
-      // turn a sentinel into a duplicate real row)
-      val sentinelBase =
-        (if (mm.isNullAt(2)) 0L else math.max(mm.getLong(2), 0L)) + 1000L
-      s2.sql("CREATE TABLE glpr_cdc.state.compacted " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql(
-        s"""INSERT INTO glpr_cdc.state.compacted
-           |SELECT user_id AS doc_id, last.event_type AS lang,
-           |       CAST(last.event_id AS STRING) AS source,
-           |       CAST(last.value AS STRING) AS text
-           |FROM (SELECT user_id,
-           |        max(struct(ts_ms, event_id, event_type, value)) AS last
-           |      FROM glpr_cdc_changelog WHERE ts_ms <= $mid GROUP BY user_id)
-           |WHERE last.event_type <> 'error'
-           |UNION ALL
-           |SELECT $sentinelBase + id, 'sentinel', '0', '0.0' FROM range(5)
-           |""".stripMargin)
-      s2.sql(
-        s"""MERGE INTO glpr_cdc.state.compacted t
-           |USING (
-           |  SELECT user_id, last.event_id AS ev_id,
-           |         last.event_type AS ev_type, last.value AS ev_value
-           |  FROM (SELECT user_id,
-           |          max(struct(ts_ms, event_id, event_type, value)) AS last
-           |        FROM glpr_cdc_changelog WHERE ts_ms > $mid GROUP BY user_id)
-           |) u
-           |ON t.doc_id = u.user_id
-           |WHEN MATCHED AND u.ev_type = 'error' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET t.lang = u.ev_type,
-           |  t.source = CAST(u.ev_id AS STRING), t.text = CAST(u.ev_value AS STRING)
-           |WHEN NOT MATCHED AND u.ev_type <> 'error' THEN
-           |  INSERT (doc_id, lang, source, text)
-           |  VALUES (u.user_id, u.ev_type, CAST(u.ev_id AS STRING),
-           |          CAST(u.ev_value AS STRING))
-           |WHEN NOT MATCHED BY SOURCE AND t.lang = 'sentinel' THEN DELETE
-           |""".stripMargin)
-    }
+    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val chg = graft.streaming.Events.convertTs(
+        s2.read.parquet(s"$dir/events.parquet"))
+      .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
+        col("event_id"), col("event_type"), col("value"))
+    chg.createOrReplaceTempView("glpr_cdc_changelog")
+    val mm = chg.agg(min("ts_ms"), max("ts_ms"), max("user_id")).head()
+    val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
+    // sentinel keys land strictly past every real user_id at ANY
+    // scale (a fixed base could collide with a larger fixture and
+    // turn a sentinel into a duplicate real row)
+    val sentinelBase =
+      (if (mm.isNullAt(2)) 0L else math.max(mm.getLong(2), 0L)) + 1000L
+    s2.sql("CREATE TABLE glpr_cdc.state.compacted " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql(
+      s"""INSERT INTO glpr_cdc.state.compacted
+         |SELECT user_id AS doc_id, last.event_type AS lang,
+         |       CAST(last.event_id AS STRING) AS source,
+         |       CAST(last.value AS STRING) AS text
+         |FROM (SELECT user_id,
+         |        max(struct(ts_ms, event_id, event_type, value)) AS last
+         |      FROM glpr_cdc_changelog WHERE ts_ms <= $mid GROUP BY user_id)
+         |WHERE last.event_type <> 'error'
+         |UNION ALL
+         |SELECT $sentinelBase + id, 'sentinel', '0', '0.0' FROM range(5)
+         |""".stripMargin)
+    s2.sql(
+      s"""MERGE INTO glpr_cdc.state.compacted t
+         |USING (
+         |  SELECT user_id, last.event_id AS ev_id,
+         |         last.event_type AS ev_type, last.value AS ev_value
+         |  FROM (SELECT user_id,
+         |          max(struct(ts_ms, event_id, event_type, value)) AS last
+         |        FROM glpr_cdc_changelog WHERE ts_ms > $mid GROUP BY user_id)
+         |) u
+         |ON t.doc_id = u.user_id
+         |WHEN MATCHED AND u.ev_type = 'error' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET t.lang = u.ev_type,
+         |  t.source = CAST(u.ev_id AS STRING), t.text = CAST(u.ev_value AS STRING)
+         |WHEN NOT MATCHED AND u.ev_type <> 'error' THEN
+         |  INSERT (doc_id, lang, source, text)
+         |  VALUES (u.user_id, u.ev_type, CAST(u.ev_id AS STRING),
+         |          CAST(u.ev_value AS STRING))
+         |WHEN NOT MATCHED BY SOURCE AND t.lang = 'sentinel' THEN DELETE
+         |""".stripMargin)
     rematerialize(spark, s2.sql(
       """SELECT doc_id AS user_id, CAST(source AS BIGINT) AS last_event_id,
         |       lang AS last_type, CAST(text AS DOUBLE) AS last_value
         |FROM glpr_cdc.state.compacted""".stripMargin))
   }
-  private val cdcMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q339 — TYPED SCHEMA EVOLUTION + METADATA-ONLY RENAME end to end
     * (round-17 verdict #2): the corpus INSERTed under the base schema,
@@ -1528,23 +1403,20 @@ object GlprSource {
     * oracle rebuilds the mixed typed table relationally. */
   def typedEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = typedEvoCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-typedevo").toString)
+    val root = TempDirs.scratch("graft-glpr-typedevo").toString
     val s2 = freshCatalogSession(spark, "glpr_tev", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_tev.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN n_tokens BIGINT")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN score DOUBLE")
-      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "CAST(octet_length(text) AS BIGINT) AS n_tokens, " +
-        "CAST(doc_id + 1000000 AS DOUBLE) / 4.0 AS score " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs RENAME COLUMN n_tokens TO tok_count")
-    }
+    s2.sql("CREATE TABLE glpr_tev.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_tev.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN n_tokens BIGINT")
+    s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN score DOUBLE")
+    s2.sql("INSERT INTO glpr_tev.corpus.docs " +
+      "SELECT doc_id + 1000000, lang, source, text, " +
+      "CAST(octet_length(text) AS BIGINT) AS n_tokens, " +
+      "CAST(doc_id + 1000000 AS DOUBLE) / 4.0 AS score " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+    s2.sql("ALTER TABLE glpr_tev.corpus.docs RENAME COLUMN n_tokens TO tok_count")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(count(tok_count) AS BIGINT) AS n_typed,
@@ -1552,8 +1424,6 @@ object GlprSource {
         | coalesce(round(sum(score), 6), CAST(0.0 AS DOUBLE)) AS score_sum
         |FROM glpr_tev.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val typedEvoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q362 — TYPE-WIDENING `ALTER COLUMN` end to end (round-19 verdict
     * #3, the Iceberg-safe promotions): a table created with NARROW
@@ -1571,34 +1441,29 @@ object GlprSource {
     * rejections are GlprCatalogSpec-pinned. */
   def typeWideningPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = typeWideCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-typewide").toString)
+    val root = TempDirs.scratch("graft-glpr-typewide").toString
     val s2 = freshCatalogSession(spark, "glpr_tw", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_tw.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING, " +
-        "score INT, conf FLOAT)")
-      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "CAST(doc_id % 100 AS INT) AS score, " +
-        "CAST(doc_id % 8 AS FLOAT) / 4 AS conf " +
-        s"FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN score TYPE BIGINT")
-      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN conf TYPE DOUBLE")
-      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "doc_id + 4000000000 AS score, " +
-        "CAST(doc_id % 16 AS DOUBLE) / 8 AS conf " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    }
+    s2.sql("CREATE TABLE glpr_tw.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING, " +
+      "score INT, conf FLOAT)")
+    s2.sql("INSERT INTO glpr_tw.corpus.docs " +
+      "SELECT doc_id, lang, source, text, " +
+      "CAST(doc_id % 100 AS INT) AS score, " +
+      "CAST(doc_id % 8 AS FLOAT) / 4 AS conf " +
+      s"FROM parquet.`$dir/documents.parquet`")
+    s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN score TYPE BIGINT")
+    s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN conf TYPE DOUBLE")
+    s2.sql("INSERT INTO glpr_tw.corpus.docs " +
+      "SELECT doc_id + 1000000, lang, source, text, " +
+      "doc_id + 4000000000 AS score, " +
+      "CAST(doc_id % 16 AS DOUBLE) / 8 AS conf " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(score) AS BIGINT) AS score_sum,
         | CAST(sum(conf) AS DOUBLE) AS conf_sum
         |FROM glpr_tw.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val typeWideCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q363 — `ADD COLUMN ... DEFAULT <literal>` end to end (round-19
     * verdict #6, the Iceberg INITIAL-default): a three-era table —
@@ -1614,35 +1479,30 @@ object GlprSource {
     * GlprCatalogSpec-pinned. */
   def addDefaultPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = addDefaultCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-adddefault").toString)
+    val root = TempDirs.scratch("graft-glpr-adddefault").toString
     val s2 = freshCatalogSession(spark, "glpr_dflt", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_dflt.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_dflt.corpus.docs ADD COLUMN tier STRING")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 200")
-      s2.sql("ALTER TABLE glpr_dflt.corpus.docs " +
-        "ADD COLUMN rank BIGINT DEFAULT 7")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        "SELECT doc_id + 2000000, lang, source, text, " +
-        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier, " +
-        "doc_id % 5 AS rank " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    }
+    s2.sql("CREATE TABLE glpr_dflt.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("ALTER TABLE glpr_dflt.corpus.docs ADD COLUMN tier STRING")
+    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+      "SELECT doc_id + 1000000, lang, source, text, " +
+      "concat('t', CAST(doc_id % 3 AS STRING)) AS tier " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 200")
+    s2.sql("ALTER TABLE glpr_dflt.corpus.docs " +
+      "ADD COLUMN rank BIGINT DEFAULT 7")
+    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+      "SELECT doc_id + 2000000, lang, source, text, " +
+      "concat('t', CAST(doc_id % 3 AS STRING)) AS tier, " +
+      "doc_id % 5 AS rank " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(count(tier) AS BIGINT) AS n_tier,
         | CAST(sum(rank) AS BIGINT) AS rank_sum
         |FROM glpr_dflt.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val addDefaultCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q347 — `ALTER TABLE DROP COLUMN` as a METADATA TOMBSTONE
     * (round-18 verdict #2): two extras added (`note` STRING, `keep`
@@ -1660,39 +1520,36 @@ object GlprSource {
     * live in GlprCatalogSpec. */
   def dropColumnPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = dropColCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-dropcol").toString)
+    val root = TempDirs.scratch("graft-glpr-dropcol").toString
     val s2 = freshCatalogSession(spark, "glpr_drop", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_drop.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN note STRING")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN keep BIGINT")
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('n-', lang) AS note, " +
-        "CAST(octet_length(text) AS BIGINT) AS keep " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs DROP COLUMN note")
-      // the dropped name is BURNED: re-adding must refuse, or the old
-      // shards' note bytes would re-bind under the new column
-      val readd =
-        try { s2.sql("ALTER TABLE glpr_drop.corpus.docs " +
-          "ADD COLUMN note STRING"); None }
-        catch { case e: Throwable => Some(e) }
-      require(readd.exists { e =>
-        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-          .exists(t => Option(t.getMessage).exists(_.contains("dropped")))
-      }, s"q347 contract: re-adding a dropped column must refuse, got $readd")
-      // post-drop inserts carry the NARROWED schema (base + keep)
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        "SELECT doc_id + 2000000, lang, source, text, " +
-        "CAST(doc_id AS BIGINT) AS keep " +
-        s"FROM parquet.`$dir/documents.parquet` " +
-        "WHERE doc_id >= 100 AND doc_id < 200")
-    }
+    s2.sql("CREATE TABLE glpr_drop.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN note STRING")
+    s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN keep BIGINT")
+    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+      "SELECT doc_id + 1000000, lang, source, text, " +
+      "concat('n-', lang) AS note, " +
+      "CAST(octet_length(text) AS BIGINT) AS keep " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+    s2.sql("ALTER TABLE glpr_drop.corpus.docs DROP COLUMN note")
+    // the dropped name is BURNED: re-adding must refuse, or the old
+    // shards' note bytes would re-bind under the new column
+    val readd =
+      try { s2.sql("ALTER TABLE glpr_drop.corpus.docs " +
+        "ADD COLUMN note STRING"); None }
+      catch { case e: Throwable => Some(e) }
+    require(readd.exists { e =>
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+        .exists(t => Option(t.getMessage).exists(_.contains("dropped")))
+    }, s"q347 contract: re-adding a dropped column must refuse, got $readd")
+    // post-drop inserts carry the NARROWED schema (base + keep)
+    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+      "SELECT doc_id + 2000000, lang, source, text, " +
+      "CAST(doc_id AS BIGINT) AS keep " +
+      s"FROM parquet.`$dir/documents.parquet` " +
+      "WHERE doc_id >= 100 AND doc_id < 200")
     val res = s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(count(keep) AS BIGINT) AS n_keep,
@@ -1702,8 +1559,6 @@ object GlprSource {
       "q347 contract: the dropped column must leave the table schema")
     rematerialize(spark, res)
   }
-  private val dropColCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q340 — SIDECAR STATISTICS driving the broadcast decision
     * (round-17 verdict #3): the corpus staged as a GLPR table whose
@@ -1723,13 +1578,10 @@ object GlprSource {
   def cboStatsJoinPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = cboStatsCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-cbostats").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartition(4), out)
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-cbostats").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+      .repartition(4), root)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.cbo.enabled", "true")
@@ -1749,8 +1601,6 @@ object GlprSource {
         s"range-filtered corpus side\n$plan")
     rematerialize(spark, res)
   }
-  private val cboStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q332 — SCHEMA EVOLUTION end to end: the corpus INSERTed under the
     * base schema, `ALTER TABLE ADD COLUMN note STRING`, then a second
@@ -1763,20 +1613,17 @@ object GlprSource {
     * misread field boundary or a non-null default breaks the hash. */
   def addColumnPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = addColCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-addcol").toString)
+    val root = TempDirs.scratch("graft-glpr-addcol").toString
     val s2 = freshCatalogSession(spark, "glpr_evo", root)
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_evo.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_evo.corpus.docs ADD COLUMN note STRING")
-      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('tag-', source) AS note " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    }
+    s2.sql("CREATE TABLE glpr_evo.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("INSERT INTO glpr_evo.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+    s2.sql("ALTER TABLE glpr_evo.corpus.docs ADD COLUMN note STRING")
+    s2.sql("INSERT INTO glpr_evo.corpus.docs " +
+      "SELECT doc_id + 1000000, lang, source, text, " +
+      "concat('tag-', source) AS note " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(count(note) AS BIGINT) AS n_notes,
@@ -1784,8 +1631,6 @@ object GlprSource {
         | CAST(sum(octet_length(text)) AS BIGINT) AS text_bytes
         |FROM glpr_evo.corpus.docs GROUP BY lang""".stripMargin))
   }
-  private val addColCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q333 — DATE PARTITIONING, `PARTITIONED BY (days(ts))` over an
     * ISO-8601 string column (the extra-column machinery supplies `ts`):
@@ -1798,20 +1643,17 @@ object GlprSource {
     * The oracle derives the same days relationally. */
   def daysPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = daysCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-days").toString)
+    val root = TempDirs.scratch("graft-glpr-days").toString
     val s2 = freshCatalogSession(spark, "glpr_days", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_days.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-        "PARTITIONED BY (days(ts))")
-      s2.sql("INSERT INTO glpr_days.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-01'), " +
-        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet`")
-    }
+    s2.sql("CREATE TABLE glpr_days.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
+      "PARTITIONED BY (days(ts))")
+    s2.sql("INSERT INTO glpr_days.corpus.docs " +
+      "SELECT doc_id, lang, source, text, " +
+      "concat(date_format(date_add(to_date('2024-01-01'), " +
+      "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
+      s"FROM parquet.`$dir/documents.parquet`")
     rematerialize(spark, s2.sql(
       """SELECT substr(ts, 1, 10) AS day, lang,
         | CAST(count(*) AS BIGINT) AS n_docs,
@@ -1820,8 +1662,6 @@ object GlprSource {
         |WHERE ts >= '2024-01-03' AND ts < '2024-01-05'
         |GROUP BY 1, 2""".stripMargin))
   }
-  private val daysCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q341 — MONTH PARTITIONING, `PARTITIONED BY (months(ts))` (round-17
     * verdict #4): the same prefix-transform channel as q333's days —
@@ -1831,20 +1671,17 @@ object GlprSource {
     * the same deterministic months. */
   def monthsPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = monthsCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-months").toString)
+    val root = TempDirs.scratch("graft-glpr-months").toString
     val s2 = freshCatalogSession(spark, "glpr_mon", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_mon.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-        "PARTITIONED BY (months(ts))")
-      s2.sql("INSERT INTO glpr_mon.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-15'), " +
-        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet`")
-    }
+    s2.sql("CREATE TABLE glpr_mon.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
+      "PARTITIONED BY (months(ts))")
+    s2.sql("INSERT INTO glpr_mon.corpus.docs " +
+      "SELECT doc_id, lang, source, text, " +
+      "concat(date_format(date_add(to_date('2024-01-15'), " +
+      "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
+      s"FROM parquet.`$dir/documents.parquet`")
     rematerialize(spark, s2.sql(
       """SELECT substr(ts, 1, 7) AS month, lang,
         | CAST(count(*) AS BIGINT) AS n_docs,
@@ -1853,8 +1690,6 @@ object GlprSource {
         |WHERE ts >= '2024-02' AND ts <= '2024-02-29T23:59:59'
         |GROUP BY 1, 2""".stripMargin))
   }
-  private val monthsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q349 — PARTITION-SPEC EVOLUTION (round-18 verdict #4): era 1
     * INSERTed under `days(ts)`; `CALL sys.set_partition_spec('…',
@@ -1870,27 +1705,24 @@ object GlprSource {
     * GlprCatalogSpec-pinned. The oracle derives both eras relationally. */
   def specEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = specEvoCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-specevo").toString)
+    val root = TempDirs.scratch("graft-glpr-specevo").toString
     val s2 = freshCatalogSession(spark, "glpr_sev", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_sev.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-        "PARTITIONED BY (days(ts))")
-      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-01'), " +
-        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 250")
-      s2.sql("CALL glpr_sev.sys.set_partition_spec('corpus.docs', " +
-        "'months(ts)')").collect(): Unit
-      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-03-15'), " +
-        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id >= 250")
-    }
+    s2.sql("CREATE TABLE glpr_sev.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
+      "PARTITIONED BY (days(ts))")
+    s2.sql("INSERT INTO glpr_sev.corpus.docs " +
+      "SELECT doc_id, lang, source, text, " +
+      "concat(date_format(date_add(to_date('2024-01-01'), " +
+      "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 250")
+    s2.sql("CALL glpr_sev.sys.set_partition_spec('corpus.docs', " +
+      "'months(ts)')").collect(): Unit
+    s2.sql("INSERT INTO glpr_sev.corpus.docs " +
+      "SELECT doc_id, lang, source, text, " +
+      "concat(date_format(date_add(to_date('2024-03-15'), " +
+      "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
+      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id >= 250")
     val res = s2.sql(
       """SELECT substr(ts, 1, 7) AS month,
         | CAST(count(*) AS BIGINT) AS n_docs,
@@ -1912,8 +1744,6 @@ object GlprSource {
       }
     out
   }
-  private val specEvoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q352 — AUTOMATIC per-shard value statistics (round 19): the corpus
     * ingested as four per-feed slices (each append holds a quarter of
@@ -1930,16 +1760,13 @@ object GlprSource {
   def valueStatsPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = valueStatsCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-valstats").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      (0 until 4).foreach { g =>
-        val srcs = (0 until 20).filter(_ % 4 == g).map(i => s"src$i")
-        write(docs.filter(col("source").isin(srcs: _*)).coalesce(2), out)
-      }
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-valstats").toString
+    val docs = Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    (0 until 4).foreach { g =>
+      val srcs = (0 until 20).filter(_ % 4 == g).map(i => s"src$i")
+      write(docs.filter(col("source").isin(srcs: _*)).coalesce(2), root)
+    }
     val res = spark.read.format("graft.io.GlprSource").load(root)
       .filter(col("source").isin("src2", "src6"))
       .groupBy(col("lang"))
@@ -1956,8 +1783,6 @@ object GlprSource {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(out.toSeq.asJava, res.schema)
   }
-  private val valueStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q342 — TRUNCATE PARTITIONING, `PARTITIONED BY (truncate(4,
     * source))` (round-17 verdict #4): prefix width 4 over the src
@@ -1967,17 +1792,14 @@ object GlprSource {
     * the Iceberg transform family on the same sidecar channel. */
   def truncatePartitionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = truncCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-trunc").toString)
+    val root = TempDirs.scratch("graft-glpr-trunc").toString
     val s2 = freshCatalogSession(spark, "glpr_trn", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_trn.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (truncate(4, source))")
-      s2.sql("INSERT INTO glpr_trn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    }
+    s2.sql("CREATE TABLE glpr_trn.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (truncate(4, source))")
+    s2.sql("INSERT INTO glpr_trn.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
     rematerialize(spark, s2.sql(
       """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -1985,8 +1807,6 @@ object GlprSource {
         |WHERE source IN ('src7', 'src12')
         |GROUP BY 1, 2""".stripMargin))
   }
-  private val truncCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q334 — HASH-BUCKET PARTITIONING, `PARTITIONED BY (bucket(8,
     * doc_id))`: bucket id = floorMod(doc_id, 8), tracked per shard at
@@ -1997,24 +1817,19 @@ object GlprSource {
     * GlprCatalogSpec. */
   def bucketPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = bucketCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-bucket").toString)
+    val root = TempDirs.scratch("graft-glpr-bucket").toString
     val s2 = freshCatalogSession(spark, "glpr_bkt", root)
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
-      s2.sql("CREATE TABLE glpr_bkt.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (bucket(8, doc_id))")
-      s2.sql("INSERT INTO glpr_bkt.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    }
+    s2.sql("CREATE TABLE glpr_bkt.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
+      "PARTITIONED BY (bucket(8, doc_id))")
+    s2.sql("INSERT INTO glpr_bkt.corpus.docs " +
+      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
     rematerialize(spark, s2.sql(
       """SELECT doc_id, lang, source
         |FROM glpr_bkt.corpus.docs
         |WHERE doc_id IN (0, 8, 17, 42, 97)""".stripMargin))
   }
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q335 — `TIMESTAMP AS OF` through the SQL front door: three slice
     * INSERTs, the version files' mtimes (the commit clock — immutable
@@ -2028,33 +1843,28 @@ object GlprSource {
   def timestampAsOfPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val t0 = 1700000000000L
-    val root = tsAsOfCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-tsasof").toString
-      val s2 = freshCatalogSession(spark, "glpr_ts", out)
-      s2.sql("CREATE TABLE glpr_ts.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      // degenerate-SF determinism: skip empty slices (q316's guard),
-      // so versions = nonempty slices and the oracle's gate matches
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          val n = s2.sql("SELECT count(*) AS n FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-          if (n > 0)
-            s2.sql("INSERT INTO glpr_ts.corpus.docs " +
-              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-              s"WHERE $p")
-        }
-      val tdir = new java.io.File(out, "corpus/docs").getAbsolutePath
-      // pin the DURABLE commit clock (header + mtime mirror) to the
-      // fixed schedule the oracle's pin arithmetic assumes
-      listManifestVersions(tdir).foreach { v =>
-        pinVersionCommitMs(tdir, v, t0 + (v - 1) * 10000L)
-      }
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-tsasof").toString
     val s2 = freshCatalogSession(spark, "glpr_ts", root)
-    // an all-empty corpus mints no versions: read the (empty) live view
+    s2.sql("CREATE TABLE glpr_ts.corpus.docs " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    // degenerate-SF determinism: skip empty slices (q316's guard),
+    // so versions = nonempty slices and the oracle's gate matches
+    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+      .foreach { p =>
+        val n = s2.sql("SELECT count(*) AS n FROM " +
+          s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
+        if (n > 0)
+          s2.sql("INSERT INTO glpr_ts.corpus.docs " +
+            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+            s"WHERE $p")
+      }
     val tdir = new java.io.File(root, "corpus/docs").getAbsolutePath
+    // pin the DURABLE commit clock (header + mtime mirror) to the
+    // fixed schedule the oracle's pin arithmetic assumes
+    listManifestVersions(tdir).foreach { v =>
+      pinVersionCommitMs(tdir, v, t0 + (v - 1) * 10000L)
+    }
+    // an all-empty corpus mints no versions: read the (empty) live view
     val pin = if (listManifestVersions(tdir).isEmpty) ""
       else s" TIMESTAMP AS OF timestamp_millis(${t0 + 15000L}L)"
     rematerialize(spark, s2.sql(
@@ -2063,8 +1873,6 @@ object GlprSource {
          |FROM glpr_ts.corpus.docs$pin
          |GROUP BY lang""".stripMargin))
   }
-  private val tsAsOfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q336 — RECLUSTER (OPTIMIZE): the corpus staged HASH-distributed
     * (every shard's bounds straddle the whole id space — the layout
@@ -2076,21 +1884,16 @@ object GlprSource {
   def reclusterPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = reclusterCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-recluster").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text").repartition(8), out)
-      GlprMaintenance.recluster(spark, out, nShards = 8): Unit
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-recluster").toString
+    write(Tables(spark, dir, "documents")
+      .select("doc_id", "lang", "source", "text").repartition(8), root)
+    GlprMaintenance.recluster(spark, root, nShards = 8): Unit
     spark.read.format("graft.io.GlprSource").load(root)
       .filter(col("doc_id") >= 100 && col("doc_id") < 300)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val reclusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q337 — STREAMING CHANGE DATA CAPTURE ([[GlprCdfMicroBatchStream]]):
     * the q328 staging's WHOLE history consumed as a CDF stream under
@@ -2146,93 +1949,86 @@ object GlprSource {
     * gate. */
   def streamCdfMergePipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = streamMergeCache.computeIfAbsent(dir, _ => {
-      val out = TempDirs.scratch("graft-glpr-streammerge").toString
-      val s2 = freshCatalogSession(spark, "glpr_scm", out)
-      s2.sql("CREATE TABLE glpr_scm.state.source " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      s2.sql("CREATE TABLE glpr_scm.state.target " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-      val slices = Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300",
-        "doc_id >= 300")
-      val counts = slices.map(p => s2.sql("SELECT count(*) AS n FROM " +
-        s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0))
-      slices.zip(counts).foreach { case (p, n) =>
-        if (n > 0)
-          s2.sql("INSERT INTO glpr_scm.state.source " +
-            "SELECT doc_id, lang, source, text FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p")
-      }
-      val srcPath = new java.io.File(out, "state/source").getAbsolutePath
-      if (counts.forall(_ > 0)) {
-        GlprMaintenance.deleteIdRange(s2, srcPath, 100L, 299L)       // CoW
-        GlprMaintenance.deleteIdRangeMergeOnRead(srcPath, 0L, 49L): Unit // MoR
-      }
-      val stream = s2.readStream.format("graft.io.GlprSource")
-        .option("changeMode", "cdf").load(srcPath)
-      val q = stream.writeStream
-        .option("checkpointLocation",
-          new java.io.File(out, "ckpt").getAbsolutePath)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val s = b.sparkSession
-          b.createOrReplaceTempView("glpr_scm_batch")
-          s.sql(
-            """MERGE INTO glpr_scm.state.target t
-              |USING (
-              |  SELECT doc_id, last.lang AS lang, last.source AS source,
-              |         last.text AS text, last.ct AS ct
-              |  FROM (SELECT doc_id, max(struct(
-              |          CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END AS r,
-              |          lang, source, text, _change_type AS ct)) AS last
-              |        FROM glpr_scm_batch GROUP BY doc_id)
-              |) u
-              |ON t.doc_id = u.doc_id
-              |WHEN MATCHED AND u.ct = 'delete' THEN DELETE
-              |WHEN MATCHED THEN UPDATE SET t.lang = u.lang,
-              |  t.source = u.source, t.text = u.text
-              |WHEN NOT MATCHED AND u.ct <> 'delete' THEN
-              |  INSERT (doc_id, lang, source, text)
-              |  VALUES (u.doc_id, u.lang, u.source, u.text)
-              |""".stripMargin): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      out
-    })
+    val root = TempDirs.scratch("graft-glpr-streammerge").toString
     val s2 = freshCatalogSession(spark, "glpr_scm", root)
+    s2.sql("CREATE TABLE glpr_scm.state.source " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    s2.sql("CREATE TABLE glpr_scm.state.target " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
+    val slices = Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300",
+      "doc_id >= 300")
+    val counts = slices.map(p => s2.sql("SELECT count(*) AS n FROM " +
+      s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0))
+    slices.zip(counts).foreach { case (p, n) =>
+      if (n > 0)
+        s2.sql("INSERT INTO glpr_scm.state.source " +
+          "SELECT doc_id, lang, source, text FROM " +
+          s"parquet.`$dir/documents.parquet` WHERE $p")
+    }
+    val srcPath = new java.io.File(root, "state/source").getAbsolutePath
+    if (counts.forall(_ > 0)) {
+      GlprMaintenance.deleteIdRange(s2, srcPath, 100L, 299L)       // CoW
+      GlprMaintenance.deleteIdRangeMergeOnRead(srcPath, 0L, 49L): Unit // MoR
+    }
+    val stream = s2.readStream.format("graft.io.GlprSource")
+      .option("changeMode", "cdf").load(srcPath)
+    val q = stream.writeStream
+      .option("checkpointLocation",
+        new java.io.File(root, "ckpt").getAbsolutePath)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val s = b.sparkSession
+        b.createOrReplaceTempView("glpr_scm_batch")
+        s.sql(
+          """MERGE INTO glpr_scm.state.target t
+            |USING (
+            |  SELECT doc_id, last.lang AS lang, last.source AS source,
+            |         last.text AS text, last.ct AS ct
+            |  FROM (SELECT doc_id, max(struct(
+            |          CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END AS r,
+            |          lang, source, text, _change_type AS ct)) AS last
+            |        FROM glpr_scm_batch GROUP BY doc_id)
+            |) u
+            |ON t.doc_id = u.doc_id
+            |WHEN MATCHED AND u.ct = 'delete' THEN DELETE
+            |WHEN MATCHED THEN UPDATE SET t.lang = u.lang,
+            |  t.source = u.source, t.text = u.text
+            |WHEN NOT MATCHED AND u.ct <> 'delete' THEN
+            |  INSERT (doc_id, lang, source, text)
+            |  VALUES (u.doc_id, u.lang, u.source, u.text)
+            |""".stripMargin): Unit
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
     rematerialize(spark, s2.sql(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM glpr_scm.state.target GROUP BY lang""".stripMargin))
   }
-  private val streamMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Shared staging for the partitioned-table entries (q304/q306):
-    * CREATE ... PARTITIONED BY (lang) + one clustered INSERT per
-    * (JVM, dir); returns a fresh session with the catalog bound. AQE
+    * CREATE ... PARTITIONED BY (lang) + one clustered INSERT, once per
+    * dir; returns a fresh session with the catalog bound. AQE
     * partition coalescing is pinned off for the INSERT so the clustered
     * shards stay SINGLE-lang at test scale (at corpus scale lang
     * clusters dwarf the advisory size and never coalesce) — the
     * single-valued-shard invariant q306's metadata-only grouped count
-    * needs. */
+    * needs. The whole staging is the build, so a failed INSERT is
+    * retried by the next call instead of leaving an empty table. */
   private def partitionedTableSession(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.SparkSession = {
-    val root = partitionedRootCache.computeIfAbsent(dir, _ =>
-      TempDirs.scratch("graft-glpr-partitioned").toString)
-    val s2 = freshCatalogSession(spark, "glpr_part", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    if (!new java.io.File(root, "corpus/docs/_glpr_table").isFile) {
+    val root = TempDirs.once(s"glpr-partitioned#$dir") {
+      val root = TempDirs.scratch("graft-glpr-partitioned").toString
+      val s2 = freshCatalogSession(spark, "glpr_part", root)
+      s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       s2.sql("CREATE TABLE glpr_part.corpus.docs " +
         "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
         "PARTITIONED BY (lang)")
       s2.sql("INSERT INTO glpr_part.corpus.docs " +
         s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      root
     }
-    s2
+    freshCatalogSession(spark, "glpr_part", root)
   }
-  private val partitionedRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q300 — GLPR-to-GLPR streaming relay: the staged corpus consumed
     * through the custom SOURCE (admission-controlled micro-batches),
@@ -2246,7 +2042,7 @@ object GlprSource {
   def streamRelayPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String, minTextBytes: Int = 50): DataFrame = {
     import org.apache.spark.sql.functions._
-    val sink = relayCache.computeIfAbsent(dir, _ => {
+    val sink = TempDirs.once(s"glpr-relay#$dir#$minTextBytes") {
       val out = TempDirs.scratch("graft-glpr-relay")
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", "8")
@@ -2260,31 +2056,27 @@ object GlprSource {
         .start()
       try q.awaitTermination() finally q.stop()
       out.resolve("data").toString
-    })
+    }
     spark.read.format("graft.io.GlprSource").load(sink)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
-  private val relayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Hash-distributed staging — the ANTI-clustered layout (q307): every
     * shard holds a hash-spread slice of the id space, so its sidecar
     * min/max spans (almost) everything and BOUNDS can prune nothing;
     * only the sidecar blooms can. The unclustered case is what most
     * corpora look like before any layout discipline is applied. */
-  private val hashStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[io] def hashStagedPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    hashStagedCache.computeIfAbsent(dir, _ => {
+    TempDirs.once(s"glpr-hashed#$dir") {
       val root = TempDirs.scratch("graft-glpr-hashed").toString
       write(Tables(spark, dir, "documents")
         .select("doc_id", "lang", "source", "text")
         .repartition(8, org.apache.spark.sql.functions.col("doc_id")), root)
       root
-    })
+    }
 
   /** q307 — BLOOM runtime pruning on an UNCLUSTERED corpus: the same
     * selectively-filtered broadcast dim join as q295, but over the
@@ -2448,8 +2240,9 @@ object GlprSource {
   def ingestDedupMerge(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxShardsPerTrigger: Int = 2): DataFrame = {
     import org.apache.spark.sql.functions._
-    val rootStr = ingestCache.computeIfAbsent(dir, _ =>
-      runIngestDedupMerge(spark, stagedPath(spark, dir), maxShardsPerTrigger))
+    val rootStr = TempDirs.once(s"glpr-ingest#$dir#$maxShardsPerTrigger") {
+      runIngestDedupMerge(spark, stagedPath(spark, dir), maxShardsPerTrigger)
+    }
     readSnapshotPointer(java.nio.file.Paths.get(rootStr)) match {
       case Some((_, snapshot)) => spark.read.parquet(snapshot)
       case None => // empty corpus: no batch ever committed — typed empty
@@ -2463,8 +2256,6 @@ object GlprSource {
               org.apache.spark.sql.types.LongType))))
     }
   }
-  private val ingestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Drive one AvailableNow ingest over `path`'s shards into a fresh
     * merge target; returns the target root. Exposed for the GlprSpec

@@ -17,24 +17,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-path schema cache (r21, guide §1/§6): a schema-less
+  /** Per-path schema memo (r21, guide §1/§6): a schema-less
     * `spark.read.parquet` runs a one-task footer-inference JOB on every
     * DataFrame construction — a query touching several tables paid up to
     * 14 such driver round-trips per execution (measured: q213_fk_audit
     * spent 1.0s wall on 0.05s of executor time, most of it these jobs).
     * The testdata fixtures are immutable per path (TESTDATA.md:
     * "Read-only — do NOT regenerate"), so the first inference per
-    * (JVM, path) is authoritative and every later read passes the
-    * explicit schema — the plan is bit-identical (the cache stores
-    * exactly what inference would return), the inference job just stops
-    * repeating. This caches METADATA only, never rows or results. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
+    * (JVM, path) is authoritative ([[TempDirs.once]]) and every later
+    * read passes the explicit schema — the plan is bit-identical (the
+    * memo holds exactly what inference would return), the inference job
+    * just stops repeating. This memoizes METADATA only, never rows or
+    * results. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val schema = TempDirs.once(s"schema#$path") { spark.read.parquet(path).schema }
     spark.read.schema(schema).parquet(path)
   }
 
@@ -54,9 +51,9 @@ object Tables {
     * — never round-robin on nondeterministic input, SPARK-38388); the
     * hash exchange itself moves only the small compressed rows once.
     *
-    * The pinned width is capped at `spark.graft.spread.cap` (default 16,
-    * r22): REPARTITION_BY_NUM is AQE-opaque, so a pin at the full core
-    * count is maximally exposed when the host is oversubscribed (the r21
+    * The pinned width is capped at 16 (r22): REPARTITION_BY_NUM is
+    * AQE-opaque, so a pin at the full core count is maximally exposed
+    * when the host is oversubscribed (the r21
     * driver run measured q266 at 9.55 s in exactly that state). An
     * AQE-coalescible `repartition(col)` was measured and REJECTED — AQE
     * sizes partitions by bytes, these stages are CPU-dense at tiny bytes,
@@ -65,10 +62,8 @@ object Tables {
     * (within the ±0.2-0.6 s noise band), so 16 trades nothing for half
     * the contention exposure. */
   def spread(df: DataFrame, key: String): DataFrame = {
-    val conf = df.sparkSession.conf
-    val n = conf.get("spark.sql.shuffle.partitions", "200")
-    val cap = conf.get("spark.graft.spread.cap", "16")
-    val target = try { math.min(n.toInt, cap.toInt) }
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    val target = try { math.min(n.toInt, 16) }
       catch { case _: NumberFormatException => 0 }
     if (target > 0 && df.rdd.getNumPartitions < target)
       df.repartition(target, col(key))

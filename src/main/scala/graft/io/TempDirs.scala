@@ -3,12 +3,11 @@ package graft.io
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-/** Process-scoped scratch directories: every dir handed out here is
-  * registered for recursive deletion in a JVM shutdown hook, so repeated
-  * bench/verify runs leave no `/tmp/graft-*` residue. Sinks that are
-  * written once and re-scanned across invocations (the partitioned-sink /
-  * labeled-CSV caches) combine this with a per-(JVM, dir) cache: first call
-  * writes, later calls only read, exit deletes.
+/** Process-scoped state: scratch directories, every one registered for
+  * recursive deletion in a JVM shutdown hook so runs leave no
+  * `/tmp/graft-*` residue, and [[once]], the engine's one result memo,
+  * for stagings that several entry points read (first call builds,
+  * later calls reuse, exit deletes).
   */
 object TempDirs {
 
@@ -37,5 +36,33 @@ object TempDirs {
       finally children.close()
     }
     Files.deleteIfExists(p)
+  }
+
+  /** A per-key cell: `state` is 0 while unbuilt, 1 once `value` is set,
+    * 2 after a failed build removed it from [[cells]]. */
+  private final class Cell { var state = 0; var value: Any = _ }
+  private val cells = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  /** Run `build` once per `key` per JVM and return its result to every
+    * caller. The map only hands out the key's cell; the build runs under
+    * the cell's own lock, outside the map's bin lock, so a build may call
+    * `once` on another key, and concurrent callers of the same key wait
+    * for the one build. A build that throws is not cached: its cell is
+    * dropped and the next call (including a caller that was waiting on
+    * it) builds afresh. Keys must be unique per result type. */
+  @annotation.tailrec
+  def once[T](key: String)(build: => T): T = {
+    val cell = cells.computeIfAbsent(key, _ => new Cell)
+    val built = cell.synchronized {
+      if (cell.state == 0)
+        try { cell.value = build; cell.state = 1 }
+        catch { case e: Throwable =>
+          cell.state = 2
+          cells.remove(key, cell)
+          throw e
+        }
+      cell.state == 1
+    }
+    if (built) cell.value.asInstanceOf[T] else once(key)(build)
   }
 }

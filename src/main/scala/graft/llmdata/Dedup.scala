@@ -243,22 +243,6 @@ object Dedup {
     * 0.2 and 0.9) is <= 1e-8 per pair. The candidate distance threshold
     * carries 0.1 slack so HashingTF bucket collisions cannot drop a
     * boundary pair before the raw-shingle verify. */
-  /** [[minhashNearDup]] memoized per (corpus dir, threshold) — the
-    * cached-derivation convention every model-fitting entry follows
-    * (ALS factors, IVF centroids, streaming stagings): the MinHashLSH
-    * fit + featurization + settle run ONCE per JVM and every later call
-    * (bench reps, the verify pass, spec re-reads) returns the
-    * checkpointed pair list. Round-16 verdict item: q43 was the
-    * slowest bench row (~2.8s at sf0.1) with the per-run fit
-    * dominating; the steady-state cost is the comparable signal, and
-    * the pass-1 fit cost is exactly what the bench's min-of-reps
-    * already absorbs for the other model entries. */
-  def minhashNearDupCached(docs: DataFrame, dir: String,
-      simThreshold: Double = 0.5): DataFrame =
-    nearDupCache.computeIfAbsent((dir, simThreshold),
-      _ => minhashNearDup(docs, simThreshold))
-  private val nearDupCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), DataFrame]()
 
   def minhashNearDup(docs: DataFrame, simThreshold: Double = 0.5,
       numHashTables: Int = 8): DataFrame = {
@@ -410,39 +394,37 @@ object Dedup {
     labels
   }
 
-  /** One label propagation per (JVM, dir, threshold) — the
-    * [[graft.ml.AlsRecommender]] recsCache pattern. A production dedup
+  /** One label propagation per (JVM, dir, threshold)
+    * ([[graft.io.TempDirs.once]]). A production dedup
     * pipeline computes component labels ONCE and fans out (representatives,
     * keep-longest, per-source retention all read the same label table);
     * without the memo each consumer re-ran the full LSH front end + sweep
-    * loop (~3s each at sf0.1). Cache safety mirrors recsCache: the testdata
+    * loop (~3s each at sf0.1). The memo is safe because the testdata
     * dirs are read-only, the stored frame is [[nearDupComponents]]'s final
     * localCheckpoint — settled blocks with no live lineage, and the LSH
     * feature frames were already unpersisted by settleAndRelease before the
     * loop returned — so each entry holds one tiny (doc_id, component) frame
     * and nothing else. */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   def componentLabelsOn(spark: org.apache.spark.sql.SparkSession, dir: String,
       simThreshold: Double = 0.5): DataFrame =
-    labelsCache.computeIfAbsent(f"$dir#$simThreshold%.6f",
-      _ => nearDupComponents(graft.io.Tables(spark, dir, "documents"), simThreshold))
+    graft.io.TempDirs.once(f"dedup-labels#$dir#$simThreshold%.6f") {
+      nearDupComponents(graft.io.Tables(spark, dir, "documents"), simThreshold)
+    }
 
   /** One md5-family LSH pair derivation per (JVM, dir, threshold): the
     * verified pair frame is shared by the pair listing itself (q124) and
     * the split-leakage audit (q140). Same contract as [[componentLabelsOn]];
     * the checkpoint settles the pipeline into its tiny result blocks so a
-    * cache hit re-runs nothing. */
-  private val md5PairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * memo hit re-runs nothing. */
   def minhashMd5PairsOn(spark: org.apache.spark.sql.SparkSession, dir: String,
       simThreshold: Double = 0.5): DataFrame =
-    md5PairsCache.computeIfAbsent(f"$dir#$simThreshold%.6f",
-      _ => minhashMd5Pairs(graft.io.Tables(spark, dir, "documents"),
-        simThreshold = simThreshold).localCheckpoint(true))
+    graft.io.TempDirs.once(f"dedup-md5pairs#$dir#$simThreshold%.6f") {
+      minhashMd5Pairs(graft.io.Tables(spark, dir, "documents"),
+        simThreshold = simThreshold).localCheckpoint(true)
+    }
 
   /** Cross-source contamination matrix (q270): the verified near-dup
-    * pair list ([[minhashMd5PairsOn]]'s shared cache) rolled up to
+    * pair list ([[minhashMd5PairsOn]]'s shared memo) rolled up to
     * unordered (source, source) cells — pair counts and mean verified
     * Jaccard. This is the between-dataset overlap report a corpus
     * assembler publishes before mixing sources (two crawl snapshots with
@@ -1073,9 +1055,6 @@ object Dedup {
     * sf0.1 (~6k docs, ~1.1M shingles) yet far below driver harm. */
   private[graft] val HistoryIndexRowCap: Long = 2000000L
   private[graft] val HistoryIndexShingleCap: Long = 50000000L
-  private val historyIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType,
-             Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]()
 
   /** Run a streaming `build` over `incoming` (staged to scratch parquet so a
     * file-source stream replays it) through an append-mode memory sink to
@@ -1175,13 +1154,13 @@ object Dedup {
     // The HISTORY INDEX (band keys + shingle sets over ~99% of the
     // corpus) is the operator's one-time ingest-side artifact — "the
     // corpus so far is indexed once" is the contract above — so it is
-    // staged per (JVM, dir, params) like every other cached fixture
-    // (a round-12 settle breakdown attributed ~3.3s of the 4s settle to
-    // rebuilding it on every call). At 100 TB this index is a maintained
+    // staged once per (JVM, dir, params) by TempDirs.once (a round-12
+    // settle breakdown attributed ~3.3s of the 4s settle to rebuilding
+    // it on every call). At 100 TB this index is a maintained
     // TABLE (pre-partitioned by band_key); here the materialized rows
     // re-enter each settle session as local frames.
-    val (bRows, bSchema, sRows, sSchema) = historyIndexCache.computeIfAbsent(
-      s"$dir|$batchSize|$numHashes|$bandRows|$k|$historyRowCap|$historyShingleCap", _ => {
+    val (bRows, bSchema, sRows, sSchema) = graft.io.TempDirs.once(
+      s"dedup-history#$dir|$batchSize|$numHashes|$bandRows|$k|$historyRowCap|$historyShingleCap") {
         val history = spark.read.parquet(s"$dir/documents.parquet")
           .filter(expr(s"doc_id div $batchSize") < maxB)
         val hb = md5BandKeys(minhashMd5Signatures(history, numHashes, k), bandRows)
@@ -1218,7 +1197,7 @@ object Dedup {
               "the incoming batch against it distributed")
           (hbP.collect(), hb.schema, hsP.collect(), hs.schema)
         } finally { hbP.unpersist(): Unit; hsP.unpersist(): Unit }
-      })
+      }
     settleDocs(spark, incoming, stream => {
       import scala.jdk.CollectionConverters._
       val s = stream.sparkSession

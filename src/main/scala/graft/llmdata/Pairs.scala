@@ -73,10 +73,8 @@ object Pairs {
     * 0.14 -> 0.35 s and q254's margin grid 0.67 -> 1.10 s — so those
     * callers keep the unpinned plan. */
   private def pinned(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val conf = df.sparkSession.conf
-    val n = conf.get("spark.sql.shuffle.partitions", "200")
-    val cap = conf.get("spark.graft.spread.cap", "16")
-    val target = try { math.min(n.toInt, cap.toInt) }
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    val target = try { math.min(n.toInt, 16) }
       catch { case _: NumberFormatException => 0 }
     if (target > 0 && df.rdd.getNumPartitions < target)
       df.repartition(target, keys.map(col): _*)

@@ -31,7 +31,7 @@ object AlsRecommender {
     * measurable quality. Measured breakdown of the q60 cold path at sf0.1
     * local[32]: ratings join+agg ≈ train(6) ≈ recommendForAllUsers — so
     * iteration count is only ~a third of the bill; the rest is the input
-    * build (cached in [[trainedOn]]) and the blocked top-k scoring, both
+    * build (memoized in [[trainedOn]]) and the blocked top-k scoring, both
     * irreducible for exact recommendations. */
   def train(ratings: DataFrame, rank: Int = 8, maxIter: Int = 6,
       regParam: Double = 0.1, seed: Long = 42L): ALSModel =
@@ -53,62 +53,44 @@ object AlsRecommender {
         col("rec.item").cast("long").as("item"),
         round(col("rec.rating").cast("double"), 4).as("score"))
 
-  /** [[recommendTopK]] from the shared cached training, derived once per
-    * (JVM, dir, seed, k) and `localCheckpoint`ed eagerly. The checkpoint is
-    * load-bearing, not a convenience: an ALSModel's factor DataFrames carry
-    * the full maxIter-sweep training lineage (no intermediate checkpoint at
-    * this iteration count), so if storage pressure in a long-lived session
-    * evicts the factor blocks, the next recommend silently RE-RUNS the whole
-    * ALS iteration chain — observed as a 10x phantom on q60 late in the
-    * bench suite. Checkpointed blocks spill to disk instead of recomputing,
-    * so steady-state recommend cost stays flat no matter what else the
-    * session has cached since. */
-  private val recsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Per-(JVM, dir) memo of the empty-ratings probe: the head(1) LIMIT
+  /** Per-(JVM, dir) memo ([[graft.io.TempDirs.once]]) of the
+    * empty-ratings probe, which both ALS surfaces ask: the head(1) LIMIT
     * short-circuits the result side, but the orders⋈lineitem aggregation
-    * upstream still runs its full shuffle map side on every call — real
-    * work on warm cache hits where the answer cannot have changed (the
+    * upstream still runs its full shuffle map side on every call (the
     * testdata dirs are read-only; a mutable-dir host would key on file
-    * mtime like [[graft.streaming.Events]]'s staging cache notes). */
-  private val emptyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    * mtime like [[graft.streaming.Events]]'s staging notes). */
   private def ratingsEmpty(spark: SparkSession, dir: String): Boolean =
-    emptyCache.computeIfAbsent(dir,
-      _ => ratingsFromLineitem(spark, dir).head(1).isEmpty)
+    graft.io.TempDirs.once(s"als-empty#$dir") {
+      ratingsFromLineitem(spark, dir).head(1).isEmpty
+    }
 
+  /** [[recommendTopK]] from the shared training ([[trainedOn]]). */
   def recommendTopKOn(spark: SparkSession, dir: String, seed: Long = 42L,
       k: Int = 5): DataFrame = {
     // Empty-ratings guard: ALS.fit reads the first rating to infer block
     // layout and throws on zero rows (MLlib contract). Zero ratings is a
     // legitimate pipeline state (dry backfill window, fully-filtered
     // corpus) and means "no recommendations", not a crash. Checked BEFORE
-    // the model cache so the degenerate case never occupies a cache slot.
+    // the model memo so the degenerate case never occupies a memo slot.
     if (ratingsEmpty(spark, dir)) {
       import spark.implicits._
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("user", "rank", "item", "score")
     }
-    shapeRecs(recsCache.computeIfAbsent(s"$dir#$seed#$k", _ => {
-      val (model, _) = trainedOn(spark, dir, seed)
-      model.recommendForAllUsers(k).localCheckpoint(true)
-    }))
+    recommendTopK(trainedOn(spark, dir, seed)._1, k)
   }
 
-  /** One training per (JVM, dir, seed): the model is fit once on the 0.8
-    * train split and shared by the recommend (q60) and eval (q61) surfaces —
-    * the labeledSinkCache pattern. ALS training is by far the most expensive
+  /** One training per (JVM, dir, seed) ([[graft.io.TempDirs.once]]): the
+    * model is fit once on the 0.8 train split and shared by the recommend
+    * (q60) and eval (q61) surfaces. ALS training is by far the most expensive
     * single step in the registry; nothing about recommend-vs-eval needs two
     * models, and the held-out 0.2 split rides along for the evaluator.
-    * The cached model/split stay bound to the SparkSession that trained
-    * them — valid here because the registry/test/bench surfaces run one
+    * The memoized model/split stay bound to the SparkSession that trained
+    * them — valid here because the registry/test surfaces run one
     * session per JVM over read-only dirs; a multi-session host would key on
     * the session too (or invalidate on session stop). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (ALSModel, DataFrame)]()
   def trainedOn(spark: SparkSession, dir: String, seed: Long = 42L): (ALSModel, DataFrame) =
-    modelCache.computeIfAbsent(s"$dir#$seed", _ => {
+    graft.io.TempDirs.once(s"als-model#$dir#$seed") {
       // Cache the ratings: the train/test splits both re-derive this
       // join+agg lineage on every materialization (ALS.fit reads train0,
       // the evaluator reads test0) — the aggregation is the single most
@@ -117,7 +99,7 @@ object AlsRecommender {
       val ratings = ratingsFromLineitem(spark, dir).cache()
       val Array(train0, test0) = ratings.randomSplit(Array(0.8, 0.2), seed)
       (train(train0, seed = seed), test0)
-    })
+    }
 
   /** Reference-semantics fit quality on the shared train/test split.
     * Zero ratings → NaN (the conventional "no data, no error" RMSE — what

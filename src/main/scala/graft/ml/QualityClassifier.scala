@@ -92,18 +92,18 @@ object QualityClassifier {
     * keep). Rows-only registry surface (q186). Degenerate-corpus guard
     * (the RegistryEmptySpec contract): with no trainable weak labels
     * (empty or <3-doc corpus) there is no model — every doc scores NaN /
-    * keep=false instead of MLlib's fit throwing. */
+    * keep=false instead of MLlib's fit throwing.
+    *
+    * One L-BFGS fit + corpus scoring per (JVM, dir, threshold)
+    * ([[graft.io.TempDirs.once]]): q186 (the score surface) and q192 (the
+    * composed capstone) share the identical tiny (doc_id, prob, keep)
+    * frame instead of training twice; the localCheckpoint settles it so a
+    * memo hit re-runs nothing. */
   def scoreDocs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    scoreCache.computeIfAbsent(f"$dir#$threshold%.6f",
-      _ => computeScoreDocs(spark, dir, threshold).localCheckpoint(true))
+    graft.io.TempDirs.once(f"quality-scores#$dir#$threshold%.6f") {
+      computeScoreDocs(spark, dir, threshold).localCheckpoint(true)
+    }
 
-  /** One L-BFGS fit + corpus scoring per (JVM, dir, threshold) — the
-    * [[graft.llmdata.Dedup.componentLabelsOn]] cache contract: q186 (the
-    * score surface) and q192 (the composed capstone) share the identical
-    * tiny (doc_id, prob, keep) frame instead of training twice; the
-    * localCheckpoint settles it so a cache hit re-runs nothing. */
-  private val scoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def computeScoreDocs(spark: SparkSession, dir: String,
       threshold: Double): DataFrame = {

@@ -617,20 +617,14 @@ object Queries {
   /** Labeled-matrix CSV sink round-trip (reference `add-labels` +
     * `save-csv`, core.clj:63-69 / data.clj:11-15): pivot the padded COO to
     * the wide labeled form, write CSV, read it back, melt again. The
-    * settled output must equal [[csvPaddedMatrix]] — same oracle. The sink
-    * is written once per JVM ([[labeledSinkCache]], the q74 pattern) and
-    * the scratch dir is shutdown-hook-deleted — repeated runs re-read, and
-    * nothing accumulates on disk. */
-  private val labeledSinkCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * settled output must equal [[csvPaddedMatrix]] — same oracle. The
+    * scratch dir is shutdown-hook-deleted. */
   def csvLabeledRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = labeledSinkCache.computeIfAbsent(FixtureDir, _ => {
-      val x = CostAllocation.keywordCosts(CsvSources.readKeywords(s, s"$FixtureDir/keywords.csv"))
-      val visits = CsvSources.visitsCoo(CsvSources.readVisitsWide(s, s"$FixtureDir/visits.csv"))
-      val padded = CostAllocation.padMissingKeywords(visits, x)
-      val path = graft.io.TempDirs.scratch("graft-labeled").resolve("matrix").toString
-      CsvSources.writeLabeledCsv(padded, path)
-      path
-    })
+    val x = CostAllocation.keywordCosts(CsvSources.readKeywords(s, s"$FixtureDir/keywords.csv"))
+    val visits = CsvSources.visitsCoo(CsvSources.readVisitsWide(s, s"$FixtureDir/visits.csv"))
+    val padded = CostAllocation.padMissingKeywords(visits, x)
+    val out = graft.io.TempDirs.scratch("graft-labeled").resolve("matrix").toString
+    CsvSources.writeLabeledCsv(padded, out)
     val wide = s.read.option("header", "true").csv(out)
     val hourCols = wide.columns.drop(1)
     wide.select(col("Keyword"),
@@ -644,24 +638,18 @@ object Queries {
   /** Partitioned parquet sink + partition-pruned scan: write the lineitem
     * COO partitioned by month, read it back with a month predicate, and
     * let only that partition's files be listed — the directory-level prune
-    * that makes a 100 TB table behave like its slice. The written layout is
-    * cached per (JVM, dir) so repeated query runs re-scan, not re-write,
-    * and the scratch dir is shutdown-hook-deleted ([[graft.io.TempDirs]]);
-    * PlanLintSpec asserts the PartitionFilters actually appear. */
-  private val partitionedSinkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
+    * that makes a 100 TB table behave like its slice. The scratch dir is
+    * shutdown-hook-deleted ([[graft.io.TempDirs]]); PlanLintSpec asserts
+    * the PartitionFilters actually appear. */
   def partitionPrunedScan(s: SparkSession, dir: String, month: Int = 3): DataFrame = {
-    // The writer's schema rides the cache: a zero-row write leaves no data
+    val out = graft.io.TempDirs.scratch("graft-partitioned")
+      .resolve("coo_by_month").toString
+    val coo = cooExact(s, dir, "l_quantity")
+    coo.write.partitionBy("mcol").mode("overwrite").parquet(out)
+    // The read takes the writer's schema: a zero-row write leaves no data
     // files, and a schema-less read of that layout cannot infer one — the
     // empty slice of a partitioned table must still be a well-typed scan.
-    val (out, schema) = partitionedSinkCache.computeIfAbsent(dir, _ => {
-      val path = graft.io.TempDirs.scratch("graft-partitioned")
-        .resolve("coo_by_month").toString
-      val coo = cooExact(s, dir, "l_quantity")
-      coo.write.partitionBy("mcol").mode("overwrite").parquet(path)
-      (path, coo.schema)
-    })
-    s.read.schema(schema).parquet(out)
+    s.read.schema(coo.schema).parquet(out)
       .filter(col("mcol") === month)
       .select(col("mrow"), col("mcol").cast("long").as("mcol"), col("mval"))
       .orderBy("mrow")
@@ -686,14 +674,13 @@ object Queries {
     * cost) or 10k unsplittable 10 GB files (no read parallelism). This
     * operator is both the enforcement (the sized writer) and the monitor
     * (the audit a table-maintenance job alerts on). The layout is written
-    * once per (JVM, dir) and scratch is shutdown-hook-deleted. */
-  private val sizingSinkCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+    * once per (dir, rowsPerFile) ([[graft.io.TempDirs.once]]) and scratch
+    * is shutdown-hook-deleted. */
   def fileSizingAudit(s: SparkSession, dir: String, rowsPerFile: Int = 2000): DataFrame = {
-    // The writer's schema rides the cache (the q74 rule): an empty slice
+    // The writer's schema rides the memo (the q74 rule): an empty slice
     // writes no data files, and the audit of an empty layout must still be
     // a well-typed zero-row frame, not a schema-inference error.
-    val (out, schema) = sizingSinkCache.computeIfAbsent(s"$dir#$rowsPerFile", _ => {
+    val (out, schema) = graft.io.TempDirs.once(s"sizing#$dir#$rowsPerFile") {
       val path = graft.io.TempDirs.scratch("graft-sizing")
         .resolve("lineitem_by_month").toString
       val sized = t(s, dir, "lineitem")
@@ -704,7 +691,7 @@ object Queries {
         .option("maxRecordsPerFile", rowsPerFile.toLong)
         .partitionBy("ship_month").parquet(path)
       (path, sized.schema)
-    })
+    }
     val w = Window.partitionBy("ship_month").orderBy(col("n_rows").desc, col("__f"))
     s.read.schema(schema).parquet(out)
       .groupBy(col("ship_month").cast("long").as("ship_month"),

@@ -51,21 +51,18 @@ object Events {
     s2
   }
 
-  /** Per-dir schema cache (r21 — the Tables.schemaCache rule applied to
+  /** Per-dir schema memo (r21 — the Tables schema-memo rule applied to
     * the events read): every schema-less read.parquet re-ran a footer-
     * inference job, one per batch-event query execution. The schema is
     * deterministic per dir because EVERY events read goes through
     * [[eventsSession]] (nanosAsLong pinned true), and the fixture is
     * immutable. Metadata only — never rows. */
-  private val eventsSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
   private def rawEvents(spark: SparkSession, dir: String): DataFrame = {
     val s2 = eventsSession(spark)
     val path = s"$dir/events.parquet"
-    val schema = eventsSchemaCache.computeIfAbsent(path,
-      _ => s2.read.parquet(path).schema)
+    val schema = graft.io.TempDirs.once(s"events-schema#$path") {
+      s2.read.parquet(path).schema
+    }
     s2.read.schema(schema).parquet(path)
   }
 
@@ -469,16 +466,14 @@ object Events {
     * [[graft.io.TempDirs]] shutdown hook deletes it, so a mid-stream
     * failure cannot leak it (each streaming query still gets its own
     * ephemeral checkpoint — file-source progress is per-query state). */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
   private def stagedEvents(spark: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) =
-    stagedCache.computeIfAbsent(dir, _ => {
+    graft.io.TempDirs.once(s"events-staged#$dir") {
       val staged = graft.io.TempDirs.scratch("graft-events")
       java.nio.file.Files.createSymbolicLink(
         staged.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
       (staged.toString, rawEvents(spark, dir).schema)
-    })
+    }
 
   /** Run `build(stream)` to completion through a memory sink, then
     * re-materialize the settled rows on the *caller's* session and drop
@@ -574,14 +569,13 @@ object Events {
     * read BACK as a batch table and aggregated. Equality with the batch
     * oracle certifies the whole egress: no dropped rows, no double-committed
     * files (the batch parquet reader honors the sink's commit log when
-    * listing). One streaming write per (JVM, dir) — the
-    * [[graft.io.Bucketing]] cached-layout contract; the scratch dir is
-    * shutdown-hook-deleted. At cluster scale this exact shape is "stream
-    * into the lake, partitioned, exactly-once" — the projection is
-    * stateless, so no watermark/state is involved and the stream never
-    * shuffles. */
+    * listing). One streaming write per dir ([[graft.io.TempDirs.once]]);
+    * the scratch dir is shutdown-hook-deleted. At cluster scale this
+    * exact shape is "stream into the lake, partitioned, exactly-once" —
+    * the projection is stateless, so no watermark/state is involved and
+    * the stream never shuffles. */
   def streamingFileSink(spark: SparkSession, dir: String): DataFrame = {
-    val (out, outSchema) = fileSinkCache.computeIfAbsent(dir, _ => {
+    val (out, outSchema) = graft.io.TempDirs.once(s"events-filesink#$dir") {
       val s2 = eventsSession(spark)
       val (staged, schema) = stagedEvents(spark, dir)
       val root = graft.io.TempDirs.scratch("graft-filesink")
@@ -593,7 +587,7 @@ object Events {
         .start()
       try q.processAllAvailable() finally q.stop()
       (root.resolve("data").toString, proj.schema)
-    })
+    }
     // Explicit schema on the read-back: an empty stream commits no part
     // files (only the _spark_metadata log), and schema inference over a
     // data-less sink directory fails — the same explicit-schema rule the
@@ -603,10 +597,6 @@ object Events {
       .agg(count(lit(1)).as("n_events"),
         min(col("value")).as("min_value"), max(col("value")).as("max_value"))
   }
-
-  private val fileSinkCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, org.apache.spark.sql.types.StructType)]()
 
   // ---- foreachBatch idempotent MERGE egress (q268) -----------------------
 
@@ -682,7 +672,7 @@ object Events {
     * and replay idempotence in one equality. One streaming write per
     * (JVM, dir); the scratch target is shutdown-hook-deleted. */
   def foreachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val rootStr = foreachBatchCache.computeIfAbsent(dir, _ => {
+    val rootStr = graft.io.TempDirs.once(s"events-fbmerge#$dir") {
       val s2 = eventsSession(spark)
       val (staged, schema) = stagedEvents(spark, dir)
       val root = graft.io.TempDirs.scratch("graft-fbmerge")
@@ -703,7 +693,7 @@ object Events {
         mergeBatchInto(root, changelogOf(convertTs(rawEvents(s2, dir))), lastId)
       }
       root.toString
-    })
+    }
     readMergeMeta(java.nio.file.Paths.get(rootStr)) match {
       case Some((_, snapshot)) =>
         spark.read.parquet(snapshot)
@@ -716,9 +706,6 @@ object Events {
           .toDF("user_id", "last_event_id", "last_type", "last_value")
     }
   }
-
-  private val foreachBatchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Stream-static enrichment: the live event stream joined to a static
     * dimension (customer market segment keyed by user_id) before a

@@ -41,16 +41,16 @@ class PlanLintSpec extends AnyFunSuite {
     "q300_glpr_stream_relay",   // source->sink streaming relay on
                                 // construction (cached); epoch pins in
                                 // GlprSpec
-    "q298_glpr_catalog_sql",    // catalog CREATE/INSERT on construction
-                                // (cached); DDL pins in GlprCatalogSpec
+    "q298_glpr_catalog_sql",    // catalog CREATE/INSERT on construction;
+                                // DDL pins in GlprCatalogSpec
     "q301_glpr_delete",         // catalog CREATE/INSERT/DELETE on
-                                // construction (cached); straddle-decline
+                                // construction; straddle-decline
                                 // pin in GlprCatalogSpec
     "q302_glpr_overwrite",      // catalog CREATE/INSERT/OVERWRITE on
-                                // construction (cached); truncate pin in
+                                // construction; truncate pin in
                                 // GlprCatalogSpec
     "q303_glpr_shard_provenance", // slice-clustered GLPR staging write on
-                                // construction (cached); _shard pin in
+                                // construction; _shard pin in
                                 // GlprCatalogSpec
     "q304_glpr_partitioned",    // partitioned catalog CREATE/INSERT on
                                 // construction (cached); shard-prune pin
@@ -66,17 +66,17 @@ class PlanLintSpec extends AnyFunSuite {
                                 // construction (cached); bloom-skip pin
                                 // in GlprSpec
     "q308_glpr_partition_delete", // partitioned catalog CREATE/INSERT/
-                                // DELETE on construction (cached);
+                                // DELETE on construction;
                                 // value-delete pins in GlprCatalogSpec
     "q309_glpr_compact",        // small-shard staging write + compaction
     "q348_glpr_masked_compact", // staging write + MoR deletes + compaction
     "q350_glpr_zorder_recluster", // staging INSERT + recluster + collected rollup
     "q351_glpr_clone",          // staging INSERT + clone + MoR delete + collected union
     "q352_glpr_value_stats",    // staged per-feed writes + collected probe rollup
-                                // on construction (cached); merge pins
+                                // on construction; merge pins
                                 // in GlprSpec
     "q310_glpr_manifest",       // manifest staging write + orphan plant
-                                // on construction (cached); visibility
+                                // on construction; visibility
                                 // pins in GlprSpec
     "q311_glpr_time_travel",    // three staged appends on construction
                                 // (cached); version pins in GlprSpec/
@@ -84,64 +84,64 @@ class PlanLintSpec extends AnyFunSuite {
     "q312_glpr_changes",        // shares q311's staging (cached);
                                 // version-diff pins in GlprSpec
     "q313_glpr_restore",        // three appends + restore on
-                                // construction (cached); GlprSpec pins
+                                // construction; GlprSpec pins
     "q314_glpr_row_delete",     // staging write + rewrite job on
-                                // construction (cached);
+                                // construction;
                                 // GlprSpec pins
     "q315_glpr_sql_functions",  // rematerialized catalog-function SQL
                                 // (collects on construction); pins in
                                 // GlprCatalogSpec
     "q316_glpr_history",        // catalog CREATE/INSERT + CALL history
-                                // on construction (cached); procedure
+                                // on construction; procedure
                                 // pins in GlprCatalogSpec
     "q317_glpr_sql_maintenance", // CALL restore/compact/vacuum on
-                                // construction (cached); procedure
+                                // construction; procedure
                                 // pins in GlprCatalogSpec
     "q318_observed_metrics",    // the observed action runs on
                                 // construction (observe/Observation);
                                 // value-exactness via its oracle
     "q319_glpr_spj",            // partitioned CREATE/INSERT on
-                                // construction (cached); zero-exchange
+                                // construction; zero-exchange
                                 // pin in GlprCatalogSpec
     "q322_glpr_dv_delete",      // staging write + DV sidecars on
-                                // construction (cached); GlprSpec pins
+                                // construction; GlprSpec pins
     "q323_glpr_dv_materialize", // staging + DV + rewrite job on
-                                // construction (cached); GlprSpec pins
+                                // construction; GlprSpec pins
     "q324_glpr_redact",         // staging + redaction rewrite job on
-                                // construction (cached); GlprSpec pins
+                                // construction; GlprSpec pins
     "q325_glpr_dynamic_overwrite", // catalog CREATE/INSERT/OVERWRITE on
-                                // construction (cached); swap pins in
+                                // construction; swap pins in
                                 // GlprCatalogSpec
     "q328_glpr_cdf",            // three appends + retiring delete +
                                 // re-append on construction (cached);
                                 // CDF pins in GlprSpec
     "q329_glpr_tt_across_delete", // shares q328's staging (cached)
     "q330_glpr_expire_vacuum",  // appends + delete + expire + vacuum on
-                                // construction (cached); reclaim pins
+                                // construction; reclaim pins
                                 // in GlprSpec
     "q331_glpr_dv_time_travel", // staging write + MoR delete on
-                                // construction (cached); gen pins in
+                                // construction; gen pins in
                                 // GlprSpec
     "q326_glpr_sql_update",     // catalog CREATE/INSERT/UPDATE (COW
-                                // ReplaceData) on construction (cached);
+                                // ReplaceData) on construction;
                                 // DML pins in GlprCatalogSpec
     "q327_glpr_sql_merge",      // catalog CREATE/INSERT/MERGE INTO on
-                                // construction (cached); DML pins in
+                                // construction; DML pins in
                                 // GlprCatalogSpec
     "q332_glpr_add_column",     // catalog CREATE/INSERT/ALTER/INSERT on
-                                // construction (cached); evolution pins
+                                // construction; evolution pins
                                 // in GlprCatalogSpec
     "q333_glpr_days_partition", // days-partitioned CREATE/INSERT on
-                                // construction (cached); day-prune pin
+                                // construction; day-prune pin
                                 // in GlprCatalogSpec
     "q334_glpr_bucket_partition", // bucket-partitioned CREATE/INSERT on
-                                // construction (cached); bucket-prune
+                                // construction; bucket-prune
                                 // pin in GlprCatalogSpec
     "q335_glpr_timestamp_as_of", // catalog CREATE/INSERT + commit-clock
-                                // pinning on construction (cached);
+                                // pinning on construction;
                                 // TIMESTAMP AS OF pin in GlprCatalogSpec
     "q336_glpr_recluster",      // staging write + recluster shuffle job
-                                // on construction (cached); prune pin
+                                // on construction; prune pin
                                 // in GlprCatalogSpec
     "q337_glpr_cdf_stream",     // CDF stream settle on construction
     "q338_glpr_cdc_merge",      // seeds + MERGE-applies the changelog table
@@ -187,10 +187,10 @@ class PlanLintSpec extends AnyFunSuite {
                                 // EmbeddingPcaSpec
     "q191_pca_ann",             // PCA + k-means fits on construction;
                                 // recall envelope in EmbeddingPcaSpec
-    "q195_jsonl_roundtrip",     // JSONL sink write on construction (cached);
+    "q195_jsonl_roundtrip",     // JSONL sink write on construction;
                                 // round-trip certified by its oracle
-    "q196_orc_roundtrip",       // ORC sink write on construction (cached)
-    "q204_text_roundtrip",      // text sink write on construction (cached)
+    "q196_orc_roundtrip",       // ORC sink write on construction
+    "q204_text_roundtrip",      // text sink write on construction
     "q192_quality_pipeline",    // composes q186's LR fit and q99's eager
                                 // label loop; composition contract in
                                 // Round13OpsSpec

@@ -360,6 +360,20 @@ class GlprCatalogSpec extends AnyFunSuite {
     s2.catalog.dropTempView("part_in")
   }
 
+  test("q304 staging that fails at its INSERT is retried by the next call, not read as empty") {
+    val dir = TempDirs.scratch("graft-glpr-retry")
+    // no documents.parquet yet: CREATE TABLE commits, the INSERT throws
+    intercept[Exception](GlprSource.partitionedCatalogPipeline(spark, dir.toString))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"${TestSpark.sfDir}/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    def rows(d: String) = GlprSource.partitionedCatalogPipeline(spark, d)
+      .collect().map(_.toString).sorted.toSeq
+    val got = rows(dir.toString)
+    assert(got.nonEmpty, "the retried staging must hold the corpus")
+    assert(got === rows(TestSpark.sfDir))
+  }
+
   test("partition-value DELETE unlinks whole-partition shards; mixed and straddling decline") {
     val s2 = spark.newSession()
     val r2 = TempDirs.scratch("graft-glpr-pdelspec").toString

@@ -1,0 +1,75 @@
+package graft.io
+
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[TempDirs.once]], the engine's one result memo, and a source guard
+  * that keeps it the only one. */
+class TempDirsSpec extends AnyFunSuite {
+
+  test("once: 8 concurrent callers on one key run the build once and share its result") {
+    val builds = new AtomicInteger(0)
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val calls = (1 to 8).map(_ => Future {
+        start.await()
+        TempDirs.once("spec-concurrent") {
+          builds.incrementAndGet()
+          Thread.sleep(50)
+          new Object
+        }
+      })
+      start.countDown()
+      val got = Await.result(Future.sequence(calls), 30.seconds)
+      assert(builds.get() === 1)
+      assert(got.forall(_ eq got.head))
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
+  }
+
+  test("once: a build that throws is not cached; the next call builds again") {
+    val builds = new AtomicInteger(0)
+    def call(): String = TempDirs.once("spec-retry") {
+      if (builds.incrementAndGet() == 1) throw new IllegalStateException("first build fails")
+      "built"
+    }
+    intercept[IllegalStateException](call())
+    assert(call() === "built")
+    assert(call() === "built")
+    assert(builds.get() === 2)
+  }
+
+  test("once: a build may call once on another key") {
+    val outer = TempDirs.once("spec-outer") {
+      TempDirs.once("spec-inner")(20) + 1
+    }
+    assert(outer === 21)
+    assert(TempDirs.once("spec-inner")(0) === 20)
+  }
+
+  test("no hand-rolled memo: only TempDirs and GlprSource.planEvents hold a ConcurrentHashMap") {
+    val memo = "computeIfAbsent|new java\\.util\\.concurrent\\.ConcurrentHashMap".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.filter(i => memo.findFirstIn(lines(i)).isDefined)
+          .map(i => (f.getFileName.toString, if (i > 0) lines(i - 1).trim else ""))
+      }.toList
+    } finally files.close()
+    val (glpr, rest) = hits.partition(_._1 == "GlprSource.scala")
+    assert(glpr === List(("GlprSource.scala", "private[io] val planEvents =")),
+      s"GlprSource may hold only the planEvents map; found $glpr")
+    assert(rest.map(_._1).toSet === Set("TempDirs.scala"),
+      "a new per-key memo belongs in TempDirs.once, and only once a second " +
+        s"call site needs the shared result; found maps in ${rest.map(_._1).toSet}")
+  }
+}
