@@ -102,24 +102,32 @@ object CsvSources {
 
   /** Melt the wide visits table to COO: (Keyword, hourName, visits).
     * The wide form's explicit "0" cells become explicit COO zeros, which
-    * Laplace smoothing must see (core.clj:187). */
+    * Laplace smoothing must see (core.clj:187). The melt is built from
+    * `Column`s, not SQL text, so any header name works; a table with no
+    * hour columns melts to an empty COO. */
   def visitsCoo(visitsWide: DataFrame): CooMatrix = {
     val hourCols = visitsWide.columns.drop(1).dropRight(1) // drop Keyword, TotalClicks
-    val stacked = visitsWide.select(
-      col("Keyword").as(CooMatrix.Row),
-      expr(s"stack(${hourCols.length}, " +
-        hourCols.map(h => s"'$h', cast(`$h` as double)").mkString(", ") +
-        s") as (${CooMatrix.Col}, ${CooMatrix.Value})"))
-    CooMatrix(stacked)
+    val keyword = col("Keyword").as(CooMatrix.Row)
+    if (hourCols.isEmpty)
+      CooMatrix(visitsWide.select(keyword, lit(null).cast(StringType).as(CooMatrix.Col),
+        lit(null).cast(DoubleType).as(CooMatrix.Value)).where(lit(false)))
+    else {
+      val cells = hourCols.map(h => struct(lit(h).as(CooMatrix.Col),
+        col("`" + h.replace("`", "``") + "`").cast(DoubleType).as(CooMatrix.Value)))
+      CooMatrix(visitsWide.select(keyword, inline(array(cells.toIndexedSeq: _*))))
+    }
   }
 
   /** Labeled-matrix CSV sink — reference `add-labels` + `save-csv`
     * (`core.clj:63-69`, `data.clj:11-15`). The COO already carries its
-    * labels; we pivot back to the wide labeled form only at the sink. */
+    * labels; we pivot back to the wide labeled form only at the sink.
+    * One part file, rows sorted by keyword: a sort within the single
+    * partition, since a global `orderBy` would first run a sampling job
+    * for its range partitioner. */
   def writeLabeledCsv(m: CooMatrix, path: String): Unit =
     m.df.groupBy(CooMatrix.Row).pivot(CooMatrix.Col).sum(CooMatrix.Value)
       .withColumnRenamed(CooMatrix.Row, "Keyword")
-      .orderBy("Keyword")
-      .coalesce(1)
+      .repartition(1)
+      .sortWithinPartitions("Keyword")
       .write.mode("overwrite").option("header", "true").csv(path)
 }

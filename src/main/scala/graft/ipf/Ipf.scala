@@ -1,23 +1,45 @@
 package graft.ipf
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal}
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.matrix.{CooMatrix, Marginals}
 
-/** Distributed Iterative Proportional Fitting (IPF / RAS / biproportional
-  * fitting) over COO matrices — the reference engine's core algorithm
+/** Iterative Proportional Fitting (IPF / RAS / biproportional fitting)
+  * over COO matrices — the reference engine's core algorithm
   * (`/root/reference/src/cost_allocation/core.clj:82-119`): alternately
   * rescale rows to the x-marginal and columns to the y-marginal until the
   * imputed marginals converge to the known ones.
   *
-  * Spark shape of one iteration: the fit targets ride on the matrix as two
-  * extra columns, so a sweep is two keyed window sums (rows, then columns)
-  * plus projections — no joins inside the loop. Per-iteration
-  * `localCheckpoint` truncates lineage so the plan does not grow
-  * O(iterations) — the classic Spark iterative-algorithm pattern.
+  * Two execution paths share one stopping rule, chosen by the size of the
+  * input alone:
+  *
+  *  - Driver path, for seeds of at most [[DriverCells]] cells: the seed
+  *    (with its fit targets attached) is collected once and every sweep
+  *    runs on primitive arrays, keys interned to `Int` ids. A Spark sweep
+  *    costs ~8 jobs of ~50 ms each however small the matrix, so on a
+  *    reference-sized problem a distributed fit is all overhead (McSherry,
+  *    Isard and Murray, "Scalability! But at what COST?", HotOS 2015).
+  *  - Distributed path, above it: the fit targets ride on the matrix as
+  *    two extra columns, so a sweep is two keyed window sums (rows, then
+  *    columns) plus projections — no joins inside the loop. Periodic
+  *    `localCheckpoint` truncates lineage so the plan does not grow
+  *    O(iterations) — the classic Spark iterative-algorithm pattern.
   */
 object Ipf {
 
   final case class Result(matrix: CooMatrix, loss: Double, iterations: Int)
+
+  /** Largest seed, in cells, that [[converge]] fits on the driver: a few
+    * tens of MB of driver heap, far below `spark.driver.maxResultSize`'s
+    * 1 GB default. At about a quarter of it the driver path wins by 2-6x,
+    * so no crossover lies below it (4-vCPU VM, local[4], warm JVM):
+    *  - `perfbench` `alloc_large`, 48,000 × 168 with ~240k cells to
+    *    tolerance 1e-3, `op_p50_s` over two seeds: driver 2.25 and 2.45 s,
+    *    distributed 14.25 and 14.24 s;
+    *  - q26's converge + count at sf0.1 (220,214 cells, 8 sweeps), 7
+    *    alternating pairs: driver median 2.97 s (quartiles 2.51-3.04),
+    *    distributed 6.07 s (5.51-6.23), the driver faster in every pair. */
+  private val DriverCells = 1 << 20
 
   /** Reference `converge` (`core.clj:99-119`) with its exact stopping
     * semantics: stop when loss < threshold (fit good enough), |Δloss| <
@@ -27,9 +49,17 @@ object Ipf {
     * reported loss lags the returned matrix by one step (`core.clj:115-117`).
     * Initial loss sentinels are Integer/MAX_VALUE (`core.clj:108-109`).
     *
+    * A seed of at most [[DriverCells]] cells is fitted on the driver (see
+    * [[Ipf]]); the result is the same up to floating-point summation
+    * order, in a DataFrame with the same schema. `checkpointEvery` and
+    * `lossEvery` shape the distributed path only; on the driver a loss is
+    * a pass over an array, so `lossEvery` changes which losses are
+    * computed but not the cost, and there is no lineage to truncate.
+    *
     * `checkpointEvery` controls how often lineage is truncated; 1 is the
     * safe default, higher values trade driver round-trips for plan size
-    * (q26 runs faster at 2; numbers in `Queries.ipfConverge`).
+    * (q26 runs faster at 2 on the distributed path; numbers in
+    * `Queries.ipfConverge`).
     *
     * `lossEvery` batches the convergence check (SURVEY.md §7.4 item 1):
     * the loss is a driver-side scalar collect — a full job plus a barrier
@@ -48,18 +78,26 @@ object Ipf {
       x: DataFrame, y: DataFrame, seed: CooMatrix,
       threshold: Double = 1e-15, maxIter: Int = 1000,
       verbose: Boolean = false, checkpointEvery: Int = 1,
-      lossEvery: Int = 1): Result = {
+      lossEvery: Int = 1): Result =
+    solve(x, y, seed, threshold, maxIter, verbose, checkpointEvery, lossEvery, _ <= DriverCells)
+
+  /** [[converge]] with the path chosen by `onDriver(cells)`, the fused
+    * seed's cell count; tests force either path with it. */
+  private[ipf] def solve(
+      x: DataFrame, y: DataFrame, seed: CooMatrix,
+      threshold: Double, maxIter: Int, verbose: Boolean, checkpointEvery: Int,
+      lossEvery: Int, onDriver: Long => Boolean): Result = {
     require(maxIter >= 0 && checkpointEvery >= 1 && lossEvery >= 1)
     import org.apache.spark.sql.functions._
     import CooMatrix.{Row, Col, Value, Idx}
-    // The marginals are loop constants but each sweep's TWO broadcast
-    // builds (and every loss check's join) re-executed their whole
-    // source subtree — for the q26 inputs that is a lineitem scan+agg
-    // per consumption. Marginals are one row per fitted index — tiny by
-    // the fitRowsOnePass broadcast contract — so materialize each ONCE
-    // (r21); every loss check reads the cached blocks.
-    val xc = x.localCheckpoint()
-    val yc = y.localCheckpoint()
+    // x is a loop constant that every loss check reads, so materialize it
+    // ONCE; otherwise each check re-runs its whole source subtree (for
+    // the q26 inputs a lineitem scan+agg). The checkpoint is lazy, so the
+    // one job that materializes it also collects x for the driver path; x
+    // is broadcast into the fused seed below, so it fits on the driver.
+    // y is read once, by the fused seed's checkpoint.
+    val xc = x.localCheckpoint(eager = false)
+    val xRows = xc.select(col(Idx), col(Value).cast("double")).collect()
     // Fused sweep (r22): the fit targets are loop constants, one value
     // per row/col key, so attach them to the matrix ONCE as two extra
     // columns. Each sweep then collapses to window-sum + project — ZERO
@@ -91,39 +129,153 @@ object Ipf {
     def ckpt(df: DataFrame): DataFrame = CooMatrix(df).checkpointed().df
     def asCoo(df: DataFrame): CooMatrix =
       CooMatrix(df.select(col(Row), col(Col), col(Value)))
-    var fused = ckpt(seed.df
+    // The fused seed is checkpointed lazily too, so the one job that
+    // materializes it also counts it: choosing the path costs no job and
+    // re-runs no lineage. The re-wrap resets stats as `ckpt` does.
+    val cp = seed.df
       .join(broadcast(xc.select(col(Idx).as(Row), col(Value).as(Tx))), Seq(Row), "left")
-      .join(broadcast(yc.select(col(Idx).as(Col), col(Value).as(Ty))), Seq(Col), "left")
-      .select(col(Row), col(Col), col(Value), col(Tx), col(Ty)))
-    var prev = fused           // matrix before the most recent step
+      .join(broadcast(y.select(col(Idx).as(Col), col(Value).as(Ty))), Seq(Col), "left")
+      .select(col(Row), col(Col), col(Value), col(Tx), col(Ty))
+      .localCheckpoint(eager = false)
+    val cpRows = cp.rdd
+    val cells = cpRows.count()
+    val spark = cp.sparkSession
+    val fused = spark.createDataFrame(cpRows, cp.schema)
+    if (onDriver(cells)) {
+      val d = new OnDriver(
+        fused.select(col(Row), col(Col), col(Value).cast("double"),
+          col(Tx).cast("double"), col(Ty).cast("double")).collect(),
+        xRows, spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+      val (s, loss, iterations) =
+        drive(d.seed, threshold, maxIter, verbose, lossEvery)((s, _) => d.sweep(s), d.loss)
+      val matrix =
+        if (iterations == 0) asCoo(fused)
+        else CooMatrix(spark.createDataFrame(d.rows(s), asCoo(fusedStep(fused)).df.schema))
+      Result(matrix, loss, iterations)
+    } else {
+      val (m, loss, iterations) = drive(fused, threshold, maxIter, verbose, lossEvery)(
+        (df, k) => if (k % checkpointEvery == 0) ckpt(fusedStep(df)) else fusedStep(df),
+        df => Marginals.rmse(xc, asCoo(df).sumRows))
+      Result(asCoo(m), loss, iterations)
+    }
+  }
+
+  /** The stopping rule both paths run: `step(state, k)` is sweep k (from
+    * 0) and must leave `state` intact, `loss(state)` the rmse of x against
+    * the row sums of `state`. Returns the final state, the reference-lag
+    * loss of the final step and the number of steps. */
+  private def drive[S](init: S, threshold: Double, maxIter: Int, verbose: Boolean,
+      lossEvery: Int)(step: (S, Int) => S, loss: S => Double): (S, Double, Int) = {
+    var cur = init
+    var prev = cur             // state before the most recent step
     var lastLoss = Int.MaxValue.toDouble
     var lossDiff = Int.MaxValue.toDouble
     var lossIsFinal = false    // lastLoss was computed for the last executed step
     var iteration = maxIter
     while (!(lastLoss < threshold || lossDiff < threshold || iteration == 0)) {
-      var next = fusedStep(fused)
       val k = maxIter - iteration
-      if (k % checkpointEvery == 0) next = ckpt(next)
+      val next = step(cur, k)
       if (k % lossEvery == 0) {
-        val loss = Marginals.rmse(xc, asCoo(fused).sumRows)
-        lossDiff = math.abs(lastLoss - loss)
-        lastLoss = loss
+        val l = loss(cur)
+        lossDiff = math.abs(lastLoss - l)
+        lastLoss = l
         lossIsFinal = true
         if (verbose) println(s"loss=$lastLoss diff=$lossDiff iter=$iteration")
       } else {
         lossIsFinal = false
         if (verbose) println(s"loss=<batched, next check in ${lossEvery - k % lossEvery}> iter=$iteration")
       }
-      prev = fused
-      fused = next; iteration -= 1
+      prev = cur
+      cur = next; iteration -= 1
     }
     // With lossEvery > 1 the loop can exit on the iteration cap between
-    // boundary checks; recompute so Result.loss is the final step's
+    // boundary checks; recompute so the loss is the final step's
     // reference-lag loss (rmse of x vs the pre-step row sums), not a value
     // up to lossEvery-1 steps stale.
-    val finalLoss =
-      if (iteration == maxIter || lossIsFinal) lastLoss
-      else Marginals.rmse(xc, asCoo(prev).sumRows)
-    Result(asCoo(fused), finalLoss, maxIter - iteration)
+    val finalLoss = if (iteration == maxIter || lossIsFinal) lastLoss else loss(prev)
+    (cur, finalLoss, maxIter - iteration)
+  }
+
+  /** The driver path's IPF over primitive arrays, with the distributed
+    * sweep's semantics. `cells` are the fused seed's rows (`row, col,
+    * value, tx, ty`, numbers as doubles), `x` the x-marginal's `(idx,
+    * value)` rows. A null value is left out of every sum, as SQL's SUM
+    * does; a zero sum under a non-null value raises `DIVIDE_BY_ZERO` when
+    * `ansi` is set and makes the value null otherwise, as SQL's `/` does. */
+  private final class OnDriver(cells: Array[Row], x: Array[Row], ansi: Boolean) {
+    /** The cells `live` (indices into `cells`) still in the matrix, and
+      * the values of all cells by index. */
+    final class State(val live: Array[Int], val v: Array[Double], val isNull: Array[Boolean])
+
+    private def intern(field: Int): (Array[Int], java.util.HashMap[Any, Integer]) = {
+      val ids = new java.util.HashMap[Any, Integer]
+      val of = cells.map { c =>
+        val key = c.get(field)
+        val id = ids.get(key)
+        if (id != null) id.intValue
+        else { ids.put(key, ids.size); ids.size - 1 }
+      }
+      (of, ids)
+    }
+    private val (r, rowIds) = intern(0)
+    private val (c, colIds) = intern(1)
+    private def doubles(f: Int) = cells.map(c => if (c.isNullAt(f)) 0.0 else c.getDouble(f))
+    private def nulls(f: Int) = cells.map(_.isNullAt(f))
+    private val (tx, noTx, ty, noTy) = (doubles(3), nulls(3), doubles(4), nulls(4))
+
+    def seed: State = new State(cells.indices.toArray, doubles(2), nulls(2))
+
+    private def sums(s: State, ids: Array[Int], n: Int): Array[Double] = {
+      val sum = new Array[Double](n)
+      s.live.foreach(i => if (!s.isNull(i)) sum(ids(i)) += s.v(i))
+      sum
+    }
+
+    /** One fit of the dimension `ids`: sum each group over the current
+      * cells, drop the cells without a target, then `v * (t / sum)`. */
+    private def fit(s: State, ids: Array[Int], n: Int, t: Array[Double],
+        noTarget: Array[Boolean]): State = {
+      val sum = sums(s, ids, n)
+      val live = s.live.filterNot(noTarget(_))
+      val v = s.v.clone(); val isNull = s.isNull.clone()
+      live.foreach { i =>
+        if (!isNull(i)) {
+          val d = sum(ids(i))
+          if (d != 0.0) v(i) = v(i) * (t(i) / d)
+          // Spark's own ANSI division raises its DIVIDE_BY_ZERO error.
+          else if (ansi) Divide(Literal(t(i)), Literal(d), EvalMode.ANSI).eval()
+          else isNull(i) = true
+        }
+      }
+      new State(live, v, isNull)
+    }
+
+    def sweep(s: State): State =
+      fit(fit(s, r, rowIds.size, tx, noTx), c, colIds.size, ty, noTy)
+
+    /** `Marginals.rmse(x, sumRows)`: over the union of x's keys and the
+      * matrix's rows, a missing entry counting as 0 (a null key matches
+      * nothing, as in the full outer join). */
+    def loss(s: State): Double = {
+      val n = rowIds.size
+      val sum = sums(s, r, n)
+      val inMatrix = new Array[Boolean](n)
+      s.live.foreach(i => inMatrix(r(i)) = true)
+      val matched = new Array[Boolean](n)
+      var acc = 0.0
+      x.foreach { e =>
+        val xv = if (e.isNullAt(1)) 0.0 else e.getDouble(1)
+        val id = if (e.isNullAt(0)) null else rowIds.get(e.get(0))
+        val d = if (id != null && inMatrix(id)) { matched(id) = true; xv - sum(id) } else xv
+        acc += d * d
+      }
+      for (id <- 0 until n if inMatrix(id) && !matched(id)) acc += sum(id) * sum(id)
+      math.sqrt(acc)
+    }
+
+    def rows(s: State): java.util.List[Row] =
+      java.util.Arrays.asList(s.live.map { i =>
+        Row(cells(i).get(0), cells(i).get(1), if (s.isNull(i)) null else s.v(i))
+      }: _*)
   }
 }

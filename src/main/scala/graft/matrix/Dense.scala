@@ -1,9 +1,10 @@
 package graft.matrix
 
-/** Driver-local dense matrix algebra on `Vector[Vector[Double]]` —
-  * the small-instance fast path (the reference's shipped problem is
-  * 73×22; a Spark job per IPF iteration would be all overhead there)
-  * and the test oracle for the distributed COO path.
+/** Driver-local dense matrix algebra on `Vector[Vector[Double]]`: the
+  * test oracle for `graft.ipf.Ipf` and `perfbench`'s parity reference
+  * (every benchmarked allocation is checked against [[converge]]). It is
+  * not a fast path: small problems take `Ipf.converge`'s driver path,
+  * which keeps the COO keys, the drop semantics and a DataFrame result.
   *
   * Operator semantics mirror the reference exactly
   * (`/root/reference/src/cost_allocation/core.clj`), re-expressed in

@@ -14,8 +14,13 @@ import graft.matrix.CooMatrix
   *   find keywords missing from visits → zero-pad union → Laplace smooth →
   *   IPF converge → (optionally) cost-per-visit.
   *
-  * Catalyst handles pushdown/pruning wholesale; the only shuffles are the
-  * anti-join, the melt-side aggregations inside IPF, and the final sort.
+  * Catalyst handles pushdown/pruning wholesale. The melt is narrow; the
+  * shuffles are the two `distinct` key sets and the anti-join in
+  * [[padMissingKeywords]], IPF's two window sums per sweep on its
+  * distributed path only (a problem of at most `Ipf`'s driver threshold,
+  * every reference-sized request among them, is collected once and fitted
+  * on the driver), the cost-per-visit join when that matrix is used, and
+  * the sink's pivot and its single-partition sort.
   */
 object CostAllocation {
 

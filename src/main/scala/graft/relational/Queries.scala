@@ -497,6 +497,13 @@ object Queries {
     // 8-deep join/agg lineage costs more in planning than the saved
     // materialization barriers.)
     //
+    // The envelope below is for Ipf.converge's DISTRIBUTED path. q26's
+    // seed is 220,214 cells at sf0.1 (fewer below), under the driver
+    // threshold, so sf0.001 through sf0.1 now take the driver path, where
+    // the knobs above have no cost effect: one collect, then all sweeps on
+    // the driver (sf0.1, local[4], converge + count, 7 alternating warm
+    // pairs: driver median 2.97 s, distributed 6.07 s).
+    //
     // COST ENVELOPE (round 12, warm JVM, sf0.1, local[32], one-pass window
     // sweeps). Total wall is linear in sweeps:
     //   total ≈ 0.9s fixed + 0.55s/sweep + 0.63s per loss barrier

@@ -1,6 +1,7 @@
 package graft.ipf
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.TestSpark
 import graft.matrix.{CooMatrix, Dense}
 
@@ -10,6 +11,45 @@ class IpfSpec extends AnyFunSuite {
   val x = Vector(30.0, 70.0)          // row marginal
   val y = Vector(40.0, 35.0, 25.0)    // col marginal (same total mass: 100)
   val seed = Vector(Vector(1.0, 2.0, 1.0), Vector(3.0, 1.0, 2.0))
+
+  /** `Ipf.converge` forced onto the driver path or the distributed one. */
+  def onPath(driver: Boolean, x: DataFrame, y: DataFrame, seed: CooMatrix,
+      threshold: Double = 1e-15, maxIter: Int = 1000, checkpointEvery: Int = 1,
+      lossEvery: Int = 1): Ipf.Result =
+    Ipf.solve(x, y, seed, threshold, maxIter, false, checkpointEvery, lossEvery, _ => driver)
+
+  def close(a: Double, b: Double): Boolean =
+    a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+
+  /** Cells by key; a null value is `None`. */
+  def cells(m: CooMatrix): Map[(Any, Any), Option[Double]] =
+    m.df.collect().map(r => (r.get(0), r.get(1)) -> Option(r.get(2)).map(_.asInstanceOf[Double])).toMap
+
+  /** Runs both paths on the same inputs and checks that they agree: same
+    * iterations and schema, every cell within 1e-12 relative, the loss
+    * within 1e-12 relative to the larger of itself and |x|. Near
+    * convergence the loss is a difference of nearly equal sums, so the
+    * error summation order leaves in it scales with x, not with the loss. */
+  def assertPathsAgree(x: DataFrame, y: DataFrame, seed: CooMatrix,
+      threshold: Double = 1e-15, maxIter: Int = 1000, checkpointEvery: Int = 1,
+      lossEvery: Int = 1): Ipf.Result = {
+    val d = onPath(driver = true, x, y, seed, threshold, maxIter, checkpointEvery, lossEvery)
+    val s = onPath(driver = false, x, y, seed, threshold, maxIter, checkpointEvery, lossEvery)
+    assert(d.iterations === s.iterations)
+    val scale = math.max(math.abs(s.loss), graft.matrix.Marginals.l2Norm(x))
+    assert(d.loss == s.loss || math.abs(d.loss - s.loss) <= 1e-12 * scale,
+      s"driver loss ${d.loss} != distributed loss ${s.loss}")
+    assert(d.matrix.df.schema === s.matrix.df.schema)
+    val (a, b) = (cells(d.matrix), cells(s.matrix))
+    assert(a.keySet === b.keySet)
+    a.foreach { case (k, v) =>
+      assert(v.isDefined === b(k).isDefined && v.forall(close(_, b(k).get)), s"cell $k: $v != ${b(k)}")
+    }
+    d
+  }
+
+  def fixture(s: SparkSession, dense: Seq[Seq[Double]] = seed): (DataFrame, DataFrame, CooMatrix) =
+    (CooMatrix.marginal(s, x), CooMatrix.marginal(s, y), CooMatrix.fromDense(s, dense))
 
   test("ipfUnrolled: bit-exact vs a local BigDecimal replay of 2 chained sweeps") {
     import graft.relational.Queries
@@ -69,7 +109,7 @@ class IpfSpec extends AnyFunSuite {
 
   test("distributed converge matches dense result") {
     val dense = Dense.converge(x, y, seed, threshold = 1e-10, maxIter = 50)
-    val dist = Ipf.converge(
+    val dist = onPath(driver = false,
       CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
       CooMatrix.fromDense(spark, seed), threshold = 1e-10, maxIter = 50)
     assert(dist.iterations === dense.iterations)
@@ -116,6 +156,72 @@ class IpfSpec extends AnyFunSuite {
     val a = perIter.matrix.toLocalMap
     val b = batched.matrix.toLocalMap
     a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12) }
+  }
+
+  test("paths agree: 2x3 fixture") {
+    val (mx, my, mseed) = fixture(spark)
+    assert(assertPathsAgree(mx, my, mseed, threshold = 1e-10).iterations > 1)
+  }
+
+  test("paths agree: the reference CSVs (73 x 22)") {
+    import graft.io.CsvSources
+    import graft.pipeline.CostAllocation
+    def kw = TestSpark.resource("keywords.csv")
+    val rx = CostAllocation.keywordCosts(CsvSources.readKeywords(spark, kw))
+    val ry = CostAllocation.hourCosts(CsvSources.readHours(spark, TestSpark.resource("hours.csv")))
+    val visits = CsvSources.visitsCoo(CsvSources.readVisitsWide(spark, TestSpark.resource("visits.csv")))
+    val rseed = CostAllocation.padMissingKeywords(visits, rx).laplaceSmooth(1e-15)
+    val r = assertPathsAgree(rx, ry, rseed, threshold = 1e-9, maxIter = 40)
+    assert(r.iterations > 1 && r.matrix.df.count() === 73L * 22L)
+  }
+
+  test("paths agree: rows missing from x and columns missing from y are dropped") {
+    import spark.implicits._
+    // Row 2 has no x entry, column 3 no y entry; x key 9 has no seed row,
+    // so it counts in every loss as a missing row sum.
+    val dx = Seq((0L, 30.0), (1L, 70.0), (9L, 5.0)).toDF(CooMatrix.Idx, CooMatrix.Value)
+    val dy = Seq((0L, 40.0), (1L, 35.0), (2L, 25.0)).toDF(CooMatrix.Idx, CooMatrix.Value)
+    val dseed = CooMatrix.fromDense(spark,
+      Seq(Seq(1.0, 2.0, 1.0, 4.0), Seq(3.0, 1.0, 2.0, 1.0), Seq(5.0, 5.0, 5.0, 5.0)))
+    val r = assertPathsAgree(dx, dy, dseed, threshold = 1e-12, maxIter = 20)
+    assert(cells(r.matrix).keySet === (for (i <- 0L to 1L; j <- 0L to 2L) yield (i, j)).toSet)
+  }
+
+  test("paths agree: batched loss checks, caps 6 and 7") {
+    val (mx, my, mseed) = fixture(spark)
+    for (cap <- Seq(6, 7))
+      assert(assertPathsAgree(mx, my, mseed, maxIter = cap, checkpointEvery = 2,
+        lossEvery = 3).iterations === cap)
+  }
+
+  test("paths agree: maxIter = 0 returns the seed with the sentinel loss") {
+    val (mx, my, mseed) = fixture(spark)
+    val r = assertPathsAgree(mx, my, mseed, maxIter = 0)
+    assert(r.iterations === 0 && r.loss === Int.MaxValue.toDouble)
+    assert(cells(r.matrix) === cells(mseed))
+  }
+
+  test("paths agree: empty seed") {
+    val (mx, my, mseed) = fixture(spark)
+    val r = assertPathsAgree(mx, my, CooMatrix(mseed.df.where("false")))
+    assert(r.matrix.df.count() === 0L && close(r.loss, 100.0 * math.sqrt(0.58)))
+  }
+
+  test("paths agree on a zero-sum row: DIVIDE_BY_ZERO under ANSI, null cells without") {
+    val zeroRow = Seq(Seq(1.0, 2.0, 1.0), Seq(0.0, 0.0, 0.0))
+    val ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    for (driver <- Seq(true, false)) {
+      val (mx, my, mseed) = fixture(ansi, zeroRow)
+      val e = intercept[Exception](onPath(driver, mx, my, mseed, maxIter = 5))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("DIVIDE_BY_ZERO")), e)
+    }
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    val (mx, my, mseed) = fixture(legacy, zeroRow)
+    val r = assertPathsAgree(mx, my, mseed, maxIter = 5)
+    assert(cells(r.matrix).collect { case ((1L, _), v) => v }.toSet === Set(None))
   }
 
   test("reference stopping semantics: loss lags the returned matrix (core.clj:115-117)") {

@@ -62,5 +62,59 @@ class PipelineSpec extends AnyFunSuite {
     val back = spark.read.option("header", "true").csv(tmp)
     assert(back.count() === 71)
     assert(back.columns.length === 23) // Keyword + 22 hour columns
+    // one part file, rows in keyword order
+    val parts = new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1)
+    val keywords = scala.io.Source.fromFile(parts.head).getLines().drop(1)
+      .map(_.takeWhile(_ != ',')).toSeq
+    assert(keywords.size === 71 && keywords === keywords.sorted)
+  }
+
+  /** A visits CSV with the given header and rows, in a fresh temp dir. */
+  def visitsCsv(lines: String*): String = {
+    val f = java.nio.file.Files.createTempDirectory("graft-visits").resolve("visits.csv")
+    java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("visits melt: hour headers with a quote or a backtick") {
+    val wide = CsvSources.readVisitsWide(spark, visitsCsv(
+      "Keyword,O'Clock,`tick`,TotalClicks", "a,3,4,7", "b,0,1,1"))
+    val got = CsvSources.visitsCoo(wide).df.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+    assert(got === Map(("a", "O'Clock") -> 3.0, ("a", "`tick`") -> 4.0,
+      ("b", "O'Clock") -> 0.0, ("b", "`tick`") -> 1.0))
+  }
+
+  test("visits melt: no hour columns gives an empty COO and an empty allocation") {
+    val noHours = visitsCsv("Keyword,TotalClicks", "a,7", "b,1")
+    val coo = CsvSources.visitsCoo(CsvSources.readVisitsWide(spark, noHours))
+    assert(coo.df.columns.toSeq === Seq(CooMatrix.Row, CooMatrix.Col, CooMatrix.Value))
+    assert(coo.df.count() === 0L)
+    assert(CostAllocation.run(spark, kw, hr, noHours, maxIter = 5).matrix.df.count() === 0L)
+  }
+
+  test("regression guard: CostAllocation.run's Spark jobs do not grow with sweeps") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobCount"
+    val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(t => jobs.synchronized(jobs(t) += 1))
+    }
+    def run(maxIter: Int): (Int, Int) = {
+      sc.setLocalProperty(tag, maxIter.toString)
+      val iterations = try CostAllocation.run(spark, kw, hr, vs, maxIter = maxIter).iterations
+        finally sc.setLocalProperty(tag, null)
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (iterations, jobs.synchronized(jobs(maxIter.toString)))
+    }
+    sc.addSparkListener(listener)
+    val ((it5, jobs5), (it40, jobs40)) = try (run(5), run(40)) finally sc.removeSparkListener(listener)
+    assert(it5 === 5 && it40 === 40)
+    assert(jobs5 === jobs40, s"$jobs5 jobs at 5 sweeps, $jobs40 at 40")
+    assert(jobs40 <= 15, s"$jobs40 jobs")
   }
 }
