@@ -193,6 +193,12 @@ object GlprMaintenance {
     merged
   }
 
+  /** Every base-schema row of one shard that its delete-vector `mask`
+    * leaves live: the read side of the shard rewrites. */
+  private def liveRows(file: String, mask: Array[Long]): GlprRowReader =
+    new GlprRowReader(new GlprColumnarReader(file, GlprSource.schema,
+      GlprSource.IdRange(Long.MinValue, Long.MaxValue), None, "insert", mask))
+
   private val foldCounter = new java.util.concurrent.atomic.AtomicLong()
   /** Rewrite one masked shard into an invisible `_tmp-` stage file with
     * its delete-vector mask APPLIED (standard reader → standard writer,
@@ -203,8 +209,7 @@ object GlprMaintenance {
       mask: Array[Long]): java.io.File = {
     val stageName = s"_tmp-compactfold-${foldCounter.incrementAndGet()}-" +
       shard.getName
-    val reader = new GlprReader(shard.getAbsolutePath, GlprSource.schema,
-      GlprSource.IdRange(Long.MinValue, Long.MaxValue), None, "insert", mask)
+    val reader = liveRows(shard.getAbsolutePath, mask)
     // carry the member's recorded partition spec through the rewrite:
     // without it the stage sidecar has no pcol/pvals, mergeGroup's
     // value-set fold (all-members-or-nothing) then drops the MERGED
@@ -441,11 +446,7 @@ object GlprMaintenance {
     if (jobs.isEmpty) Array.empty
     else spark.sparkContext.parallelize(jobs, jobs.length)
       .map { case (oldName, newName, mask) =>
-        val reader = new GlprReader(
-          new java.io.File(path, oldName).getAbsolutePath,
-          GlprSource.schema,
-          GlprSource.IdRange(Long.MinValue, Long.MaxValue), None,
-          "insert", mask)
+        val reader = liveRows(new java.io.File(path, oldName).getAbsolutePath, mask)
         val taskId = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         val writer = new GlprWriter(path, GlprSource.schema, 0, taskId,
@@ -1131,11 +1132,7 @@ object GlprMaintenance {
     val results: Array[(String, Option[String])] =
       spark.sparkContext.parallelize(jobs.toSeq, jobs.length)
         .map { case (oldName, newName, dvm) =>
-          val reader = new GlprReader(
-            new java.io.File(path, oldName).getAbsolutePath,
-            GlprSource.schema,
-            GlprSource.IdRange(Long.MinValue, Long.MaxValue), None,
-            "insert", dvm)
+          val reader = liveRows(new java.io.File(path, oldName).getAbsolutePath, dvm)
           val taskId = Option(org.apache.spark.TaskContext.get())
             .map(_.taskAttemptId()).getOrElse(0L)
           val writer = new GlprWriter(path, GlprSource.schema, 0, taskId,
@@ -1591,41 +1588,38 @@ object GlprMaintenance {
     * the FULL-table rollup: hash equality certifies the rewrite moved
     * every row exactly once. */
   def zorderReclusterPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-zorder").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_zo", root)
-    // AQE coalescing would merge the clustered shuffles (both the
-    // hash staging and the z-range rewrite) into one fat shard —
-    // the layout IS the deliverable here (round-16 gotcha)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_zo.ns.t " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_zo.ns.t " +
-      "SELECT doc_id, lang, source, text " +
-      s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY xxhash64(doc_id)")
-    s2.sql("CALL glpr_zo.sys.recluster('ns.t', 8, 'lang')").collect(): Unit
-    val tpath = new java.io.File(root, "ns/t").getAbsolutePath
-    // the rectangle probe must prune post-recluster (it could not
-    // pre-recluster: every hash shard intersected every box)
-    val probe = s2.sql("SELECT count(*) FROM glpr_zo.ns.t " +
-      "WHERE doc_id >= 100 AND doc_id < 200 AND lang = 'en'")
-      .head().getLong(0)
-    // an all-empty corpus (RegistryEmptySpec) has only empty shards,
-    // which always keep — the prune contract only binds on data
-    if (probe > 0)
-      Option(GlprSource.planEvents.get(tpath)).foreach { case (kept, total) =>
-        require(total < 2 || kept < total,
-          s"q350 contract: the z-order layout must prune the rectangle " +
-            s"probe (kept $kept of $total, matched $probe rows)")
-      }
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        | CAST(min(doc_id) AS BIGINT) AS min_id,
-        | CAST(max(doc_id) AS BIGINT) AS max_id
-        |FROM glpr_zo.ns.t GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_zo",
+      // AQE coalescing would merge the clustered shuffles (both the
+      // hash staging and the z-range rewrite) into one fat shard —
+      // the layout IS the deliverable here (round-16 gotcha)
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, root) =>
+      GlprSource.createDocs(s2, "glpr_zo.ns.t")
+      s2.sql("INSERT INTO glpr_zo.ns.t " +
+        "SELECT doc_id, lang, source, text " +
+        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY xxhash64(doc_id)")
+      s2.sql("CALL glpr_zo.sys.recluster('ns.t', 8, 'lang')").collect(): Unit
+      val tpath = new java.io.File(root, "ns/t").getAbsolutePath
+      // the rectangle probe must prune post-recluster (it could not
+      // pre-recluster: every hash shard intersected every box)
+      val probe = s2.sql("SELECT count(*) FROM glpr_zo.ns.t " +
+        "WHERE doc_id >= 100 AND doc_id < 200 AND lang = 'en'")
+        .head().getLong(0)
+      // an all-empty corpus (RegistryEmptySpec) has only empty shards,
+      // which always keep — the prune contract only binds on data
+      if (probe > 0)
+        Option(GlprSource.planEvents.get(tpath)).foreach { case (kept, total) =>
+          require(total < 2 || kept < total,
+            s"q350 contract: the z-order layout must prune the rectangle " +
+              s"probe (kept $kept of $total, matched $probe rows)")
+        }
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
+          | CAST(min(doc_id) AS BIGINT) AS min_id,
+          | CAST(max(doc_id) AS BIGINT) AS max_id
+          |FROM glpr_zo.ns.t GROUP BY lang""".stripMargin)
+    }
 
   /** q351 — ZERO-COPY CLONE end to end: the corpus staged as a catalog
     * table, a MoR delete layered on (so the snapshot carries live dv
@@ -1639,29 +1633,26 @@ object GlprMaintenance {
     * vacuum independence, and the dst-exists refusal are
     * GlprCatalogSpec-pinned. */
   def clonePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-clone").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_cl", root)
-    s2.sql("CREATE TABLE glpr_cl.ns.src " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_cl.ns.src SELECT doc_id, lang, source, text " +
-      s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY doc_id div 100")
-    val srcPath = new java.io.File(root, "ns/src").getAbsolutePath
-    deleteIdRangeMergeOnRead(srcPath, 40L, 49L): Unit // pre-clone mask
-    s2.sql("CALL glpr_cl.sys.clone('ns.src', 'ns.dst')").collect(): Unit
-    // diverge the CLONE only
-    s2.sql("CALL glpr_cl.sys.delete_where_mor('ns.dst', 'lang', 'de')")
-      .collect(): Unit
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT 'src' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_cl.ns.src GROUP BY 2
-        |UNION ALL
-        |SELECT 'clone', lang, CAST(count(*) AS BIGINT),
-        | CAST(sum(doc_id) AS BIGINT)
-        |FROM glpr_cl.ns.dst GROUP BY 2""".stripMargin))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_cl") { (s2, root) =>
+      GlprSource.createDocs(s2, "glpr_cl.ns.src")
+      s2.sql("INSERT INTO glpr_cl.ns.src SELECT doc_id, lang, source, text " +
+        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY doc_id div 100")
+      val srcPath = new java.io.File(root, "ns/src").getAbsolutePath
+      deleteIdRangeMergeOnRead(srcPath, 40L, 49L): Unit // pre-clone mask
+      s2.sql("CALL glpr_cl.sys.clone('ns.src', 'ns.dst')").collect(): Unit
+      // diverge the CLONE only
+      s2.sql("CALL glpr_cl.sys.delete_where_mor('ns.dst', 'lang', 'de')")
+        .collect(): Unit
+      s2.sql(
+        """SELECT 'src' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_cl.ns.src GROUP BY 2
+          |UNION ALL
+          |SELECT 'clone', lang, CAST(count(*) AS BIGINT),
+          | CAST(sum(doc_id) AS BIGINT)
+          |FROM glpr_cl.ns.dst GROUP BY 2""".stripMargin)
+    }
 
   /** q353 — BUCKET-TRANSFORM STORAGE-PARTITIONED JOIN, end to end: two
     * tables `PARTITIONED BY (bucket(8, doc_id))` (the writer's required
@@ -1676,28 +1667,29 @@ object GlprMaintenance {
     * relational join rollup over the raw parquet. */
   def bucketSpjPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-bspj").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_bj", root)
-    Seq("facts", "dims").foreach(t => s2.sql(s"CREATE TABLE glpr_bj.ns.$t " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (bucket(8, doc_id))"))
-    s2.sql("INSERT INTO glpr_bj.ns.facts SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("INSERT INTO glpr_bj.ns.dims SELECT doc_id, lang, 'dim', " +
-      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 3 <> 0")
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val q = s2.sql(
-      """SELECT f.lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(f.doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_bj.ns.facts f JOIN glpr_bj.ns.dims d
-        |ON f.doc_id = d.doc_id
-        |GROUP BY 1""".stripMargin)
-    val out = GlprSource.rematerialize(spark, q)
+    var q: DataFrame = null
+    val out = GlprSource.catalogScenario(spark, "glpr_bj") { (s2, _) =>
+      Seq("facts", "dims").foreach(t => GlprSource.createDocs(s2,
+        s"glpr_bj.ns.$t", partitionedBy = "bucket(8, doc_id)"))
+      s2.sql("INSERT INTO glpr_bj.ns.facts SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("INSERT INTO glpr_bj.ns.dims SELECT doc_id, lang, 'dim', " +
+        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 3 <> 0")
+      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      q = s2.sql(
+        """SELECT f.lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(f.doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_bj.ns.facts f JOIN glpr_bj.ns.dims d
+          |ON f.doc_id = d.doc_id
+          |GROUP BY 1""".stripMargin)
+      q
+    }
     // the shuffle-freeness contract holds whenever there is data to
     // join; an ALL-EMPTY corpus commits only rows=0 shards, which carry
     // no bucket value — the report declines by design and the fallback
-    // plan (over zero rows) is fine
+    // plan (over zero rows) is fine. `q` ran inside the scenario, so its
+    // executed plan is final.
     if (!out.isEmpty) {
       val plan = q.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange hashpartitioning(doc_id"),
@@ -1717,28 +1709,26 @@ object GlprMaintenance {
     * derived relationally; immutability/name-space/drop-then-reclaim
     * pins in GlprCatalogSpec. */
   def tagsPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-tags").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_tg", root)
-    s2.sql("CREATE TABLE glpr_tg.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_tg.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` " +
-      "DISTRIBUTE BY doc_id div 100")
-    s2.sql("CALL glpr_tg.sys.tag('ns.docs', 'shipped')").collect(): Unit
-    s2.sql("DELETE FROM glpr_tg.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-    // the retention cycle that would have reclaimed the snapshot
-    s2.sql("CALL glpr_tg.sys.expire_versions('ns.docs', 1)").collect(): Unit
-    s2.sql("CALL glpr_tg.sys.vacuum('ns.docs')").collect(): Unit
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_tg.ns.docs GROUP BY 2
-        |UNION ALL
-        |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
-        | CAST(sum(doc_id) AS BIGINT)
-        |FROM glpr_tg.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_tg") { (s2, _) =>
+      GlprSource.createDocs(s2, "glpr_tg.ns.docs")
+      s2.sql("INSERT INTO glpr_tg.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` " +
+        "DISTRIBUTE BY doc_id div 100")
+      s2.sql("CALL glpr_tg.sys.tag('ns.docs', 'shipped')").collect(): Unit
+      s2.sql("DELETE FROM glpr_tg.ns.docs WHERE doc_id BETWEEN 100 AND 199")
+      // the retention cycle that would have reclaimed the snapshot
+      s2.sql("CALL glpr_tg.sys.expire_versions('ns.docs', 1)").collect(): Unit
+      s2.sql("CALL glpr_tg.sys.vacuum('ns.docs')").collect(): Unit
+      s2.sql(
+        """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_tg.ns.docs GROUP BY 2
+          |UNION ALL
+          |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
+          | CAST(sum(doc_id) AS BIGINT)
+          |FROM glpr_tg.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin)
+    }
 
   /** q364 — AGE-BASED RETENTION end to end (round-19 verdict #7):
     * three commits pinned to a fixed day-apart clock schedule (the
@@ -1754,40 +1744,39 @@ object GlprMaintenance {
       dir: String): DataFrame = {
     val T0 = 1700000000000L // fixed epoch instant; commits a day apart
     val day = 86400000L
-    val root = TempDirs.scratch("graft-glpr-ageret").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_age", root)
-    s2.sql("CREATE TABLE glpr_age.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` " +
-      "DISTRIBUTE BY doc_id div 100")
-    s2.sql("CALL glpr_age.sys.tag('ns.docs', 'shipped')").collect(): Unit
-    s2.sql("DELETE FROM glpr_age.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-    s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id + 1000000, lang, " +
-      s"source, text FROM parquet.`$dir/documents.parquet` " +
-      "WHERE doc_id < 50")
-    val path = new java.io.File(root, "ns/docs").getAbsolutePath
-    val vs = GlprSource.listManifestVersions(path)
-    vs.zipWithIndex.foreach { case (v, i) =>
-      GlprSource.pinVersionCommitMs(path, v, T0 + i * day) }
-    // cutoff between the 2nd and 3rd commit: the tagged v1 is exempt,
-    // the middle version expires, the head survives on age. An
-    // ALL-EMPTY corpus may collapse the schedule (no-op commits mint
-    // no versions), so the staging sanity check only binds when the
-    // three-commit history actually exists.
-    val dropped = s2.sql("CALL glpr_age.sys.expire_versions('ns.docs', " +
-      s"older_than_ms => ${T0 + day + day / 2})").head().getLong(0)
-    require(vs.length < 3 || dropped >= 1L,
-      s"q364 staging: expected the middle version to expire, dropped $dropped")
-    s2.sql("CALL glpr_age.sys.vacuum('ns.docs')").collect(): Unit
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_age.ns.docs GROUP BY 2
-        |UNION ALL
-        |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
-        | CAST(sum(doc_id) AS BIGINT)
-        |FROM glpr_age.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin))
+    GlprSource.catalogScenario(spark, "glpr_age") { (s2, root) =>
+      GlprSource.createDocs(s2, "glpr_age.ns.docs")
+      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` " +
+        "DISTRIBUTE BY doc_id div 100")
+      s2.sql("CALL glpr_age.sys.tag('ns.docs', 'shipped')").collect(): Unit
+      s2.sql("DELETE FROM glpr_age.ns.docs WHERE doc_id BETWEEN 100 AND 199")
+      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id + 1000000, lang, " +
+        s"source, text FROM parquet.`$dir/documents.parquet` " +
+        "WHERE doc_id < 50")
+      val path = new java.io.File(root, "ns/docs").getAbsolutePath
+      val vs = GlprSource.listManifestVersions(path)
+      vs.zipWithIndex.foreach { case (v, i) =>
+        GlprSource.pinVersionCommitMs(path, v, T0 + i * day) }
+      // cutoff between the 2nd and 3rd commit: the tagged v1 is exempt,
+      // the middle version expires, the head survives on age. An
+      // ALL-EMPTY corpus may collapse the schedule (no-op commits mint
+      // no versions), so the staging sanity check only binds when the
+      // three-commit history actually exists.
+      val dropped = s2.sql("CALL glpr_age.sys.expire_versions('ns.docs', " +
+        s"older_than_ms => ${T0 + day + day / 2})").head().getLong(0)
+      require(vs.length < 3 || dropped >= 1L,
+        s"q364 staging: expected the middle version to expire, dropped $dropped")
+      s2.sql("CALL glpr_age.sys.vacuum('ns.docs')").collect(): Unit
+      s2.sql(
+        """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_age.ns.docs GROUP BY 2
+          |UNION ALL
+          |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
+          | CAST(sum(doc_id) AS BIGINT)
+          |FROM glpr_age.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin)
+    }
   }
 
   /** q355 — CHECK CONSTRAINTS end to end: admit `doc_id >= 0 AND text
@@ -1799,46 +1788,44 @@ object GlprMaintenance {
     * pins (dirty-admit refusal, NULL-passes, DML enforcement, rename/
     * drop guards, token survival across ALTER) in GlprCatalogSpec. */
   def constraintsPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-ck").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_ck", root)
-    s2.sql("CREATE TABLE glpr_ck.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("CALL glpr_ck.sys.add_constraint('ns.docs', 'sane-doc', " +
-      "'doc_id >= 0 AND text IS NOT NULL')").collect(): Unit
-    s2.sql("INSERT INTO glpr_ck.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet`")
-    val before = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-      .head().getLong(0)
-    // the refusal must be THE CHECK GATE's (walk the cause chain for
-    // the constraint diagnostic) — a blanket catch would let any
-    // unrelated failure satisfy the contract vacuously
-    val refused =
-      try {
-        s2.sql("INSERT INTO glpr_ck.ns.docs " +
-          "VALUES (-1, 'xx', 'bad', 'row')")
-        false
-      } catch {
-        case e: Exception =>
-          Iterator.iterate(e: Throwable)(_.getCause)
-            .takeWhile(_ != null).take(10)
-            .exists(t => Option(t.getMessage)
-              .exists(_.contains("GLPR CHECK constraint 'sane-doc'")))
-      }
-    require(refused,
-      "q355 contract: the violating append must refuse WITH the " +
-        "constraint diagnostic")
-    val after = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-      .head().getLong(0)
-    require(after == before,
-      s"q355 contract: a refused write must land NOTHING " +
-        s"($before -> $after)")
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_ck.ns.docs GROUP BY 1""".stripMargin))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_ck") { (s2, _) =>
+      GlprSource.createDocs(s2, "glpr_ck.ns.docs")
+      s2.sql("CALL glpr_ck.sys.add_constraint('ns.docs', 'sane-doc', " +
+        "'doc_id >= 0 AND text IS NOT NULL')").collect(): Unit
+      s2.sql("INSERT INTO glpr_ck.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet`")
+      val before = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
+        .head().getLong(0)
+      // the refusal must be THE CHECK GATE's (walk the cause chain for
+      // the constraint diagnostic) — a blanket catch would let any
+      // unrelated failure satisfy the contract vacuously
+      val refused =
+        try {
+          s2.sql("INSERT INTO glpr_ck.ns.docs " +
+            "VALUES (-1, 'xx', 'bad', 'row')")
+          false
+        } catch {
+          case e: Exception =>
+            Iterator.iterate(e: Throwable)(_.getCause)
+              .takeWhile(_ != null).take(10)
+              .exists(t => Option(t.getMessage)
+                .exists(_.contains("GLPR CHECK constraint 'sane-doc'")))
+        }
+      require(refused,
+        "q355 contract: the violating append must refuse WITH the " +
+          "constraint diagnostic")
+      val after = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
+        .head().getLong(0)
+      require(after == before,
+        s"q355 contract: a refused write must land NOTHING " +
+          s"($before -> $after)")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
+          |FROM glpr_ck.ns.docs GROUP BY 1""".stripMargin)
+    }
 
   /** q356 — `sys.files` shard introspection, certified against the
     * data: the pipeline ingests the corpus, reads the table's
@@ -1849,36 +1836,34 @@ object GlprMaintenance {
     * THE DATA — hash equality certifies that the sidecar statistics the
     * planner prunes and estimates with are exactly right. */
   def filesPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-files").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_fl", root)
-    s2.sql("CREATE TABLE glpr_fl.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_fl.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` " +
-      "DISTRIBUTE BY doc_id div 100")
-    val files = s2.sql("CALL glpr_fl.sys.files('ns.docs')").collect()
-    require(files.forall(r => !r.isNullAt(1)),
-      "q356 contract: every connector-written shard carries a sidecar")
-    require(files.forall(r => !r.getBoolean(7)),
-      "q356 contract: a plain ingest is mask-free")
-    val nRows = files.map(_.getLong(1)).sum
-    val los = files.filter(!_.isNullAt(3)).map(_.getLong(3))
-    val his = files.filter(!_.isNullAt(4)).map(_.getLong(4))
-    val rows: Seq[org.apache.spark.sql.Row] = Seq(
-      org.apache.spark.sql.Row("max_id",
-        if (his.isEmpty) null else java.lang.Long.valueOf(his.max)),
-      org.apache.spark.sql.Row("min_id",
-        if (los.isEmpty) null else java.lang.Long.valueOf(los.min)),
-      org.apache.spark.sql.Row("n_rows", java.lang.Long.valueOf(nRows)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("metric",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.LongType, nullable = true))))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_fl") { (s2, _) =>
+      GlprSource.createDocs(s2, "glpr_fl.ns.docs")
+      s2.sql("INSERT INTO glpr_fl.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` " +
+        "DISTRIBUTE BY doc_id div 100")
+      val files = s2.sql("CALL glpr_fl.sys.files('ns.docs')").collect()
+      require(files.forall(r => !r.isNullAt(1)),
+        "q356 contract: every connector-written shard carries a sidecar")
+      require(files.forall(r => !r.getBoolean(7)),
+        "q356 contract: a plain ingest is mask-free")
+      val nRows = files.map(_.getLong(1)).sum
+      val los = files.filter(!_.isNullAt(3)).map(_.getLong(3))
+      val his = files.filter(!_.isNullAt(4)).map(_.getLong(4))
+      val rows: Seq[org.apache.spark.sql.Row] = Seq(
+        org.apache.spark.sql.Row("max_id",
+          if (his.isEmpty) null else java.lang.Long.valueOf(his.max)),
+        org.apache.spark.sql.Row("min_id",
+          if (los.isEmpty) null else java.lang.Long.valueOf(los.min)),
+        org.apache.spark.sql.Row("n_rows", java.lang.Long.valueOf(nRows)))
+      import scala.jdk.CollectionConverters._
+      s2.createDataFrame(rows.asJava,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("metric",
+            org.apache.spark.sql.types.StringType, nullable = false),
+          org.apache.spark.sql.types.StructField("value",
+            org.apache.spark.sql.types.LongType, nullable = true))))
+    }
 
   /** q358 — ZERO-SHUFFLE EXACT-DEDUP AUDIT: `GROUP BY doc_id` over a
     * bucket-clustered table plans NO exchange at all — the scan's
@@ -1894,22 +1879,22 @@ object GlprMaintenance {
     * cross-file dedup, not a within-file one). */
   def dedupAuditPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-dedup").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_da", root)
-    s2.sql("CREATE TABLE glpr_da.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (bucket(8, doc_id))")
-    s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet`")
-    // the duplicate ingest: every fifth document lands again
-    s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 5 = 0")
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    val q = s2.sql(
-      """SELECT doc_id, CAST(count(*) AS BIGINT) AS copies
-        |FROM glpr_da.ns.docs
-        |GROUP BY doc_id HAVING count(*) > 1""".stripMargin)
-    val out = GlprSource.rematerialize(spark, q)
+    var q: DataFrame = null
+    val out = GlprSource.catalogScenario(spark, "glpr_da") { (s2, _) =>
+      GlprSource.createDocs(s2, "glpr_da.ns.docs",
+        partitionedBy = "bucket(8, doc_id)")
+      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet`")
+      // the duplicate ingest: every fifth document lands again
+      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 5 = 0")
+      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      q = s2.sql(
+        """SELECT doc_id, CAST(count(*) AS BIGINT) AS copies
+          |FROM glpr_da.ns.docs
+          |GROUP BY doc_id HAVING count(*) > 1""".stripMargin)
+      q
+    }
     if (!out.isEmpty) {
       val plan = q.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange"),
@@ -1927,17 +1912,15 @@ object GlprMaintenance {
     * Oracle recomputes both snapshots' counts from the data, so hash
     * equality certifies the SQL-served history numbers exactly. */
   def metadataTablesPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-mdt").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_md", root)
-    s2.sql("CREATE TABLE glpr_md.ns.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 = 0")
-    s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-      s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 <> 0")
-    GlprSource.rematerialize(spark, s2.sql(
-      """SELECT version, n_rows FROM glpr_md.ns.docs.history
-        |WHERE version <= 2 ORDER BY version""".stripMargin))
-  }
+      dir: String): DataFrame =
+    GlprSource.catalogScenario(spark, "glpr_md") { (s2, _) =>
+      GlprSource.createDocs(s2, "glpr_md.ns.docs")
+      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 = 0")
+      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
+        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 <> 0")
+      s2.sql(
+        """SELECT version, n_rows FROM glpr_md.ns.docs.history
+          |WHERE version <= 2 ORDER BY version""".stripMargin)
+    }
 }

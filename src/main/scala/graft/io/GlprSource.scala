@@ -5,7 +5,6 @@ import java.util
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -371,25 +370,16 @@ object GlprSource {
     * identifier — not one DataFrame-API read or write in the pipeline,
     * the SQL-only-consumer contract a lakehouse catalog exists for. */
   def catalogSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-catalog").toString
-    // fresh session per call ([[freshCatalogSession]]): a session's
-    // CatalogManager caches the catalog plugin instance after first use,
-    // so re-setting spark.sql.catalog.glpr_cat.root for a DIFFERENT dir
-    // on the same session would run DDL against the stale root
-    // (round 15: a probe iterating three SF dirs on one session hit
-    // exactly this).
-    val s2 = freshCatalogSession(spark, "glpr_cat", root)
-    s2.sql("CREATE TABLE glpr_cat.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_cat.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    // re-materialized on the caller's session (bounded: one row per lang)
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM glpr_cat.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_cat") { (s2, _) =>
+      createDocs(s2, "glpr_cat.corpus.docs")
+      s2.sql("INSERT INTO glpr_cat.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | min(doc_id) AS min_id, max(doc_id) AS max_id
+          |FROM glpr_cat.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q315 — the DSv2 FunctionCatalog front door ([[GlprFunctions]]):
     * `glpr_fn.sys.nfc_bytes` (MAGIC_METHOD scalar — codegen'd Invoke, no
@@ -402,17 +392,16 @@ object GlprSource {
     * Listing, unknown-name/namespace rejections, and arity checks are
     * GlprCatalogSpec-pinned. */
   def functionCatalogPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-fncat").toString
-    val s2 = freshCatalogSession(spark, "glpr_fn", root)
-    s2.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("fn_docs")
-    rematerialize(spark, s2.sql(
-      """SELECT lang,
-        | CAST(sum(glpr_fn.sys.nfc_bytes(text)) AS BIGINT) AS nfc_bytes,
-        | glpr_fn.sys.bytes_sum(text) AS raw_bytes,
-        | CAST(count(*) AS BIGINT) AS n_docs
-        |FROM fn_docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_fn") { (s2, _) =>
+      s2.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("fn_docs")
+      s2.sql(
+        """SELECT lang,
+          | CAST(sum(glpr_fn.sys.nfc_bytes(text)) AS BIGINT) AS nfc_bytes,
+          | glpr_fn.sys.bytes_sum(text) AS raw_bytes,
+          | CAST(count(*) AS BIGINT) AS n_docs
+          |FROM fn_docs GROUP BY lang""".stripMargin)
+    }
 
   /** q316 — version HISTORY through `CALL <cat>.sys.history('ns.table')`
     * (the DESCRIBE HISTORY analogue, via Spark 4's ProcedureCatalog):
@@ -424,29 +413,26 @@ object GlprSource {
     * per commit and snapshot the right states. Shard counts are
     * partitioning-dependent bookkeeping and projected away. */
   def historyPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-history").toString
-    val s2 = freshCatalogSession(spark, "glpr_hist", root)
-    s2.sql("CREATE TABLE glpr_hist.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    // degenerate-SF determinism (round-16 ADVICE): an EMPTY slice may
-    // or may not mint a version (0 input partitions → 0 tasks → no
-    // manifest change), which would make the version numbering
-    // SF-dependent; skip empty slices so versions = nonempty slices,
-    // exactly what the oracle derives (same clamp family as q311/q317)
-    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-      .foreach { p =>
-        val n = s2.sql("SELECT count(*) AS n FROM " +
-          s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-        if (n > 0)
-          s2.sql("INSERT INTO glpr_hist.corpus.docs " +
-            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-            s"WHERE $p")
-      }
-    rematerialize(spark,
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_hist") { (s2, _) =>
+      createDocs(s2, "glpr_hist.corpus.docs")
+      // degenerate-SF determinism (round-16 ADVICE): an EMPTY slice may
+      // or may not mint a version (0 input partitions → 0 tasks → no
+      // manifest change), which would make the version numbering
+      // SF-dependent; skip empty slices so versions = nonempty slices,
+      // exactly what the oracle derives (same clamp family as q311/q317)
+      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+        .foreach { p =>
+          val n = s2.sql("SELECT count(*) AS n FROM " +
+            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
+          if (n > 0)
+            s2.sql("INSERT INTO glpr_hist.corpus.docs " +
+              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+              s"WHERE $p")
+        }
       s2.sql("CALL glpr_hist.sys.history('corpus.docs')")
-        .select("version", "n_rows"))
-  }
+        .select("version", "n_rows")
+    }
 
   /** q317 — the MAINTENANCE ladder through SQL `CALL`: three slice
     * INSERTs, `restore(2)` (roll the live view back to the first two),
@@ -458,30 +444,28 @@ object GlprSource {
     * effect-checked cross-engine. Per-procedure result sets and loud
     * rejections are GlprCatalogSpec-pinned. */
   def maintenanceSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-maint").toString
-    val s2 = freshCatalogSession(spark, "glpr_maint", root)
-    val tableDir = new java.io.File(root, "corpus/docs")
-    s2.sql("CREATE TABLE glpr_maint.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-      .foreach { p =>
-        s2.sql("INSERT INTO glpr_maint.corpus.docs " +
-          s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-          s"WHERE $p")
-      }
-    // an all-empty corpus mints fewer versions; clamp like q311
-    val pin = math.min(2L,
-      listManifestVersions(tableDir.getAbsolutePath).lastOption.getOrElse(1L))
-    s2.sql(s"CALL glpr_maint.sys.restore('corpus.docs', $pin)").collect()
-    s2.sql(s"CALL glpr_maint.sys.compact('corpus.docs', ${Long.MaxValue / 2})")
-      .collect()
-    s2.sql("CALL glpr_maint.sys.vacuum('corpus.docs')").collect()
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_maint.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_maint") { (s2, root) =>
+      val tableDir = new java.io.File(root, "corpus/docs")
+      createDocs(s2, "glpr_maint.corpus.docs")
+      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+        .foreach { p =>
+          s2.sql("INSERT INTO glpr_maint.corpus.docs " +
+            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+            s"WHERE $p")
+        }
+      // an all-empty corpus mints fewer versions; clamp like q311
+      val pin = math.min(2L,
+        listManifestVersions(tableDir.getAbsolutePath).lastOption.getOrElse(1L))
+      s2.sql(s"CALL glpr_maint.sys.restore('corpus.docs', $pin)").collect()
+      s2.sql(s"CALL glpr_maint.sys.compact('corpus.docs', ${Long.MaxValue / 2})")
+        .collect()
+      s2.sql("CALL glpr_maint.sys.vacuum('corpus.docs')").collect()
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_maint.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q319 — STORAGE-PARTITIONED JOIN: two `PARTITIONED BY (lang)` GLPR
     * tables (the corpus and a per-lang dimension), joined on the
@@ -497,35 +481,30 @@ object GlprSource {
     * ingest at 100 TB: corpus⋈corpus on the partition key moves zero
     * bytes between executors. */
   def storagePartitionedJoinPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-spj").toString
-    val s2 = freshCatalogSession(spark, "glpr_spj", root)
-    s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // the clustered-write contract (see q304): one lang per shard —
-    // coalescing pinned off and enough write partitions that the five
-    // lang constants hash apart (data-independent, verified by the
-    // single-valued sidecars the scan's partitioning report requires)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "32")
-    s2.sql("CREATE TABLE glpr_spj.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (lang)")
-    s2.sql("INSERT INTO glpr_spj.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("CREATE TABLE glpr_spj.corpus.langdim " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (lang)")
-    s2.sql("INSERT INTO glpr_spj.corpus.langdim " +
-      "SELECT min(doc_id) AS doc_id, lang, 'dim' AS source, " +
-      "concat('meta-', lang) AS text " +
-      s"FROM parquet.`$dir/documents.parquet` GROUP BY lang")
-    rematerialize(spark, s2.sql(
-      """SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(min(m.doc_id) AS BIGINT) AS dim_min_id
-        |FROM glpr_spj.corpus.docs d JOIN glpr_spj.corpus.langdim m
-        |ON d.lang = m.lang GROUP BY d.lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_spj",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // the clustered-write contract (see q304): one lang per shard —
+      // coalescing pinned off and enough write partitions that the five
+      // lang constants hash apart (data-independent, verified by the
+      // single-valued sidecars the scan's partitioning report requires)
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "32") { (s2, _) =>
+      createDocs(s2, "glpr_spj.corpus.docs", partitionedBy = "lang")
+      s2.sql("INSERT INTO glpr_spj.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      createDocs(s2, "glpr_spj.corpus.langdim", partitionedBy = "lang")
+      s2.sql("INSERT INTO glpr_spj.corpus.langdim " +
+        "SELECT min(doc_id) AS doc_id, lang, 'dim' AS source, " +
+        "concat('meta-', lang) AS text " +
+        s"FROM parquet.`$dir/documents.parquet` GROUP BY lang")
+      s2.sql(
+        """SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(min(m.doc_id) AS BIGINT) AS dim_min_id
+          |FROM glpr_spj.corpus.docs d JOIN glpr_spj.corpus.langdim m
+          |ON d.lang = m.lang GROUP BY d.lang""".stripMargin)
+    }
 
   /** q325 — DYNAMIC PARTITION OVERWRITE through SQL: the full corpus in
     * a `PARTITIONED BY (lang)` table, then `INSERT OVERWRITE` under
@@ -538,26 +517,23 @@ object GlprSource {
     * commit log"): the `_manifest` IS one now. Straddler/unknown-value
     * refusals pinned in GlprCatalogSpec. */
   def dynamicOverwritePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-dynow").toString
-    val s2 = freshCatalogSession(spark, "glpr_dyn", root)
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // clustered-write contract: single-valued shards (q304/q319 note)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "32")
-    s2.sql("CREATE TABLE glpr_dyn.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (lang)")
-    s2.sql("INSERT INTO glpr_dyn.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("INSERT OVERWRITE glpr_dyn.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-      "WHERE lang IN ('de', 'zh') AND doc_id < 300")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | max(doc_id) AS max_id
-        |FROM glpr_dyn.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_dyn",
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+      // clustered-write contract: single-valued shards (q304/q319 note)
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "32") { (s2, _) =>
+      createDocs(s2, "glpr_dyn.corpus.docs", partitionedBy = "lang")
+      s2.sql("INSERT INTO glpr_dyn.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("INSERT OVERWRITE glpr_dyn.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+        "WHERE lang IN ('de', 'zh') AND doc_id < 300")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | max(doc_id) AS max_id
+          |FROM glpr_dyn.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** The fixed doc_id slice expression behind the DML pipelines (q301/
     * q303): three contiguous id ranges `[min,100) [100,300) [300,max]`,
@@ -573,7 +549,34 @@ object GlprSource {
   private val SliceSql =
     "(CASE WHEN doc_id < 100 THEN 0 WHEN doc_id < 300 THEN 1 ELSE 2 END)"
 
-  private[io] def freshCatalogSession(spark: org.apache.spark.sql.SparkSession,
+  /** One catalog scenario: a call-scoped scratch root
+    * ([[TempDirs.scoped]]), a fresh session with `catalog` bound to it
+    * and the caller's `confs` set, then `body(session, root)`. The
+    * body's BOUNDED result is [[rematerialize]]d onto `spark`, and the
+    * root is deleted before the call returns. The session is fresh per
+    * call because a session's CatalogManager caches the catalog plugin
+    * instance after first use: re-pointing `spark.sql.catalog.<name>.root`
+    * on the same session would run DDL against the stale root. */
+  private[io] def catalogScenario(spark: org.apache.spark.sql.SparkSession,
+      catalog: String, confs: (String, String)*)(
+      body: (org.apache.spark.sql.SparkSession, String) => DataFrame): DataFrame =
+    TempDirs.scoped("graft-" + catalog.replace('_', '-')) { root =>
+      val s2 = freshCatalogSession(spark, catalog, root.toString)
+      confs.foreach { case (k, v) => s2.conf.set(k, v) }
+      rematerialize(spark, body(s2, root.toString))
+    }
+
+  /** `CREATE TABLE <table>` with the GLPR documents columns, then
+    * `extraCols` (schema-evolution extras such as `ts STRING`), and
+    * `PARTITIONED BY (<partitionedBy>)` when that is set. */
+  private[io] def createDocs(s: org.apache.spark.sql.SparkSession, table: String,
+      partitionedBy: String = "", extraCols: String = ""): Unit =
+    s.sql(s"CREATE TABLE $table " +
+      "(doc_id BIGINT, lang STRING, source STRING, text STRING" +
+      (if (extraCols.isEmpty) ")" else s", $extraCols)") +
+      (if (partitionedBy.isEmpty) "" else s" PARTITIONED BY ($partitionedBy)")): Unit
+
+  private def freshCatalogSession(spark: org.apache.spark.sql.SparkSession,
       catalog: String, root: String): org.apache.spark.sql.SparkSession = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
@@ -589,7 +592,7 @@ object GlprSource {
     * settles in r14/r15). Every caller returns a keyed rollup, never a
     * per-row corpus projection; the cap trips long before driver memory
     * does. */
-  private[io] def rematerialize(spark: org.apache.spark.sql.SparkSession,
+  private def rematerialize(spark: org.apache.spark.sql.SparkSession,
       res: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rows = graft.streaming.Events.guardedSettleRows(res)
@@ -606,26 +609,24 @@ object GlprSource {
     * under- or over-deletion. The straddling-decline side of the
     * contract is GlprCatalogSpec-pinned. */
   def deleteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-delete").toString
-    val s2 = freshCatalogSession(spark, "glpr_del", root)
-    // AQE's partition coalescing would merge the small slice partitions
-    // of the DISTRIBUTE BY into one task — producing a shard whose
-    // bounds straddle the delete cut, which canDeleteWhere (correctly)
-    // refuses. Shard-aligned ingest means the WRITER's partitioning is
-    // the contract; pin it for this session.
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_del.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_del.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-      s"DISTRIBUTE BY $SliceSql")
-    s2.sql("DELETE FROM glpr_del.corpus.docs WHERE doc_id < 100")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_del.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_del",
+      // AQE's partition coalescing would merge the small slice partitions
+      // of the DISTRIBUTE BY into one task — producing a shard whose
+      // bounds straddle the delete cut, which canDeleteWhere (correctly)
+      // refuses. Shard-aligned ingest means the WRITER's partitioning is
+      // the contract; pin it for this session.
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_del.corpus.docs")
+      s2.sql("INSERT INTO glpr_del.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+        s"DISTRIBUTE BY $SliceSql")
+      s2.sql("DELETE FROM glpr_del.corpus.docs WHERE doc_id < 100")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
+          |FROM glpr_del.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q302 — INSERT OVERWRITE through the SQL front door
     * ([[GlprWriteBuilder]] `SupportsTruncate`: truncate-then-append for
@@ -635,21 +636,19 @@ object GlprSource {
     * append masquerading as overwrite) or lost subset row breaks the
     * hash. Shard+sidecar truncation is GlprCatalogSpec-pinned. */
   def overwriteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-overwrite").toString
-    val s2 = freshCatalogSession(spark, "glpr_ow", root)
-    s2.sql("CREATE TABLE glpr_ow.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_ow.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("INSERT OVERWRITE glpr_ow.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-      "WHERE lang IN ('de', 'zh')")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM glpr_ow.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_ow") { (s2, _) =>
+      createDocs(s2, "glpr_ow.corpus.docs")
+      s2.sql("INSERT INTO glpr_ow.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("INSERT OVERWRITE glpr_ow.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+        "WHERE lang IN ('de', 'zh')")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | min(doc_id) AS min_id, max(doc_id) AS max_id
+          |FROM glpr_ow.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q303 — `_shard` provenance rollup: the corpus written
     * slice-clustered ([[SliceSql]] via `repartition`, same
@@ -719,21 +718,18 @@ object GlprSource {
     * hash-match `documents WHERE lang NOT IN (…)`; the mixed-predicate
     * and value-straddling declines are GlprCatalogSpec-pinned. */
   def partitionDeletePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-pdelete").toString
-    val s2 = freshCatalogSession(spark, "glpr_pdel", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_pdel.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (lang)")
-    s2.sql("INSERT INTO glpr_pdel.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("DELETE FROM glpr_pdel.corpus.docs WHERE lang IN ('de', 'zh')")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_pdel.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_pdel",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_pdel.corpus.docs", partitionedBy = "lang")
+      s2.sql("INSERT INTO glpr_pdel.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("DELETE FROM glpr_pdel.corpus.docs WHERE lang IN ('de', 'zh')")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
+          |FROM glpr_pdel.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q310 — MANIFEST commit-point visibility: the corpus written
     * through the job-committed path (manifest published), then a
@@ -1155,98 +1151,96 @@ object GlprSource {
   def branchUpdateFixPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-branchupd").toString
-    val s2 = freshCatalogSession(spark, "glpr_bu", root)
-    s2.sql("CREATE TABLE glpr_bu.ns.t " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_bu.ns.t SELECT doc_id, lang, source, text " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    val path = new java.io.File(root, "ns/t").getAbsolutePath
-    createBranch(path, "relabel")
-    val docs = Tables(s2, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-      .select(col("doc_id"),
-        when(col("doc_id") % 10 === 0L, lit("xx"))
-          .otherwise(col("lang")).as("lang"),
-        col("source"), col("text"))
-      .coalesce(2).write.format("graft.io.GlprSource")
-      .option("branch", "relabel").mode("append").save(path)
-    def badCount(): Long = s2.sql(
-      "SELECT count(*) FROM glpr_bu.ns.t VERSION AS OF 'relabel' " +
-        "WHERE lang = 'xx'").collect()(0).getLong(0)
-    // an all-empty corpus (RegistryEmptySpec) stages no mislabels —
-    // the fix is then a no-op and publish adopts the slice as-is
-    if (badCount() > 0L) {
-      GlprMaintenance.updateWhereMergeOnRead(s2, path,
-        "lang", Set("xx"), "lang", "und",
-        branch = Some("relabel")): Unit
-      require(badCount() == 0L, "q366 branch update left mislabels behind")
+    catalogScenario(spark, "glpr_bu") { (s2, root) =>
+      createDocs(s2, "glpr_bu.ns.t")
+      s2.sql("INSERT INTO glpr_bu.ns.t SELECT doc_id, lang, source, text " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      val path = new java.io.File(root, "ns/t").getAbsolutePath
+      createBranch(path, "relabel")
+      val docs = Tables(s2, dir, "documents")
+        .select("doc_id", "lang", "source", "text")
+      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
+        .select(col("doc_id"),
+          when(col("doc_id") % 10 === 0L, lit("xx"))
+            .otherwise(col("lang")).as("lang"),
+          col("source"), col("text"))
+        .coalesce(2).write.format("graft.io.GlprSource")
+        .option("branch", "relabel").mode("append").save(path)
+      def badCount(): Long = s2.sql(
+        "SELECT count(*) FROM glpr_bu.ns.t VERSION AS OF 'relabel' " +
+          "WHERE lang = 'xx'").collect()(0).getLong(0)
+      // an all-empty corpus (RegistryEmptySpec) stages no mislabels —
+      // the fix is then a no-op and publish adopts the slice as-is
+      if (badCount() > 0L) {
+        GlprMaintenance.updateWhereMergeOnRead(s2, path,
+          "lang", Set("xx"), "lang", "und",
+          branch = Some("relabel")): Unit
+        require(badCount() == 0L, "q366 branch update left mislabels behind")
+      }
+      // the fix is invisible to main until publish
+      require(spark.read.format("graft.io.GlprSource").load(path)
+        .count() == s2.sql("SELECT count(*) FROM glpr_bu.ns.t " +
+          "WHERE doc_id < 100").collect()(0).getLong(0),
+        "q366 branch staging leaked into main before publish")
+      publishBranch(path, "relabel"): Unit
+      spark.read.format("graft.io.GlprSource").load(path)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("doc_id")).cast("long").as("id_sum"),
+          sum(octet_length(col("text"))).cast("long").as("n_bytes"))
     }
-    // the fix is invisible to main until publish
-    require(spark.read.format("graft.io.GlprSource").load(path)
-      .count() == s2.sql("SELECT count(*) FROM glpr_bu.ns.t " +
-        "WHERE doc_id < 100").collect()(0).getLong(0),
-      "q366 branch staging leaked into main before publish")
-    publishBranch(path, "relabel"): Unit
-    spark.read.format("graft.io.GlprSource").load(s"$root/ns/t")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
   }
 
   def branchFixPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-branchfix").toString
-    val s2 = freshCatalogSession(spark, "glpr_fix", root)
-    s2.sql("CREATE TABLE glpr_fix.ns.t " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_fix.ns.t SELECT doc_id, lang, source, text " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    val path = new java.io.File(root, "ns/t").getAbsolutePath
-    createBranch(path, "fixup")
-    val docs = Tables(s2, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-      .coalesce(2).write.format("graft.io.GlprSource")
-      .option("branch", "fixup").mode("append").save(path)
-    docs.filter(col("doc_id") < 40L)
-      .select((col("doc_id") + 9000000L).as("doc_id"),
-        lit("xx").as("lang"), col("source"), col("text"))
-      .coalesce(1).write.format("graft.io.GlprSource")
-      .option("branch", "fixup").mode("append").save(path)
-    docs.filter(col("doc_id") < 25L)
-      .select((col("doc_id") + 9500000L).as("doc_id"), col("lang"),
-        col("source"), lit("CORRUPT").as("text"))
-      .coalesce(1).write.format("graft.io.GlprSource")
-      .option("branch", "fixup").mode("append").save(path)
-    def badCount(): Long = s2.sql(
-      "SELECT count(*) FROM glpr_fix.ns.t VERSION AS OF 'fixup' " +
-        "WHERE lang = 'xx' OR doc_id >= 9000000").collect()(0).getLong(0)
-    // an all-empty corpus (RegistryEmptySpec) stages no garbage —
-    // the fix loop is then a no-op and publish flips nothing
-    if (badCount() > 0L) {
-      s2.sql(
-        "CALL glpr_fix.sys.delete_where_mor('ns.t', 'lang', 'xx', 'fixup')")
-        .collect(): Unit
-      GlprMaintenance.deleteIdRangeMergeOnRead(path, 9000000L,
-        Long.MaxValue, Some("fixup")): Unit
-      require(badCount() == 0L, "q346 branch fix left garbage behind")
+    catalogScenario(spark, "glpr_fix") { (s2, root) =>
+      createDocs(s2, "glpr_fix.ns.t")
+      s2.sql("INSERT INTO glpr_fix.ns.t SELECT doc_id, lang, source, text " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      val path = new java.io.File(root, "ns/t").getAbsolutePath
+      createBranch(path, "fixup")
+      val docs = Tables(s2, dir, "documents")
+        .select("doc_id", "lang", "source", "text")
+      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
+        .coalesce(2).write.format("graft.io.GlprSource")
+        .option("branch", "fixup").mode("append").save(path)
+      docs.filter(col("doc_id") < 40L)
+        .select((col("doc_id") + 9000000L).as("doc_id"),
+          lit("xx").as("lang"), col("source"), col("text"))
+        .coalesce(1).write.format("graft.io.GlprSource")
+        .option("branch", "fixup").mode("append").save(path)
+      docs.filter(col("doc_id") < 25L)
+        .select((col("doc_id") + 9500000L).as("doc_id"), col("lang"),
+          col("source"), lit("CORRUPT").as("text"))
+        .coalesce(1).write.format("graft.io.GlprSource")
+        .option("branch", "fixup").mode("append").save(path)
+      def badCount(): Long = s2.sql(
+        "SELECT count(*) FROM glpr_fix.ns.t VERSION AS OF 'fixup' " +
+          "WHERE lang = 'xx' OR doc_id >= 9000000").collect()(0).getLong(0)
+      // an all-empty corpus (RegistryEmptySpec) stages no garbage —
+      // the fix loop is then a no-op and publish flips nothing
+      if (badCount() > 0L) {
+        s2.sql(
+          "CALL glpr_fix.sys.delete_where_mor('ns.t', 'lang', 'xx', 'fixup')")
+          .collect(): Unit
+        GlprMaintenance.deleteIdRangeMergeOnRead(path, 9000000L,
+          Long.MaxValue, Some("fixup")): Unit
+        require(badCount() == 0L, "q346 branch fix left garbage behind")
+      }
+      // main must not have seen the staging OR the masks until publish
+      require(spark.read.format("graft.io.GlprSource").load(path)
+        .count() == s2.sql("SELECT count(*) FROM glpr_fix.ns.t " +
+          "WHERE doc_id < 100").collect()(0).getLong(0),
+        "q346 branch staging leaked into main before publish")
+      publishBranch(path, "fixup"): Unit
+      dropBranch(path, "fixup"): Unit
+      spark.read.format("graft.io.GlprSource").load(path)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("doc_id")).cast("long").as("id_sum"),
+          max(col("doc_id")).cast("long").as("max_id"))
     }
-    // main must not have seen the staging OR the masks until publish
-    require(spark.read.format("graft.io.GlprSource").load(path)
-      .count() == s2.sql("SELECT count(*) FROM glpr_fix.ns.t " +
-        "WHERE doc_id < 100").collect()(0).getLong(0),
-      "q346 branch staging leaked into main before publish")
-    publishBranch(path, "fixup"): Unit
-    dropBranch(path, "fixup"): Unit
-    spark.read.format("graft.io.GlprSource").load(path)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        max(col("doc_id")).cast("long").as("max_id"))
   }
 
   /** q326 — SQL `UPDATE` through the row-level-operation front door
@@ -1261,21 +1255,19 @@ object GlprSource {
     * group-prune-only scan contract), none double-updated, none
     * spuriously updated. */
   def sqlUpdatePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-sqlupdate").toString
-    val s2 = freshCatalogSession(spark, "glpr_upd", root)
-    s2.sql("CREATE TABLE glpr_upd.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_upd.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("UPDATE glpr_upd.corpus.docs " +
-      "SET source = 'curated', text = concat(text, ' [ok]') " +
-      "WHERE doc_id < 100")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_upd.corpus.docs GROUP BY lang, source""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_upd") { (s2, _) =>
+      createDocs(s2, "glpr_upd.corpus.docs")
+      s2.sql("INSERT INTO glpr_upd.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("UPDATE glpr_upd.corpus.docs " +
+        "SET source = 'curated', text = concat(text, ' [ok]') " +
+        "WHERE doc_id < 100")
+      s2.sql(
+        """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
+          |FROM glpr_upd.corpus.docs GROUP BY lang, source""".stripMargin)
+    }
 
   /** q327 — SQL `MERGE INTO` (the lakehouse upsert): a deterministic
     * updates source derived from the documents table — rows
@@ -1286,32 +1278,30 @@ object GlprSource {
     * merged state relationally: a missed/duplicated match, a lost
     * unmatched row, or a dropped insert all break the hash. */
   def sqlMergePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-sqlmerge").toString
-    val s2 = freshCatalogSession(spark, "glpr_mrg", root)
-    s2.sql("CREATE TABLE glpr_mrg.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_mrg.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql(
-      s"""MERGE INTO glpr_mrg.corpus.docs t
-         |USING (
-         |  SELECT doc_id, lang, 'merged' AS source, upper(text) AS text
-         |  FROM parquet.`$dir/documents.parquet`
-         |  WHERE doc_id >= 100 AND doc_id < 300
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, 'inserted', text
-         |  FROM parquet.`$dir/documents.parquet` WHERE doc_id < 50
-         |) u
-         |ON t.doc_id = u.doc_id
-         |WHEN MATCHED THEN UPDATE SET t.source = u.source, t.text = u.text
-         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    rematerialize(spark, s2.sql(
-      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_mrg.corpus.docs GROUP BY source, lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_mrg") { (s2, _) =>
+      createDocs(s2, "glpr_mrg.corpus.docs")
+      s2.sql("INSERT INTO glpr_mrg.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        s"""MERGE INTO glpr_mrg.corpus.docs t
+           |USING (
+           |  SELECT doc_id, lang, 'merged' AS source, upper(text) AS text
+           |  FROM parquet.`$dir/documents.parquet`
+           |  WHERE doc_id >= 100 AND doc_id < 300
+           |  UNION ALL
+           |  SELECT doc_id + 1000000, lang, 'inserted', text
+           |  FROM parquet.`$dir/documents.parquet` WHERE doc_id < 50
+           |) u
+           |ON t.doc_id = u.doc_id
+           |WHEN MATCHED THEN UPDATE SET t.source = u.source, t.text = u.text
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      s2.sql(
+        """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
+          |FROM glpr_mrg.corpus.docs GROUP BY source, lang""".stripMargin)
+    }
 
   /** q338 — CDC-APPLY through ONE SQL MERGE, every clause class in one
     * statement (the first real MERGE a lakehouse user writes after
@@ -1334,58 +1324,57 @@ object GlprSource {
   def cdcMergeSqlPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-cdcmerge").toString
-    val s2 = freshCatalogSession(spark, "glpr_cdc", root)
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val chg = graft.streaming.Events.convertTs(
-        s2.read.parquet(s"$dir/events.parquet"))
-      .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-        col("event_id"), col("event_type"), col("value"))
-    chg.createOrReplaceTempView("glpr_cdc_changelog")
-    val mm = chg.agg(min("ts_ms"), max("ts_ms"), max("user_id")).head()
-    val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
-    // sentinel keys land strictly past every real user_id at ANY
-    // scale (a fixed base could collide with a larger fixture and
-    // turn a sentinel into a duplicate real row)
-    val sentinelBase =
-      (if (mm.isNullAt(2)) 0L else math.max(mm.getLong(2), 0L)) + 1000L
-    s2.sql("CREATE TABLE glpr_cdc.state.compacted " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql(
-      s"""INSERT INTO glpr_cdc.state.compacted
-         |SELECT user_id AS doc_id, last.event_type AS lang,
-         |       CAST(last.event_id AS STRING) AS source,
-         |       CAST(last.value AS STRING) AS text
-         |FROM (SELECT user_id,
-         |        max(struct(ts_ms, event_id, event_type, value)) AS last
-         |      FROM glpr_cdc_changelog WHERE ts_ms <= $mid GROUP BY user_id)
-         |WHERE last.event_type <> 'error'
-         |UNION ALL
-         |SELECT $sentinelBase + id, 'sentinel', '0', '0.0' FROM range(5)
-         |""".stripMargin)
-    s2.sql(
-      s"""MERGE INTO glpr_cdc.state.compacted t
-         |USING (
-         |  SELECT user_id, last.event_id AS ev_id,
-         |         last.event_type AS ev_type, last.value AS ev_value
-         |  FROM (SELECT user_id,
-         |          max(struct(ts_ms, event_id, event_type, value)) AS last
-         |        FROM glpr_cdc_changelog WHERE ts_ms > $mid GROUP BY user_id)
-         |) u
-         |ON t.doc_id = u.user_id
-         |WHEN MATCHED AND u.ev_type = 'error' THEN DELETE
-         |WHEN MATCHED THEN UPDATE SET t.lang = u.ev_type,
-         |  t.source = CAST(u.ev_id AS STRING), t.text = CAST(u.ev_value AS STRING)
-         |WHEN NOT MATCHED AND u.ev_type <> 'error' THEN
-         |  INSERT (doc_id, lang, source, text)
-         |  VALUES (u.user_id, u.ev_type, CAST(u.ev_id AS STRING),
-         |          CAST(u.ev_value AS STRING))
-         |WHEN NOT MATCHED BY SOURCE AND t.lang = 'sentinel' THEN DELETE
-         |""".stripMargin)
-    rematerialize(spark, s2.sql(
-      """SELECT doc_id AS user_id, CAST(source AS BIGINT) AS last_event_id,
-        |       lang AS last_type, CAST(text AS DOUBLE) AS last_value
-        |FROM glpr_cdc.state.compacted""".stripMargin))
+    catalogScenario(spark, "glpr_cdc",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") { (s2, _) =>
+      val chg = graft.streaming.Events.convertTs(
+          s2.read.parquet(s"$dir/events.parquet"))
+        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
+          col("event_id"), col("event_type"), col("value"))
+      chg.createOrReplaceTempView("glpr_cdc_changelog")
+      val mm = chg.agg(min("ts_ms"), max("ts_ms"), max("user_id")).head()
+      val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
+      // sentinel keys land strictly past every real user_id at ANY
+      // scale (a fixed base could collide with a larger fixture and
+      // turn a sentinel into a duplicate real row)
+      val sentinelBase =
+        (if (mm.isNullAt(2)) 0L else math.max(mm.getLong(2), 0L)) + 1000L
+      createDocs(s2, "glpr_cdc.state.compacted")
+      s2.sql(
+        s"""INSERT INTO glpr_cdc.state.compacted
+           |SELECT user_id AS doc_id, last.event_type AS lang,
+           |       CAST(last.event_id AS STRING) AS source,
+           |       CAST(last.value AS STRING) AS text
+           |FROM (SELECT user_id,
+           |        max(struct(ts_ms, event_id, event_type, value)) AS last
+           |      FROM glpr_cdc_changelog WHERE ts_ms <= $mid GROUP BY user_id)
+           |WHERE last.event_type <> 'error'
+           |UNION ALL
+           |SELECT $sentinelBase + id, 'sentinel', '0', '0.0' FROM range(5)
+           |""".stripMargin)
+      s2.sql(
+        s"""MERGE INTO glpr_cdc.state.compacted t
+           |USING (
+           |  SELECT user_id, last.event_id AS ev_id,
+           |         last.event_type AS ev_type, last.value AS ev_value
+           |  FROM (SELECT user_id,
+           |          max(struct(ts_ms, event_id, event_type, value)) AS last
+           |        FROM glpr_cdc_changelog WHERE ts_ms > $mid GROUP BY user_id)
+           |) u
+           |ON t.doc_id = u.user_id
+           |WHEN MATCHED AND u.ev_type = 'error' THEN DELETE
+           |WHEN MATCHED THEN UPDATE SET t.lang = u.ev_type,
+           |  t.source = CAST(u.ev_id AS STRING), t.text = CAST(u.ev_value AS STRING)
+           |WHEN NOT MATCHED AND u.ev_type <> 'error' THEN
+           |  INSERT (doc_id, lang, source, text)
+           |  VALUES (u.user_id, u.ev_type, CAST(u.ev_id AS STRING),
+           |          CAST(u.ev_value AS STRING))
+           |WHEN NOT MATCHED BY SOURCE AND t.lang = 'sentinel' THEN DELETE
+           |""".stripMargin)
+      s2.sql(
+        """SELECT doc_id AS user_id, CAST(source AS BIGINT) AS last_event_id,
+          |       lang AS last_type, CAST(text AS DOUBLE) AS last_value
+          |FROM glpr_cdc.state.compacted""".stripMargin)
+    }
   }
 
   /** q339 — TYPED SCHEMA EVOLUTION + METADATA-ONLY RENAME end to end
@@ -1402,28 +1391,26 @@ object GlprSource {
     * fractions (quarters), so the double sum is order-independent. The
     * oracle rebuilds the mixed typed table relationally. */
   def typedEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-typedevo").toString
-    val s2 = freshCatalogSession(spark, "glpr_tev", root)
-    s2.sql("CREATE TABLE glpr_tev.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN n_tokens BIGINT")
-    s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN score DOUBLE")
-    s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-      "SELECT doc_id + 1000000, lang, source, text, " +
-      "CAST(octet_length(text) AS BIGINT) AS n_tokens, " +
-      "CAST(doc_id + 1000000 AS DOUBLE) / 4.0 AS score " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    s2.sql("ALTER TABLE glpr_tev.corpus.docs RENAME COLUMN n_tokens TO tok_count")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(tok_count) AS BIGINT) AS n_typed,
-        | coalesce(CAST(sum(tok_count) AS BIGINT), 0) AS tok_sum,
-        | coalesce(round(sum(score), 6), CAST(0.0 AS DOUBLE)) AS score_sum
-        |FROM glpr_tev.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_tev") { (s2, _) =>
+      createDocs(s2, "glpr_tev.corpus.docs")
+      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN n_tokens BIGINT")
+      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN score DOUBLE")
+      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
+        "SELECT doc_id + 1000000, lang, source, text, " +
+        "CAST(octet_length(text) AS BIGINT) AS n_tokens, " +
+        "CAST(doc_id + 1000000 AS DOUBLE) / 4.0 AS score " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      s2.sql("ALTER TABLE glpr_tev.corpus.docs RENAME COLUMN n_tokens TO tok_count")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(count(tok_count) AS BIGINT) AS n_typed,
+          | coalesce(CAST(sum(tok_count) AS BIGINT), 0) AS tok_sum,
+          | coalesce(round(sum(score), 6), CAST(0.0 AS DOUBLE)) AS score_sum
+          |FROM glpr_tev.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q362 — TYPE-WIDENING `ALTER COLUMN` end to end (round-19 verdict
     * #3, the Iceberg-safe promotions): a table created with NARROW
@@ -1440,30 +1427,27 @@ object GlprSource {
     * The oracle rebuilds both eras relationally; unsafe-change
     * rejections are GlprCatalogSpec-pinned. */
   def typeWideningPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-typewide").toString
-    val s2 = freshCatalogSession(spark, "glpr_tw", root)
-    s2.sql("CREATE TABLE glpr_tw.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING, " +
-      "score INT, conf FLOAT)")
-    s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-      "SELECT doc_id, lang, source, text, " +
-      "CAST(doc_id % 100 AS INT) AS score, " +
-      "CAST(doc_id % 8 AS FLOAT) / 4 AS conf " +
-      s"FROM parquet.`$dir/documents.parquet`")
-    s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN score TYPE BIGINT")
-    s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN conf TYPE DOUBLE")
-    s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-      "SELECT doc_id + 1000000, lang, source, text, " +
-      "doc_id + 4000000000 AS score, " +
-      "CAST(doc_id % 16 AS DOUBLE) / 8 AS conf " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(score) AS BIGINT) AS score_sum,
-        | CAST(sum(conf) AS DOUBLE) AS conf_sum
-        |FROM glpr_tw.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_tw") { (s2, _) =>
+      createDocs(s2, "glpr_tw.corpus.docs", extraCols = "score INT, conf FLOAT")
+      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
+        "SELECT doc_id, lang, source, text, " +
+        "CAST(doc_id % 100 AS INT) AS score, " +
+        "CAST(doc_id % 8 AS FLOAT) / 4 AS conf " +
+        s"FROM parquet.`$dir/documents.parquet`")
+      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN score TYPE BIGINT")
+      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN conf TYPE DOUBLE")
+      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
+        "SELECT doc_id + 1000000, lang, source, text, " +
+        "doc_id + 4000000000 AS score, " +
+        "CAST(doc_id % 16 AS DOUBLE) / 8 AS conf " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(score) AS BIGINT) AS score_sum,
+          | CAST(sum(conf) AS DOUBLE) AS conf_sum
+          |FROM glpr_tw.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q363 — `ADD COLUMN ... DEFAULT <literal>` end to end (round-19
     * verdict #6, the Iceberg INITIAL-default): a three-era table —
@@ -1478,31 +1462,29 @@ object GlprSource {
     * NULL-stays-NULL and non-literal refusals are
     * GlprCatalogSpec-pinned. */
   def addDefaultPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-adddefault").toString
-    val s2 = freshCatalogSession(spark, "glpr_dflt", root)
-    s2.sql("CREATE TABLE glpr_dflt.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("ALTER TABLE glpr_dflt.corpus.docs ADD COLUMN tier STRING")
-    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-      "SELECT doc_id + 1000000, lang, source, text, " +
-      "concat('t', CAST(doc_id % 3 AS STRING)) AS tier " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 200")
-    s2.sql("ALTER TABLE glpr_dflt.corpus.docs " +
-      "ADD COLUMN rank BIGINT DEFAULT 7")
-    s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-      "SELECT doc_id + 2000000, lang, source, text, " +
-      "concat('t', CAST(doc_id % 3 AS STRING)) AS tier, " +
-      "doc_id % 5 AS rank " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(tier) AS BIGINT) AS n_tier,
-        | CAST(sum(rank) AS BIGINT) AS rank_sum
-        |FROM glpr_dflt.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_dflt") { (s2, _) =>
+      createDocs(s2, "glpr_dflt.corpus.docs")
+      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("ALTER TABLE glpr_dflt.corpus.docs ADD COLUMN tier STRING")
+      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+        "SELECT doc_id + 1000000, lang, source, text, " +
+        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 200")
+      s2.sql("ALTER TABLE glpr_dflt.corpus.docs " +
+        "ADD COLUMN rank BIGINT DEFAULT 7")
+      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
+        "SELECT doc_id + 2000000, lang, source, text, " +
+        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier, " +
+        "doc_id % 5 AS rank " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(count(tier) AS BIGINT) AS n_tier,
+          | CAST(sum(rank) AS BIGINT) AS rank_sum
+          |FROM glpr_dflt.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q347 — `ALTER TABLE DROP COLUMN` as a METADATA TOMBSTONE
     * (round-18 verdict #2): two extras added (`note` STRING, `keep`
@@ -1519,46 +1501,44 @@ object GlprSource {
     * catalog pins (ifExists, partition-column guard, rename-then-drop)
     * live in GlprCatalogSpec. */
   def dropColumnPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-dropcol").toString
-    val s2 = freshCatalogSession(spark, "glpr_drop", root)
-    s2.sql("CREATE TABLE glpr_drop.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN note STRING")
-    s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN keep BIGINT")
-    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-      "SELECT doc_id + 1000000, lang, source, text, " +
-      "concat('n-', lang) AS note, " +
-      "CAST(octet_length(text) AS BIGINT) AS keep " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    s2.sql("ALTER TABLE glpr_drop.corpus.docs DROP COLUMN note")
-    // the dropped name is BURNED: re-adding must refuse, or the old
-    // shards' note bytes would re-bind under the new column
-    val readd =
-      try { s2.sql("ALTER TABLE glpr_drop.corpus.docs " +
-        "ADD COLUMN note STRING"); None }
-      catch { case e: Throwable => Some(e) }
-    require(readd.exists { e =>
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(t => Option(t.getMessage).exists(_.contains("dropped")))
-    }, s"q347 contract: re-adding a dropped column must refuse, got $readd")
-    // post-drop inserts carry the NARROWED schema (base + keep)
-    s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-      "SELECT doc_id + 2000000, lang, source, text, " +
-      "CAST(doc_id AS BIGINT) AS keep " +
-      s"FROM parquet.`$dir/documents.parquet` " +
-      "WHERE doc_id >= 100 AND doc_id < 200")
-    val res = s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(keep) AS BIGINT) AS n_keep,
-        | coalesce(CAST(sum(keep) AS BIGINT), 0) AS keep_sum
-        |FROM glpr_drop.corpus.docs GROUP BY lang""".stripMargin)
-    require(!s2.table("glpr_drop.corpus.docs").columns.contains("note"),
-      "q347 contract: the dropped column must leave the table schema")
-    rematerialize(spark, res)
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_drop") { (s2, _) =>
+      createDocs(s2, "glpr_drop.corpus.docs")
+      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN note STRING")
+      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN keep BIGINT")
+      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+        "SELECT doc_id + 1000000, lang, source, text, " +
+        "concat('n-', lang) AS note, " +
+        "CAST(octet_length(text) AS BIGINT) AS keep " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      s2.sql("ALTER TABLE glpr_drop.corpus.docs DROP COLUMN note")
+      // the dropped name is BURNED: re-adding must refuse, or the old
+      // shards' note bytes would re-bind under the new column
+      val readd =
+        try { s2.sql("ALTER TABLE glpr_drop.corpus.docs " +
+          "ADD COLUMN note STRING"); None }
+        catch { case e: Throwable => Some(e) }
+      require(readd.exists { e =>
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+          .exists(t => Option(t.getMessage).exists(_.contains("dropped")))
+      }, s"q347 contract: re-adding a dropped column must refuse, got $readd")
+      // post-drop inserts carry the NARROWED schema (base + keep)
+      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
+        "SELECT doc_id + 2000000, lang, source, text, " +
+        "CAST(doc_id AS BIGINT) AS keep " +
+        s"FROM parquet.`$dir/documents.parquet` " +
+        "WHERE doc_id >= 100 AND doc_id < 200")
+      val res = s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(count(keep) AS BIGINT) AS n_keep,
+          | coalesce(CAST(sum(keep) AS BIGINT), 0) AS keep_sum
+          |FROM glpr_drop.corpus.docs GROUP BY lang""".stripMargin)
+      require(!s2.table("glpr_drop.corpus.docs").columns.contains("note"),
+        "q347 contract: the dropped column must leave the table schema")
+      res
+    }
 
   /** q340 — SIDECAR STATISTICS driving the broadcast decision
     * (round-17 verdict #3): the corpus staged as a GLPR table whose
@@ -1612,25 +1592,23 @@ object GlprSource {
     * values. The oracle rebuilds the mixed table relationally — a
     * misread field boundary or a non-null default breaks the hash. */
   def addColumnPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-addcol").toString
-    val s2 = freshCatalogSession(spark, "glpr_evo", root)
-    s2.sql("CREATE TABLE glpr_evo.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    s2.sql("ALTER TABLE glpr_evo.corpus.docs ADD COLUMN note STRING")
-    s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-      "SELECT doc_id + 1000000, lang, source, text, " +
-      "concat('tag-', source) AS note " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(count(note) AS BIGINT) AS n_notes,
-        | CAST(sum(octet_length(coalesce(note, ''))) AS BIGINT) AS note_bytes,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS text_bytes
-        |FROM glpr_evo.corpus.docs GROUP BY lang""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_evo") { (s2, _) =>
+      createDocs(s2, "glpr_evo.corpus.docs")
+      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql("ALTER TABLE glpr_evo.corpus.docs ADD COLUMN note STRING")
+      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
+        "SELECT doc_id + 1000000, lang, source, text, " +
+        "concat('tag-', source) AS note " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(count(note) AS BIGINT) AS n_notes,
+          | CAST(sum(octet_length(coalesce(note, ''))) AS BIGINT) AS note_bytes,
+          | CAST(sum(octet_length(text)) AS BIGINT) AS text_bytes
+          |FROM glpr_evo.corpus.docs GROUP BY lang""".stripMargin)
+    }
 
   /** q333 — DATE PARTITIONING, `PARTITIONED BY (days(ts))` over an
     * ISO-8601 string column (the extra-column machinery supplies `ts`):
@@ -1642,26 +1620,24 @@ object GlprSource {
     * shards via the sidecar day sets (plan-pinned in GlprCatalogSpec).
     * The oracle derives the same days relationally. */
   def daysPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-days").toString
-    val s2 = freshCatalogSession(spark, "glpr_days", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_days.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-      "PARTITIONED BY (days(ts))")
-    s2.sql("INSERT INTO glpr_days.corpus.docs " +
-      "SELECT doc_id, lang, source, text, " +
-      "concat(date_format(date_add(to_date('2024-01-01'), " +
-      "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-      s"FROM parquet.`$dir/documents.parquet`")
-    rematerialize(spark, s2.sql(
-      """SELECT substr(ts, 1, 10) AS day, lang,
-        | CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_days.corpus.docs
-        |WHERE ts >= '2024-01-03' AND ts < '2024-01-05'
-        |GROUP BY 1, 2""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_days",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_days.corpus.docs", partitionedBy = "days(ts)",
+        extraCols = "ts STRING")
+      s2.sql("INSERT INTO glpr_days.corpus.docs " +
+        "SELECT doc_id, lang, source, text, " +
+        "concat(date_format(date_add(to_date('2024-01-01'), " +
+        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
+        s"FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        """SELECT substr(ts, 1, 10) AS day, lang,
+          | CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_days.corpus.docs
+          |WHERE ts >= '2024-01-03' AND ts < '2024-01-05'
+          |GROUP BY 1, 2""".stripMargin)
+    }
 
   /** q341 — MONTH PARTITIONING, `PARTITIONED BY (months(ts))` (round-17
     * verdict #4): the same prefix-transform channel as q333's days —
@@ -1670,26 +1646,24 @@ object GlprSource {
     * sidecar month sets (prune pin in GlprCatalogSpec). Oracle derives
     * the same deterministic months. */
   def monthsPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-months").toString
-    val s2 = freshCatalogSession(spark, "glpr_mon", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_mon.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-      "PARTITIONED BY (months(ts))")
-    s2.sql("INSERT INTO glpr_mon.corpus.docs " +
-      "SELECT doc_id, lang, source, text, " +
-      "concat(date_format(date_add(to_date('2024-01-15'), " +
-      "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-      s"FROM parquet.`$dir/documents.parquet`")
-    rematerialize(spark, s2.sql(
-      """SELECT substr(ts, 1, 7) AS month, lang,
-        | CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_mon.corpus.docs
-        |WHERE ts >= '2024-02' AND ts <= '2024-02-29T23:59:59'
-        |GROUP BY 1, 2""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_mon",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_mon.corpus.docs", partitionedBy = "months(ts)",
+        extraCols = "ts STRING")
+      s2.sql("INSERT INTO glpr_mon.corpus.docs " +
+        "SELECT doc_id, lang, source, text, " +
+        "concat(date_format(date_add(to_date('2024-01-15'), " +
+        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
+        s"FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        """SELECT substr(ts, 1, 7) AS month, lang,
+          | CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_mon.corpus.docs
+          |WHERE ts >= '2024-02' AND ts <= '2024-02-29T23:59:59'
+          |GROUP BY 1, 2""".stripMargin)
+    }
 
   /** q349 — PARTITION-SPEC EVOLUTION (round-18 verdict #4): era 1
     * INSERTed under `days(ts)`; `CALL sys.set_partition_spec('…',
@@ -1705,33 +1679,33 @@ object GlprSource {
     * GlprCatalogSpec-pinned. The oracle derives both eras relationally. */
   def specEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-specevo").toString
-    val s2 = freshCatalogSession(spark, "glpr_sev", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_sev.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING, ts STRING) " +
-      "PARTITIONED BY (days(ts))")
-    s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-      "SELECT doc_id, lang, source, text, " +
-      "concat(date_format(date_add(to_date('2024-01-01'), " +
-      "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 250")
-    s2.sql("CALL glpr_sev.sys.set_partition_spec('corpus.docs', " +
-      "'months(ts)')").collect(): Unit
-    s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-      "SELECT doc_id, lang, source, text, " +
-      "concat(date_format(date_add(to_date('2024-03-15'), " +
-      "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-      s"FROM parquet.`$dir/documents.parquet` WHERE doc_id >= 250")
-    val res = s2.sql(
-      """SELECT substr(ts, 1, 7) AS month,
-        | CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_sev.corpus.docs
-        |WHERE ts >= '2024-01-03' AND ts < '2024-04-20'
-        |GROUP BY 1""".stripMargin)
-    val out = rematerialize(spark, res)
-    val tablePath = new java.io.File(root, "corpus/docs").getAbsolutePath
+    var tablePath = ""
+    val out = catalogScenario(spark, "glpr_sev",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, root) =>
+      createDocs(s2, "glpr_sev.corpus.docs", partitionedBy = "days(ts)",
+        extraCols = "ts STRING")
+      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
+        "SELECT doc_id, lang, source, text, " +
+        "concat(date_format(date_add(to_date('2024-01-01'), " +
+        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 250")
+      s2.sql("CALL glpr_sev.sys.set_partition_spec('corpus.docs', " +
+        "'months(ts)')").collect(): Unit
+      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
+        "SELECT doc_id, lang, source, text, " +
+        "concat(date_format(date_add(to_date('2024-03-15'), " +
+        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
+        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id >= 250")
+      tablePath = new java.io.File(root, "corpus/docs").getAbsolutePath
+      s2.sql(
+        """SELECT substr(ts, 1, 7) AS month,
+          | CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_sev.corpus.docs
+          |WHERE ts >= '2024-01-03' AND ts < '2024-04-20'
+          |GROUP BY 1""".stripMargin)
+    }
+    // the scan recorded its prune under the (now deleted) table path;
     // an all-empty corpus (RegistryEmptySpec) has only empty shards,
     // which always keep — the prune contract only binds on data
     if (out.count() > 0)
@@ -1791,22 +1765,19 @@ object GlprSource {
     * keeps rows exact — 'src1' covers src1 and src10-19). The last of
     * the Iceberg transform family on the same sidecar channel. */
   def truncatePartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-trunc").toString
-    val s2 = freshCatalogSession(spark, "glpr_trn", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_trn.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (truncate(4, source))")
-    s2.sql("INSERT INTO glpr_trn.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    rematerialize(spark, s2.sql(
-      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_trn.corpus.docs
-        |WHERE source IN ('src7', 'src12')
-        |GROUP BY 1, 2""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_trn",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_trn.corpus.docs", partitionedBy = "truncate(4, source)")
+      s2.sql("INSERT INTO glpr_trn.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_trn.corpus.docs
+          |WHERE source IN ('src7', 'src12')
+          |GROUP BY 1, 2""".stripMargin)
+    }
 
   /** q334 — HASH-BUCKET PARTITIONING, `PARTITIONED BY (bucket(8,
     * doc_id))`: bucket id = floorMod(doc_id, 8), tracked per shard at
@@ -1816,20 +1787,17 @@ object GlprSource {
     * the same point lookup relationally; the shard-skip pin lives in
     * GlprCatalogSpec. */
   def bucketPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-bucket").toString
-    val s2 = freshCatalogSession(spark, "glpr_bkt", root)
-    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s2.sql("CREATE TABLE glpr_bkt.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-      "PARTITIONED BY (bucket(8, doc_id))")
-    s2.sql("INSERT INTO glpr_bkt.corpus.docs " +
-      s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-    rematerialize(spark, s2.sql(
-      """SELECT doc_id, lang, source
-        |FROM glpr_bkt.corpus.docs
-        |WHERE doc_id IN (0, 8, 17, 42, 97)""".stripMargin))
-  }
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_bkt",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
+      createDocs(s2, "glpr_bkt.corpus.docs", partitionedBy = "bucket(8, doc_id)")
+      s2.sql("INSERT INTO glpr_bkt.corpus.docs " +
+        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
+      s2.sql(
+        """SELECT doc_id, lang, source
+          |FROM glpr_bkt.corpus.docs
+          |WHERE doc_id IN (0, 8, 17, 42, 97)""".stripMargin)
+    }
 
   /** q335 — `TIMESTAMP AS OF` through the SQL front door: three slice
     * INSERTs, the version files' mtimes (the commit clock — immutable
@@ -1843,35 +1811,34 @@ object GlprSource {
   def timestampAsOfPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val t0 = 1700000000000L
-    val root = TempDirs.scratch("graft-glpr-tsasof").toString
-    val s2 = freshCatalogSession(spark, "glpr_ts", root)
-    s2.sql("CREATE TABLE glpr_ts.corpus.docs " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    // degenerate-SF determinism: skip empty slices (q316's guard),
-    // so versions = nonempty slices and the oracle's gate matches
-    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-      .foreach { p =>
-        val n = s2.sql("SELECT count(*) AS n FROM " +
-          s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-        if (n > 0)
-          s2.sql("INSERT INTO glpr_ts.corpus.docs " +
-            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-            s"WHERE $p")
+    catalogScenario(spark, "glpr_ts") { (s2, root) =>
+      createDocs(s2, "glpr_ts.corpus.docs")
+      // degenerate-SF determinism: skip empty slices (q316's guard),
+      // so versions = nonempty slices and the oracle's gate matches
+      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
+        .foreach { p =>
+          val n = s2.sql("SELECT count(*) AS n FROM " +
+            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
+          if (n > 0)
+            s2.sql("INSERT INTO glpr_ts.corpus.docs " +
+              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
+              s"WHERE $p")
+        }
+      val tdir = new java.io.File(root, "corpus/docs").getAbsolutePath
+      // pin the DURABLE commit clock (header + mtime mirror) to the
+      // fixed schedule the oracle's pin arithmetic assumes
+      listManifestVersions(tdir).foreach { v =>
+        pinVersionCommitMs(tdir, v, t0 + (v - 1) * 10000L)
       }
-    val tdir = new java.io.File(root, "corpus/docs").getAbsolutePath
-    // pin the DURABLE commit clock (header + mtime mirror) to the
-    // fixed schedule the oracle's pin arithmetic assumes
-    listManifestVersions(tdir).foreach { v =>
-      pinVersionCommitMs(tdir, v, t0 + (v - 1) * 10000L)
+      // an all-empty corpus mints no versions: read the (empty) live view
+      val pin = if (listManifestVersions(tdir).isEmpty) ""
+        else s" TIMESTAMP AS OF timestamp_millis(${t0 + 15000L}L)"
+      s2.sql(
+        s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+           | CAST(max(doc_id) AS BIGINT) AS max_id
+           |FROM glpr_ts.corpus.docs$pin
+           |GROUP BY lang""".stripMargin)
     }
-    // an all-empty corpus mints no versions: read the (empty) live view
-    val pin = if (listManifestVersions(tdir).isEmpty) ""
-      else s" TIMESTAMP AS OF timestamp_millis(${t0 + 15000L}L)"
-    rematerialize(spark, s2.sql(
-      s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(max(doc_id) AS BIGINT) AS max_id
-         |FROM glpr_ts.corpus.docs$pin
-         |GROUP BY lang""".stripMargin))
   }
 
   /** q336 — RECLUSTER (OPTIMIZE): the corpus staged HASH-distributed
@@ -1948,62 +1915,59 @@ object GlprSource {
     * q335/q337 determinism guard), mirrored by the oracle's `ok`
     * gate. */
   def streamCdfMergePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val root = TempDirs.scratch("graft-glpr-streammerge").toString
-    val s2 = freshCatalogSession(spark, "glpr_scm", root)
-    s2.sql("CREATE TABLE glpr_scm.state.source " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    s2.sql("CREATE TABLE glpr_scm.state.target " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING)")
-    val slices = Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300",
-      "doc_id >= 300")
-    val counts = slices.map(p => s2.sql("SELECT count(*) AS n FROM " +
-      s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0))
-    slices.zip(counts).foreach { case (p, n) =>
-      if (n > 0)
-        s2.sql("INSERT INTO glpr_scm.state.source " +
-          "SELECT doc_id, lang, source, text FROM " +
-          s"parquet.`$dir/documents.parquet` WHERE $p")
-    }
-    val srcPath = new java.io.File(root, "state/source").getAbsolutePath
-    if (counts.forall(_ > 0)) {
-      GlprMaintenance.deleteIdRange(s2, srcPath, 100L, 299L)       // CoW
-      GlprMaintenance.deleteIdRangeMergeOnRead(srcPath, 0L, 49L): Unit // MoR
-    }
-    val stream = s2.readStream.format("graft.io.GlprSource")
-      .option("changeMode", "cdf").load(srcPath)
-    val q = stream.writeStream
-      .option("checkpointLocation",
-        new java.io.File(root, "ckpt").getAbsolutePath)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val s = b.sparkSession
-        b.createOrReplaceTempView("glpr_scm_batch")
-        s.sql(
-          """MERGE INTO glpr_scm.state.target t
-            |USING (
-            |  SELECT doc_id, last.lang AS lang, last.source AS source,
-            |         last.text AS text, last.ct AS ct
-            |  FROM (SELECT doc_id, max(struct(
-            |          CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END AS r,
-            |          lang, source, text, _change_type AS ct)) AS last
-            |        FROM glpr_scm_batch GROUP BY doc_id)
-            |) u
-            |ON t.doc_id = u.doc_id
-            |WHEN MATCHED AND u.ct = 'delete' THEN DELETE
-            |WHEN MATCHED THEN UPDATE SET t.lang = u.lang,
-            |  t.source = u.source, t.text = u.text
-            |WHEN NOT MATCHED AND u.ct <> 'delete' THEN
-            |  INSERT (doc_id, lang, source, text)
-            |  VALUES (u.doc_id, u.lang, u.source, u.text)
-            |""".stripMargin): Unit
+      dir: String): DataFrame =
+    catalogScenario(spark, "glpr_scm") { (s2, root) =>
+      createDocs(s2, "glpr_scm.state.source")
+      createDocs(s2, "glpr_scm.state.target")
+      val slices = Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300",
+        "doc_id >= 300")
+      val counts = slices.map(p => s2.sql("SELECT count(*) AS n FROM " +
+        s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0))
+      slices.zip(counts).foreach { case (p, n) =>
+        if (n > 0)
+          s2.sql("INSERT INTO glpr_scm.state.source " +
+            "SELECT doc_id, lang, source, text FROM " +
+            s"parquet.`$dir/documents.parquet` WHERE $p")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    rematerialize(spark, s2.sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM glpr_scm.state.target GROUP BY lang""".stripMargin))
-  }
+      val srcPath = new java.io.File(root, "state/source").getAbsolutePath
+      if (counts.forall(_ > 0)) {
+        GlprMaintenance.deleteIdRange(s2, srcPath, 100L, 299L)       // CoW
+        GlprMaintenance.deleteIdRangeMergeOnRead(srcPath, 0L, 49L): Unit // MoR
+      }
+      val stream = s2.readStream.format("graft.io.GlprSource")
+        .option("changeMode", "cdf").load(srcPath)
+      val q = stream.writeStream
+        .option("checkpointLocation",
+          new java.io.File(root, "ckpt").getAbsolutePath)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val s = b.sparkSession
+          b.createOrReplaceTempView("glpr_scm_batch")
+          s.sql(
+            """MERGE INTO glpr_scm.state.target t
+              |USING (
+              |  SELECT doc_id, last.lang AS lang, last.source AS source,
+              |         last.text AS text, last.ct AS ct
+              |  FROM (SELECT doc_id, max(struct(
+              |          CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END AS r,
+              |          lang, source, text, _change_type AS ct)) AS last
+              |        FROM glpr_scm_batch GROUP BY doc_id)
+              |) u
+              |ON t.doc_id = u.doc_id
+              |WHEN MATCHED AND u.ct = 'delete' THEN DELETE
+              |WHEN MATCHED THEN UPDATE SET t.lang = u.lang,
+              |  t.source = u.source, t.text = u.text
+              |WHEN NOT MATCHED AND u.ct <> 'delete' THEN
+              |  INSERT (doc_id, lang, source, text)
+              |  VALUES (u.doc_id, u.lang, u.source, u.text)
+              |""".stripMargin): Unit
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      s2.sql(
+        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+          | CAST(sum(doc_id) AS BIGINT) AS id_sum
+          |FROM glpr_scm.state.target GROUP BY lang""".stripMargin)
+    }
 
   /** Shared staging for the partitioned-table entries (q304/q306):
     * CREATE ... PARTITIONED BY (lang) + one clustered INSERT, once per
@@ -2020,9 +1984,7 @@ object GlprSource {
       val root = TempDirs.scratch("graft-glpr-partitioned").toString
       val s2 = freshCatalogSession(spark, "glpr_part", root)
       s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      s2.sql("CREATE TABLE glpr_part.corpus.docs " +
-        "(doc_id BIGINT, lang STRING, source STRING, text STRING) " +
-        "PARTITIONED BY (lang)")
+      createDocs(s2, "glpr_part.corpus.docs", partitionedBy = "lang")
       s2.sql("INSERT INTO glpr_part.corpus.docs " +
         s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
       root
@@ -6053,26 +6015,19 @@ class GlprCdfMicroBatchStream(path: String, required: StructType,
   override def stop(): Unit = ()
 }
 
-/** Per-shard reader factory. Batch and streaming scans both read
-  * COLUMNAR by default ([[GlprColumnarReader]] → `ColumnarBatch`), the
-  * same hand-off the parquet vectorized reader uses: Spark plans a
-  * codegen'd `ColumnarToRow` above the scan and the per-record
-  * row-materialization cost disappears from the source. The row-based
-  * [[GlprReader]] stays as the contractual fallback (DSv2 requires
-  * `createReader`; also the reference path the columnar reader is
-  * spec'd equal against). */
+/** Per-shard reader factory. Batch and streaming scans read COLUMNAR
+  * ([[GlprColumnarReader]] → `ColumnarBatch`), the same hand-off the
+  * parquet vectorized reader uses: Spark plans a codegen'd
+  * `ColumnarToRow` above the scan and the per-record
+  * row-materialization cost disappears from the source.
+  * `supportColumnarReads` is always true, so Spark never asks for rows;
+  * `createReader` (required by DSv2) walks the same columnar reader's
+  * batches through [[GlprRowReader]], so there is one decoder. */
 class GlprReaderFactory(required: StructType, range: GlprSource.IdRange,
     limit: Option[Int] = None, extraTokens: Seq[String] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: GlprSource.GlprPartition =>
-        new GlprReader(p.file, required, range, limit, p.changeType,
-          p.dv, p.requireMaskedBy, extraTokens)
-      case p: GlprSource.GlprInputPartition =>
-        new GlprReader(p.file, required, range, limit, p.changeType,
-          extraTokens = extraTokens)
-    }
+    new GlprRowReader(createColumnarReader(partition))
   override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
@@ -6085,8 +6040,32 @@ class GlprReaderFactory(required: StructType, range: GlprSource.IdRange,
     }
 }
 
+/** The DSv2 row contract over [[GlprColumnarReader]]: each decoded batch
+  * is walked through `rowIterator()`, so the id gate, the delete-vector
+  * mask, the limit cap and the field decode are the columnar reader's.
+  * Used by `createReader` and by the [[GlprMaintenance]] shard rewrites.
+  * A row is a view into the reused batch, valid until the next `next()`
+  * (the usual reader contract: consumers that buffer rows copy them). */
+private[io] final class GlprRowReader(batches: PartitionReader[ColumnarBatch])
+    extends PartitionReader[InternalRow] {
+  private var rows: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
+  private var current: InternalRow = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    current = rows.next()
+    true
+  }
+  override def get(): InternalRow = current
+  override def close(): Unit = batches.close()
+}
+
 /** Chunk-buffered byte cursor over one GLPR shard — the IO/decode core
-  * shared by the row and columnar readers, the closest a record-stream
+  * of [[GlprColumnarReader]], the closest a record-stream
   * format gets to parquet's reads without changing the on-disk layout:
   * bytes land in ONE reused 1 MiB buffer (refilled by compact + bulk
   * `read`, so syscalls amortize over thousands of records); ints/longs
@@ -6216,22 +6195,23 @@ private[io] final class GlprChunkCursor(file: String) {
   def close(): Unit = in.close()
 }
 
-/** Row-based per-shard reader over [[GlprChunkCursor]]: pruned fields
-  * are byte-skipped, pushed doc_id bounds short-circuit before any field
-  * decode, and row materialization goes through ONE reused
-  * [[UnsafeRowWriter]] (zero-copy `UTF8String` wrap of the cursor
-  * buffer, written straight into the recycled UnsafeRow) — zero
-  * per-record allocation, vs the round-14 `InternalRow.fromSeq` path
-  * that allocated a boxed `Seq`, a `GenericInternalRow` and one
-  * byte[]+UTF8String per string field per record. Buffer reuse is the
-  * standard DSv2 reader contract (downstream operators that buffer rows
-  * copy them). The default scan path is [[GlprColumnarReader]]; this
-  * reader is the contractual fallback and the parity reference.
+/** COLUMNAR per-shard reader, the one GLPR decoder: decodes up to 4096
+  * records at a time from [[GlprChunkCursor]] straight into reused
+  * `OnHeapColumnVector`s and hands Spark a [[ColumnarBatch]], exactly
+  * the contract the parquet vectorized reader fulfills. Spark then
+  * plans a codegen'd `ColumnarToRow` above the scan, so per-record
+  * row materialization leaves the source entirely; doc_id pushdown and
+  * column pruning work unchanged (skipped records never touch the
+  * vectors, pruned fields never leave the byte stream). Base columns
+  * are non-null by format contract; a schema-evolution extra is null
+  * where the shard stored the null length or never carried the column
+  * (`putNull`). Row consumers read it through [[GlprRowReader]].
   *
   * Measured decode times (synthetic corpus staged through the DSv2
   * write path, local[8], min-of-5), three reader generations — r14
-  * `DataInputStream`+`InternalRow.fromSeq`, then this chunk-buffered
-  * UnsafeRowWriter row reader, then [[GlprColumnarReader]]:
+  * `DataInputStream`+`InternalRow.fromSeq`, then a chunk-buffered
+  * `UnsafeRowWriter` row reader (retired: rows now come from this
+  * reader's batches), then this reader:
   *
   *  - 2M rows × 16-md5 text (~1.1 GB): full-schema 0.390 -> 0.210 ->
   *    0.186s (2.1x total), text-only 0.376 -> 0.170 -> 0.147s (2.6x),
@@ -6240,139 +6220,6 @@ private[io] final class GlprChunkCursor(file: String) {
   *    full-schema 0.973 -> 0.302 -> 0.192s (5.1x total), text-only
   *    0.801 -> 0.237 -> 0.160s (5.0x), id-only 0.714 -> 0.181 -> 0.113s
   *    (6.3x). */
-class GlprReader(file: String, required: StructType, range: GlprSource.IdRange,
-    limit: Option[Int] = None, changeType: String = "insert",
-    dvMask: Array[Long] = null,
-    requireMaskedBy: Array[Long] = Array.emptyLongArray,
-    extraTokens: Seq[String] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private val cursor = new GlprChunkCursor(file)
-  // merge-on-read delete vector: masked ids fail the keep gate exactly
-  // like out-of-range ids (skipped wholesale, fields byte-skipped).
-  // The scan resolves the mask at planning time (manifest generation or
-  // legacy bare file) and ships it in the partition; a DIRECT reader
-  // construction (null) resolves the legacy bare file itself.
-  private val dv =
-    if (dvMask == null) GlprSource.readDeleteVector(file) else dvMask
-  private val cap = limit.getOrElse(Int.MaxValue)
-  private var emitted = 0
-  // field order in the byte stream after doc_id
-  private val streamFields = Array("lang", "source", "text")
-  private val wantIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val idOrdinal: Int = wantIdx.getOrElse("doc_id", -1)
-  private val fieldOrdinals: Array[Int] =
-    streamFields.map(f => wantIdx.getOrElse(f, -1))
-  // schema-evolution extras (q332, typed/renamed since round 18): THIS
-  // shard's appended fields per its sidecar, bound to the read schema
-  // through the table tokens' physical→logical mapping; required extras
-  // the shard never carried read as null (default-null read compat)
-  private val (shardExtras, extraOrdinals, extraKinds, missingExtraOrdinals,
-      missingExtraDefaults) =
-    GlprSource.extraSlots(file, required, extraTokens)
-  // _shard / _change_type metadata columns: constant per partition,
-  // served from the name / the planned diff side
-  private val shardOrdinal: Int = wantIdx.getOrElse("_shard", -1)
-  private val shardNameUtf8 = UTF8String.fromString(new java.io.File(file).getName)
-  private val ctOrdinal: Int = wantIdx.getOrElse("_change_type", -1)
-  private val ctUtf8 = UTF8String.fromString(changeType)
-  private val rowWriter = new UnsafeRowWriter(required.length)
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    // pushed LIMIT: stop decoding once this partition emitted enough
-    // MATCHING rows (partial pushdown — Spark applies the global limit)
-    if (emitted >= cap) return false
-    while (cursor.atRecordStart()) {
-      val id = cursor.readId()
-      // requireMaskedBy is the CDF dv-delta gate: emit only rows the
-      // other end's mask covers (see GlprScan.baseShards)
-      val keep = range.contains(id) && !GlprSource.dvMasked(dv, id) &&
-        (requireMaskedBy.isEmpty || GlprSource.dvMasked(requireMaskedBy, id))
-      if (keep) rowWriter.reset()
-      if (keep && idOrdinal >= 0) rowWriter.write(idOrdinal, id)
-      var f = 0
-      while (f < 3) {
-        val ord = fieldOrdinals(f)
-        val len = cursor.readFieldLen(streamFields(f))
-        if (keep && ord >= 0) {
-          // zero-copy wrap of the cursor buffer; the row writer copies
-          // the bytes into the recycled UnsafeRow before the next refill
-          cursor.loadField(len)
-          rowWriter.write(ord,
-            UTF8String.fromBytes(cursor.fieldArray, cursor.fieldOffset, len))
-        } else cursor.skipPayload(len)
-        f += 1
-      }
-      var x = 0
-      while (x < extraOrdinals.length) {
-        val ord = extraOrdinals(x)
-        val len = cursor.readFieldLenNullable(shardExtras(x))
-        if (len < 0) { if (keep && ord >= 0) rowWriter.setNullAt(ord) }
-        else if (keep && ord >= 0) {
-          cursor.loadField(len)
-          extraKinds(x) match {
-            case 1 => rowWriter.write(ord, java.lang.Long.parseLong(
-              new String(cursor.fieldArray, cursor.fieldOffset, len,
-                java.nio.charset.StandardCharsets.UTF_8)))
-            case 2 => rowWriter.write(ord, java.lang.Double.parseDouble(
-              new String(cursor.fieldArray, cursor.fieldOffset, len,
-                java.nio.charset.StandardCharsets.UTF_8)))
-            case 3 => rowWriter.write(ord, java.lang.Integer.parseInt(
-              new String(cursor.fieldArray, cursor.fieldOffset, len,
-                java.nio.charset.StandardCharsets.UTF_8)))
-            case 4 => rowWriter.write(ord, java.lang.Float.parseFloat(
-              new String(cursor.fieldArray, cursor.fieldOffset, len,
-                java.nio.charset.StandardCharsets.UTF_8)))
-            case 5 => rowWriter.write(ord, java.lang.Float.parseFloat(
-              new String(cursor.fieldArray, cursor.fieldOffset, len,
-                java.nio.charset.StandardCharsets.UTF_8)).toDouble)
-            case _ => rowWriter.write(ord,
-              UTF8String.fromBytes(cursor.fieldArray, cursor.fieldOffset, len))
-          }
-        } else cursor.skipPayload(len)
-        x += 1
-      }
-      if (keep) {
-        var m = 0
-        while (m < missingExtraOrdinals.length) {
-          val ord = missingExtraOrdinals(m)
-          missingExtraDefaults(m) match {
-            case null => rowWriter.setNullAt(ord)
-            case v: UTF8String => rowWriter.write(ord, v)
-            case v: java.lang.Long => rowWriter.write(ord, v.longValue)
-            case v: java.lang.Double => rowWriter.write(ord, v.doubleValue)
-            case v: java.lang.Integer => rowWriter.write(ord, v.intValue)
-            case v: java.lang.Float => rowWriter.write(ord, v.floatValue)
-            case other => throw new IllegalStateException(
-              s"unreachable default box: $other")
-          }
-          m += 1
-        }
-      }
-      if (keep && shardOrdinal >= 0) rowWriter.write(shardOrdinal, shardNameUtf8)
-      if (keep && ctOrdinal >= 0) rowWriter.write(ctOrdinal, ctUtf8)
-      if (keep) { current = rowWriter.getRow; emitted += 1; return true }
-      // else: record skipped wholesale; loop to the next one
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = cursor.close()
-}
-
-/** COLUMNAR per-shard reader — the scan's default path: decodes up to
-  * 4096 records at a time from [[GlprChunkCursor]] straight into reused
-  * `OnHeapColumnVector`s and hands Spark a [[ColumnarBatch]], exactly
-  * the contract the parquet vectorized reader fulfills. Spark then
-  * plans a codegen'd `ColumnarToRow` above the scan, so per-record
-  * row materialization leaves the source entirely; doc_id pushdown and
-  * column pruning work unchanged (skipped records never touch the
-  * vectors, pruned fields never leave the byte stream). All columns are
-  * non-null by format contract. Same diagnostics as the row reader
-  * (shared cursor). Measured decode times are in the [[GlprReader]]
-  * scaladoc (the third generation of each figure). */
 class GlprColumnarReader(file: String, required: StructType,
     range: GlprSource.IdRange,
     limit: Option[Int] = None, changeType: String = "insert",
@@ -6381,8 +6228,11 @@ class GlprColumnarReader(file: String, required: StructType,
     extraTokens: Seq[String] = Seq.empty)
     extends PartitionReader[ColumnarBatch] {
   private val cursor = new GlprChunkCursor(file)
-  // merge-on-read delete vector, applied at the id gate like the row
-  // reader (planning-resolved; null = direct construction, legacy bare)
+  // merge-on-read delete vector: masked ids fail the keep gate exactly
+  // like out-of-range ids (skipped wholesale, fields byte-skipped). The
+  // scan resolves the mask at planning time (manifest generation or
+  // legacy bare file) and ships it in the partition; a direct
+  // construction with null resolves the legacy bare file itself.
   private val dv =
     if (dvMask == null) GlprSource.readDeleteVector(file) else dvMask
   private val cap = limit.getOrElse(Int.MaxValue)

@@ -5,13 +5,14 @@ import scala.jdk.CollectionConverters._
 
 /** Process-scoped state: scratch directories, every one registered for
   * recursive deletion in a JVM shutdown hook so runs leave no
-  * `/tmp/graft-*` residue, and [[once]], the engine's one result memo,
+  * `/tmp/graft-*` residue, call-scoped ones ([[scoped]]) deleted as soon
+  * as their call returns, and [[once]], the engine's one result memo,
   * for stagings that several entry points read (first call builds,
   * later calls reuse, exit deletes).
   */
 object TempDirs {
 
-  private val registered =
+  private[io] val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   // Per-dir try/catch: one undeletable dir (e.g. a file Spark still holds
@@ -27,6 +28,19 @@ object TempDirs {
     val p = Files.createTempDirectory(prefix)
     registered.add(p)
     p
+  }
+
+  /** Run `body` over a fresh scratch directory and delete it when the
+    * body returns or throws, so a call leaves no directory and no
+    * registration behind. A directory that cannot be deleted then stays
+    * registered for the exit hook. The body must not return anything
+    * that still reads the directory (a lazy frame over it). */
+  def scoped[T](prefix: String)(body: Path => T): T = {
+    val p = scratch(prefix)
+    try body(p)
+    finally
+      try { deleteRecursively(p); registered.remove(p) }
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
   }
 
   def deleteRecursively(p: Path): Unit = {

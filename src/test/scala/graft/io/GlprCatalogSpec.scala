@@ -1775,4 +1775,19 @@ class GlprCatalogSpec extends AnyFunSuite {
     spark.catalog.dropTempView("m_target")
     spark.catalog.dropTempView("m_changes")
   }
+
+  test("a catalog scenario deletes its scratch root: three calls, identical results, no dir left") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def glprDirs(): Set[String] =
+      Option(tmp.list()).map(_.filter(_.startsWith("graft-glpr-")).toSet)
+        .getOrElse(Set.empty)
+    val before = glprDirs()
+    val runs = (1 to 3).map(_ =>
+      GlprSource.catalogSqlPipeline(spark, TestSpark.sfDir).collect()
+        .map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(runs.head.nonEmpty)
+    assert(runs.forall(_ == runs.head))
+    val left = glprDirs() -- before
+    assert(left.isEmpty, s"catalog scenario calls left scratch dirs behind: $left")
+  }
 }

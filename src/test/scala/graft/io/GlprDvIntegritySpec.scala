@@ -18,6 +18,14 @@ class GlprDvIntegritySpec extends AnyFunSuite {
   private def append(root: String, rows: Seq[(Long, String, String, String)]): Unit =
     rows.toDF("doc_id", "lang", "source", "text")
       .coalesce(1).write.format("graft.io.GlprSource").mode("append").save(root)
+  /** A session with the GLPR catalog `name` rooted at `root`. */
+  private def catalogSession(name: String, root: String) = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set(s"spark.sql.catalog.$name", "graft.io.GlprCatalog")
+    s.conf.set(s"spark.sql.catalog.$name.root", root)
+    s
+  }
   private def liveIds(root: String): Set[Long] =
     spark.read.format("graft.io.GlprSource").load(root)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -180,7 +188,7 @@ class GlprDvIntegritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
       .toSet
     val cowRoot = TempDirs.scratch("graft-glpr-morupdate-cow").toString
-    val s2 = GlprSource.freshCatalogSession(spark, "glpr_muc", cowRoot)
+    val s2 = catalogSession("glpr_muc", cowRoot)
     s2.sql("CREATE TABLE glpr_muc.ns.t (doc_id BIGINT, lang STRING, " +
       "source STRING, text STRING)")
     append(s"$cowRoot/ns/t", (0L until 60L).map(i =>
@@ -246,7 +254,7 @@ class GlprDvIntegritySpec extends AnyFunSuite {
     assert(dup.getMessage.contains("duplicate doc_id"), dup.getMessage)
     // the SQL front door: CALL sys.update_where_mor / sys.merge_mor
     val pRoot = TempDirs.scratch("graft-glpr-morproc").toString
-    val s3 = GlprSource.freshCatalogSession(spark, "glpr_mor", pRoot)
+    val s3 = catalogSession("glpr_mor", pRoot)
     s3.sql("CREATE TABLE glpr_mor.ns.t (doc_id BIGINT, lang STRING, " +
       "source STRING, text STRING)")
     s3.sql("CREATE TABLE glpr_mor.ns.src (doc_id BIGINT, lang STRING, " +

@@ -353,33 +353,65 @@ class GlprSpec extends AnyFunSuite {
     assert(e.schema === GlprSource.schema)
   }
 
-  test("columnar reader (default path) equals the row reader on the same shard, pruned + filtered") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val root = GlprSource.stagedPath(spark, dir)
-    val shard = GlprSource.committedShards(root).head.getAbsolutePath
-    val required = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("text", StringType, nullable = false))) // 'lang'/'source' pruned
-    val range = GlprSource.IdRange(50L, 300L) // pushed id bounds
+  /** Drain a reader factory's row path (`createReader`, the DSv2 row
+    * contract) and its columnar path over one partition, as (doc_id, text). */
+  private def rowsAndBatches(f: GlprReaderFactory, p: GlprSource.GlprPartition)
+      : (Vector[(Long, String)], Vector[(Long, String)]) = {
     val viaRows = {
-      val r = new GlprReader(shard, required, range)
-      val out = Iterator.continually(r).takeWhile(_.next())
+      val r = f.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next())
         .map(x => (x.get().getLong(0), x.get().getUTF8String(1).toString)).toVector
-      r.close(); out
+      finally r.close()
     }
     val viaBatches = {
-      val r = new GlprColumnarReader(shard, required, range)
-      val out = Iterator.continually(r).takeWhile(_.next()).flatMap { x =>
+      val r = f.createColumnarReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).flatMap { x =>
         val b = x.get()
         (0 until b.numRows()).map { i =>
           val row = b.getRow(i)
           (row.getLong(0), row.getUTF8String(1).toString)
         }
       }.toVector
-      r.close(); out
+      finally r.close()
     }
-    assert(viaBatches === viaRows, "columnar and row decode must agree exactly")
+    (viaRows, viaBatches)
+  }
+  private val idAndText = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false))) // 'lang'/'source' pruned
+  }
+
+  test("row contract (createReader) equals the columnar reader on the same shard, pruned + filtered") {
+    val root = GlprSource.stagedPath(spark, dir)
+    val shard = GlprSource.committedShards(root).head.getAbsolutePath
+    val f = new GlprReaderFactory(idAndText, GlprSource.IdRange(50L, 300L)) // pushed id bounds
+    val (viaRows, viaBatches) = rowsAndBatches(f, GlprSource.GlprPartition(shard))
+    assert(viaRows === viaBatches, "row and columnar decode must agree exactly")
     assert(viaRows.nonEmpty && viaRows.forall { case (id, _) => id >= 50L && id <= 300L })
+  }
+
+  test("row contract under a delete-vector mask and a pushed limit stops at the cap across batches") {
+    import spark.implicits._
+    val root = TempDirs.scratch("graft-glpr-rowcap").toString
+    // one shard of 10,000 records: more than two 4096-row batches
+    GlprSource.write(spark.range(10000).coalesce(1)
+      .select($"id".as("doc_id"), lit("en").as("lang"), lit("s").as("source"),
+        concat(lit("t"), $"id".cast("string")).as("text")), root)
+    val shards = GlprSource.committedShards(root)
+    assert(shards.length === 1)
+    val mask = GlprSource.normalizeRanges(Seq((100L, 199L), (4000L, 4499L)))
+    val cap = 5000 // past the first batch, short of the 9,400 live records
+    val f = new GlprReaderFactory(idAndText,
+      GlprSource.IdRange(Long.MinValue, Long.MaxValue), limit = Some(cap))
+    val (viaRows, viaBatches) =
+      rowsAndBatches(f, GlprSource.GlprPartition(shards.head.getAbsolutePath, dv = mask))
+    val expected = (0L until 10000L)
+      .filterNot(id => (id >= 100L && id <= 199L) || (id >= 4000L && id <= 4499L))
+      .take(cap).map(id => (id, s"t$id")).toVector
+    assert(viaRows === expected)
+    assert(viaBatches === expected)
   }
 
   test("q292 ingest merge: duplicates split ACROSS micro-batches fold to the global keeper/count") {

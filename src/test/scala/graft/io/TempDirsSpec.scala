@@ -6,8 +6,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[TempDirs.once]], the engine's one result memo, and a source guard
-  * that keeps it the only one. */
+/** [[TempDirs.once]], the engine's one result memo, [[TempDirs.scoped]],
+  * and source guards that keep the memo and the GLPR row decoder one
+  * each. */
 class TempDirsSpec extends AnyFunSuite {
 
   test("once: 8 concurrent callers on one key run the build once and share its result") {
@@ -54,17 +55,54 @@ class TempDirsSpec extends AnyFunSuite {
     assert(TempDirs.once("spec-inner")(0) === 20)
   }
 
-  test("no hand-rolled memo: only TempDirs and GlprSource.planEvents hold a ConcurrentHashMap") {
-    val memo = "computeIfAbsent|new java\\.util\\.concurrent\\.ConcurrentHashMap".r
+  test("scoped: the dir is deleted and unregistered when the body returns or throws") {
+    val kept = TempDirs.scoped("graft-spec-scoped") { p =>
+      java.nio.file.Files.writeString(p.resolve("f"), "x")
+      assert(TempDirs.registered.contains(p))
+      p
+    }
+    assert(!java.nio.file.Files.exists(kept))
+    assert(!TempDirs.registered.contains(kept))
+    var seen: java.nio.file.Path = null
+    intercept[IllegalStateException](TempDirs.scoped("graft-spec-scoped") { p =>
+      java.nio.file.Files.createDirectories(p.resolve("a/b"))
+      seen = p
+      throw new IllegalStateException("body fails")
+    })
+    assert(!java.nio.file.Files.exists(seen))
+    assert(!TempDirs.registered.contains(seen))
+  }
+
+  /** (file name, previous line, line), trimmed, for every line of
+    * `src/main/scala` that matches `pattern`. */
+  private def sourceHits(pattern: scala.util.matching.Regex)
+      : List[(String, String, String)] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val hits = try {
+    try {
       import scala.jdk.CollectionConverters._
       files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
         val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
-        lines.indices.filter(i => memo.findFirstIn(lines(i)).isDefined)
-          .map(i => (f.getFileName.toString, if (i > 0) lines(i - 1).trim else ""))
+        lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined)
+          .map(i => (f.getFileName.toString,
+            if (i > 0) lines(i - 1).trim else "", lines(i).trim))
       }.toList
     } finally files.close()
+  }
+
+  test("one GLPR row decoder: only GlprRowReader and the sidecar-aggregate reader implement PartitionReader[InternalRow]") {
+    val hits = sourceHits("(extends|with|new)\\s+PartitionReader\\[InternalRow\\]".r)
+    val context = hits.map(h => h._2 + " " + h._3)
+    assert(hits.map(_._1).toSet === Set("GlprSource.scala") && hits.length === 2 &&
+      context.exists(_.contains("class GlprRowReader(")) &&
+      context.exists(_.contains("GlprAggPartition")),
+      "GLPR rows come from GlprColumnarReader's batches through GlprRowReader; " +
+        s"a second row decoder duplicates its id gate, mask, cap and decode. Found $hits")
+  }
+
+  test("no hand-rolled memo: only TempDirs and GlprSource.planEvents hold a ConcurrentHashMap") {
+    val hits = sourceHits(
+      "computeIfAbsent|new java\\.util\\.concurrent\\.ConcurrentHashMap".r)
+      .map(h => (h._1, h._2))
     val (glpr, rest) = hits.partition(_._1 == "GlprSource.scala")
     assert(glpr === List(("GlprSource.scala", "private[io] val planEvents =")),
       s"GlprSource may hold only the planEvents map; found $glpr")
