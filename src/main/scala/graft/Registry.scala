@@ -641,8 +641,11 @@ object Registry {
         |       CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE), 6) AS jaccard
         |FROM d a JOIN d b ON a.doc_id < b.doc_id ORDER BY doc_a, doc_b""".stripMargin)),
 
+    // Near-dup pairs: MinHash band join (xxhash64 family, 8 one-row bands)
+    // → exact-Jaccard verify; the oracle is the exact threshold join, which
+    // the banded path matches at this corpus's similarity margin (see q95).
     "q43_minhash_neardup" -> Entry(
-      (s, d) => Dedup.minhashNearDup(docs(s, d), simThreshold = 0.5)
+      (s, d) => Dedup.minhashNearDup(docsSpread(s, d), simThreshold = 0.5)
         .orderBy("doc_a", "doc_b"), Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |s AS (SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
@@ -658,11 +661,11 @@ object Registry {
     // Two-sided fuzzy decontamination: probe = the q85 benchmark split
     // (md5 ':probe' prefix < '15', ~8%), corpus = the rest; near-dup pairs
     // at exact Jaccard >= 0.5 via the corpus×probe MinHash band join. The
-    // oracle is the exact threshold join — which hash-matches the LSH path
-    // only because this corpus has a wide similarity margin (pairs sit at
-    // s >= 0.9 or < 0.2, never near 0.5; a boundary pair would carry a
-    // ~(0.5)^8 per-pair miss odds — see Dedup.fuzzyContamination's scaladoc
-    // for the numHashTables dial if the corpus ever gains such pairs).
+    // oracle is the exact threshold join — which hash-matches the banded
+    // path only because this corpus has a wide similarity margin (pairs sit
+    // at s >= 0.9 or < 0.2, never near 0.5; a boundary pair would carry
+    // (1 - s)^8 ≈ 0.4% per-pair miss odds at s = 0.5 — the 8 one-row bands'
+    // bound in Dedup.minhashNearDup's scaladoc).
     "q95_fuzzy_contamination" -> Entry((s, d) => {
       val dd = docsSpread(s, d)
       val pr = substring(md5(concat(col("doc_id").cast("string"), lit(":probe"))), 1, 2)
@@ -4369,7 +4372,7 @@ object Registry {
 
     // md5-family MinHash signatures: every byte engine-reproducible (the
     // q117 hex-prefix trick), certifying the min-over-shingle-set algebra
-    // that MinHashLSH's private coefficients keep rows-only in q43.
+    // the near-dup stage bands on (q43's xxhash64 family is engine-private).
     "q123_minhash_md5" -> Entry(
       (s, d) => Dedup.minhashMd5Signatures(docsSpread(s, d)).orderBy("doc_id", "seed"), Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -4385,9 +4388,9 @@ object Registry {
         |SELECT doc_id, CAST(seed AS BIGINT) AS seed, min(h) AS minhash
         |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    // The full LSH dedup pipeline — signature → band keys → bucket join →
-    // exact-Jaccard verify — hash-checked end to end on the md5 family.
-    // Finds exactly q43's 25 near-dup pairs at sf0.01.
+    // The near-dup stage — band keys → bucket join → exact-Jaccard verify —
+    // hash-checked end to end on the md5 family (4 two-row bands, miss odds
+    // (1 - s²)^4 per pair). Finds exactly q43's 25 near-dup pairs at sf0.01.
     "q124_minhash_md5_pairs" -> Entry(
       (s, d) => Dedup.minhashMd5PairsOn(s, d).orderBy("doc_a", "doc_b"), Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),

@@ -1,11 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a training-data pipeline, over `documents`.
   *
@@ -189,146 +187,165 @@ object Dedup {
           coalesce(col("is_dup"), lit(false))).as("is_degenerate"))
   }
 
-  /** Distinct word-3-shingle sets per document — the shared front end of
-    * MinHash candidate generation and exact-Jaccard verification. */
-  private def shingled3(docs: DataFrame): DataFrame = docs
+  // ---- MinHash near-dup: one shingle stage, one band builder, one band
+  // join, one exact verify (Leskovec, Rajaraman and Ullman, "Mining of
+  // Massive Datasets", ch. 3). Every near-dup caller below is built from
+  // these four stages; they differ only in hash family (with its band
+  // layout) and in which pairs the band join may emit.
+
+  /** Distinct word-3-shingle set per document, `(doc_id, ss)`. Documents
+    * with fewer than 3 tokens have no shingle and no row. */
+  private def shingleSets(docs: DataFrame): DataFrame = docs
     .withColumn("toks", TextAnalysis.tokens(col("text")))
     .filter(size(col("toks")) >= 3)
     .select(col("doc_id"),
-      array_distinct(TextAnalysis.shingles(col("toks"), 3)).as("shingles"))
+      array_distinct(TextAnalysis.shingles(col("toks"), 3)).as("ss"))
 
-  /** Materialize an LSH-pipeline result eagerly (localCheckpoint cuts the
-    * lineage back to the stored blocks), then release the persisted feature
-    * frames. Without the checkpoint the returned DataFrame would lazily
-    * re-derive the features it just unpersisted; without the unpersist every
-    * call leaked its cached features for the life of the session (round-7
-    * advice). The checkpointed result — pairs over a threshold — is orders
-    * of magnitude smaller than the feature matrix it replaces in storage. */
-  private def settleAndRelease(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
-    cached.foreach(_.unpersist(false))
-    out
+  /** A MinHash hash family with its band layout: `bands` OR'd bands of
+    * `rows` AND'd per-seed minima over seeds `0 until bands * rows`. A pair
+    * at Jaccard J shares one seed's minimum with probability J, so it
+    * escapes every band with probability (1 − J^rows)^bands. */
+  private sealed abstract class MinHashFamily(val bands: Int, val rows: Int) {
+    /** The hash of shingle `s` under `seed`. */
+    def hash(seed: Int, s: Column): Column
+    /** One band's join key from its `(seed, minimum)` rows. */
+    def key(minima: Seq[(Int, Column)]): Column
   }
 
-  /** Near-duplicate candidate pairs via MinHash+LSH over word-3-shingles.
-    * Returns (doc_a, doc_b, jaccard_distance) with doc_a < doc_b. The
-    * featurized signatures are persisted before `fit`/self-join — they are
-    * consumed three times (fit + both join sides) and recomputing the
-    * shingling + 2^18-dim hashing dominated the round-1 runtime — and
-    * released once the result settles. */
-  def minhashPairs(docs: DataFrame, threshold: Double = 0.8, numHashTables: Int = 8): DataFrame = {
-    val tf = new HashingTF().setInputCol("shingles").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    val feats = tf.transform(shingled3(docs)).persist(StorageLevel.MEMORY_AND_DISK)
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(feats)
-    val pairs = model.approxSimilarityJoin(feats, feats, threshold, "jaccard_distance")
-      .select(
-        col("datasetA.doc_id").as("doc_a"),
-        col("datasetB.doc_id").as("doc_b"),
-        col("jaccard_distance"))
-      .filter(col("doc_a") < col("doc_b"))
-    settleAndRelease(pairs, feats)
+  /** md5 family, 4 bands of 2 rows: the hash is the 60-bit integer parse
+    * of the hex prefix of `md5(seed || "|" || s)` (the [[simhashMd5]]
+    * trick — 15 hex chars stay inside a signed long), bytes any engine with
+    * md5 reproduces (q123/q124/q162 hash-check them), and the band key is
+    * the seed-ordered `"seed:minhash|seed:minhash"` string. Misses a pair
+    * with probability (1 − J²)^4 — ≈1.3e-3 at J = 0.9, 0.32 at J = 0.5;
+    * the two-row bands prune low-Jaccard candidates hard, which keeps the
+    * oracle-checked chain's verify small. */
+  private object Md5Family extends MinHashFamily(bands = 4, rows = 2) {
+    def hash(seed: Int, s: Column): Column =
+      conv(substring(md5(concat(lit(s"$seed|"), s)), 1, 15), 16, 10).cast("long")
+    def key(minima: Seq[(Int, Column)]): Column =
+      concat_ws("|", minima.map { case (sd, m) => concat(lit(s"$sd:"), m.cast("string")) }: _*)
   }
 
-  /** Two-stage scalable near-dup detection with *exact* output: MinHash+LSH
-    * candidate generation (banded equi-join, O(n) buckets) followed by
-    * exact Jaccard verification on the raw shingle sets, keeping pairs with
+  /** Native family, 8 bands of 1 row: codegen'd `xxhash64(s, seed)`,
+    * about a tenth of md5's cost per shingle, and the band key is the
+    * band's one minimum. Misses a pair with probability (1 − J)^8 — 1e-8
+    * at J = 0.9, 3.9e-3 at J = 0.5. Its values are engine-private, which
+    * is fine for callers whose output is the exactly verified pair list. */
+  private object NativeFamily extends MinHashFamily(bands = 8, rows = 1) {
+    def hash(seed: Int, s: Column): Column = xxhash64(s, lit(seed))
+    def key(minima: Seq[(Int, Column)]): Column = minima.head._2
+  }
+
+  /** The minimum of `family`'s hash under `seed` over the doc's own `ss`
+    * array: one MinHash signature entry, computed map-side. */
+  private def minhash(family: MinHashFamily, seed: Int): Column =
+    array_min(transform(col("ss"), s => family.hash(seed, s)))
+
+  /** Per-band `(band_id, band_key)` structs from a document's own `ss`
+    * array — a pure projection (no signature aggregation, no shuffle), so
+    * batch and streaming documents band the same way. */
+  private def bandKeys(family: MinHashFamily): Column =
+    array((0 until family.bands).map { b =>
+      val minima = (b * family.rows until (b + 1) * family.rows).map(sd => sd -> minhash(family, sd))
+      struct(lit(b.toLong).as("band_id"), family.key(minima).as("band_key"))
+    }: _*)
+
+  /** `sets` (any columns plus `ss`) with one row per band: `ss` replaced by
+    * `band_id` and `band_key`. */
+  private def banded(sets: DataFrame, family: MinHashFamily): DataFrame =
+    sets.withColumn("bk", explode(bandKeys(family)))
+      .select(col("*"), col("bk.*")).drop("bk", "ss")
+
+  /** Candidate pairs `(doc_a, doc_b)`: documents of two banded frames `a`
+    * and `b` (`doc_id`, `band_id`, `band_key`) that agree on some band and
+    * satisfy `pair` (over `a.doc_id` and `b.doc_id`), once per pair. Any
+    * other column of `b` rides along. */
+  private def bandJoin(a: DataFrame, b: DataFrame, pair: Column): DataFrame = {
+    val carried = b.columns.filterNot(Set("doc_id", "band_id", "band_key")).map(c => col(s"b.$c"))
+    a.as("a").join(b.as("b"), col("a.band_id") === col("b.band_id") &&
+        col("a.band_key") === col("b.band_key") && pair)
+      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +: carried: _*)
+      .dropDuplicates("doc_a", "doc_b")
+  }
+
+  /** Exact Jaccard of candidate pairs carrying both shingle sets (`ss_a`,
+    * `ss_b`), kept at `jaccard >= simThreshold`: `(doc_a, doc_b, n_common,
+    * jaccard)`. The sets are distinct, so the integer union
+    * `n_a + n_b − n_common` is |A ∪ B| and the ratio is the same double an
+    * `array_union` or a shingle-join count gives.
+    *
+    * `n_common` comes out of a one-row `inline`: the threshold filter reads
+    * a generator output, so the optimizer cannot push it into the join
+    * condition, where `array_intersect` would run again per candidate
+    * (sf0.1 on 4 cores, 82k candidates: 3.7–4.8 s per `minhashNearDup`
+    * call against 4.8–7.3 s with the filter pushed). */
+  private def verify(cand: DataFrame, simThreshold: Double): DataFrame =
+    cand.select(col("doc_a"), col("doc_b"), inline(array(struct(
+        size(array_intersect(col("ss_a"), col("ss_b"))).cast("long").as("n_common"),
+        (size(col("ss_a")) + size(col("ss_b"))).cast("long").as("n_ab")))))
+      .select(col("doc_a"), col("doc_b"), col("n_common"),
+        round(col("n_common").cast("double") /
+          (col("n_ab") - col("n_common")).cast("double"), 6).as("jaccard"))
+      .filter(col("jaccard") >= simThreshold)
+
+  /** Verified near-dup pairs between two shingle-set frames: band both
+    * sides, band-join them under `pair`, join the sets back onto the
+    * candidates and verify. Both joins read their sides as aliases of the
+    * same frames, so in a self-join (`a eq b`) the band exchange and the
+    * set broadcast are each computed once and reused. The band join is a
+    * shuffled hash join for that reason: a broadcast band join computes
+    * the streamed side's band keys a second time (measured at sf0.1 on
+    * 4 cores, md5 family: 7.3–8.5 s per call broadcast, 3.4–5.7 s
+    * shuffled). */
+  private def nearDupPairs(a: DataFrame, b: DataFrame, family: MinHashFamily,
+      pair: Column, simThreshold: Double): DataFrame = {
+    def keys(sets: DataFrame) = banded(sets.select("doc_id", "ss"), family)
+    val cand = bandJoin(keys(a), keys(b).hint("shuffle_hash"), pair)
+    verify(cand
+      .join(a.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(b.as("b"), col("doc_b") === col("b.doc_id"))
+      .select(col("doc_a"), col("doc_b"), col("a.ss").as("ss_a"), col("b.ss").as("ss_b")),
+      simThreshold)
+  }
+
+  /** Near-duplicate pairs with *exact* output: MinHash banded candidates
+    * (native family, 8 one-row bands — an equi-join on band keys, never an
+    * all-pairs product) verified by exact Jaccard on the shingle sets.
+    * Returns `(doc_a, doc_b, jaccard)` with doc_a < doc_b and
     * jaccard >= `simThreshold`.
     *
-    * Exactness: a qualifying pair can only be missed if all `numHashTables`
-    * OR'd minhash tables disagree — probability (1 - s)^L, which at the
-    * corpus's similarity margin (near-dups sit at s >= 0.9; nothing between
-    * 0.2 and 0.9) is <= 1e-8 per pair. The candidate distance threshold
-    * carries 0.1 slack so HashingTF bucket collisions cannot drop a
-    * boundary pair before the raw-shingle verify. */
-
-  def minhashNearDup(docs: DataFrame, simThreshold: Double = 0.5,
-      numHashTables: Int = 8): DataFrame = {
-    val sh = shingled3(docs)
-    val tf = new HashingTF().setInputCol("shingles").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    val feats = tf.transform(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(feats)
-    val candDist = math.min(1.0, 1.0 - simThreshold + 0.1)
-    val cand = model.approxSimilarityJoin(feats, feats, candDist, "est_dist")
-      .select(col("datasetA.doc_id").as("doc_a"), col("datasetB.doc_id").as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-    val verified = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= simThreshold)
-    settleAndRelease(verified, feats)
+    * Recall: a qualifying pair at Jaccard J escapes all 8 bands with
+    * probability (1 − J)^8 — 1e-8 at J = 0.9, where this corpus's
+    * near-dups sit (nothing lies between 0.2 and 0.9). This is a MARGIN
+    * claim: a pair exactly at J = 0.5 still misses with probability
+    * 0.5^8 ≈ 0.4%.
+    *
+    * The result is localCheckpoint'ed eagerly: callers reuse it (an
+    * anti-join and a collect, or the component sweeps), and without the
+    * checkpoint each reuse would re-run the band join. */
+  def minhashNearDup(docs: DataFrame, simThreshold: Double = 0.5): DataFrame = {
+    val sets = shingleSets(docs)
+    nearDupPairs(sets, sets, NativeFamily, col("a.doc_id") < col("b.doc_id"), simThreshold).select("doc_a", "doc_b", "jaccard").localCheckpoint(true)
   }
 
   /** Two-sided fuzzy decontamination — the near-dup generalization of the
     * exact-shingle-overlap check ([[TextAnalysis.contaminationCheck]]):
     * flag (corpus doc, probe doc) pairs whose word-3-shingle sets are
     * near-duplicates (exact Jaccard >= `simThreshold`), catching the
-    * paraphrased benchmark leakage exact overlap misses.
+    * paraphrased benchmark leakage exact overlap misses. Returns
+    * `(doc_id, probe_doc_id, jaccard)`.
     *
-    * Same candidates→verify shape as [[minhashNearDup]], generalized off
-    * the self-join: MinHash+LSH banded equi-join between the two sides
-    * (O(corpus + probe) bucketing — never a cross product), then exact
-    * Jaccard verification on the raw shingle sets. The recall argument is
-    * [[minhashNearDup]]'s: a qualifying pair escapes only if all
-    * `numHashTables` OR'd tables disagree — (1-s)^L — and the 0.1
-    * candidate-distance slack absorbs HashingTF bucket-collision distortion
-    * at the boundary. "(1-s)^L negligible" is a MARGIN claim, not an
-    * absolute one: a pair sitting exactly at s = 0.5 still misses with
-    * ~0.5^8 ≈ 0.4% probability per table set. It holds because this corpus
-    * has no pairs near the threshold (near-dups sit at s >= 0.9, unrelated
-    * docs below 0.2); for a corpus with boundary-straddling pairs raise
-    * `numHashTables` until (1-threshold)^L clears the tolerated miss rate.
-    * At
-    * scale the probe side (a benchmark suite) is tiny next to the corpus:
-    * the band join broadcasts it and the corpus is never shuffled.
-    *
-    * Measured cost note (round 10, sf0.1, local[32]): the
-    * round-9 "drift" (bench 1.22s → 2.08s with no code change) is NOT
-    * leftover-block residue from earlier bench queries. Two
-    * probe/pollute/probe sandwiches in one JVM — pollution = the q94/q121
-    * IPF checkpoint chains, then = the six new round-9 LSH/md5 queries —
-    * both measured post-pollution mins FASTER than pre (1.74→1.41s and
-    * 2.07→1.40s): whatever those queries leave behind does not slow this
-    * path. The real signal is intrinsic rep-to-rep spread: warm
-    * executions range 1.40–2.10s (MinHashLSH fit + persist/unpersist of
-    * both feature frames each call — allocation-heavy, GC-sensitive), so
-    * single min-of-3 samples landing at 1.2 vs 2.1 across rounds are the
-    * same steady state, not a regression. Floor ≈ 1.4s on this box. */
+    * The [[minhashNearDup]] stage with the corpus as one side of the band
+    * join and the probe as the other (O(corpus + probe) bucketing — never a
+    * cross product), so the miss bound is the same (1 − J)^8. The probe
+    * side (a benchmark suite) is tiny next to the corpus; the band join
+    * builds its hash table on it, and only the corpus' band keys shuffle. */
   def fuzzyContamination(corpus: DataFrame, probe: DataFrame,
-      simThreshold: Double = 0.5, numHashTables: Int = 8): DataFrame = {
-    val shC = shingled3(corpus)
-    val shP = shingled3(probe)
-    val tf = new HashingTF().setInputCol("shingles").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    val featsC = tf.transform(shC).persist(StorageLevel.MEMORY_AND_DISK)
-    val featsP = tf.transform(shP).persist(StorageLevel.MEMORY_AND_DISK)
-    // MinHash hash functions are drawn from the seed, not the data — fitting
-    // on either side yields the same family; fit on the (small) probe side.
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(featsP)
-    val candDist = math.min(1.0, 1.0 - simThreshold + 0.1)
-    val cand = model.approxSimilarityJoin(featsC, featsP, candDist, "est_dist")
-      .select(col("datasetA.doc_id").as("doc_id"),
-        col("datasetB.doc_id").as("probe_doc_id"))
-    val verified = cand
-      .join(shC.select(col("doc_id"), col("shingles").as("sh_c")), "doc_id")
-      .join(shP.select(col("doc_id").as("probe_doc_id"), col("shingles").as("sh_p")),
-        "probe_doc_id")
-      .select(col("doc_id"), col("probe_doc_id"),
-        round(size(array_intersect(col("sh_c"), col("sh_p"))).cast("double") /
-          size(array_union(col("sh_c"), col("sh_p"))).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= simThreshold)
-    settleAndRelease(verified, featsC, featsP)
-  }
+      simThreshold: Double = 0.5): DataFrame =
+    nearDupPairs(shingleSets(corpus), shingleSets(probe), NativeFamily, lit(true), simThreshold)
+      .select(col("doc_a").as("doc_id"), col("doc_b").as("probe_doc_id"), col("jaccard"))
+      .localCheckpoint(true)
 
   /** Near-duplicate cluster assignment: connected components over the
     * [[minhashNearDup]] pair graph, labeling every document (singletons
@@ -401,14 +418,13 @@ object Dedup {
     * without the memo each consumer re-ran the full LSH front end + sweep
     * loop (~3s each at sf0.1). The memo is safe because the testdata
     * dirs are read-only, the stored frame is [[nearDupComponents]]'s final
-    * localCheckpoint — settled blocks with no live lineage, and the LSH
-    * feature frames were already unpersisted by settleAndRelease before the
-    * loop returned — so each entry holds one tiny (doc_id, component) frame
-    * and nothing else. */
+    * localCheckpoint — settled blocks with no live lineage, and the
+    * near-dup stage persists nothing — so each entry holds one tiny
+    * (doc_id, component) frame and nothing else. */
   def componentLabelsOn(spark: org.apache.spark.sql.SparkSession, dir: String,
       simThreshold: Double = 0.5): DataFrame =
     graft.io.TempDirs.once(f"dedup-labels#$dir#$simThreshold%.6f") {
-      nearDupComponents(graft.io.Tables(spark, dir, "documents"), simThreshold)
+      nearDupComponents(spreadScan(graft.io.Tables(spark, dir, "documents")), simThreshold)
     }
 
   /** One md5-family LSH pair derivation per (JVM, dir, threshold): the
@@ -419,7 +435,7 @@ object Dedup {
   def minhashMd5PairsOn(spark: org.apache.spark.sql.SparkSession, dir: String,
       simThreshold: Double = 0.5): DataFrame =
     graft.io.TempDirs.once(f"dedup-md5pairs#$dir#$simThreshold%.6f") {
-      minhashMd5Pairs(graft.io.Tables(spark, dir, "documents"),
+      minhashMd5Pairs(spreadScan(graft.io.Tables(spark, dir, "documents")),
         simThreshold = simThreshold).localCheckpoint(true)
     }
 
@@ -731,85 +747,38 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  // ---- md5-family MinHash: the cross-engine-certifiable LSH pipeline ----
+  // ---- md5-family MinHash: the cross-engine-certifiable chain ----
 
-  /** Per-document MinHash signatures from an md5 hash family: hash i of
-    * shingle s is the 60-bit integer parse of `md5(i || "|" || s)`'s hex
-    * prefix (the [[simhashMd5]] trick), and the signature entry for seed i
-    * is the min over the document's DISTINCT word-k-shingles. Long format
-    * `(doc_id, seed, minhash)` — the shape both the band-key builder and
-    * the DuckDB oracle consume directly.
+  /** Per-document MinHash signatures from the md5 family: entry `seed` is
+    * the min of [[Md5Family]]'s hash over the document's DISTINCT word-3-shingles.
+    * Long format `(doc_id, seed, minhash)` — the shape the DuckDB oracle
+    * (q123) and the estimator audit ([[minhashErrorAuditFrom]]) consume.
+    * Every byte is reproducible in any engine with md5, so the
+    * min-over-set signature algebra gets a real hash-checked oracle.
     *
-    * This is the certifiable twin of [[minhashNearDup]]'s Spark-ML
-    * MinHashLSH front end: that family's coefficients are engine-private
-    * (rows-only at the driver), while every byte here is reproducible in
-    * any engine with md5 — so the min-over-set signature algebra, the
-    * banding, and the candidate algebra of the LSH pipeline all get a real
-    * hash-checked oracle (q123/q124). NOT the throughput path (md5 is
-    * ~10× xxhash64 per shingle); the production front end stays
-    * [[minhashNearDup]].
+    * Scale shape: map-side — one `array_min` per seed over the doc's own
+    * shingle array, then an explode to `numHashes` rows per document; no
+    * aggregation, no shuffle. */
+  def minhashMd5Signatures(docs: DataFrame, numHashes: Int = 8): DataFrame =
+    shingleSets(docs)
+      .select(col("doc_id"),
+        posexplode(array((0 until numHashes).map(minhash(Md5Family, _)): _*))
+          .as(Seq("seed", "minhash")))
+      .select(col("doc_id"), col("seed").cast("long").as("seed"), col("minhash"))
+
+  /** Verified near-dup pairs on the md5 family — every stage of the
+    * MinHash → band → bucket-join → exact-verify pipeline with an exact
+    * DuckDB mirror (q124). Band keys are the seed-ordered
+    * `"seed:minhash|seed:minhash"` strings of [[Md5Family]]'s 4 two-row
+    * bands (`string_agg(... ORDER BY seed)` on the oracle side); candidates
+    * are an equi-join on (band_id, band_key), never an all-pairs product.
+    * Returns `(doc_a, doc_b, n_common, jaccard)` with doc_a < doc_b.
     *
-    * Scale shape: one explode to (doc, shingle, seed) — numHashes rows per
-    * distinct shingle — feeding a min aggregation that combines map-side,
-    * so the exchange carries ≤ numHashes rows per (doc, partition), never
-    * the exploded stream. */
-  def minhashMd5Signatures(docs: DataFrame, numHashes: Int = 8, k: Int = 3): DataFrame =
-    docs.withColumn("toks", TextAnalysis.tokens(col("text")))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalysis.shingles(col("toks"), k))).as("s"))
-      .select(col("doc_id"), explode(sequence(lit(0L), lit(numHashes - 1L))).as("seed"),
-        conv(substring(md5(concat(col("seed").cast("string"), lit("|"), col("s"))), 1, 15),
-          16, 10).cast("long").as("h"))
-      .groupBy("doc_id", "seed").agg(min(col("h")).as("minhash"))
-
-  /** Full MinHash→band→bucket-join→exact-verify near-dup pairs on the md5
-    * family — every stage of the classic LSH dedup pipeline with an exact
-    * DuckDB mirror. Signatures band into `numHashes / bandRows` bands; the
-    * band key is the seed-ordered "seed:minhash" join of the band's rows
-    * (`sort_array(collect_list(struct(...)))` — deterministic regardless
-    * of arrival order, `string_agg(... ORDER BY seed)` on the oracle
-    * side); candidates are an equi-join on (band_id, band_key), never an
-    * all-pairs product; verification computes exact shingle-set Jaccard by
-    * joining the candidate pairs back onto the per-doc distinct-shingle
-    * frame (bounded by candidate count × shingles/doc, the
-    * [[minhashNearDup]] candidates→verify shape). */
-  /** Seed-ordered `"seed:minhash|seed:minhash"` band keys from a signature
-    * frame — the banding stage of [[minhashMd5Pairs]], shared with the
-    * static (history) side of [[streamingHistoryNearDup]]. */
-  private def md5BandKeys(sig: DataFrame, bandRows: Int): DataFrame =
-    sig.groupBy(col("doc_id"), floor(col("seed") / bandRows).as("band_id"))
-      .agg(concat_ws("|",
-        transform(sort_array(collect_list(struct(col("seed"), col("minhash")))),
-          x => concat(x("seed").cast("string"), lit(":"), x("minhash").cast("string"))))
-        .as("band_key"))
-
-  def minhashMd5Pairs(docs: DataFrame, numHashes: Int = 8, bandRows: Int = 2,
-      k: Int = 3, simThreshold: Double = 0.5): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
-    val sig = minhashMd5Signatures(docs, numHashes, k)
-    val banded = md5BandKeys(sig, bandRows)
-    val cand = banded.select(col("doc_id").as("doc_a"), col("band_id"), col("band_key"))
-      .join(banded.select(col("doc_id").as("doc_b"), col("band_id").as("bid"),
-        col("band_key").as("bkey")),
-        col("band_id") === col("bid") && col("band_key") === col("bkey") &&
-          col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val sets = docs.withColumn("toks", TextAnalysis.tokens(col("text")))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalysis.shingles(col("toks"), k))).as("s"))
-    val sizes = sets.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        round(col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= simThreshold)
+    * Recall: a pair at Jaccard J escapes all 4 bands with probability
+    * (1 − J²)^4 — ≈1.3e-3 per pair at J = 0.9. */
+  def minhashMd5Pairs(docs: DataFrame, simThreshold: Double = 0.5): DataFrame = {
+    val sets = shingleSets(docs)
+    nearDupPairs(sets, sets, Md5Family, col("a.doc_id") < col("b.doc_id"), simThreshold)
   }
 
   /** Cross-split near-dup leakage report: how many verified near-dup
@@ -1087,23 +1056,6 @@ object Dedup {
     spark.createDataFrame(rows.toSeq.asJava, outSchema)
   }
 
-  /** Per-band `(band_id, band_key)` structs computed MAP-SIDE from a
-    * document's own distinct-shingle array `ss` — the same seed-ordered
-    * band keys [[md5BandKeys]] derives by aggregation, but as a pure
-    * projection: each band's key is built from `array_min` over the
-    * shingle array per seed, so a streaming document banded this way
-    * never shuffles. Byte-identical to the batch keys (same `"seed|s"`
-    * md5 input, same 60-bit prefix parse, same `"seed:minhash"` join). */
-  private def mapSideBandKeys(numHashes: Int, bandRows: Int): org.apache.spark.sql.Column =
-    array((0 until numHashes / bandRows).map { b =>
-      val key = concat_ws("|", (b * bandRows until (b + 1) * bandRows).map { sd =>
-        val mh = array_min(transform(col("ss"),
-          s => conv(substring(md5(concat(lit(s"$sd|"), s)), 1, 15), 16, 10).cast("long")))
-        concat(lit(s"$sd:"), mh.cast("string"))
-      }: _*)
-      struct(lit(b.toLong).as("band_id"), key.as("band_key"))
-    }: _*)
-
   /** Streaming near-dup detection against a STATIC history — the shape a
     * rolling ingestion pipeline actually runs: the corpus so far is indexed
     * once (band keys + shingle sets), and each arriving micro-batch of new
@@ -1112,15 +1064,15 @@ object Dedup {
     * the [[historyDupRateFrom]] contract) plays the live stream; all
     * earlier batches are the static history.
     *
-    * Stream side is MAP-ONLY: tokenize → distinct shingles →
-    * [[mapSideBandKeys]] (per-seed `array_min` over the doc's own shingle
-    * array — no signature aggregation, no shuffle), then two STATELESS
-    * stream-static equi-joins: band keys against the history band index
-    * (candidates), and candidate pairs against the history shingle-set
-    * frame (exact-Jaccard verify via `array_intersect` on the pair's two
-    * arrays — per-pair work, no posting-list aggregation). The only
-    * stateful operator is the `dropDuplicates` collapsing multi-band
-    * candidate hits; its state is one (doc_a, doc_b) key per verified
+    * The [[minhashMd5Pairs]] stage with history as one side of the band
+    * join and the stream as the other. Stream side is MAP-ONLY: distinct
+    * shingles → [[bandKeys]] (per-seed `array_min` over the doc's own
+    * shingle array — no signature aggregation, no shuffle), then two
+    * STATELESS stream-static equi-joins: band keys against the history
+    * band index (candidates), and candidate pairs against the history
+    * shingle-set frame (the exact verify — per-pair work). The only
+    * stateful operator is the band join's `dropDuplicates` collapsing
+    * multi-band candidate hits; its state is one (doc_a, doc_b) key per
     * candidate. In production that dedup runs
     * `dropDuplicatesWithinWatermark` on ingest time so state evicts with
     * the watermark; this drain-and-stop harness discards the ephemeral
@@ -1142,11 +1094,9 @@ object Dedup {
     * over ~99% of the corpus). Attribute future drift by phase — only the
     * residual is this operator's plan. */
   def streamingHistoryNearDup(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batchSize: Long = 100L, numHashes: Int = 8, bandRows: Int = 2,
-      k: Int = 3, simThreshold: Double = 0.5,
+      batchSize: Long = 100L, simThreshold: Double = 0.5,
       historyRowCap: Long = HistoryIndexRowCap,
       historyShingleCap: Long = HistoryIndexShingleCap): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
     val all = graft.io.Tables(spark, dir, "documents")
     val maxRow = all.agg(max(expr(s"doc_id div $batchSize"))).head()
     val maxB = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
@@ -1160,67 +1110,46 @@ object Dedup {
     // TABLE (pre-partitioned by band_key); here the materialized rows
     // re-enter each settle session as local frames.
     val (bRows, bSchema, sRows, sSchema) = graft.io.TempDirs.once(
-      s"dedup-history#$dir|$batchSize|$numHashes|$bandRows|$k|$historyRowCap|$historyShingleCap") {
-        val history = spark.read.parquet(s"$dir/documents.parquet")
-          .filter(expr(s"doc_id div $batchSize") < maxB)
-        val hb = md5BandKeys(minhashMd5Signatures(history, numHashes, k), bandRows)
-          .select(col("doc_id").as("doc_a"), col("band_id"), col("band_key"))
-        val hs = history.withColumn("toks", TextAnalysis.tokens(col("text")))
-          .filter(size(col("toks")) >= k)
-          .select(col("doc_id").as("doc_a"),
-            array_distinct(TextAnalysis.shingles(col("toks"), k)).as("ss_a"))
-          .withColumn("n_a", size(col("ss_a")).cast("long"))
+      s"dedup-history#$dir|$batchSize|$historyRowCap|$historyShingleCap") {
+        val history = spreadScan(spark.read.parquet(s"$dir/documents.parquet")
+          .filter(expr(s"doc_id div $batchSize") < maxB))
+        val hs = shingleSets(history)
+        val hb = banded(hs, Md5Family)
         // CAP BEFORE COLLECT (round-19 verdict #5): this fixture is the
         // one collect in graft that is linear in corpus size with FAT
         // array rows, and it had no guard while every settle path did
         // (the exact parallel-path drift the settle cap exists for).
         // Both dimensions are checked DISTRIBUTED — row counts for both
         // frames, total shingle volume (the bytes driver) for the set
-        // frame — before a single row lands on the driver. Past the
-        // cap, the refusal points at the documented contract: at
-        // production scale the history index is a maintained TABLE
-        // pre-partitioned by band_key, joined distributed, never a
-        // driver-staged local frame.
-        val hbP = hb.persist(); val hsP = hs.persist()
-        try {
-          val bandRowsN = hbP.count()
-          val setStats = hsP.agg(count(lit(1)), sum(col("n_a"))).head()
-          val setRowsN = setStats.getLong(0)
-          val shingleN = if (setStats.isNullAt(1)) 0L else setStats.getLong(1)
-          require(bandRowsN <= historyRowCap && setRowsN <= historyRowCap &&
-              shingleN <= historyShingleCap,
-            s"history index for '$dir' is $bandRowsN band rows / " +
-              s"$setRowsN set rows / $shingleN shingles (caps " +
-              s"$historyRowCap rows, $historyShingleCap shingles): the " +
-              "driver-staged fixture is for test-scale corpora — maintain " +
-              "the index as a TABLE pre-partitioned by band_key and join " +
-              "the incoming batch against it distributed")
-          (hbP.collect(), hb.schema, hsP.collect(), hs.schema)
-        } finally { hbP.unpersist(): Unit; hsP.unpersist(): Unit }
+        // frame — before a single row lands on the driver. Every set row
+        // bands into exactly one row per band, so one aggregation over
+        // the sets gives both row counts. Past the cap, the refusal
+        // points at the documented contract: at production scale the
+        // history index is a maintained TABLE pre-partitioned by
+        // band_key, joined distributed, never a driver-staged local frame.
+        val setStats = hs.agg(count(lit(1)), sum(size(col("ss")))).head()
+        val setRowsN = setStats.getLong(0)
+        val bandRowsN = setRowsN * Md5Family.bands
+        val shingleN = if (setStats.isNullAt(1)) 0L else setStats.getLong(1)
+        require(bandRowsN <= historyRowCap && setRowsN <= historyRowCap &&
+            shingleN <= historyShingleCap,
+          s"history index for '$dir' is $bandRowsN band rows / " +
+            s"$setRowsN set rows / $shingleN shingles (caps " +
+            s"$historyRowCap rows, $historyShingleCap shingles): the " +
+            "driver-staged fixture is for test-scale corpora — maintain " +
+            "the index as a TABLE pre-partitioned by band_key and join " +
+            "the incoming batch against it distributed")
+        val hsA = hs.select(col("doc_id").as("doc_a"), col("ss").as("ss_a"))
+        (hb.collect(), hb.schema, hsA.collect(), hsA.schema)
       }
     settleDocs(spark, incoming, stream => {
       import scala.jdk.CollectionConverters._
       val s = stream.sparkSession
       val histBands = s.createDataFrame(bRows.toSeq.asJava, bSchema)
       val histSets = s.createDataFrame(sRows.toSeq.asJava, sSchema)
-      stream.withColumn("toks", TextAnalysis.tokens(col("text")))
-        .filter(size(col("toks")) >= k)
-        .select(col("doc_id").as("doc_b"),
-          array_distinct(TextAnalysis.shingles(col("toks"), k)).as("ss"))
-        .withColumn("n_b", size(col("ss")).cast("long"))
-        .select(col("doc_b"), col("ss"), col("n_b"),
-          explode(mapSideBandKeys(numHashes, bandRows)).as("bk"))
-        .select(col("doc_b"), col("ss"), col("n_b"),
-          col("bk.band_id").as("band_id"), col("bk.band_key").as("band_key"))
-        .join(broadcast(histBands), Seq("band_id", "band_key"))
-        .select(col("doc_a"), col("doc_b"), col("ss"), col("n_b"))
-        .dropDuplicates("doc_a", "doc_b")
-        .join(broadcast(histSets), "doc_a")
-        .withColumn("n_common", size(array_intersect(col("ss_a"), col("ss"))).cast("long"))
-        .withColumn("jaccard", round(col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6))
-        .filter(col("jaccard") >= simThreshold)
-        .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
+      val live = shingleSets(stream).withColumn("ss_b", col("ss"))
+      val cand = bandJoin(broadcast(histBands), banded(live, Md5Family), lit(true))
+      verify(cand.join(broadcast(histSets), "doc_a"), simThreshold)
     })
   }
 
@@ -1377,11 +1306,7 @@ object Dedup {
   /** [[dupTriage]] on a precomputed (doc_a, doc_b, n_common, jaccard)
     * verified-pair frame. */
   def dupTriageFrom(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    val sets = docs.withColumn("toks", TextAnalysis.tokens(col("text")))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalysis.shingles(col("toks"), 3))).as("s"))
-    val sizes = sets.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val sizes = shingleSets(docs).select(col("doc_id"), size(col("ss")).cast("long").as("n"))
     val hashes = docs.select(col("doc_id"), md5(col("text")).as("tm"))
     broadcast(pairs)
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")

@@ -19,7 +19,7 @@ class PlanLintSpec extends AnyFunSuite {
     "q52_streaming_tumbling", "q54_streaming_sessionize", "q58_stateful_user_stats",
     "q57_csv_labeled_roundtrip", "q60_als_recommend", "q61_als_eval",
     "q88_bucketed_join",  // writes the bucketed tables on construction; plan pinned in BucketingSpec
-    "q95_fuzzy_contamination",  // MinHashLSH fit + settle on construction
+    "q95_fuzzy_contamination",  // near-dup stage's localCheckpoint on construction
     "q99_neardup_components",   // label-propagation loop runs on construction; shape pinned in DedupSpec
     "q101_neardup_dedup",       // composes q99's eager loop
     "q113_stream_enrich",       // streaming settle on construction

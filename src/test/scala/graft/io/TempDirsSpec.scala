@@ -99,6 +99,16 @@ class TempDirsSpec extends AnyFunSuite {
         s"a second row decoder duplicates its id gate, mask, cap and decode. Found $hits")
   }
 
+  test("one MinHash near-dup stage: Dedup imports no spark.ml, persists nothing, and one builder makes band keys") {
+    val dedup = sourceHits("org\\.apache\\.spark\\.ml|persist\\(".r).filter(_._1 == "Dedup.scala")
+    assert(dedup.isEmpty,
+      "near-dup callers share Dedup's shingle-set, band-key, band-join and verify " +
+        s"stages; a second front end brings its own features and caches. Found $dedup")
+    val keys = sourceHits("""\.as\("band_key"\)""".r)
+    assert(keys.map(_._1) === List("Dedup.scala") && keys.head._3.contains("family.key("),
+      s"band keys come from Dedup.bandKeys alone; found $keys")
+  }
+
   test("no hand-rolled memo: only TempDirs and GlprSource.planEvents hold a ConcurrentHashMap") {
     val hits = sourceHits(
       "computeIfAbsent|new java\\.util\\.concurrent\\.ConcurrentHashMap".r)

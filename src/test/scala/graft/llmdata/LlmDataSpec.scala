@@ -163,7 +163,7 @@ class LlmDataSpec extends AnyFunSuite {
     // widen the corpus so LSH has something to bucket
     val filler = (10L until 60L).map(i => (i, s"filler doc number $i with unique tokens t$i u$i v$i w$i x$i", "en", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val pairs = Dedup.minhashPairs(docsWithDups.unionByName(filler), threshold = 0.9)
+    val pairs = Dedup.minhashNearDup(docsWithDups.unionByName(filler))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)) && pairs.contains((0L, 4L)) && pairs.contains((1L, 4L)))
   }
@@ -186,6 +186,64 @@ class LlmDataSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === expected)
     assert(got.nonEmpty)
+  }
+
+  /** 200 planted near-dup pairs among 200 unrelated filler docs: a text of
+    * 45–110 tokens and a copy with one interior word changed, the way
+    * perfbench's `Gen.corpus` plants them. Pair p is (2p, 2p + 1); filler
+    * ids start at 1000. Returns the docs and each pair's exact Jaccard. */
+  private lazy val planted: (org.apache.spark.sql.DataFrame, Map[(Long, Long), Double]) = {
+    val r = new scala.util.Random(1)
+    def words(len: Int) = Array.fill(len)(s"w${r.nextInt(20000)}")
+    def shingles(t: Array[String]) = t.sliding(3).map(_.mkString(" ")).toSet
+    val pairs = (0 until 200).map { p =>
+      val orig = words(45 + r.nextInt(66))
+      val copy = orig.clone()
+      val at = 2 + r.nextInt(orig.length - 4)
+      copy(at) = copy(at) + "x"
+      val (a, b) = (shingles(orig), shingles(copy))
+      ((2L * p, orig.mkString(" ")), (2L * p + 1, copy.mkString(" ")),
+        (a & b).size.toDouble / (a | b).size)
+    }
+    val filler = (0 until 200).map(i => (1000L + i, words(20 + r.nextInt(80)).mkString(" ")))
+    val docs = (pairs.flatMap { case (a, b, _) => Seq(a, b) } ++ filler).toDF("doc_id", "text")
+    (docs, pairs.map { case ((a, _), (b, _), j) => (a, b) -> j }.toMap)
+  }
+
+  test("near-dup recall on 200 planted pairs at Jaccard 0.85-0.95: minhashNearDup, " +
+    "fuzzyContamination and minhashMd5Pairs find every pair") {
+    val (docs, want) = planted
+    assert(want.values.forall(j => j >= 0.85 && j <= 0.95), want.values.toSeq.sorted.take(5))
+    def pairsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def missed(found: Set[(Long, Long)]) = want.keySet -- found
+    assert(missed(pairsOf(Dedup.minhashNearDup(docs))).isEmpty)
+    val copies = col("doc_id") < 1000L && col("doc_id") % 2 === 1L
+    assert(missed(pairsOf(Dedup.fuzzyContamination(docs.filter(!copies), docs.filter(copies))))
+      .isEmpty)
+    // md5's 4 two-row bands miss a pair with probability (1 − J²)^4, 1e-4
+    // to 4e-3 here, so about 0.2 misses are expected over these 200 pairs;
+    // this fixture has none, and a change to the md5 chain that loses
+    // recall shows here
+    assert(missed(pairsOf(Dedup.minhashMd5Pairs(docs))).isEmpty)
+  }
+
+  test("fuzzyContamination equals minhashNearDup's corpus x probe pairs, oriented (corpus, probe)") {
+    // every third id is a probe doc, so planted pairs fall within the
+    // corpus, within the probe set, and across it in both id orders
+    val (docs, _) = planted
+    val isProbe = (id: Long) => id % 3 == 0
+    val self = Dedup.minhashNearDup(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .collect {
+        case (a, b, j) if !isProbe(a) && isProbe(b) => (a, b, j)
+        case (a, b, j) if isProbe(a) && !isProbe(b) => (b, a, j)
+      }.toSet
+    val probe = col("doc_id") % 3 === 0L
+    val cross = Dedup.fuzzyContamination(docs.filter(!probe), docs.filter(probe)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(self.size > 50)
+    assert(cross === self)
   }
 
   test("simhashBandedPairs: perfect recall vs the bounded all-pairs baseline") {
