@@ -16,14 +16,25 @@ import graft.matrix.{CooMatrix, Marginals}
   *  - Driver path, for seeds of at most [[DriverCells]] cells: the seed
   *    (with its fit targets attached) is collected once and every sweep
   *    runs on primitive arrays, keys interned to `Int` ids. A Spark sweep
-  *    costs ~8 jobs of ~50 ms each however small the matrix, so on a
+  *    costs 7 jobs of ~50 ms each however small the matrix, so on a
   *    reference-sized problem a distributed fit is all overhead (McSherry,
   *    Isard and Murray, "Scalability! But at what COST?", HotOS 2015).
   *  - Distributed path, above it: the fit targets ride on the matrix as
   *    two extra columns, so a sweep is two keyed window sums (rows, then
-  *    columns) plus projections — no joins inside the loop. Periodic
-  *    `localCheckpoint` truncates lineage so the plan does not grow
-  *    O(iterations) — the classic Spark iterative-algorithm pattern.
+  *    columns) plus projections — no joins inside the loop. Every sweep
+  *    ends in a `localCheckpoint`, which truncates lineage so the plan
+  *    does not grow O(iterations) (the classic Spark iterative-algorithm
+  *    pattern), and the next loss check reads that checkpoint. A sweep
+  *    costs 7 Spark jobs: the checkpoint and the loss check with their
+  *    AQE stage jobs (`IpfSpec` pins the figure).
+  *
+  * Checkpoint cadence, measured on a generated 12,000 × 168 seed
+  * (2,016,000 cells, Zipf row masses, equal-mass marginals), 8 sweeps,
+  * converge + count, 10 warm alternating pairs (4-vCPU VM, local[4]):
+  * a checkpoint every sweep took median 21.2 s (quartiles 20.7-22.1),
+  * every other sweep 22.3 s (21.7-23.4), and every other sweep was faster
+  * in 1 pair of 10. Both ran 62 jobs: a state that is not checkpointed
+  * is computed twice, by its loss check and again by the next checkpoint.
   */
 object Ipf {
 
@@ -38,7 +49,10 @@ object Ipf {
     *    distributed 14.25 and 14.24 s;
     *  - q26's converge + count at sf0.1 (220,214 cells, 8 sweeps), 7
     *    alternating pairs: driver median 2.97 s (quartiles 2.51-3.04),
-    *    distributed 6.07 s (5.51-6.23), the driver faster in every pair. */
+    *    distributed 6.07 s (5.51-6.23), the driver faster in every pair.
+    * The driver path also wins above it, on the cadence probe of the
+    * [[Ipf]] scaladoc (2,016,000 cells, forced, 5 warm reps): median
+    * 15.6 s (quartiles 15.4-16.0) against the distributed 21.2 s. */
   private val DriverCells = 1 << 20
 
   /** Reference `converge` (`core.clj:99-119`) with its exact stopping
@@ -51,43 +65,21 @@ object Ipf {
     *
     * A seed of at most [[DriverCells]] cells is fitted on the driver (see
     * [[Ipf]]); the result is the same up to floating-point summation
-    * order, in a DataFrame with the same schema. `checkpointEvery` and
-    * `lossEvery` shape the distributed path only; on the driver a loss is
-    * a pass over an array, so `lossEvery` changes which losses are
-    * computed but not the cost, and there is no lineage to truncate.
-    *
-    * `checkpointEvery` controls how often lineage is truncated; 1 is the
-    * safe default, higher values trade driver round-trips for plan size
-    * (q26 runs faster at 2 on the distributed path; numbers in
-    * `Queries.ipfConverge`).
-    *
-    * `lossEvery` batches the convergence check (SURVEY.md §7.4 item 1):
-    * the loss is a driver-side scalar collect — a full job plus a barrier
-    * per iteration — so when far from convergence it is computed only at
-    * every `lossEvery`-th iteration, and the stopping rule is evaluated
-    * against those boundary losses (`lossDiff` then spans a batch rather
-    * than one step). With the default 1 the reference's per-iteration
-    * semantics (`core.clj:111-117`) hold exactly; with k > 1 a
-    * threshold-stop can overshoot by up to k−1 steps, while an
-    * iteration-capped run returns the identical matrix. Whatever the
-    * batching, the returned `Result.loss` is always the reference-lag loss
-    * of the *final* step (recomputed after the loop when the last boundary
-    * check predates it), never a stale boundary value.
+    * order, in a DataFrame with the same schema.
     */
   def converge(
       x: DataFrame, y: DataFrame, seed: CooMatrix,
       threshold: Double = 1e-15, maxIter: Int = 1000,
-      verbose: Boolean = false, checkpointEvery: Int = 1,
-      lossEvery: Int = 1): Result =
-    solve(x, y, seed, threshold, maxIter, verbose, checkpointEvery, lossEvery, _ <= DriverCells)
+      verbose: Boolean = false): Result =
+    solve(x, y, seed, threshold, maxIter, verbose, _ <= DriverCells)
 
   /** [[converge]] with the path chosen by `onDriver(cells)`, the fused
     * seed's cell count; tests force either path with it. */
   private[ipf] def solve(
       x: DataFrame, y: DataFrame, seed: CooMatrix,
-      threshold: Double, maxIter: Int, verbose: Boolean, checkpointEvery: Int,
-      lossEvery: Int, onDriver: Long => Boolean): Result = {
-    require(maxIter >= 0 && checkpointEvery >= 1 && lossEvery >= 1)
+      threshold: Double, maxIter: Int, verbose: Boolean,
+      onDriver: Long => Boolean): Result = {
+    require(maxIter >= 0)
     import org.apache.spark.sql.functions._
     import CooMatrix.{Row, Col, Value, Idx}
     // x is a loop constant that every loss check reads, so materialize it
@@ -146,54 +138,37 @@ object Ipf {
         fused.select(col(Row), col(Col), col(Value).cast("double"),
           col(Tx).cast("double"), col(Ty).cast("double")).collect(),
         xRows, spark.conf.get("spark.sql.ansi.enabled").toBoolean)
-      val (s, loss, iterations) =
-        drive(d.seed, threshold, maxIter, verbose, lossEvery)((s, _) => d.sweep(s), d.loss)
+      val (s, loss, iterations) = drive(d.seed, threshold, maxIter, verbose)(d.sweep, d.loss)
       val matrix =
         if (iterations == 0) asCoo(fused)
         else CooMatrix(spark.createDataFrame(d.rows(s), asCoo(fusedStep(fused)).df.schema))
       Result(matrix, loss, iterations)
     } else {
-      val (m, loss, iterations) = drive(fused, threshold, maxIter, verbose, lossEvery)(
-        (df, k) => if (k % checkpointEvery == 0) ckpt(fusedStep(df)) else fusedStep(df),
-        df => Marginals.rmse(xc, asCoo(df).sumRows))
+      val (m, loss, iterations) = drive(fused, threshold, maxIter, verbose)(
+        df => ckpt(fusedStep(df)), df => Marginals.rmse(xc, asCoo(df).sumRows))
       Result(asCoo(m), loss, iterations)
     }
   }
 
-  /** The stopping rule both paths run: `step(state, k)` is sweep k (from
-    * 0) and must leave `state` intact, `loss(state)` the rmse of x against
-    * the row sums of `state`. Returns the final state, the reference-lag
-    * loss of the final step and the number of steps. */
-  private def drive[S](init: S, threshold: Double, maxIter: Int, verbose: Boolean,
-      lossEvery: Int)(step: (S, Int) => S, loss: S => Double): (S, Double, Int) = {
-    var cur = init
-    var prev = cur             // state before the most recent step
+  /** The stopping rule both paths run: `step(state)` is one sweep and
+    * must leave `state` intact, `loss(state)` the rmse of x against the
+    * row sums of `state`. Returns the final state, its reference-lag loss
+    * and the number of steps. */
+  private def drive[S](init: S, threshold: Double, maxIter: Int, verbose: Boolean)(
+      step: S => S, loss: S => Double): (S, Double, Int) = {
+    var matrix = init
     var lastLoss = Int.MaxValue.toDouble
     var lossDiff = Int.MaxValue.toDouble
-    var lossIsFinal = false    // lastLoss was computed for the last executed step
     var iteration = maxIter
     while (!(lastLoss < threshold || lossDiff < threshold || iteration == 0)) {
-      val k = maxIter - iteration
-      val next = step(cur, k)
-      if (k % lossEvery == 0) {
-        val l = loss(cur)
-        lossDiff = math.abs(lastLoss - l)
-        lastLoss = l
-        lossIsFinal = true
-        if (verbose) println(s"loss=$lastLoss diff=$lossDiff iter=$iteration")
-      } else {
-        lossIsFinal = false
-        if (verbose) println(s"loss=<batched, next check in ${lossEvery - k % lossEvery}> iter=$iteration")
-      }
-      prev = cur
-      cur = next; iteration -= 1
+      val next = step(matrix)
+      val l = loss(matrix)
+      lossDiff = math.abs(lastLoss - l)
+      lastLoss = l
+      if (verbose) println(s"loss=$lastLoss diff=$lossDiff iter=$iteration")
+      matrix = next; iteration -= 1
     }
-    // With lossEvery > 1 the loop can exit on the iteration cap between
-    // boundary checks; recompute so the loss is the final step's
-    // reference-lag loss (rmse of x vs the pre-step row sums), not a value
-    // up to lossEvery-1 steps stale.
-    val finalLoss = if (iteration == maxIter || lossIsFinal) lastLoss else loss(prev)
-    (cur, finalLoss, maxIter - iteration)
+    (matrix, lastLoss, maxIter - iteration)
   }
 
   /** The driver path's IPF over primitive arrays, with the distributed

@@ -301,8 +301,8 @@ object Curation {
     * target) on the tiny count matrix, with the q76 cross-engine
     * determinism recipe: the row fit's output is rounded to 6dp before the
     * column fit consumes it, and the column fit is
-    * [[graft.matrix.CooMatrix.fitRowsExact]] (DECIMAL(38,6) denominator —
-    * order-independent). Targets are derived distributively (distinct
+    * [[graft.matrix.CooMatrix.fitRowsExact]] (DECIMAL(38,6) window
+    * denominator — order-independent). Targets are derived distributively (distinct
     * sources/langs crossJoin one broadcast totals row) — no driver-side
     * scalar. Returns per (source, lang): observed count, fitted count, and
     * the sampling weight fitted/observed, feeding [[mixCorpus]]-style

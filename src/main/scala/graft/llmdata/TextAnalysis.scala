@@ -201,7 +201,7 @@ object TextAnalysis {
     require(steps >= 1)
     // Each merge step embeds the prior vocab plan TWICE (pair-count agg +
     // crossJoin probe) — the same 2^k leaf-doubling measured for agg+join
-    // IPF chains (CooMatrix.fitRowsExactOnePass scaladoc). A lineage
+    // IPF chains (CooMatrix.fitRowsExact scaladoc). A lineage
     // checkpoint every few steps caps the doubling (values unchanged —
     // truncation only); the shipped steps=2..3 certification paths never
     // hit it and stay fully lazy.

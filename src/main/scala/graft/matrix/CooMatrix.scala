@@ -1,6 +1,6 @@
 package graft.matrix
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,8 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 final case class CooMatrix(df: DataFrame) {
   import CooMatrix._
-
-  private def spark: SparkSession = df.sparkSession
 
   /** Swap axes. Reference `core.clj:32-35`. Pure projection — no shuffle. */
   def transpose: CooMatrix =
@@ -84,73 +82,47 @@ final case class CooMatrix(df: DataFrame) {
         .select(df(Row), df(Col), (df(Value) * col(Factor)).as(Value)))
   }
 
-  /** [[fitRows]] with order-independent row sums: the factor denominator is
-    * aggregated through `DECIMAL(38, sumScale)` so it is exact — independent
-    * of partitioning and combine order — whenever the cell values carry at
-    * most `sumScale` decimal places. Same plan shape as [[fitRows]] (one
-    * aggregation + one join); the decimal partial aggregation still combines
-    * map-side. Use on fixed-precision cells when a fit must reproduce
-    * bit-identically across engines or cluster layouts (oracle parity,
-    * deterministic replays); [[fitRows]] remains the general-precision
-    * path. */
-  def fitRowsExact(marginal: DataFrame, sumScale: Int = 6): CooMatrix = {
-    val factors = df.groupBy(Row)
-      .agg(sum(df(Value).cast(DecimalType(38, sumScale))).cast("double").as(Value))
-      .select(col(Row).as(Idx), col(Value))
-      .join(marginal.select(col(Idx), col(Value).as(Target)), Idx)
-      .select(col(Idx), (col(Target) / col(Value)).as(Factor))
-    CooMatrix(
-      df.join(factors, df(Row) === factors(Idx))
-        .select(df(Row), df(Col), (df(Value) * col(Factor)).as(Value)))
-  }
-
   /** [[fitRows]] computed in one pass (window row-sum + broadcast
-    * marginal), the general-precision sibling of [[fitRowsExactOnePass]].
+    * marginal), the general-precision sibling of [[fitRowsExact]].
     * Double window sums and double hash-agg sums can differ in the last
     * ulps (combine order), so this is for paths checked by envelope or
-    * tolerance (the q26 convergence loop), not the hash-certified chains. */
-  def fitRowsOnePass(marginal: DataFrame): CooMatrix = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(Row)
-    CooMatrix(df
-      .withColumn(RowSum, sum(df(Value)).over(w))
-      .join(broadcast(marginal.select(col(Idx).as(Row), col(Value).as(Target))), Row)
-      .select(col(Row), col(Col),
-        (col(Value) * (col(Target) / col(RowSum))).as(Value)))
-  }
+    * tolerance, not the hash-certified chains. */
+  def fitRowsOnePass(marginal: DataFrame): CooMatrix =
+    fitRowsBy(sum(df(Value)).over(ByRow), marginal)
 
-  /** [[fitRowsExact]] computed in ONE pass over the matrix: the decimal
-    * row-sum denominator comes from a window aggregate partitioned by
-    * `row` instead of a groupBy + self-join, and the marginal (one row per
-    * fitted index — always the small side) is broadcast. Bit-identical to
-    * [[fitRowsExact]]: a decimal sum is order-independent, so window and
-    * hash aggregation produce the same denominator, and the factor keeps
-    * the same float association (`target / rowsum`, then `value * factor`).
+  /** [[fitRowsOnePass]] with order-independent row sums: the factor
+    * denominator is a window sum through `DECIMAL(38, 6)`, so it is exact
+    * (independent of partitioning, combine order and engine) whenever the
+    * cell values carry at most 6 decimal places, and the factor keeps the
+    * reference association (`target / rowsum`, then `value * factor`).
+    * Use on fixed-precision cells when a fit must reproduce bit-identically
+    * across engines or cluster layouts (the oracle-certified q76, q94,
+    * q121 and q160 chains).
     *
-    * Why it exists: each [[fitRowsExact]] consumes its input TWICE (agg
+    * One pass: the row sum comes from a window partitioned by `row`, and
+    * the marginal (one row per fitted index, always the small side) is
+    * broadcast. An agg + self-join fit consumes its input TWICE (agg
     * subtree + join probe), so an unrolled chain of k fits doubles the
-    * logical plan per fit — 2^k leaves, super-linear planning AND
-    * execution that lineage checkpoints only cap at ~2s per truncation
-    * barrier (measured). A window fit consumes its input once, so a k-fit
-    * chain stays a linear narrow plan: 2/4/8 unrolled sweeps measured
-    * 0.99/1.13/1.06s at sf0.1 vs 2.2/6.1/10.2s for the checkpointed
-    * agg+join chain.
+    * logical plan per fit (2^k leaves); a window fit consumes it once, so
+    * a k-fit chain stays a linear narrow plan: 2/4/8 unrolled sweeps
+    * measured 0.99/1.13/1.06s at sf0.1 vs 2.2/6.1/10.2s for the
+    * checkpointed agg+join chain.
     *
-    * Scale tradeoff, scaladoc'd deliberately: WindowExec buffers one
-    * partition group at a time through a spillable row array, so a fitted
-    * dimension whose co-dimension is huge (billions of cells in one row)
-    * degrades to disk spill where [[fitRowsExact]]'s hash agg combines
-    * map-side; and the broadcast needs the marginal to fit on the driver.
-    * Iterative certification chains over bounded matrices (IPF sweeps:
-    * |parts|×|months|) want THIS shape; one-shot fits on arbitrary
-    * matrices keep the agg+join. */
-  def fitRowsExactOnePass(marginal: DataFrame, sumScale: Int = 6): CooMatrix = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(Row)
+    * Scale tradeoff: WindowExec buffers one partition group at a time
+    * through a spillable row array, so a fitted dimension whose
+    * co-dimension is huge (billions of cells in one row) degrades to disk
+    * spill where [[fitRows]]'s hash agg combines map-side; and the
+    * broadcast needs the marginal to fit on the driver. */
+  def fitRowsExact(marginal: DataFrame): CooMatrix =
+    fitRowsBy(sum(df(Value).cast(DecimalType(38, 6))).over(ByRow).cast("double"), marginal)
+
+  /** `value * (target / rowSum)` against the broadcast marginal. */
+  private def fitRowsBy(rowSum: Column, marginal: DataFrame): CooMatrix =
     CooMatrix(df
-      .withColumn(RowSum, sum(df(Value).cast(DecimalType(38, sumScale))).over(w).cast("double"))
+      .withColumn(RowSum, rowSum)
       .join(broadcast(marginal.select(col(Idx).as(Row), col(Value).as(Target))), Row)
       .select(col(Row), col(Col),
         (col(Value) * (col(Target) / col(RowSum))).as(Value)))
-  }
 
   /** Element-wise combine on the intersection of supports (inner join on
     * (row, col)). Covers the reference's positional zips: `apply-weights`
@@ -180,7 +152,6 @@ final case class CooMatrix(df: DataFrame) {
 
   def plus(other: CooMatrix): CooMatrix = zipOuter(other, _ + _)
   def minus(other: CooMatrix): CooMatrix = zipOuter(other, _ - _)
-  def hadamard(other: CooMatrix): CooMatrix = zip(other, _ * _)
 
   /** |pᵢⱼ − qᵢⱼ| over the union of supports. Reference `error-matrix`
     * (`core.clj:129-132`). */
@@ -215,12 +186,6 @@ final case class CooMatrix(df: DataFrame) {
           ((col(Value) - col("mn")) / (col("mx") - col("mn"))).as(Value)))
   }
 
-  /** Σ over rows of row-L2-norms (entrywise L2,1 norm). Reference
-    * `matrix-norm` (`core.clj:134-136`). Two-level aggregation. */
-  def l21Norm: Double =
-    df.groupBy(Row).agg(sqrt(sum(col(Value) * col(Value))).as("n"))
-      .agg(coalesce(sum("n"), lit(0.0))).head().getDouble(0)
-
   def grandTotal: Double =
     df.agg(coalesce(sum(Value), lit(0.0))).head().getDouble(0)
 
@@ -238,36 +203,16 @@ final case class CooMatrix(df: DataFrame) {
     val cp = df.localCheckpoint(true)
     CooMatrix(df.sparkSession.createDataFrame(cp.rdd, cp.schema))
   }
-
-  /** Collect to a local dense structure keyed by (row, col) — small
-    * matrices / tests only. */
-  def toLocalMap: Map[(Any, Any), Double] =
-    df.collect().map(r => ((r.get(0), r.get(1)), r.getDouble(2))).toMap
 }
 
 object CooMatrix {
   val Row = "row"; val Col = "col"; val Value = "value"; val Idx = "idx"
   private val RowSum = "__row_sum"; private val Target = "__target"; private val Factor = "__factor"
+  private val ByRow = org.apache.spark.sql.expressions.Window.partitionBy(Row)
 
   /** Normalize an arbitrary 3-column DataFrame into COO shape. */
   def fromDF(df: DataFrame, row: String, col0: String, value: String): CooMatrix =
     CooMatrix(df.select(col(row).as(Row), col(col0).as(Col), col(value).cast("double").as(Value)))
-
-  /** Build from a local dense row-major matrix (tests / reference parity). */
-  def fromDense(spark: SparkSession, m: Seq[Seq[Double]]): CooMatrix = {
-    import spark.implicits._
-    val triples = for {
-      (r, i) <- m.zipWithIndex
-      (v, j) <- r.zipWithIndex
-    } yield (i.toLong, j.toLong, v)
-    CooMatrix(triples.toDF(Row, Col, Value))
-  }
-
-  /** Marginal vector from local values (index = position). */
-  def marginal(spark: SparkSession, v: Seq[Double]): DataFrame = {
-    import spark.implicits._
-    v.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF(Idx, Value)
-  }
 
   /** Outer product u·vᵀ of two marginals. Reference `seed-matrix`
     * (`core.clj:78-80`, built there via `mmult` of a column by a row).

@@ -107,8 +107,7 @@ object Dense {
     * (`core.clj:108-109`). */
   def converge(
       x: Marginal, y: Marginal, seed: Matrix,
-      threshold: Double = 1e-15, maxIter: Int = 1000,
-      verbose: Boolean = false): Result = {
+      threshold: Double = 1e-15, maxIter: Int = 1000): Result = {
     var matrix = seed
     var lastLoss = Int.MaxValue.toDouble
     var lossDiff = Int.MaxValue.toDouble
@@ -117,7 +116,6 @@ object Dense {
       val next = step(x, y, matrix)
       val loss = rmse(x, sumRows(matrix))
       val diff = math.abs(lastLoss - loss)
-      if (verbose) println(s"loss=$lastLoss diff=$lossDiff iter=$iteration")
       matrix = next; lastLoss = loss; lossDiff = diff; iteration -= 1
     }
     Result(matrix, lastLoss, maxIter - iteration)

@@ -16,11 +16,12 @@ import graft.matrix.CooMatrix
   *
   * Catalyst handles pushdown/pruning wholesale. The melt is narrow; the
   * shuffles are the two `distinct` key sets and the anti-join in
-  * [[padMissingKeywords]], IPF's two window sums per sweep on its
-  * distributed path only (a problem of at most `Ipf`'s driver threshold,
-  * every reference-sized request among them, is collected once and fitted
-  * on the driver), the cost-per-visit join when that matrix is used, and
-  * the sink's pivot and its single-partition sort.
+  * [[padMissingKeywords]], the cost-per-visit join when that matrix is
+  * used, and the sink's pivot and its single-partition sort. A problem of
+  * at most `Ipf`'s driver threshold, every reference-sized request among
+  * them, is collected once and fitted on the driver with no job per
+  * sweep; only a larger one runs the distributed loop (two window sums,
+  * a checkpoint and a loss check per sweep).
   */
 object CostAllocation {
 
@@ -61,14 +62,14 @@ object CostAllocation {
       spark: SparkSession,
       keywordsCsv: String, hoursCsv: String, visitsCsv: String,
       threshold: Double = 1e-15, maxIter: Int = 1000,
-      alpha: Double = 1e-15, verbose: Boolean = false): Allocation = {
+      alpha: Double = 1e-15): Allocation = {
 
     val x = keywordCosts(CsvSources.readKeywords(spark, keywordsCsv))
     val y = hourCosts(CsvSources.readHours(spark, hoursCsv))
     val visits = CsvSources.visitsCoo(CsvSources.readVisitsWide(spark, visitsCsv))
     val padded = padMissingKeywords(visits, x)
     val seed = padded.laplaceSmooth(alpha) // core.clj:187
-    val result = Ipf.converge(x, y, seed, threshold, maxIter, verbose)
+    val result = Ipf.converge(x, y, seed, threshold, maxIter)
     val cpv = result.matrix.safeDivide(visits) // core.clj:191-197 (observed cells only)
     Allocation(result.matrix, cpv, result.loss, result.iterations)
   }

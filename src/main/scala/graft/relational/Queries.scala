@@ -379,10 +379,9 @@ object Queries {
     // Sweep 1 keeps the reference's double row-sum semantics
     // (fitRowsOnePass; hash-vs-window ulps are absorbed by the 6dp
     // round exactly like the hash-vs-DuckDB ulps always were), sweep 2
-    // keeps the decimal-exact column denominator (fitRowsExactOnePass,
-    // bit-identical to fitRowsExact by decimal order-independence).
+    // keeps the decimal-exact column denominator (fitRowsExact).
     val sweep1 = m.fitRowsOnePass(x).mapValues(round(_, 6))
-    val sweep2 = sweep1.transpose.fitRowsExactOnePass(y).transpose
+    val sweep2 = sweep1.transpose.fitRowsExact(y).transpose
     named(sweep2, roundTo = 6)
   }
 
@@ -393,16 +392,15 @@ object Queries {
     * This closes the one §2 gap q76 left: q76 proves a single sweep, this
     * proves the *chained* loop semantics (each sweep consuming the previous
     * sweep's output) with a cross-engine oracle; q26 keeps the genuinely
-    * iterative driver (loss-lag stopping, checkpoint cadence) as rows-only.
+    * iterative loop (loss-lag stopping) as rows-only.
     *
     * Cross-engine determinism, compounding over sweeps: every fit is
-    * [[CooMatrix.fitRowsExactOnePass]] — the factor denominator aggregates
+    * [[CooMatrix.fitRowsExact]] — the factor denominator aggregates
     * through DECIMAL(38,6) (window sum == hash-agg sum for decimals, both
-    * equal DuckDB's), with the factor association (`target/rowsum`, then
-    * `value*factor`) identical to [[CooMatrix.fitRowsExact]] — and every
-    * fit's output is rounded to 6dp before the next fit consumes it, so
-    * both engines re-enter each sweep from identical 6dp-representable
-    * cells.
+    * equal DuckDB's), with the factor association `target/rowsum`, then
+    * `value*factor` — and every fit's output is rounded to 6dp before the
+    * next fit consumes it, so both engines re-enter each sweep from
+    * identical 6dp-representable cells.
     *
     * Plan shape: the one-pass fit consumes the matrix ONCE, so the whole
     * unrolled chain is a linear narrow plan — no lineage checkpoints, no
@@ -435,7 +433,7 @@ object Queries {
         col("l_returnflag").as("mlay"))
       .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
         .cast("double").as("mval"))
-    // One-pass window fit (r22) — the fitRowsExactOnePass shape applied to
+    // One-pass window fit (r22) — the fitRowsExact shape applied to
     // the 3-marginal rake: the agg+join fit consumed `m` TWICE per fit
     // (denominator subtree + join probe), so the 3-fit chain re-planned
     // and re-executed the m subtree up to 2^3 times (the q121 history).
@@ -466,14 +464,16 @@ object Queries {
       .agg(dsum(col("l_quantity")).as(CooMatrix.Value))
     var m = asCoo(cooExact(s, dir, "l_extendedprice"))
     for (_ <- 1 to steps) {
-      m = m.fitRowsExactOnePass(x).mapValues(round(_, 6))
-      m = m.transpose.fitRowsExactOnePass(y).mapValues(round(_, 6)).transpose
+      m = m.fitRowsExact(x).mapValues(round(_, 6))
+      m = m.transpose.fitRowsExact(y).mapValues(round(_, 6)).transpose
     }
     named(m)
   }
 
-  /** Full distributed IPF convergence on the lineitem COO (rows-only
-    * check — iterative, not single-statement SQL). */
+  /** IPF convergence on the lineitem COO through [[Ipf.converge]], capped
+    * at `maxIter` sweeps (rows-only check: iterative, not single-statement
+    * SQL). The seed is 220,214 cells at sf0.1 and fewer below, so every
+    * testdata size takes the driver path. */
   def ipfConverge(s: SparkSession, dir: String, maxIter: Int = 8): DataFrame = {
     val li = t(s, dir, "lineitem")
     val seed = CooMatrix(li.groupBy(col("l_partkey").as(CooMatrix.Row),
@@ -483,48 +483,7 @@ object Queries {
       .agg(sum("l_extendedprice").as(CooMatrix.Value))
     val y = li.groupBy(month(col("l_shipdate")).cast("long").as(CooMatrix.Idx))
       .agg(sum("l_extendedprice").as(CooMatrix.Value))
-    // Batched loss checks + 2-step checkpoints: this run is iteration-capped
-    // (loss never reaches 1e-9 within 8 sweeps), so the final matrix is
-    // identical to per-iteration checking with a fraction of the driver
-    // barriers. lossEvery=maxIter leaves exactly TWO loss barriers: the
-    // k=0 in-loop boundary (the batched stopping rule stays exercised on
-    // the shipped path) and the post-loop recompute for the final step
-    // (maxIter−1 is never a boundary) — r21 dropped the old mid-run k=5
-    // check, which could not influence this iteration-capped run's
-    // stopping decision (its lossDiff is astronomically above 1e-9) and
-    // cost one full driver barrier (~0.6s, the round-12 envelope's
-    // per-barrier figure). (checkpointEvery=4 measured *slower* — the
-    // 8-deep join/agg lineage costs more in planning than the saved
-    // materialization barriers.)
-    //
-    // The envelope below is for Ipf.converge's DISTRIBUTED path. q26's
-    // seed is 220,214 cells at sf0.1 (fewer below), under the driver
-    // threshold, so sf0.001 through sf0.1 now take the driver path, where
-    // the knobs above have no cost effect: one collect, then all sweeps on
-    // the driver (sf0.1, local[4], converge + count, 7 alternating warm
-    // pairs: driver median 2.97 s, distributed 6.07 s).
-    //
-    // COST ENVELOPE (round 12, warm JVM, sf0.1, local[32], one-pass window
-    // sweeps). Total wall is linear in sweeps:
-    //   total ≈ 0.9s fixed + 0.55s/sweep + 0.63s per loss barrier
-    // measured as: maxIter 2/4/8 → 2.27/2.88/5.10s (slope 0.55); 7 extra
-    // loss barriers (lossEvery 1 vs 100) → +4.43s (0.63 each); checkpoint
-    // cadence 1 vs 2 within noise (5.25 vs 5.10). Re-measured on the
-    // fused r22 sweep, cadence 2 wins clearly: ten alternating warm pairs
-    // at sf0.1, local[4] (4-vCPU VM), converge + count, gave
-    // ck=1 median 5.58s (IQR 5.14-6.05) vs ck=2 4.74s (IQR 4.53-4.97),
-    // ck=2 faster in 10 of 10 pairs. Round-10's agg+join sweeps measured
-    // 0.71s/sweep, 6.40s total — the one-pass window fit is where the
-    // saving came from. r21 re-tuned the intercept, not the slope:
-    // loop-constant marginals are checkpointed once inside converge (each
-    // sweep's two broadcast builds re-ran the lineitem scan+agg before)
-    // and one loss barrier was dropped; this config (ck=2, loss=maxIter,
-    // 8 sweeps, 1 in-loop + 1 final loss) landed at ~3.2-3.5s warm at
-    // local[32] against a 4.37s r21 baseline. A q26 outside ~3-6s at sf0.1
-    // with these knobs means a phase regressed: attribute by slope (sweep
-    // cost) vs intercept shift (loss/checkpoint cost) before tuning.
-    val r = Ipf.converge(x, y, seed, threshold = 1e-9, maxIter = maxIter,
-      checkpointEvery = 2, lossEvery = maxIter)
+    val r = Ipf.converge(x, y, seed, threshold = 1e-9, maxIter = maxIter)
     named(r.matrix, roundTo = 4)
   }
 

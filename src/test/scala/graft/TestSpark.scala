@@ -21,4 +21,25 @@ object TestSpark {
 
   def resource(name: String): String =
     getClass.getResource(s"/cost_allocation/$name").getPath
+
+  /** `body`'s result and the number of Spark jobs it submitted, counted by
+    * a listener that sees only jobs carrying this call's local property. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobCount"
+    val id = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && id == e.properties.getProperty(tag)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, id)
+      val result = try body finally sc.setLocalProperty(tag, null)
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -2,7 +2,7 @@ package graft.ipf
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.TestSpark
+import graft.{TestCoo, TestSpark}
 import graft.matrix.{CooMatrix, Dense}
 
 class IpfSpec extends AnyFunSuite {
@@ -14,9 +14,8 @@ class IpfSpec extends AnyFunSuite {
 
   /** `Ipf.converge` forced onto the driver path or the distributed one. */
   def onPath(driver: Boolean, x: DataFrame, y: DataFrame, seed: CooMatrix,
-      threshold: Double = 1e-15, maxIter: Int = 1000, checkpointEvery: Int = 1,
-      lossEvery: Int = 1): Ipf.Result =
-    Ipf.solve(x, y, seed, threshold, maxIter, false, checkpointEvery, lossEvery, _ => driver)
+      threshold: Double = 1e-15, maxIter: Int = 1000): Ipf.Result =
+    Ipf.solve(x, y, seed, threshold, maxIter, false, _ => driver)
 
   def close(a: Double, b: Double): Boolean =
     a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
@@ -31,10 +30,9 @@ class IpfSpec extends AnyFunSuite {
     * convergence the loss is a difference of nearly equal sums, so the
     * error summation order leaves in it scales with x, not with the loss. */
   def assertPathsAgree(x: DataFrame, y: DataFrame, seed: CooMatrix,
-      threshold: Double = 1e-15, maxIter: Int = 1000, checkpointEvery: Int = 1,
-      lossEvery: Int = 1): Ipf.Result = {
-    val d = onPath(driver = true, x, y, seed, threshold, maxIter, checkpointEvery, lossEvery)
-    val s = onPath(driver = false, x, y, seed, threshold, maxIter, checkpointEvery, lossEvery)
+      threshold: Double = 1e-15, maxIter: Int = 1000): Ipf.Result = {
+    val d = onPath(driver = true, x, y, seed, threshold, maxIter)
+    val s = onPath(driver = false, x, y, seed, threshold, maxIter)
     assert(d.iterations === s.iterations)
     val scale = math.max(math.abs(s.loss), graft.matrix.Marginals.l2Norm(x))
     assert(d.loss == s.loss || math.abs(d.loss - s.loss) <= 1e-12 * scale,
@@ -48,8 +46,9 @@ class IpfSpec extends AnyFunSuite {
     d
   }
 
-  def fixture(s: SparkSession, dense: Seq[Seq[Double]] = seed): (DataFrame, DataFrame, CooMatrix) =
-    (CooMatrix.marginal(s, x), CooMatrix.marginal(s, y), CooMatrix.fromDense(s, dense))
+  def fixture(s: SparkSession, dense: Seq[Seq[Double]] = seed, dx: Seq[Double] = x,
+      dy: Seq[Double] = y): (DataFrame, DataFrame, CooMatrix) =
+    (TestCoo.marginal(s, dx), TestCoo.marginal(s, dy), TestCoo.fromDense(s, dense))
 
   test("ipfUnrolled: bit-exact vs a local BigDecimal replay of 2 chained sweeps") {
     import graft.relational.Queries
@@ -108,54 +107,29 @@ class IpfSpec extends AnyFunSuite {
   }
 
   test("distributed converge matches dense result") {
-    val dense = Dense.converge(x, y, seed, threshold = 1e-10, maxIter = 50)
-    val dist = onPath(driver = false,
-      CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
-      CooMatrix.fromDense(spark, seed), threshold = 1e-10, maxIter = 50)
-    assert(dist.iterations === dense.iterations)
-    assert(math.abs(dist.loss - dense.loss) < 1e-8)
-    val got = dist.matrix.toLocalMap
-    for { i <- 0 until 2; j <- 0 until 3 }
-      assert(math.abs(got((i.toLong, j.toLong)) - dense.matrix(i)(j)) < 1e-8)
-  }
-
-  test("batched loss checks: identical final matrix on an iteration-capped run") {
-    val perIter = Ipf.converge(
-      CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
-      CooMatrix.fromDense(spark, seed), threshold = 1e-15, maxIter = 6)
-    val batched = Ipf.converge(
-      CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
-      CooMatrix.fromDense(spark, seed), threshold = 1e-15, maxIter = 6,
-      checkpointEvery = 2, lossEvery = 3)
-    assert(batched.iterations === perIter.iterations)
-    // Steps run at k = 0..5; the last boundary check is k=3, so the exit is
-    // mid-batch and Result.loss comes from the post-loop recompute — this
-    // asserts that branch returns the per-iteration (final-step) loss.
-    assert(math.abs(batched.loss - perIter.loss) < 1e-12,
-      s"batched loss ${batched.loss} != per-iteration loss ${perIter.loss}")
-    val a = perIter.matrix.toLocalMap
-    val b = batched.matrix.toLocalMap
-    assert(a.keySet === b.keySet)
-    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12) }
-  }
-
-  test("batched loss: cap landing ON a boundary also reports the final step's loss") {
-    // maxIter=7, lossEvery=3: the last step (k=6) IS a boundary check, so
-    // lossIsFinal holds at exit and Result.loss must come straight from
-    // that check — the complementary path to the 6/3 recompute test above.
-    val perIter = Ipf.converge(
-      CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
-      CooMatrix.fromDense(spark, seed), threshold = 1e-15, maxIter = 7)
-    val batched = Ipf.converge(
-      CooMatrix.marginal(spark, x), CooMatrix.marginal(spark, y),
-      CooMatrix.fromDense(spark, seed), threshold = 1e-15, maxIter = 7,
-      checkpointEvery = 2, lossEvery = 3)
-    assert(batched.iterations === perIter.iterations)
-    assert(math.abs(batched.loss - perIter.loss) < 1e-12,
-      s"batched loss ${batched.loss} != per-iteration loss ${perIter.loss}")
-    val a = perIter.matrix.toLocalMap
-    val b = batched.matrix.toLocalMap
-    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12) }
+    // Driver path, distributed path and the Dense oracle on seeded random
+    // equal-mass fixtures: the same per-sweep stopping rule must stop all
+    // three after the same number of sweeps.
+    val rnd = new scala.util.Random(5)
+    (0 until 10).foreach { f =>
+      val rows = 2 + rnd.nextInt(5); val cols = 2 + rnd.nextInt(5)
+      val dseed = Vector.fill(rows, cols)(0.1 + 5.0 * rnd.nextDouble())
+      val dx = Vector.fill(rows)(1.0 + 10.0 * rnd.nextDouble())
+      val dy0 = Vector.fill(cols)(1.0 + 10.0 * rnd.nextDouble())
+      val dy = dy0.map(_ * dx.sum / dy0.sum)
+      val dense = Dense.converge(dx, dy, dseed, threshold = 1e-10, maxIter = 30)
+      val (mx, my, mseed) = fixture(spark, dseed, dx, dy)
+      for (driver <- Seq(true, false)) {
+        val r = onPath(driver, mx, my, mseed, threshold = 1e-10, maxIter = 30)
+        val at = s"fixture $f (${rows}x$cols), driver=$driver"
+        assert(r.iterations === dense.iterations, at)
+        assert(math.abs(r.loss - dense.loss) < 1e-8, at)
+        val got = TestCoo.toLocalMap(r.matrix)
+        assert(got.size === rows * cols, at)
+        for { i <- 0 until rows; j <- 0 until cols }
+          assert(math.abs(got((i.toLong, j.toLong)) - dense.matrix(i)(j)) < 1e-8, s"$at, cell ($i, $j)")
+      }
+    }
   }
 
   test("paths agree: 2x3 fixture") {
@@ -181,17 +155,10 @@ class IpfSpec extends AnyFunSuite {
     // so it counts in every loss as a missing row sum.
     val dx = Seq((0L, 30.0), (1L, 70.0), (9L, 5.0)).toDF(CooMatrix.Idx, CooMatrix.Value)
     val dy = Seq((0L, 40.0), (1L, 35.0), (2L, 25.0)).toDF(CooMatrix.Idx, CooMatrix.Value)
-    val dseed = CooMatrix.fromDense(spark,
+    val dseed = TestCoo.fromDense(spark,
       Seq(Seq(1.0, 2.0, 1.0, 4.0), Seq(3.0, 1.0, 2.0, 1.0), Seq(5.0, 5.0, 5.0, 5.0)))
     val r = assertPathsAgree(dx, dy, dseed, threshold = 1e-12, maxIter = 20)
     assert(cells(r.matrix).keySet === (for (i <- 0L to 1L; j <- 0L to 2L) yield (i, j)).toSet)
-  }
-
-  test("paths agree: batched loss checks, caps 6 and 7") {
-    val (mx, my, mseed) = fixture(spark)
-    for (cap <- Seq(6, 7))
-      assert(assertPathsAgree(mx, my, mseed, maxIter = cap, checkpointEvery = 2,
-        lossEvery = 3).iterations === cap)
   }
 
   test("paths agree: maxIter = 0 returns the seed with the sentinel loss") {
@@ -199,6 +166,18 @@ class IpfSpec extends AnyFunSuite {
     val r = assertPathsAgree(mx, my, mseed, maxIter = 0)
     assert(r.iterations === 0 && r.loss === Int.MaxValue.toDouble)
     assert(cells(r.matrix) === cells(mseed))
+  }
+
+  test("distributed loop: Spark jobs grow by the Ipf scaladoc's per-sweep figure") {
+    // Every sweep checkpoints once and checks the loss once (see Ipf).
+    val jobsPerSweep = 7
+    val (mx, my, mseed) = fixture(spark)
+    // Threshold 0 never stops the loop early, so it runs maxIter sweeps.
+    val Seq((it4, j4), (it8, j8), (it12, j12)) = Seq(4, 8, 12).map(cap => TestSpark.countingJobs(
+      onPath(driver = false, mx, my, mseed, threshold = 0.0, maxIter = cap).iterations))
+    assert((it4, it8, it12) === ((4, 8, 12)))
+    assert(j8 - j4 === 4 * jobsPerSweep && j12 - j8 === 4 * jobsPerSweep,
+      s"jobs at 4/8/12 sweeps: $j4/$j8/$j12")
   }
 
   test("paths agree: empty seed") {

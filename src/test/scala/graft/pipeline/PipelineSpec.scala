@@ -95,24 +95,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("regression guard: CostAllocation.run's Spark jobs do not grow with sweeps") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = "graft.test.jobCount"
-    val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
-          .foreach(t => jobs.synchronized(jobs(t) += 1))
-    }
-    def run(maxIter: Int): (Int, Int) = {
-      sc.setLocalProperty(tag, maxIter.toString)
-      val iterations = try CostAllocation.run(spark, kw, hr, vs, maxIter = maxIter).iterations
-        finally sc.setLocalProperty(tag, null)
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      (iterations, jobs.synchronized(jobs(maxIter.toString)))
-    }
-    sc.addSparkListener(listener)
-    val ((it5, jobs5), (it40, jobs40)) = try (run(5), run(40)) finally sc.removeSparkListener(listener)
+    def run(maxIter: Int): (Int, Int) =
+      TestSpark.countingJobs(CostAllocation.run(spark, kw, hr, vs, maxIter = maxIter).iterations)
+    val ((it5, jobs5), (it40, jobs40)) = (run(5), run(40))
     assert(it5 === 5 && it40 === 40)
     assert(jobs5 === jobs40, s"$jobs5 jobs at 5 sweeps, $jobs40 at 40")
     assert(jobs40 <= 15, s"$jobs40 jobs")
