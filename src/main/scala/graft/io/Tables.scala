@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.matrix.CooMatrix
@@ -100,19 +102,26 @@ object CsvSources {
   def readVisitsWide(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
 
+  /** The hour names of the wide header that `visits` was melted from. */
+  def headerHours(visits: CooMatrix): Seq[String] =
+    visits.df.schema(CooMatrix.Col).metadata.getStringArray(HeaderHours).toSeq
+  private val HeaderHours = "header_hours"
+
   /** Melt the wide visits table to COO: (Keyword, hourName, visits).
     * The wide form's explicit "0" cells become explicit COO zeros, which
     * Laplace smoothing must see (core.clj:187). The melt is built from
     * `Column`s, not SQL text, so any header name works; a table with no
-    * hour columns melts to an empty COO. */
+    * hour columns melts to an empty COO. The `col` column's metadata
+    * keeps the header's hour names for [[headerHours]]. */
   def visitsCoo(visitsWide: DataFrame): CooMatrix = {
     val hourCols = visitsWide.columns.drop(1).dropRight(1) // drop Keyword, TotalClicks
     val keyword = col("Keyword").as(CooMatrix.Row)
+    val header = new MetadataBuilder().putStringArray(HeaderHours, hourCols).build()
     if (hourCols.isEmpty)
-      CooMatrix(visitsWide.select(keyword, lit(null).cast(StringType).as(CooMatrix.Col),
+      CooMatrix(visitsWide.select(keyword, lit(null).cast(StringType).as(CooMatrix.Col, header),
         lit(null).cast(DoubleType).as(CooMatrix.Value)).where(lit(false)))
     else {
-      val cells = hourCols.map(h => struct(lit(h).as(CooMatrix.Col),
+      val cells = hourCols.map(h => struct(lit(h).as(CooMatrix.Col, header),
         col("`" + h.replace("`", "``") + "`").cast(DoubleType).as(CooMatrix.Value)))
       CooMatrix(visitsWide.select(keyword, inline(array(cells.toIndexedSeq: _*))))
     }
@@ -121,13 +130,21 @@ object CsvSources {
   /** Labeled-matrix CSV sink — reference `add-labels` + `save-csv`
     * (`core.clj:63-69`, `data.clj:11-15`). The COO already carries its
     * labels; we pivot back to the wide labeled form only at the sink.
-    * One part file, rows sorted by keyword: a sort within the single
-    * partition, since a global `orderBy` would first run a sampling job
-    * for its range partitioner. */
-  def writeLabeledCsv(m: CooMatrix, path: String): Unit =
-    m.df.groupBy(CooMatrix.Row).pivot(CooMatrix.Col).sum(CooMatrix.Value)
+    * One part file, rows sorted by keyword, a column per distinct column
+    * key in Spark's ascending order. `pivot` is given those keys, from a
+    * projection of the matrix that collects with no job from a local
+    * relation (an `Ipf` driver-path result). The matrix is coalesced into
+    * the file's one partition first, so the pivot's aggregations and the
+    * sort add no exchange and the write is one job. */
+  def writeLabeledCsv(m: CooMatrix, path: String): Unit = {
+    val t = m.df.schema(CooMatrix.Col).dataType
+    val values = m.df.select(CooMatrix.Col).collect().map(_.get(0)).distinct
+      .sortBy(v => InternalRow(CatalystTypeConverters.convertToCatalyst(v)))(
+        RowOrdering.createNaturalAscendingOrdering(Seq(t)))
+    m.df.coalesce(1)
+      .groupBy(CooMatrix.Row).pivot(CooMatrix.Col, values.toSeq).sum(CooMatrix.Value)
       .withColumnRenamed(CooMatrix.Row, "Keyword")
-      .repartition(1)
       .sortWithinPartitions("Keyword")
       .write.mode("overwrite").option("header", "true").csv(path)
+  }
 }

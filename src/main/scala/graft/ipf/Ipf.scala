@@ -1,7 +1,9 @@
 package graft.ipf
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.matrix.{CooMatrix, Marginals}
 
 /** Iterative Proportional Fitting (IPF / RAS / biproportional fitting)
@@ -11,12 +13,14 @@ import graft.matrix.{CooMatrix, Marginals}
   * imputed marginals converge to the known ones.
   *
   * Two execution paths share one stopping rule, chosen by the size of the
-  * input alone:
+  * input alone. One intake job counts the seed, which picks the path, and
+  * brings back the seed and both marginals for the driver path:
   *
-  *  - Driver path, for seeds of at most [[DriverCells]] cells: the seed
-  *    (with its fit targets attached) is collected once and every sweep
-  *    runs on primitive arrays, keys interned to `Int` ids. A Spark sweep
-  *    costs 7 jobs of ~50 ms each however small the matrix, so on a
+  *  - Driver path, for seeds of at most [[DriverCells]] cells: the fit
+  *    targets are attached to the seed's cells on the driver and every
+  *    sweep runs on primitive arrays, keys interned to `Int` ids. The fit
+  *    costs no job after the intake and returns a local relation. A Spark
+  *    sweep costs 7 jobs of ~50 ms each however small the matrix, so on a
   *    reference-sized problem a distributed fit is all overhead (McSherry,
   *    Isard and Murray, "Scalability! But at what COST?", HotOS 2015).
   *  - Distributed path, above it: the fit targets ride on the matrix as
@@ -73,8 +77,9 @@ object Ipf {
       verbose: Boolean = false): Result =
     solve(x, y, seed, threshold, maxIter, verbose, _ <= DriverCells)
 
-  /** [[converge]] with the path chosen by `onDriver(cells)`, the fused
-    * seed's cell count; tests force either path with it. */
+  /** [[converge]] with the path chosen by `onDriver(cells)`, the seed's
+    * cell count; tests force either path with it. A seed with a partition
+    * over its [[intake]] share runs distributed. */
   private[ipf] def solve(
       x: DataFrame, y: DataFrame, seed: CooMatrix,
       threshold: Double, maxIter: Int, verbose: Boolean,
@@ -82,14 +87,12 @@ object Ipf {
     require(maxIter >= 0)
     import org.apache.spark.sql.functions._
     import CooMatrix.{Row, Col, Value, Idx}
-    // x is a loop constant that every loss check reads, so materialize it
-    // ONCE; otherwise each check re-runs its whole source subtree (for
-    // the q26 inputs a lineitem scan+agg). The checkpoint is lazy, so the
-    // one job that materializes it also collects x for the driver path; x
-    // is broadcast into the fused seed below, so it fits on the driver.
-    // y is read once, by the fused seed's checkpoint.
-    val xc = x.localCheckpoint(eager = false)
-    val xRows = xc.select(col(Idx), col(Value).cast("double")).collect()
+    // x, y and the seed are loop constants, materialized once, lazily, by
+    // the intake job: x is read by every loss check (unmaterialized, each
+    // check would re-run its source, for q26 a lineitem scan+agg), y and
+    // the seed by the distributed path's fused seed.
+    val (xc, yc) = (x.localCheckpoint(eager = false), y.localCheckpoint(eager = false))
+    val cells = seed.df.select(col(Row), col(Col), col(Value)).localCheckpoint(eager = false)
     // Fused sweep (r22): the fit targets are loop constants, one value
     // per row/col key, so attach them to the matrix ONCE as two extra
     // columns. Each sweep then collapses to window-sum + project — ZERO
@@ -121,33 +124,50 @@ object Ipf {
     def ckpt(df: DataFrame): DataFrame = CooMatrix(df).checkpointed().df
     def asCoo(df: DataFrame): CooMatrix =
       CooMatrix(df.select(col(Row), col(Col), col(Value)))
-    // The fused seed is checkpointed lazily too, so the one job that
-    // materializes it also counts it: choosing the path costs no job and
-    // re-runs no lineage. The re-wrap resets stats as `ckpt` does.
-    val cp = seed.df
-      .join(broadcast(xc.select(col(Idx).as(Row), col(Value).as(Tx))), Seq(Row), "left")
-      .join(broadcast(y.select(col(Idx).as(Col), col(Value).as(Ty))), Seq(Col), "left")
-      .select(col(Row), col(Col), col(Value), col(Tx), col(Ty))
-      .localCheckpoint(eager = false)
-    val cpRows = cp.rdd
-    val cells = cpRows.count()
-    val spark = cp.sparkSession
-    val fused = spark.createDataFrame(cpRows, cp.schema)
-    if (onDriver(cells)) {
-      val d = new OnDriver(
-        fused.select(col(Row), col(Col), col(Value).cast("double"),
-          col(Tx).cast("double"), col(Ty).cast("double")).collect(),
-        xRows, spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val spark = cells.sparkSession
+    intake(cells, xc, yc, onDriver).map { case (seedRows, xRows, yRows) =>
+      val d = new OnDriver(seedRows, xRows, yRows, spark.conf.get("spark.sql.ansi.enabled").toBoolean)
       val (s, loss, iterations) = drive(d.seed, threshold, maxIter, verbose)(d.sweep, d.loss)
-      val matrix =
-        if (iterations == 0) asCoo(fused)
-        else CooMatrix(spark.createDataFrame(d.rows(s), asCoo(fusedStep(fused)).df.schema))
-      Result(matrix, loss, iterations)
-    } else {
+      // A swept value, `value * (target / sum)`, is a nullable double.
+      val value = if (iterations == 0) cells.schema(Value) else StructField(Value, DoubleType)
+      val schema = StructType(Seq(cells.schema(Row), cells.schema(Col), value))
+      Result(CooMatrix(spark.createDataFrame(d.rows(s), schema)), loss, iterations)
+    }.getOrElse {
+      val fused = ckpt(cells
+        .join(broadcast(xc.select(col(Idx).as(Row), col(Value).as(Tx))), Seq(Row), "left")
+        .join(broadcast(yc.select(col(Idx).as(Col), col(Value).as(Ty))), Seq(Col), "left")
+        .select(col(Row), col(Col), col(Value), col(Tx), col(Ty)))
       val (m, loss, iterations) = drive(fused, threshold, maxIter, verbose)(
         df => ckpt(fusedStep(df)), df => Marginals.rmse(xc, asCoo(df).sumRows))
       Result(asCoo(m), loss, iterations)
     }
+  }
+
+  /** One job counts the seed `cells`, which picks the path, and brings the
+    * driver path its cells and x's and y's rows, keys cast to the seed's
+    * key types, values to doubles. A seed partition sends its cells only
+    * within its share of [[DriverCells]], so no more reach the driver. */
+  private def intake(cells: DataFrame, xc: DataFrame, yc: DataFrame, onDriver: Long => Boolean)
+      : Option[(Array[Row], Array[Row], Array[Row])] = {
+    import org.apache.spark.sql.functions.col
+    import CooMatrix.{Col, Value, Idx}
+    val seedRdd = cells.select(col(CooMatrix.Row), col(Col), col(Value).cast("double")).rdd
+    def target(m: DataFrame, key: String) =
+      m.select(col(Idx).cast(cells.schema(key).dataType), col(Value).cast("double")).rdd
+    val (xRdd, yRdd) = (target(xc, CooMatrix.Row), target(yc, Col))
+    val n = seedRdd.getNumPartitions
+    val share = DriverCells / math.max(n, 1)
+    val sc = cells.sparkSession.sparkContext
+    val got = sc.runJob(sc.union(seedRdd, xRdd, yRdd), (ctx: TaskContext, it: Iterator[Row]) => {
+      val keep = if (ctx.partitionId() < n) share else Int.MaxValue
+      val rows = Array.newBuilder[Row]; var count = 0L
+      it.foreach { r => count += 1; if (count <= keep) rows += r }
+      (count, if (count <= keep) rows.result() else null)
+    })
+    val (seedParts, targets) = got.splitAt(n)
+    val (xParts, yParts) = targets.splitAt(xRdd.getNumPartitions)
+    if (seedParts.exists(_._2 == null) || !onDriver(seedParts.map(_._1).sum)) None
+    else Some((seedParts.flatMap(_._2), xParts.flatMap(_._2), yParts.flatMap(_._2)))
   }
 
   /** The stopping rule both paths run: `step(state)` is one sweep and
@@ -172,25 +192,28 @@ object Ipf {
   }
 
   /** The driver path's IPF over primitive arrays, with the distributed
-    * sweep's semantics. `cells` are the fused seed's rows (`row, col,
-    * value, tx, ty`, numbers as doubles), `x` the x-marginal's `(idx,
-    * value)` rows. A null value is left out of every sum, as SQL's SUM
-    * does; a zero sum under a non-null value raises `DIVIDE_BY_ZERO` when
-    * `ansi` is set and makes the value null otherwise, as SQL's `/` does. */
-  private final class OnDriver(cells: Array[Row], x: Array[Row], ansi: Boolean) {
+    * sweep's semantics. `in` holds the seed's `(row, col, value)` rows, `x`
+    * and `y` the marginals' `(idx, value)` rows, numbers as doubles. A null
+    * value is left out of every sum, as SQL's SUM does; a zero sum under a
+    * non-null value raises `DIVIDE_BY_ZERO` when `ansi` is set and makes
+    * the value null otherwise, as SQL's `/` does. */
+  private final class OnDriver(in: Array[Row], x: Array[Row], y: Array[Row], ansi: Boolean) {
+    /** The fused seed (`row, col, value, tx, ty`) as the distributed path's
+      * left joins build it: a cell once per x row of its row key and y row
+      * of its column key, a missing target null. */
+    private val cells = {
+      def byKey(t: Array[Row]) =
+        t.filterNot(_.isNullAt(0)).groupMap(_.get(0))(_.get(1)).withDefaultValue(Array[Any](null))
+      val (tx, ty) = (byKey(x), byKey(y))
+      for (c <- in; a <- tx(c.get(0)); b <- ty(c.get(1))) yield Row(c.get(0), c.get(1), c.get(2), a, b)
+    }
     /** The cells `live` (indices into `cells`) still in the matrix, and
       * the values of all cells by index. */
     final class State(val live: Array[Int], val v: Array[Double], val isNull: Array[Boolean])
 
-    private def intern(field: Int): (Array[Int], java.util.HashMap[Any, Integer]) = {
-      val ids = new java.util.HashMap[Any, Integer]
-      val of = cells.map { c =>
-        val key = c.get(field)
-        val id = ids.get(key)
-        if (id != null) id.intValue
-        else { ids.put(key, ids.size); ids.size - 1 }
-      }
-      (of, ids)
+    private def intern(field: Int): (Array[Int], collection.mutable.HashMap[Any, Int]) = {
+      val ids = collection.mutable.HashMap.empty[Any, Int]
+      (cells.map(c => ids.getOrElseUpdate(c.get(field), ids.size)), ids)
     }
     private val (r, rowIds) = intern(0)
     private val (c, colIds) = intern(1)
@@ -240,8 +263,8 @@ object Ipf {
       var acc = 0.0
       x.foreach { e =>
         val xv = if (e.isNullAt(1)) 0.0 else e.getDouble(1)
-        val id = if (e.isNullAt(0)) null else rowIds.get(e.get(0))
-        val d = if (id != null && inMatrix(id)) { matched(id) = true; xv - sum(id) } else xv
+        val id = if (e.isNullAt(0)) -1 else rowIds.getOrElse(e.get(0), -1)
+        val d = if (id >= 0 && inMatrix(id)) { matched(id) = true; xv - sum(id) } else xv
         acc += d * d
       }
       for (id <- 0 until n if inMatrix(id) && !matched(id)) acc += sum(id) * sum(id)

@@ -14,14 +14,14 @@ import graft.matrix.CooMatrix
   *   find keywords missing from visits → zero-pad union → Laplace smooth →
   *   IPF converge → (optionally) cost-per-visit.
   *
-  * Catalyst handles pushdown/pruning wholesale. The melt is narrow; the
-  * shuffles are the two `distinct` key sets and the anti-join in
-  * [[padMissingKeywords]], the cost-per-visit join when that matrix is
-  * used, and the sink's pivot and its single-partition sort. A problem of
-  * at most `Ipf`'s driver threshold, every reference-sized request among
-  * them, is collected once and fitted on the driver with no job per
-  * sweep; only a larger one runs the distributed loop (two window sums,
-  * a checkpoint and a loss check per sweep).
+  * Catalyst handles pushdown/pruning wholesale. The melt is narrow and
+  * the padding joins against two broadcasts, so the seed has no shuffle;
+  * the cost-per-visit join has one, when that matrix is used. `Ipf` takes
+  * the seed to the driver in one job when it is small (every
+  * reference-sized request) and fits it there with no job per sweep. On
+  * the reference CSVs, `run` plus `CsvSources.writeLabeledCsv` runs 5
+  * Spark jobs: the visits header read, the two broadcasts, `Ipf`'s intake
+  * and the write.
   */
 object CostAllocation {
 
@@ -45,16 +45,19 @@ object CostAllocation {
         (col("HourlyCost") * lit(1e-6)).as(CooMatrix.Value))
 
   /** Zero-pad the visits matrix with one all-zero row per keyword that has
-    * cost but no visits (`missing`/`visits'`, `core.clj:167-172`):
-    * left-anti join for the missing keys, crossJoin with the hour set,
-    * union into the COO. */
+    * cost but no visits (`missing`/`visits'`, `core.clj:167-172`), a cell
+    * per hour the visits have. The keywords left-anti-joined to the visits'
+    * keywords are crossed with `CsvSources.headerHours`, known at plan
+    * time, then semi-joined to the visits' hours, so a header with no
+    * data rows pads nothing. Both build sides are the visits cells,
+    * broadcast with no `distinct`, so the padding has no shuffle. */
   def padMissingKeywords(visits: CooMatrix, kwCosts: DataFrame): CooMatrix = {
-    val visitKeys = visits.df.select(col(CooMatrix.Row)).distinct()
-    val missing = kwCosts.select(col(CooMatrix.Idx).as(CooMatrix.Row))
-      .join(visitKeys, Seq(CooMatrix.Row), "left_anti")
-    val hourKeys = visits.df.select(col(CooMatrix.Col)).distinct()
-    val zeroRows = missing.crossJoin(broadcast(hourKeys))
-      .select(col(CooMatrix.Row), col(CooMatrix.Col), lit(0.0).as(CooMatrix.Value))
+    import CooMatrix.{Row, Col, Value}
+    val zeroRows = kwCosts.select(col(CooMatrix.Idx).as(Row))
+      .join(broadcast(visits.df.select(Row)), Seq(Row), "left_anti")
+      .select(col(Row), explode(typedLit(CsvSources.headerHours(visits))).as(Col))
+      .join(broadcast(visits.df.select(Col)), Seq(Col), "left_semi")
+      .select(col(Row), col(Col), lit(0.0).as(Value))
     CooMatrix(visits.df.unionByName(zeroRows))
   }
 

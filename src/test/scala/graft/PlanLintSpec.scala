@@ -215,7 +215,6 @@ class PlanLintSpec extends AnyFunSuite {
     "q24_minmax_normalize",   // 1-row global min/max broadcast back
     "q37_densify",            // part × 12-month key expansion
     "q45_cosine_topk",        // small query set broadcast against the corpus
-    "q56_csv_padded_matrix",  // missing keywords × 22-hour key expansion
     "q83_tfidf_topk",         // 1-row corpus-size aggregate broadcast back
     "q100_source_divergence", // 1-row corpus-total aggregate broadcast back
     "q106_temperature_mix",   // 1-row normalizing-sums aggregate broadcast back
