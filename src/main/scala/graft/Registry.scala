@@ -2184,7 +2184,7 @@ object Registry {
     // Hash equality with the parquet originals certifies the whole
     // source layer; pushdown/pruning plans pinned in GlprSpec.
     "q284_glpr_source" -> Entry((s, d) =>
-      graft.io.GlprSource.documentsVia(s, d).orderBy("doc_id"), Some(
+      GlprScenarios.documentsVia(s, d).orderBy("doc_id"), Some(
       """SELECT doc_id, lang, source, text FROM documents
         |ORDER BY doc_id""".stripMargin)),
 
@@ -2194,7 +2194,7 @@ object Registry {
     // oracle. Incremental shard arrival is MemoryStream-style pinned in
     // GlprSpec.
     "q285_glpr_stream" -> Entry((s, d) =>
-      graft.io.GlprSource.streamedLangProfile(s, d).orderBy("lang"), Some(
+      GlprScenarios.streamedLangProfile(s, d).orderBy("lang"), Some(
       """SELECT lang, count(*) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
@@ -2258,7 +2258,7 @@ object Registry {
     // query self-terminating; settles to the identical batch oracle.
     // The trigger-count contract itself is pinned in GlprSpec.
     "q288_glpr_backfill" -> Entry((s, d) =>
-      graft.io.GlprSource.backfillLangProfile(s, d).orderBy("lang"), Some(
+      GlprScenarios.backfillLangProfile(s, d).orderBy("lang"), Some(
       """SELECT lang, count(*) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
@@ -2270,7 +2270,7 @@ object Registry {
     // defaultSizeInBytes (effectively infinite) and would shuffle both
     // sides forever. BroadcastHashJoin plan-asserted in GlprSpec.
     "q289_glpr_stats_join" -> Entry((s, d) => {
-      val dim = graft.io.GlprSource.documentsVia(s, d)
+      val dim = GlprScenarios.documentsVia(s, d)
         .select(col("doc_id"), col("lang"))
       val facts = Tables(s, d, "lineitem")
         .select((col("l_partkey") % 500).cast("long").as("k"))
@@ -2290,7 +2290,7 @@ object Registry {
     // staging makes sidecar bounds tight. Shard-skip + equality pinned
     // in GlprSpec.
     "q295_glpr_runtime_prune" -> Entry((s, d) =>
-      graft.io.GlprSource.runtimePrunedDimJoin(s, d).orderBy("lang"), Some(
+      GlprScenarios.runtimePrunedDimJoin(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents d JOIN supplier s ON d.doc_id = s.s_suppkey
@@ -2303,7 +2303,7 @@ object Registry {
     // planned, no aggregate exec in the plan (the parquet row-group
     // statistics trick). Zero-shards + decline paths pinned in GlprSpec.
     "q296_glpr_agg_pushdown" -> Entry((s, d) =>
-      graft.io.GlprSource.documentsVia(s, d)
+      GlprScenarios.documentsVia(s, d)
         .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_id"),
           max("doc_id").as("max_id")), Some(
       """SELECT CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS min_id,
@@ -2317,7 +2317,7 @@ object Registry {
     // the deterministic contract; shard-cap + filter-decline pinned in
     // GlprSpec.
     "q297_glpr_limit_pushdown" -> Entry((s, d) =>
-      graft.io.GlprSource.documentsVia(s, d).limit(100)
+      GlprScenarios.documentsVia(s, d).limit(100)
         .agg(count(lit(1)).as("n_rows")), Some(
       """SELECT CAST(count(*) AS BIGINT) AS n_rows
         |FROM (SELECT * FROM documents LIMIT 100)""".stripMargin)),
@@ -2329,7 +2329,7 @@ object Registry {
     // (create/list/drop/rename/alter, identifier hygiene, schema gate)
     // pinned in GlprCatalogSpec.
     "q298_glpr_catalog_sql" -> Entry((s, d) =>
-      graft.io.GlprSource.catalogSqlPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.catalogSqlPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
@@ -2340,7 +2340,7 @@ object Registry {
     // the full connector loop in one streaming query. Epoch naming +
     // replay-idempotency pinned in GlprSpec.
     "q300_glpr_stream_relay" -> Entry((s, d) =>
-      graft.io.GlprSource.streamRelayPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.streamRelayPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE strlen(text) >= 50
@@ -2355,7 +2355,7 @@ object Registry {
     // publish; read-back hash-matches the one-shot batch dedup oracle.
     // Cross-batch keeper/count split pinned in GlprSpec.
     "q292_glpr_ingest_merge" -> Entry((s, d) =>
-      graft.io.GlprSource.ingestDedupMerge(s, d).orderBy("content_hash"), Some(
+      GlprScenarios.ingestDedupMerge(s, d).orderBy("content_hash"), Some(
       """SELECT md5(text) AS content_hash, min(doc_id) AS keeper_doc_id,
         | CAST(count(*) AS BIGINT) AS n_docs
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
@@ -2494,7 +2494,7 @@ object Registry {
     // over documents WHERE doc_id >= 100; the straddling-decline side
     // is GlprCatalogSpec-pinned.
     "q301_glpr_delete" -> Entry((s, d) =>
-      graft.io.GlprSource.deleteSqlPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.deleteSqlPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE doc_id >= 100
@@ -2506,7 +2506,7 @@ object Registry {
     // aggregates only the subset — a surviving pre-overwrite row (append
     // masquerading as overwrite) or a lost subset row breaks the hash.
     "q302_glpr_overwrite" -> Entry((s, d) =>
-      graft.io.GlprSource.overwriteSqlPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.overwriteSqlPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents WHERE lang IN ('de', 'zh')
@@ -2519,7 +2519,7 @@ object Registry {
     // rollup grouped by the slice expression — agreement certifies that
     // _shard really partitions records by their file.
     "q303_glpr_shard_provenance" -> Entry((s, d) =>
-      graft.io.GlprSource.shardProvenanceRollup(s, d).orderBy("min_id"), Some(
+      GlprScenarios.shardProvenanceRollup(s, d).orderBy("min_id"), Some(
       """SELECT CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents
@@ -2534,7 +2534,7 @@ object Registry {
     // skip pinned in GlprCatalogSpec). Oracle certifies the residual
     // row filter above the pruned scan.
     "q304_glpr_partitioned" -> Entry((s, d) =>
-      graft.io.GlprSource.partitionedCatalogPipeline(s, d).orderBy("source"), Some(
+      GlprScenarios.partitionedCatalogPipeline(s, d).orderBy("source"), Some(
       """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE lang = 'en'
@@ -2549,7 +2549,7 @@ object Registry {
     // corpus). Shard-skip pinned in GlprSpec; settles to the identical
     // filtered batch oracle.
     "q305_glpr_stream_pruned" -> Entry((s, d) =>
-      graft.io.GlprSource.streamedPrunedProfile(s, d).orderBy("lang"), Some(
+      GlprScenarios.streamedPrunedProfile(s, d).orderBy("lang"), Some(
       """SELECT lang, count(*) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE doc_id < 250
@@ -2563,7 +2563,7 @@ object Registry {
     // sidecar value set; multi-valued shards decline to the ordinary
     // plan). Zero-shards pin in GlprCatalogSpec.
     "q306_glpr_partitioned_count" -> Entry((s, d) =>
-      graft.io.GlprSource.partitionedMetadataCount(s, d).orderBy("lang"), Some(
+      GlprScenarios.partitionedMetadataCount(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
 
@@ -2574,7 +2574,7 @@ object Registry {
     // (the Delta/parquet bloom-index trick). Bloom-skip + stripped-
     // bloom decline pinned in GlprSpec; oracle = plain parquet join.
     "q307_glpr_bloom_prune" -> Entry((s, d) =>
-      graft.io.GlprSource.bloomPrunedDimJoin(s, d).orderBy("lang"), Some(
+      GlprScenarios.bloomPrunedDimJoin(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents d JOIN supplier s ON d.doc_id = s.s_suppkey
@@ -2589,7 +2589,7 @@ object Registry {
     // table user runs. Mixed-predicate / straddling declines pinned in
     // GlprCatalogSpec; oracle = the complement rollup.
     "q308_glpr_partition_delete" -> Entry((s, d) =>
-      graft.io.GlprSource.partitionDeletePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.partitionDeletePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE lang NOT IN ('de', 'zh')
@@ -2606,7 +2606,7 @@ object Registry {
     // sidecar preservation + post-compaction pruning pinned in
     // GlprSpec.
     "q309_glpr_compact" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.compactionPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.compactionPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
@@ -2618,7 +2618,7 @@ object Registry {
     // dv tokens in the same flip: the live view ends mask-free. Oracle
     // = the double-complement rollup (fold exactness + move-once).
     "q348_glpr_masked_compact" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.maskedCompactionPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.maskedCompactionPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2633,7 +2633,7 @@ object Registry {
     // required in-pipeline; pre/post boxes pinned in GlprCatalogSpec).
     // Oracle = the full-table rollup: the rewrite moved every row once.
     "q350_glpr_zorder_recluster" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.zorderReclusterPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.zorderReclusterPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(min(doc_id) AS BIGINT) AS min_id,
@@ -2647,7 +2647,7 @@ object Registry {
     // in-pipeline; legacy no-token fallback pinned in GlprCatalogSpec).
     // Oracle = the probe rollup (residual filter keeps rows exact).
     "q352_glpr_value_stats" -> Entry((s, d) =>
-      graft.io.GlprSource.valueStatsPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.valueStatsPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2662,7 +2662,7 @@ object Registry {
     // broadcast disabled). The corpus⋈corpus join that moves no bytes
     // at 100 TB. Oracle = the relational join rollup.
     "q353_glpr_bucket_spj" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.bucketSpjPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.bucketSpjPipeline(s, d).orderBy("lang"), Some(
       """SELECT f.lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(f.doc_id) AS BIGINT) AS id_sum
         |FROM documents f JOIN documents d ON f.doc_id = d.doc_id
@@ -2677,7 +2677,7 @@ object Registry {
     // pre-delete corpus while main reads the post-delete one. Oracle =
     // both sides relationally; lifecycle pins in GlprCatalogSpec.
     "q354_glpr_tags" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.tagsPipeline(s, d).orderBy("side", "lang"), Some(
+      GlprScenarios.tagsPipeline(s, d).orderBy("side", "lang"), Some(
       """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents WHERE NOT (doc_id BETWEEN 100 AND 199) GROUP BY 2
@@ -2719,7 +2719,7 @@ object Registry {
     // composes with the rest of SQL. Oracle recomputes both snapshots'
     // cumulative counts from the data.
     "q360_glpr_metadata_tables" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.metadataTablesPipeline(s, d), Some(
+      GlprScenarios.metadataTablesPipeline(s, d), Some(
       """SELECT CAST(1 AS BIGINT) AS version,
         | CAST(count(*) AS BIGINT) AS n_rows
         |FROM documents WHERE doc_id % 2 = 0
@@ -2736,7 +2736,7 @@ object Registry {
     // unmasked victim or a double-appear breaks the hash. COW-equality
     // and bytes-bounded pins in GlprDvIntegritySpec.
     "q361_glpr_mor_update" -> Entry((s, d) =>
-      graft.io.GlprSource.updateMorPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.updateMorPipeline(s, d).orderBy("lang"), Some(
       """SELECT CASE WHEN lang IN ('de', 'zh') THEN 'und' ELSE lang END
         |  AS lang,
         | CAST(count(*) AS BIGINT) AS n_docs,
@@ -2751,7 +2751,7 @@ object Registry {
     // Readers parse each shard's decimal text to the DECLARED (widest)
     // type; the text serialization makes the promotion value-exact.
     "q362_glpr_type_widening" -> Entry((s, d) =>
-      graft.io.GlprSource.typeWideningPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.typeWideningPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(score) AS BIGINT) AS score_sum,
         | CAST(sum(conf) AS DOUBLE) AS conf_sum
@@ -2770,7 +2770,7 @@ object Registry {
     // post-evolution rows carry their own bytes and a no-default column
     // keeps the q332 null compat. Three eras, one aggregate.
     "q363_glpr_add_default" -> Entry((s, d) =>
-      graft.io.GlprSource.addDefaultPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.addDefaultPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(count(tier) AS BIGINT) AS n_tier,
         | CAST(sum(rank) AS BIGINT) AS rank_sum
@@ -2790,7 +2790,7 @@ object Registry {
     // the TAGGED snapshot is exempt (q354), the young head survives,
     // vacuum reclaims. Live + tagged reads certify both outcomes.
     "q364_glpr_age_retention" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.ageRetentionPipeline(s, d)
+      GlprScenarios.ageRetentionPipeline(s, d)
         .orderBy("side", "lang"), Some(
       """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -2813,7 +2813,7 @@ object Registry {
     // published — q346's loop for the far more common "fix the label,
     // keep the row". Oracle = slice 1 + the relabeled slice 2 exactly.
     "q366_glpr_branch_mor_update" -> Entry((s, d) =>
-      graft.io.GlprSource.branchUpdateFixPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.branchUpdateFixPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2831,7 +2831,7 @@ object Registry {
     // commit. Oracle recomputes the merged state: matched rows appear
     // exactly once with NEW text, kept rows once with old, inserts once.
     "q365_glpr_mor_merge" -> Entry((s, d) =>
-      graft.io.GlprSource.mergeMorPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.mergeMorPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(CASE WHEN doc_id >= 100 THEN upper(text)
@@ -2846,7 +2846,7 @@ object Registry {
     // ids appear twice?" audit moves zero bytes at 100 TB. Required
     // in-pipeline. Oracle = the duplicated slice relationally.
     "q358_glpr_dedup_audit" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.dedupAuditPipeline(s, d).orderBy("doc_id"), Some(
+      GlprScenarios.dedupAuditPipeline(s, d).orderBy("doc_id"), Some(
       """SELECT doc_id, CAST(2 AS BIGINT) AS copies FROM documents
         |WHERE doc_id % 5 = 0 ORDER BY 1""".stripMargin)),
 
@@ -2857,7 +2857,7 @@ object Registry {
     // them FROM THE DATA, so hash equality certifies the statistics the
     // planner prunes/estimates with are exactly right.
     "q356_glpr_files" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.filesPipeline(s, d).orderBy("metric"), Some(
+      GlprScenarios.filesPipeline(s, d).orderBy("metric"), Some(
       """SELECT 'max_id' AS metric, CAST(max(doc_id) AS BIGINT) AS value
         |FROM documents
         |UNION ALL SELECT 'min_id', CAST(min(doc_id) AS BIGINT) FROM documents
@@ -2872,7 +2872,7 @@ object Registry {
     // Oracle = the plain corpus rollup: a gate admitting clean data is
     // invisible in the result.
     "q355_glpr_constraints" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.constraintsPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.constraintsPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2885,7 +2885,7 @@ object Registry {
     // bytes (a MoR delete in the clone only). Oracle = both sides'
     // rollups; inode sharing/vacuum independence in GlprCatalogSpec.
     "q351_glpr_clone" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.clonePipeline(s, d).orderBy("side", "lang"), Some(
+      GlprScenarios.clonePipeline(s, d).orderBy("side", "lang"), Some(
       """WITH src AS (SELECT lang, doc_id FROM documents
         | WHERE NOT (doc_id BETWEEN 40 AND 49))
         |SELECT 'src' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -2905,7 +2905,7 @@ object Registry {
     // INVISIBLE; the aggregate hash-matches the corpus oracle without
     // it. rebuildManifest recovery pinned in GlprSpec.
     "q310_glpr_manifest" -> Entry((s, d) =>
-      graft.io.GlprSource.manifestVisibilityPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.manifestVisibilityPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | min(doc_id) AS min_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2920,7 +2920,7 @@ object Registry {
     // unknown-version/unlinked-shard/streaming rejections pinned in
     // GlprSpec/GlprCatalogSpec.
     "q311_glpr_time_travel" -> Entry((s, d) =>
-      graft.io.GlprSource.timeTravelPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.timeTravelPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(max(doc_id) AS BIGINT) AS max_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2935,7 +2935,7 @@ object Registry {
     // new row is missed. Non-append histories refuse loudly
     // (GlprSpec-pinned).
     "q312_glpr_changes" -> Entry((s, d) =>
-      graft.io.GlprSource.changesPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.changesPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(doc_id) AS BIGINT) AS min_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2949,7 +2949,7 @@ object Registry {
     // restore mints a new version; history never rewrites
     // (GlprSpec-pinned).
     "q313_glpr_restore" -> Entry((s, d) =>
-      graft.io.GlprSource.restorePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.restorePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(doc_id) AS BIGINT) AS min_id
         |FROM documents WHERE doc_id < 300
@@ -2962,7 +2962,7 @@ object Registry {
     // commit. Oracle: documents with the range cut out — row-exact
     // deletion through the rewrite path.
     "q314_glpr_row_delete" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.rowDeletePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.rowDeletePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(max(doc_id) AS BIGINT) AS max_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -2976,7 +2976,7 @@ object Registry {
     // plain SQL. The oracle recomputes with DuckDB's own nfc_normalize:
     // cross-engine agreement certifies semantics AND wiring.
     "q315_glpr_sql_functions" -> Entry((s, d) =>
-      graft.io.GlprSource.functionCatalogPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.functionCatalogPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang,
         | CAST(sum(strlen(nfc_normalize(text))) AS BIGINT) AS nfc_bytes,
         | CAST(sum(strlen(text)) AS BIGINT) AS raw_bytes,
@@ -2991,7 +2991,7 @@ object Registry {
     // the entry stays oracle-deterministic at degenerate SFs. Agreement
     // certifies exactly-one-version-per-commit and correct snapshots.
     "q316_glpr_history" -> Entry((s, d) =>
-      graft.io.GlprSource.historyPipeline(s, d).orderBy("version"), Some(
+      GlprScenarios.historyPipeline(s, d).orderBy("version"), Some(
       """WITH s AS (
         | SELECT 1 AS slice,
         |  (SELECT count(*) FROM documents WHERE doc_id < 100) AS inc,
@@ -3012,7 +3012,7 @@ object Registry {
     // WHERE doc_id < 300: restore dropped exactly the third slice and
     // compaction moved every surviving row exactly once.
     "q317_glpr_sql_maintenance" -> Entry((s, d) =>
-      graft.io.GlprSource.maintenanceSqlPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.maintenanceSqlPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents WHERE doc_id < 300
@@ -3024,7 +3024,7 @@ object Registry {
     // the mask at its id gate; metadata paths that would lie decline.
     // Oracle = the complement rollup through the masked read.
     "q322_glpr_dv_delete" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.dvDeletePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.dvDeletePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents WHERE doc_id < 150 OR doc_id > 349
@@ -3036,7 +3036,7 @@ object Registry {
     // re-armed. Oracle = the same complement through the materialized
     // corpus.
     "q323_glpr_dv_materialize" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.dvMaterializePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.dvMaterializePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(doc_id) AS BIGINT) AS min_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -3050,7 +3050,7 @@ object Registry {
     // the same replace chain over the original documents: byte sums
     // certify the storage holds exactly the redacted bytes.
     "q324_glpr_redact" -> Entry((s, d) =>
-      graft.io.GlprMaintenance.redactionPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.redactionPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(
         |   replace(replace(replace(replace(replace(text,
@@ -3067,7 +3067,7 @@ object Registry {
     // the per-partition commit the round-15 doc said the format lacked.
     // Oracle applies the same per-partition replacement relationally.
     "q325_glpr_dynamic_overwrite" -> Entry((s, d) =>
-      graft.io.GlprSource.dynamicOverwritePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.dynamicOverwritePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(max(doc_id) AS BIGINT) AS max_id
         |FROM documents
@@ -3082,7 +3082,7 @@ object Registry {
     // relationally, gated on the same all-slices-nonempty condition the
     // staging mutates under.
     "q328_glpr_cdf" -> Entry((s, d) =>
-      graft.io.GlprSource.cdfPipeline(s, d).orderBy("_change_type", "lang"), Some(
+      GlprScenarios.cdfPipeline(s, d).orderBy("_change_type", "lang"), Some(
       """WITH f AS (SELECT
         |  (SELECT count(*) FROM documents WHERE doc_id < 100) *
         |  (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 300) *
@@ -3105,7 +3105,7 @@ object Registry {
     // shards for the versions that own them instead of unlinking.
     // Oracle = the plain full rollup.
     "q329_glpr_tt_across_delete" -> Entry((s, d) =>
-      graft.io.GlprSource.timeTravelAcrossDeletePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.timeTravelAcrossDeletePipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(max(doc_id) AS BIGINT) AS max_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -3117,7 +3117,7 @@ object Registry {
     // channel), post-evolution shards carry values. Oracle rebuilds the
     // mixed table relationally.
     "q332_glpr_add_column" -> Entry((s, d) =>
-      graft.io.GlprSource.addColumnPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.addColumnPipeline(s, d).orderBy("lang"), Some(
       """WITH t AS (
         | SELECT lang, CAST(NULL AS VARCHAR) AS note, text FROM documents
         | UNION ALL
@@ -3138,7 +3138,7 @@ object Registry {
     // BIGINT/DOUBLE from evolved ones (string byte layout, toString
     // round-trip). Oracle rebuilds the mixed typed table relationally.
     "q339_glpr_typed_evolution" -> Entry((s, d) =>
-      graft.io.GlprSource.typedEvolutionPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.typedEvolutionPipeline(s, d).orderBy("lang"), Some(
       """WITH t AS (
         | SELECT lang, CAST(NULL AS BIGINT) AS tok_count,
         |   CAST(NULL AS DOUBLE) AS score FROM documents
@@ -3159,7 +3159,7 @@ object Registry {
     // surviving extra keeps reading, post-drop inserts carry the
     // narrowed schema. Oracle rebuilds the three-era table.
     "q347_glpr_drop_column" -> Entry((s, d) =>
-      graft.io.GlprSource.dropColumnPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.dropColumnPipeline(s, d).orderBy("lang"), Some(
       """WITH t AS (
         | SELECT lang, CAST(NULL AS BIGINT) AS keep FROM documents
         | UNION ALL
@@ -3182,7 +3182,7 @@ object Registry {
     // in-pipeline; estimates + no-broadcast control pinned in
     // GlprSpec). Oracle certifies the join result.
     "q340_glpr_cbo_stats_join" -> Entry((s, d) =>
-      graft.io.GlprSource.cboStatsJoinPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.cboStatsJoinPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_events,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents d JOIN events e ON d.doc_id = e.user_id
@@ -3194,7 +3194,7 @@ object Registry {
     // day sets (plan pin in GlprCatalogSpec). Oracle derives the same
     // deterministic days.
     "q333_glpr_days_partition" -> Entry((s, d) =>
-      graft.io.GlprSource.daysPartitionPipeline(s, d).orderBy("day", "lang"), Some(
+      GlprScenarios.daysPartitionPipeline(s, d).orderBy("day", "lang"), Some(
       """WITH t AS (SELECT lang, doc_id,
         |  strftime(DATE '2024-01-01' + to_days(CAST(doc_id % 7 AS INT)),
         |    '%Y-%m-%d') AS day
@@ -3209,7 +3209,7 @@ object Registry {
     // window read prunes to the month's shards (pin in
     // GlprCatalogSpec). Oracle derives the same deterministic months.
     "q341_glpr_months_partition" -> Entry((s, d) =>
-      graft.io.GlprSource.monthsPartitionPipeline(s, d).orderBy("month", "lang"), Some(
+      GlprScenarios.monthsPartitionPipeline(s, d).orderBy("month", "lang"), Some(
       """WITH t AS (SELECT lang, doc_id,
         |  substr(strftime(DATE '2024-01-15' +
         |    to_days(CAST((doc_id % 4) * 20 AS INT)), '%Y-%m-%d'), 1, 7) AS month
@@ -3225,7 +3225,7 @@ object Registry {
     // spec; raw bounds truncate to each shard's prefix width). Pruning
     // required in-pipeline; per-era skip pins in GlprCatalogSpec.
     "q349_glpr_spec_evolution" -> Entry((s, d) =>
-      graft.io.GlprSource.specEvolutionPipeline(s, d).orderBy("month"), Some(
+      GlprScenarios.specEvolutionPipeline(s, d).orderBy("month"), Some(
       """WITH t AS (
         | SELECT doc_id,
         |  strftime(DATE '2024-01-01' + to_days(CAST(doc_id % 7 AS INT)),
@@ -3246,7 +3246,7 @@ object Registry {
     // covers src1/src10..19), the residual row filter keeps it exact
     // (pin in GlprCatalogSpec). Oracle is the plain probe rollup.
     "q342_glpr_truncate_partition" -> Entry((s, d) =>
-      graft.io.GlprSource.truncatePartitionPipeline(s, d).orderBy("source", "lang"), Some(
+      GlprScenarios.truncatePartitionPipeline(s, d).orderBy("source", "lang"), Some(
       """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents WHERE source IN ('src7', 'src12')
@@ -3256,7 +3256,7 @@ object Registry {
     // to the probed buckets' shards on an arbitrary id layout (pin in
     // GlprCatalogSpec). Oracle is the plain point lookup.
     "q334_glpr_bucket_partition" -> Entry((s, d) =>
-      graft.io.GlprSource.bucketPartitionPipeline(s, d).orderBy("doc_id"), Some(
+      GlprScenarios.bucketPartitionPipeline(s, d).orderBy("doc_id"), Some(
       """SELECT doc_id, lang, source FROM documents
         |WHERE doc_id IN (0, 8, 17, 42, 97) ORDER BY 1""".stripMargin)),
 
@@ -3266,7 +3266,7 @@ object Registry {
     // insert/delete records, settled under Trigger.AvailableNow.
     // Oracle derives the same change totals relationally (q328's gate).
     "q337_glpr_cdf_stream" -> Entry((s, d) =>
-      graft.io.GlprSource.cdfStreamPipeline(s, d).orderBy("_change_type", "lang"), Some(
+      GlprScenarios.cdfStreamPipeline(s, d).orderBy("_change_type", "lang"), Some(
       """WITH f AS (SELECT
         |  (SELECT count(*) FROM documents WHERE doc_id < 100) *
         |  (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 300) *
@@ -3296,7 +3296,7 @@ object Registry {
     // slices are nonempty, the full state otherwise (fewer commits =
     // the pin resolves to the newest).
     "q335_glpr_timestamp_as_of" -> Entry((s, d) =>
-      graft.io.GlprSource.timestampAsOfPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.timestampAsOfPipeline(s, d).orderBy("lang"), Some(
       """WITH f AS (SELECT
         |  (SELECT count(*) FROM documents WHERE doc_id < 100) *
         |  (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 300) *
@@ -3312,7 +3312,7 @@ object Registry {
     // bounds pruning re-arms (plan pin in GlprCatalogSpec). Oracle =
     // the range rollup: every row moved exactly once.
     "q336_glpr_recluster" -> Entry((s, d) =>
-      graft.io.GlprSource.reclusterPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.reclusterPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
         |FROM documents WHERE doc_id >= 100 AND doc_id < 300
@@ -3324,7 +3324,7 @@ object Registry {
     // relationally; hash equality certifies the copied (non-matching)
     // rows of replaced shards survive and nothing double-updates.
     "q326_glpr_sql_update" -> Entry((s, d) =>
-      graft.io.GlprSource.sqlUpdatePipeline(s, d).orderBy("lang", "source"), Some(
+      GlprScenarios.sqlUpdatePipeline(s, d).orderBy("lang", "source"), Some(
       """SELECT lang,
         | CASE WHEN doc_id < 100 THEN 'curated' ELSE source END AS source,
         | CAST(count(*) AS BIGINT) AS n_docs,
@@ -3336,7 +3336,7 @@ object Registry {
     // commit: matched rows [100,300) re-sourced + uppercased, rows < 50
     // re-keyed +1000000 inserted. Oracle recomputes the merged state.
     "q327_glpr_sql_merge" -> Entry((s, d) =>
-      graft.io.GlprSource.sqlMergePipeline(s, d).orderBy("source", "lang"), Some(
+      GlprScenarios.sqlMergePipeline(s, d).orderBy("source", "lang"), Some(
       """SELECT * FROM (
         | SELECT CASE WHEN doc_id >= 100 AND doc_id < 300 THEN 'merged'
         |   ELSE source END AS source, lang,
@@ -3363,7 +3363,7 @@ object Registry {
     // oracle certifies the statement end to end. Clause-routing pins in
     // GlprCatalogSpec.
     "q338_glpr_cdc_merge" -> Entry((s, d) =>
-      graft.io.GlprSource.cdcMergeSqlPipeline(s, d).orderBy("user_id"),
+      GlprScenarios.cdcMergeSqlPipeline(s, d).orderBy("user_id"),
       Some(cdcCompactSql)),
 
     // STREAMING MERGE through the SQL front door (round-17 verdict #8):
@@ -3374,7 +3374,7 @@ object Registry {
     // source's live view — the batch oracle, under the q335/q337
     // empty-slice determinism gate.
     "q343_glpr_stream_merge" -> Entry((s, d) =>
-      graft.io.GlprSource.streamCdfMergePipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.streamCdfMergePipeline(s, d).orderBy("lang"), Some(
       """WITH f AS (SELECT
         |  (SELECT count(*) FROM documents WHERE doc_id < 100) *
         |  (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 300) *
@@ -3392,7 +3392,7 @@ object Registry {
     // trade as position masks; capped toward COW past 1M rows). Oracle
     // is the complement rollup — the mask must be row-exact at read.
     "q344_glpr_value_mor_delete" -> Entry((s, d) =>
-      graft.io.GlprSource.valueDeleteMorPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.valueDeleteMorPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -3406,7 +3406,7 @@ object Registry {
     // published slices exactly. Isolation/vacuum-safety pins in
     // GlprDvIntegritySpec.
     "q345_glpr_wap" -> Entry((s, d) =>
-      graft.io.GlprSource.wapPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.wapPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -3421,7 +3421,7 @@ object Registry {
     // shared dv generations in the same flip). Oracle = slice 1 + the
     // fixed slice 2 exactly.
     "q346_glpr_branch_fix" -> Entry((s, d) =>
-      graft.io.GlprSource.branchFixPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.branchFixPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum,
         | CAST(max(doc_id) AS BIGINT) AS max_id
@@ -3434,7 +3434,7 @@ object Registry {
     // unmasked and the delete's own version applies exactly the
     // recorded generation. Oracle computes both rollups relationally.
     "q331_glpr_dv_time_travel" -> Entry((s, d) =>
-      graft.io.GlprSource.dvTimeTravelPipeline(s, d).orderBy("phase", "lang"), Some(
+      GlprScenarios.dvTimeTravelPipeline(s, d).orderBy("phase", "lang"), Some(
       """SELECT 'pre' AS phase, lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents GROUP BY 2
@@ -3449,7 +3449,7 @@ object Registry {
     // staging REQUIRES reclaim happened and the expired version turned
     // loud; the oracle certifies the live view was untouched.
     "q330_glpr_expire_vacuum" -> Entry((s, d) =>
-      graft.io.GlprSource.expireVacuumPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.expireVacuumPipeline(s, d).orderBy("lang"), Some(
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(doc_id) AS BIGINT) AS min_id,
         | CAST(sum(strlen(text)) AS BIGINT) AS n_bytes
@@ -3463,7 +3463,7 @@ object Registry {
     // (broadcast disabled, v2 bucketing on). Oracle recomputes the
     // join+rollup; the no-Exchange plan pin lives in GlprCatalogSpec.
     "q319_glpr_spj" -> Entry((s, d) =>
-      graft.io.GlprSource.storagePartitionedJoinPipeline(s, d).orderBy("lang"), Some(
+      GlprScenarios.storagePartitionedJoinPipeline(s, d).orderBy("lang"), Some(
       """SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(min(m.doc_id) AS BIGINT) AS dim_min_id
         |FROM documents d JOIN

@@ -1,7 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
-
 /** Maintenance operations over a GLPR shard directory — the OPTIMIZE /
   * VACUUM rung of the connector's lakehouse ladder (q309).
   *
@@ -1023,69 +1021,6 @@ object GlprMaintenance {
     results.map(r => r._1 -> r._2).toMap
   }
 
-  /** q314 — the row-level delete as a registry entry: the corpus staged
-    * HASH-partitioned (every shard's bounds straddle everything — the
-    * layout where metadata DELETE refuses outright), then
-    * `deleteIdRange(100, 299)`, then read back. The oracle aggregates
-    * `documents WHERE doc_id < 100 OR doc_id > 299`: hash equality
-    * certifies row-exact deletion through the rewrite path. Crash
-    * ordering, survivor naming, fully-emptied shards, and the
-    * metadata/rewrite split are GlprSpec-pinned. */
-  def rowDeletePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-rowdelete").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text").repartition(8), root)
-    deleteIdRange(spark, root, 100L, 299L): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q322 — the merge-on-read delete as a registry entry: range-
-    * clustered staging, `deleteIdRangeMergeOnRead(150, 349)` (zero data
-    * bytes moved — only `.dv` sidecars written), then read back THROUGH
-    * the mask. Oracle = the complement rollup: hash equality certifies
-    * both readers apply the vector row-exactly. Composition with
-    * pushdown/pruning, metadata-path declines, historical-read refusal,
-    * idempotent re-delete, and compact exclusion are GlprSpec-pinned. */
-  def dvDeletePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-dvdelete").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    deleteIdRangeMergeOnRead(root, 150L, 349L): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"))
-  }
-
-  /** q323 — DV materialization: the q322 shape, then
-    * [[materializeDeletes]] rewrites the masked shards (fresh names, one
-    * manifest flip, vectors unlinked) — afterwards the corpus reads
-    * identically but metadata paths and time travel re-arm. Oracle = the
-    * same complement rollup; zero-DV state, fresh survivor names, and
-    * the minted version are GlprSpec-pinned. */
-  def dvMaterializePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-dvmat").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    deleteIdRangeMergeOnRead(root, 150L, 349L)
-    materializeDeletes(spark, root): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
   /** COPY-ON-WRITE row-level UPDATE, redaction form (q324) — completes
     * the connector's CRUD ladder: every data shard is rewritten by a
     * distributed per-shard job replacing each blocklist pattern in
@@ -1167,28 +1102,6 @@ object GlprMaintenance {
       // retired files, exactly like Delta/Iceberg PII guidance.
     }
     swapped
-  }
-
-  /** q324 — the redaction as a registry entry: staging, redactText with
-    * the q320 blocklist, then the post-redaction rollup. The oracle
-    * computes the SAME replace chain over the original documents —
-    * hash equality certifies the storage really holds the redacted
-    * bytes (byte sums would differ on any missed or extra
-    * replacement). Skip-untouched, fresh names, minted version, and
-    * idempotence are GlprSpec-pinned. */
-  def redactionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-redact").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    redactText(spark, root,
-      graft.functions.MultiPatternCounts.BlocklistPatterns, "[REDACTED]"): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
   }
 
   /** EXPIRE old manifest versions (Iceberg's `expire_snapshots`): keep
@@ -1517,410 +1430,4 @@ object GlprMaintenance {
     doomed.foreach(_.delete(): Unit)
     doomed.length
   }
-
-  /** q309 — the compaction pipeline as a registry entry: the corpus
-    * written as MANY deliberately-small shards, compacted to a handful
-    * by byte concatenation + sidecar merge, then read back through the
-    * connector and aggregated. The oracle is the plain documents
-    * rollup — hash equality certifies compaction moved every row
-    * exactly once; the file-count collapse, sidecar-sum preservation,
-    * and post-compaction bloom/bounds pruning are GlprSpec-pinned. */
-  def compactionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-compact").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(16, col("doc_id")), root)
-    compact(root, targetBytes = Long.MaxValue / 2): Unit // one merged shard per run
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q348 — compaction OVER LIVE DELETE-VECTOR MASKS (round-18 verdict
-    * #3): the corpus staged as 16 range-clustered shards, an id-range
-    * MoR delete AND a value MoR delete layered on (straddling,
-    * emptying, and value-scattered masks across several shards), then
-    * ONE `compact()` — masked members are rewritten with their mask
-    * folded in-flight, everything concatenates under fresh names, and
-    * the same manifest flip retires members WITH their dv tokens: the
-    * live view ends mask-free with zero live generation references.
-    * The oracle is the double-complement rollup — hash equality
-    * certifies the fold dropped exactly the masked rows and moved every
-    * survivor exactly once. Mask-free/retirement/race pins live in
-    * GlprDvIntegritySpec. */
-  def maskedCompactionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-maskcompact").toString
-    GlprSource.write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(16, col("doc_id")), root)
-    deleteIdRangeMergeOnRead(root, 100L, 219L): Unit
-    deleteWhereMergeOnRead(spark, root, "lang", Set("de")): Unit
-    val entries = GlprSource.committedEntries(root)
-    compact(root, targetBytes = Long.MaxValue / 2): Unit
-    if (entries.length > 1) {
-      val live = GlprSource.committedEntries(root)
-      require(live.length < entries.length,
-        "q348 contract: compaction must shrink the live shard count")
-      require(live.forall(l => GlprSource.entryDvGen(l).isEmpty),
-        "q348 contract: the compacted live view must be mask-free " +
-          s"(got ${live.mkString(", ")})")
-    }
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
-
-  /** q350 — Z-ORDER RECLUSTER through the catalog (round-18 verdict
-    * #5): the corpus INSERTed hash-scattered (every shard spans the
-    * full id range AND every lang — nothing prunes), then `CALL
-    * sys.recluster('ns.t', 8, 'lang')` rewrites it Morton-interleaved:
-    * each shard a compact rectangle in (doc_id, lang) space, so a
-    * rectangular probe prunes on BOTH channels at once (id bounds +
-    * sidecar lang sets) — required in-pipeline via the plan events; the
-    * pre/post box comparison is GlprCatalogSpec-pinned. The oracle is
-    * the FULL-table rollup: hash equality certifies the rewrite moved
-    * every row exactly once. */
-  def zorderReclusterPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_zo",
-      // AQE coalescing would merge the clustered shuffles (both the
-      // hash staging and the z-range rewrite) into one fat shard —
-      // the layout IS the deliverable here (round-16 gotcha)
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, root) =>
-      GlprSource.createDocs(s2, "glpr_zo.ns.t")
-      s2.sql("INSERT INTO glpr_zo.ns.t " +
-        "SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY xxhash64(doc_id)")
-      s2.sql("CALL glpr_zo.sys.recluster('ns.t', 8, 'lang')").collect(): Unit
-      val tpath = new java.io.File(root, "ns/t").getAbsolutePath
-      // the rectangle probe must prune post-recluster (it could not
-      // pre-recluster: every hash shard intersected every box)
-      val probe = s2.sql("SELECT count(*) FROM glpr_zo.ns.t " +
-        "WHERE doc_id >= 100 AND doc_id < 200 AND lang = 'en'")
-        .head().getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) has only empty shards,
-      // which always keep — the prune contract only binds on data
-      if (probe > 0)
-        Option(GlprSource.planEvents.get(tpath)).foreach { case (kept, total) =>
-          require(total < 2 || kept < total,
-            s"q350 contract: the z-order layout must prune the rectangle " +
-              s"probe (kept $kept of $total, matched $probe rows)")
-        }
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-          | CAST(min(doc_id) AS BIGINT) AS min_id,
-          | CAST(max(doc_id) AS BIGINT) AS max_id
-          |FROM glpr_zo.ns.t GROUP BY lang""".stripMargin)
-    }
-
-  /** q351 — ZERO-COPY CLONE end to end: the corpus staged as a catalog
-    * table, a MoR delete layered on (so the snapshot carries live dv
-    * tokens — the clone must share MASKS, not just payloads), `CALL
-    * sys.clone('ns.src', 'ns.dst')`, then a second MoR delete applied
-    * to the CLONE ONLY. The result is both tables' rollups side by
-    * side: the source must show exactly the pre-clone state (the
-    * clone's delete touched shared bytes through its OWN manifest — a
-    * leak breaks the hash) and the clone must show the further-deleted
-    * state. Zero-copy itself (shared inodes, hard-link counts),
-    * vacuum independence, and the dst-exists refusal are
-    * GlprCatalogSpec-pinned. */
-  def clonePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_cl") { (s2, root) =>
-      GlprSource.createDocs(s2, "glpr_cl.ns.src")
-      s2.sql("INSERT INTO glpr_cl.ns.src SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` DISTRIBUTE BY doc_id div 100")
-      val srcPath = new java.io.File(root, "ns/src").getAbsolutePath
-      deleteIdRangeMergeOnRead(srcPath, 40L, 49L): Unit // pre-clone mask
-      s2.sql("CALL glpr_cl.sys.clone('ns.src', 'ns.dst')").collect(): Unit
-      // diverge the CLONE only
-      s2.sql("CALL glpr_cl.sys.delete_where_mor('ns.dst', 'lang', 'de')")
-        .collect(): Unit
-      s2.sql(
-        """SELECT 'src' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_cl.ns.src GROUP BY 2
-          |UNION ALL
-          |SELECT 'clone', lang, CAST(count(*) AS BIGINT),
-          | CAST(sum(doc_id) AS BIGINT)
-          |FROM glpr_cl.ns.dst GROUP BY 2""".stripMargin)
-    }
-
-  /** q353 — BUCKET-TRANSFORM STORAGE-PARTITIONED JOIN, end to end: two
-    * tables `PARTITIONED BY (bucket(8, doc_id))` (the writer's required
-    * clustering + q353 shard rolling keeps every shard single-bucket),
-    * then a `doc_id` equi-join planned with ZERO join exchanges — both
-    * scans report `KeyGroupedPartitioning(bucket(8, doc_id))`, resolved
-    * through the catalog's V2 bucket function, and Spark zips the bucket
-    * classes. The corpus⋈corpus join that moves no bytes at 100 TB.
-    * Shuffle-freeness is REQUIRED in-pipeline (broadcast disabled so
-    * the exchange-free plan is the report, not a broadcast); the final
-    * rollup's lang exchange is expected and untouched. Oracle = the
-    * relational join rollup over the raw parquet. */
-  def bucketSpjPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    var q: DataFrame = null
-    val out = GlprSource.catalogScenario(spark, "glpr_bj") { (s2, _) =>
-      Seq("facts", "dims").foreach(t => GlprSource.createDocs(s2,
-        s"glpr_bj.ns.$t", partitionedBy = "bucket(8, doc_id)"))
-      s2.sql("INSERT INTO glpr_bj.ns.facts SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT INTO glpr_bj.ns.dims SELECT doc_id, lang, 'dim', " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 3 <> 0")
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      q = s2.sql(
-        """SELECT f.lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(f.doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_bj.ns.facts f JOIN glpr_bj.ns.dims d
-          |ON f.doc_id = d.doc_id
-          |GROUP BY 1""".stripMargin)
-      q
-    }
-    // the shuffle-freeness contract holds whenever there is data to
-    // join; an ALL-EMPTY corpus commits only rows=0 shards, which carry
-    // no bucket value — the report declines by design and the fallback
-    // plan (over zero rows) is fine. `q` ran inside the scenario, so its
-    // executed plan is final.
-    if (!out.isEmpty) {
-      val plan = q.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(doc_id"),
-        s"q353 contract: the co-bucketed doc_id join must plan ZERO join " +
-          s"exchanges (storage-partitioned join):\n$plan")
-    }
-    out
-  }
-
-  /** q354 — IMMUTABLE TAGS as retention overrides, end to end: tag the
-    * ingest snapshot, DELETE a slice (copy-on-write — a new version),
-    * then run the FULL retention cycle (`expire_versions(keep=1)` +
-    * `vacuum`). The tagged snapshot SURVIVES — expire skips tagged
-    * versions, so vacuum keeps every shard the snapshot references —
-    * and `VERSION AS OF 'shipped'` still reads the exact pre-delete
-    * corpus while main reads the post-delete one. Oracle = both sides
-    * derived relationally; immutability/name-space/drop-then-reclaim
-    * pins in GlprCatalogSpec. */
-  def tagsPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_tg") { (s2, _) =>
-      GlprSource.createDocs(s2, "glpr_tg.ns.docs")
-      s2.sql("INSERT INTO glpr_tg.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      s2.sql("CALL glpr_tg.sys.tag('ns.docs', 'shipped')").collect(): Unit
-      s2.sql("DELETE FROM glpr_tg.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-      // the retention cycle that would have reclaimed the snapshot
-      s2.sql("CALL glpr_tg.sys.expire_versions('ns.docs', 1)").collect(): Unit
-      s2.sql("CALL glpr_tg.sys.vacuum('ns.docs')").collect(): Unit
-      s2.sql(
-        """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_tg.ns.docs GROUP BY 2
-          |UNION ALL
-          |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
-          | CAST(sum(doc_id) AS BIGINT)
-          |FROM glpr_tg.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin)
-    }
-
-  /** q364 — AGE-BASED RETENTION end to end (round-19 verdict #7):
-    * three commits pinned to a fixed day-apart clock schedule (the
-    * q335 durable-clock staging tool — deterministic oracles need a
-    * deterministic clock), the oldest TAGGED; then
-    * `expire_versions(older_than_ms = T0 + 1.5 days)` + `vacuum`.
-    * Exactly the middle version expires — the tagged snapshot is
-    * exempt (q354), the young head survives on age — and the live
-    * read, the tagged read, and the history length certify it. Oracle
-    * = both sides derived relationally. Head-never-expires and
-    * mode-exclusivity pins in GlprCatalogSpec. */
-  def ageRetentionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val T0 = 1700000000000L // fixed epoch instant; commits a day apart
-    val day = 86400000L
-    GlprSource.catalogScenario(spark, "glpr_age") { (s2, root) =>
-      GlprSource.createDocs(s2, "glpr_age.ns.docs")
-      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      s2.sql("CALL glpr_age.sys.tag('ns.docs', 'shipped')").collect(): Unit
-      s2.sql("DELETE FROM glpr_age.ns.docs WHERE doc_id BETWEEN 100 AND 199")
-      s2.sql("INSERT INTO glpr_age.ns.docs SELECT doc_id + 1000000, lang, " +
-        s"source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE doc_id < 50")
-      val path = new java.io.File(root, "ns/docs").getAbsolutePath
-      val vs = GlprSource.listManifestVersions(path)
-      vs.zipWithIndex.foreach { case (v, i) =>
-        GlprSource.pinVersionCommitMs(path, v, T0 + i * day) }
-      // cutoff between the 2nd and 3rd commit: the tagged v1 is exempt,
-      // the middle version expires, the head survives on age. An
-      // ALL-EMPTY corpus may collapse the schedule (no-op commits mint
-      // no versions), so the staging sanity check only binds when the
-      // three-commit history actually exists.
-      val dropped = s2.sql("CALL glpr_age.sys.expire_versions('ns.docs', " +
-        s"older_than_ms => ${T0 + day + day / 2})").head().getLong(0)
-      require(vs.length < 3 || dropped >= 1L,
-        s"q364 staging: expected the middle version to expire, dropped $dropped")
-      s2.sql("CALL glpr_age.sys.vacuum('ns.docs')").collect(): Unit
-      s2.sql(
-        """SELECT 'live' AS side, lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_age.ns.docs GROUP BY 2
-          |UNION ALL
-          |SELECT 'tagged', lang, CAST(count(*) AS BIGINT),
-          | CAST(sum(doc_id) AS BIGINT)
-          |FROM glpr_age.ns.docs VERSION AS OF 'shipped' GROUP BY 2""".stripMargin)
-    }
-  }
-
-  /** q355 — CHECK CONSTRAINTS end to end: admit `doc_id >= 0 AND text
-    * IS NOT NULL` over the empty table, ingest the corpus under it
-    * (every row evaluated in the writer), then REQUIRE in-pipeline that
-    * a violating append refuses WHOLE (no partial commit — the count is
-    * unchanged afterward). Oracle = the plain corpus rollup: a gate
-    * that admits clean data must be invisible in the result. Lifecycle
-    * pins (dirty-admit refusal, NULL-passes, DML enforcement, rename/
-    * drop guards, token survival across ALTER) in GlprCatalogSpec. */
-  def constraintsPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_ck") { (s2, _) =>
-      GlprSource.createDocs(s2, "glpr_ck.ns.docs")
-      s2.sql("CALL glpr_ck.sys.add_constraint('ns.docs', 'sane-doc', " +
-        "'doc_id >= 0 AND text IS NOT NULL')").collect(): Unit
-      s2.sql("INSERT INTO glpr_ck.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      val before = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-        .head().getLong(0)
-      // the refusal must be THE CHECK GATE's (walk the cause chain for
-      // the constraint diagnostic) — a blanket catch would let any
-      // unrelated failure satisfy the contract vacuously
-      val refused =
-        try {
-          s2.sql("INSERT INTO glpr_ck.ns.docs " +
-            "VALUES (-1, 'xx', 'bad', 'row')")
-          false
-        } catch {
-          case e: Exception =>
-            Iterator.iterate(e: Throwable)(_.getCause)
-              .takeWhile(_ != null).take(10)
-              .exists(t => Option(t.getMessage)
-                .exists(_.contains("GLPR CHECK constraint 'sane-doc'")))
-        }
-      require(refused,
-        "q355 contract: the violating append must refuse WITH the " +
-          "constraint diagnostic")
-      val after = s2.sql("SELECT count(*) FROM glpr_ck.ns.docs")
-        .head().getLong(0)
-      require(after == before,
-        s"q355 contract: a refused write must land NOTHING " +
-          s"($before -> $after)")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-          |FROM glpr_ck.ns.docs GROUP BY 1""".stripMargin)
-    }
-
-  /** q356 — `sys.files` shard introspection, certified against the
-    * data: the pipeline ingests the corpus, reads the table's
-    * SIDECAR-ONLY statistics through `CALL sys.files` (one row per live
-    * shard: rows, bytes, doc_id bounds, spec, mask state — zero data
-    * bytes opened), and returns the metadata-derived corpus invariants
-    * (row count, id bounds). The oracle computes the same numbers FROM
-    * THE DATA — hash equality certifies that the sidecar statistics the
-    * planner prunes and estimates with are exactly right. */
-  def filesPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_fl") { (s2, _) =>
-      GlprSource.createDocs(s2, "glpr_fl.ns.docs")
-      s2.sql("INSERT INTO glpr_fl.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` " +
-        "DISTRIBUTE BY doc_id div 100")
-      val files = s2.sql("CALL glpr_fl.sys.files('ns.docs')").collect()
-      require(files.forall(r => !r.isNullAt(1)),
-        "q356 contract: every connector-written shard carries a sidecar")
-      require(files.forall(r => !r.getBoolean(7)),
-        "q356 contract: a plain ingest is mask-free")
-      val nRows = files.map(_.getLong(1)).sum
-      val los = files.filter(!_.isNullAt(3)).map(_.getLong(3))
-      val his = files.filter(!_.isNullAt(4)).map(_.getLong(4))
-      val rows: Seq[org.apache.spark.sql.Row] = Seq(
-        org.apache.spark.sql.Row("max_id",
-          if (his.isEmpty) null else java.lang.Long.valueOf(his.max)),
-        org.apache.spark.sql.Row("min_id",
-          if (los.isEmpty) null else java.lang.Long.valueOf(los.min)),
-        org.apache.spark.sql.Row("n_rows", java.lang.Long.valueOf(nRows)))
-      import scala.jdk.CollectionConverters._
-      s2.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("metric",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.LongType, nullable = true))))
-    }
-
-  /** q358 — ZERO-SHUFFLE EXACT-DEDUP AUDIT: `GROUP BY doc_id` over a
-    * bucket-clustered table plans NO exchange at all — the scan's
-    * `KeyGroupedPartitioning(bucket(n, doc_id))` (q353) already
-    * satisfies the aggregate's clustered distribution, so both the
-    * partial and final aggregates run in place over the bucket classes.
-    * This is the other half of the SPJ dividend: the canonical
-    * dedup-audit ("which ids appear more than once, across ingests?")
-    * on a 100 TB bucketed corpus moves ZERO bytes between executors —
-    * where the same audit on a hash-scattered layout shuffles the whole
-    * key space. Shuffle-freeness required in-pipeline; the duplicate
-    * slice is a second ingest, so the audit spans shards (a real
-    * cross-file dedup, not a within-file one). */
-  def dedupAuditPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    var q: DataFrame = null
-    val out = GlprSource.catalogScenario(spark, "glpr_da") { (s2, _) =>
-      GlprSource.createDocs(s2, "glpr_da.ns.docs",
-        partitionedBy = "bucket(8, doc_id)")
-      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet`")
-      // the duplicate ingest: every fifth document lands again
-      s2.sql("INSERT INTO glpr_da.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 5 = 0")
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      q = s2.sql(
-        """SELECT doc_id, CAST(count(*) AS BIGINT) AS copies
-          |FROM glpr_da.ns.docs
-          |GROUP BY doc_id HAVING count(*) > 1""".stripMargin)
-      q
-    }
-    if (!out.isEmpty) {
-      val plan = q.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange"),
-        s"q358 contract: the dedup audit over a bucket-clustered table " +
-          s"must plan ZERO exchanges:\n$plan")
-    }
-    out
-  }
-
-  /** q360 — METADATA TABLES from plain SQL: two ingests mint versions
-    * 1 and 2, then `SELECT version, n_rows FROM cat.ns.docs.history`
-    * reads the cumulative per-version row counts — sidecar-derived,
-    * zero data bytes — as an ordinary table (the Iceberg
-    * `db.table.history` idiom; filterable, joinable, aggregatable).
-    * Oracle recomputes both snapshots' counts from the data, so hash
-    * equality certifies the SQL-served history numbers exactly. */
-  def metadataTablesPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    GlprSource.catalogScenario(spark, "glpr_md") { (s2, _) =>
-      GlprSource.createDocs(s2, "glpr_md.ns.docs")
-      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 = 0")
-      s2.sql("INSERT INTO glpr_md.ns.docs SELECT doc_id, lang, source, " +
-        s"text FROM parquet.`$dir/documents.parquet` WHERE doc_id % 2 <> 0")
-      s2.sql(
-        """SELECT version, n_rows FROM glpr_md.ns.docs.history
-          |WHERE version <= 2 ORDER BY version""".stripMargin)
-    }
 }

@@ -334,1957 +334,6 @@ object GlprSource {
     docs.select("doc_id", "lang", "source", "text")
       .write.format("graft.io.GlprSource").mode("append").save(path)
 
-  /** The documents table staged as GLPR once per dir ([[TempDirs.once]]):
-    * the batch read, the streamed profiles, the relay and the ingest
-    * merge all read these same shards. */
-  private[io] def stagedPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    TempDirs.once(s"glpr-staged#$dir") {
-      val root = TempDirs.scratch("graft-glpr").toString
-      write(Tables(spark, dir, "documents").select("doc_id", "lang", "source", "text"), root)
-      root
-    }
-  def documentsVia(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.format("graft.io.GlprSource").load(stagedPath(spark, dir))
-
-  /** Range-disjoint staging for the pruning paths (q295): the corpus
-    * written `repartitionByRange(8, doc_id)`, so every shard's sidecar
-    * doc_id bounds are TIGHT and shard pruning (static ranges and the
-    * DPP-style runtime key sets) can actually skip files. This is the
-    * layout discipline a 100 TB GLPR corpus would be ingested with —
-    * identical to clustering parquet files by a join key so min/max
-    * indexes prune. */
-  private[io] def rangeStagedPath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    TempDirs.once(s"glpr-ranged#$dir") {
-      val root = TempDirs.scratch("graft-glpr-ranged").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartitionByRange(8, org.apache.spark.sql.functions.col("doc_id")), root)
-      root
-    }
-
-  /** q298 — the catalog SQL front door end to end ([[GlprCatalog]]):
-    * register the catalog, `CREATE TABLE` through DDL, `INSERT INTO …
-    * SELECT` the documents corpus through the two-phase-commit write
-    * path, then aggregate back with a plain `SELECT` over the catalog
-    * identifier — not one DataFrame-API read or write in the pipeline,
-    * the SQL-only-consumer contract a lakehouse catalog exists for. */
-  def catalogSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_cat") { (s2, _) =>
-      createDocs(s2, "glpr_cat.corpus.docs")
-      s2.sql("INSERT INTO glpr_cat.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | min(doc_id) AS min_id, max(doc_id) AS max_id
-          |FROM glpr_cat.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q315 — the DSv2 FunctionCatalog front door ([[GlprFunctions]]):
-    * `glpr_fn.sys.nfc_bytes` (MAGIC_METHOD scalar — codegen'd Invoke, no
-    * row boxing) and the V2 aggregate `glpr_fn.sys.bytes_sum`
-    * (V2Aggregator: map-side partials + merge), both called from plain
-    * SQL by catalog-qualified name over the documents view — no session
-    * registration, no UDF. The oracle recomputes with DuckDB's OWN
-    * `nfc_normalize`/`strlen`: cross-engine hash agreement certifies the
-    * normalization semantics AND the function-resolution wiring.
-    * Listing, unknown-name/namespace rejections, and arity checks are
-    * GlprCatalogSpec-pinned. */
-  def functionCatalogPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_fn") { (s2, _) =>
-      s2.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("fn_docs")
-      s2.sql(
-        """SELECT lang,
-          | CAST(sum(glpr_fn.sys.nfc_bytes(text)) AS BIGINT) AS nfc_bytes,
-          | glpr_fn.sys.bytes_sum(text) AS raw_bytes,
-          | CAST(count(*) AS BIGINT) AS n_docs
-          |FROM fn_docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q316 — version HISTORY through `CALL <cat>.sys.history('ns.table')`
-    * (the DESCRIBE HISTORY analogue, via Spark 4's ProcedureCatalog):
-    * the corpus lands in three slice INSERTs — three manifest versions —
-    * and the procedure reports one row per version with its CUMULATIVE
-    * row count (what a `versionAsOf` read of that version returns). The
-    * oracle recomputes the cumulative slice counts from the documents
-    * table: agreement certifies the versions were minted exactly once
-    * per commit and snapshot the right states. Shard counts are
-    * partitioning-dependent bookkeeping and projected away. */
-  def historyPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_hist") { (s2, _) =>
-      createDocs(s2, "glpr_hist.corpus.docs")
-      // degenerate-SF determinism (round-16 ADVICE): an EMPTY slice may
-      // or may not mint a version (0 input partitions → 0 tasks → no
-      // manifest change), which would make the version numbering
-      // SF-dependent; skip empty slices so versions = nonempty slices,
-      // exactly what the oracle derives (same clamp family as q311/q317)
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          val n = s2.sql("SELECT count(*) AS n FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-          if (n > 0)
-            s2.sql("INSERT INTO glpr_hist.corpus.docs " +
-              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-              s"WHERE $p")
-        }
-      s2.sql("CALL glpr_hist.sys.history('corpus.docs')")
-        .select("version", "n_rows")
-    }
-
-  /** q317 — the MAINTENANCE ladder through SQL `CALL`: three slice
-    * INSERTs, `restore(2)` (roll the live view back to the first two),
-    * `compact` (merge the survivors), `vacuum` (no-op on a clean dir),
-    * then the live rollup. The oracle aggregates `documents WHERE
-    * doc_id < 300`: hash agreement certifies restore dropped exactly the
-    * third slice and compaction moved every surviving row exactly once —
-    * the whole Iceberg-style `CALL catalog.system.proc(...)` surface,
-    * effect-checked cross-engine. Per-procedure result sets and loud
-    * rejections are GlprCatalogSpec-pinned. */
-  def maintenanceSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_maint") { (s2, root) =>
-      val tableDir = new java.io.File(root, "corpus/docs")
-      createDocs(s2, "glpr_maint.corpus.docs")
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          s2.sql("INSERT INTO glpr_maint.corpus.docs " +
-            s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-            s"WHERE $p")
-        }
-      // an all-empty corpus mints fewer versions; clamp like q311
-      val pin = math.min(2L,
-        listManifestVersions(tableDir.getAbsolutePath).lastOption.getOrElse(1L))
-      s2.sql(s"CALL glpr_maint.sys.restore('corpus.docs', $pin)").collect()
-      s2.sql(s"CALL glpr_maint.sys.compact('corpus.docs', ${Long.MaxValue / 2})")
-        .collect()
-      s2.sql("CALL glpr_maint.sys.vacuum('corpus.docs')").collect()
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_maint.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q319 — STORAGE-PARTITIONED JOIN: two `PARTITIONED BY (lang)` GLPR
-    * tables (the corpus and a per-lang dimension), joined on the
-    * partition key with broadcast disabled and
-    * `spark.sql.sources.v2.bucketing.enabled` on — both scans report
-    * `KeyGroupedPartitioning(identity(lang))` with `HasPartitionKey`
-    * shard partitions, so Spark lines the sides up by partition VALUE
-    * and the whole plan (join AND the following per-lang aggregate)
-    * runs with ZERO exchanges. The oracle recomputes the join+rollup
-    * relationally; the no-Exchange plan shape and the
-    * bucketing-disabled control (shuffles reappear) are
-    * GlprCatalogSpec-pinned. This is the payoff of partitioned GLPR
-    * ingest at 100 TB: corpus⋈corpus on the partition key moves zero
-    * bytes between executors. */
-  def storagePartitionedJoinPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_spj",
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // the clustered-write contract (see q304): one lang per shard —
-      // coalescing pinned off and enough write partitions that the five
-      // lang constants hash apart (data-independent, verified by the
-      // single-valued sidecars the scan's partitioning report requires)
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "32") { (s2, _) =>
-      createDocs(s2, "glpr_spj.corpus.docs", partitionedBy = "lang")
-      s2.sql("INSERT INTO glpr_spj.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      createDocs(s2, "glpr_spj.corpus.langdim", partitionedBy = "lang")
-      s2.sql("INSERT INTO glpr_spj.corpus.langdim " +
-        "SELECT min(doc_id) AS doc_id, lang, 'dim' AS source, " +
-        "concat('meta-', lang) AS text " +
-        s"FROM parquet.`$dir/documents.parquet` GROUP BY lang")
-      s2.sql(
-        """SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(min(m.doc_id) AS BIGINT) AS dim_min_id
-          |FROM glpr_spj.corpus.docs d JOIN glpr_spj.corpus.langdim m
-          |ON d.lang = m.lang GROUP BY d.lang""".stripMargin)
-    }
-
-  /** q325 — DYNAMIC PARTITION OVERWRITE through SQL: the full corpus in
-    * a `PARTITIONED BY (lang)` table, then `INSERT OVERWRITE` under
-    * `partitionOverwriteMode=dynamic` with the de/zh `doc_id < 300`
-    * subset — ONLY the de/zh partitions are replaced (one manifest
-    * flip), every other language keeps its full rows. The oracle
-    * applies the same per-partition replacement relationally — a
-    * surviving pre-overwrite de/zh row or a clipped en/es/fr row breaks
-    * the hash. Closes the round-15 documented gap ("no per-partition
-    * commit log"): the `_manifest` IS one now. Straddler/unknown-value
-    * refusals pinned in GlprCatalogSpec. */
-  def dynamicOverwritePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_dyn",
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
-      // clustered-write contract: single-valued shards (q304/q319 note)
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "32") { (s2, _) =>
-      createDocs(s2, "glpr_dyn.corpus.docs", partitionedBy = "lang")
-      s2.sql("INSERT INTO glpr_dyn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT OVERWRITE glpr_dyn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE lang IN ('de', 'zh') AND doc_id < 300")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | max(doc_id) AS max_id
-          |FROM glpr_dyn.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** The fixed doc_id slice expression behind the DML pipelines (q301/
-    * q303): three contiguous id ranges `[min,100) [100,300) [300,max]`,
-    * used as a DISTRIBUTE BY / repartition key so each range lands
-    * wholly in ONE writer partition — hence one shard with TIGHT sidecar
-    * bounds per range. Hash assignment of the three slice values to
-    * partitions is data-independent (Murmur3 of the constant), so the
-    * layout — which shard holds which range — is deterministic across
-    * runs and SFs: the precondition for a FIXED oracle predicate against
-    * a shard-aligned DELETE. This is the miniature of real GLPR ingest
-    * discipline: cluster by the prune key at write time so metadata-only
-    * operations (pruning, DELETE) stay shard-aligned. */
-  private val SliceSql =
-    "(CASE WHEN doc_id < 100 THEN 0 WHEN doc_id < 300 THEN 1 ELSE 2 END)"
-
-  /** One catalog scenario: a call-scoped scratch root
-    * ([[TempDirs.scoped]]), a fresh session with `catalog` bound to it
-    * and the caller's `confs` set, then `body(session, root)`. The
-    * body's BOUNDED result is [[rematerialize]]d onto `spark`, and the
-    * root is deleted before the call returns. The session is fresh per
-    * call because a session's CatalogManager caches the catalog plugin
-    * instance after first use: re-pointing `spark.sql.catalog.<name>.root`
-    * on the same session would run DDL against the stale root. */
-  private[io] def catalogScenario(spark: org.apache.spark.sql.SparkSession,
-      catalog: String, confs: (String, String)*)(
-      body: (org.apache.spark.sql.SparkSession, String) => DataFrame): DataFrame =
-    TempDirs.scoped("graft-" + catalog.replace('_', '-')) { root =>
-      val s2 = freshCatalogSession(spark, catalog, root.toString)
-      confs.foreach { case (k, v) => s2.conf.set(k, v) }
-      rematerialize(spark, body(s2, root.toString))
-    }
-
-  /** `CREATE TABLE <table>` with the GLPR documents columns, then
-    * `extraCols` (schema-evolution extras such as `ts STRING`), and
-    * `PARTITIONED BY (<partitionedBy>)` when that is set. */
-  private[io] def createDocs(s: org.apache.spark.sql.SparkSession, table: String,
-      partitionedBy: String = "", extraCols: String = ""): Unit =
-    s.sql(s"CREATE TABLE $table " +
-      "(doc_id BIGINT, lang STRING, source STRING, text STRING" +
-      (if (extraCols.isEmpty) ")" else s", $extraCols)") +
-      (if (partitionedBy.isEmpty) "" else s" PARTITIONED BY ($partitionedBy)")): Unit
-
-  private def freshCatalogSession(spark: org.apache.spark.sql.SparkSession,
-      catalog: String, root: String): org.apache.spark.sql.SparkSession = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    s2.conf.set(s"spark.sql.catalog.$catalog", "graft.io.GlprCatalog")
-    s2.conf.set(s"spark.sql.catalog.$catalog.root", root)
-    s2
-  }
-  /** Detach a BOUNDED result frame from its torn-down child session by
-    * materializing it onto the caller's. The collect routes through
-    * [[graft.streaming.Events.guardedSettleRows]] — the ONE shared
-    * capped-collect guard (round-16 verdict: this path had no cap while
-    * the settle path did, the exact parallel-path drift flagged for
-    * settles in r14/r15). Every caller returns a keyed rollup, never a
-    * per-row corpus projection; the cap trips long before driver memory
-    * does. */
-  private def rematerialize(spark: org.apache.spark.sql.SparkSession,
-      res: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows = graft.streaming.Events.guardedSettleRows(res)
-    spark.createDataFrame(rows.toSeq.asJava, res.schema)
-  }
-
-  /** q301 — METADATA-ONLY DELETE through the SQL front door: the corpus
-    * INSERTed slice-clustered (see [[SliceSql]]), then `DELETE FROM …
-    * WHERE doc_id < 100` — accepted because the predicate is
-    * shard-aligned by construction, executed as whole-shard unlinks
-    * (zero data bytes rewritten; [[GlprTable.canDeleteWhere]]), then the
-    * survivor set aggregated back. The oracle is the same rollup over
-    * `documents WHERE doc_id >= 100` — a hash match certifies no
-    * under- or over-deletion. The straddling-decline side of the
-    * contract is GlprCatalogSpec-pinned. */
-  def deleteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_del",
-      // AQE's partition coalescing would merge the small slice partitions
-      // of the DISTRIBUTE BY into one task — producing a shard whose
-      // bounds straddle the delete cut, which canDeleteWhere (correctly)
-      // refuses. Shard-aligned ingest means the WRITER's partitioning is
-      // the contract; pin it for this session.
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_del.corpus.docs")
-      s2.sql("INSERT INTO glpr_del.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        s"DISTRIBUTE BY $SliceSql")
-      s2.sql("DELETE FROM glpr_del.corpus.docs WHERE doc_id < 100")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-          |FROM glpr_del.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q302 — INSERT OVERWRITE through the SQL front door
-    * ([[GlprWriteBuilder]] `SupportsTruncate`: truncate-then-append for
-    * the unpartitioned table): the full corpus INSERTed, then
-    * OVERWRITTEN by its de/zh subset, then aggregated back. The oracle
-    * aggregates only the subset — any surviving pre-overwrite row (an
-    * append masquerading as overwrite) or lost subset row breaks the
-    * hash. Shard+sidecar truncation is GlprCatalogSpec-pinned. */
-  def overwriteSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_ow") { (s2, _) =>
-      createDocs(s2, "glpr_ow.corpus.docs")
-      s2.sql("INSERT INTO glpr_ow.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("INSERT OVERWRITE glpr_ow.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-        "WHERE lang IN ('de', 'zh')")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | min(doc_id) AS min_id, max(doc_id) AS max_id
-          |FROM glpr_ow.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q303 — `_shard` provenance rollup: the corpus written
-    * slice-clustered ([[SliceSql]] via `repartition`, same
-    * deterministic three-shard layout as q301), read back with the
-    * [[GlprTable.metadataColumns]] `_shard` column, and rolled up BY
-    * SHARD FILE — the quarantine/re-crawl inventory an ingest pipeline
-    * keys on lineage. The shard names themselves are partition-id
-    * bookkeeping, so the result drops them after grouping and orders by
-    * `min_id`; because each slice is exactly one shard, the oracle is
-    * the same rollup grouped by the slice expression — agreement
-    * certifies that `_shard` really partitions records by their file. */
-  def shardProvenanceRollup(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-prov").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartition(8, expr(SliceSql)), root)
-    spark.read.format("graft.io.GlprSource").load(root)
-      .select(col("doc_id"), col("_shard"))
-      .groupBy(col("_shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-      .select(col("n_docs"), col("min_id"), col("max_id"))
-  }
-
-  /** q304 — PARTITIONED catalog tables end to end: `CREATE TABLE …
-    * PARTITIONED BY (lang)` (identity transform through the SQL front
-    * door), an INSERT that Spark CLUSTERS by lang because the write
-    * declares a required distribution ([[GlprWriteBuilder]]), commit
-    * sidecars carrying each shard's partition-value set, and a
-    * `WHERE lang = 'en'` read that PRUNES non-en shards from the plan
-    * ([[GlprScan]] value pruning; shard-skip pinned via [[planEvents]]
-    * in GlprCatalogSpec). This is the first DDL a lakehouse user runs
-    * after CREATE TABLE, composed with the connector's existing sidecar
-    * pruning — the oracle certifies the residual row filter still
-    * applies above the pruned scan. */
-  def partitionedCatalogPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    rematerialize(spark, partitionedTableSession(spark, dir).sql(
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-        |FROM glpr_part.corpus.docs WHERE lang = 'en'
-        |GROUP BY source""".stripMargin))
-
-  /** q306 — GROUPED metadata-only aggregate over the partitioned table:
-    * `count(*) GROUP BY lang` answered ENTIRELY from the sidecar
-    * (rows, partition-value) pairs — the hive-metastore partition-count
-    * trick ([[GlprScanBuilder]] grouped pushdown): zero shards opened,
-    * no aggregate exec in the plan. Sound because the clustered
-    * partitioned write left every shard single-valued in lang, which
-    * the sidecar value sets certify per shard; any multi-valued shard
-    * declines to the ordinary plan. Zero-shard pin in GlprCatalogSpec. */
-  def partitionedMetadataCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    rematerialize(spark, partitionedTableSession(spark, dir).sql(
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM glpr_part.corpus.docs GROUP BY lang""".stripMargin))
-
-  /** q308 — PARTITION-VALUE metadata DELETE: a fresh PARTITIONED BY
-    * (lang) table (own root — q304/q306's staging must stay
-    * unmutated), the corpus INSERTed lang-clustered, then `DELETE FROM
-    * … WHERE lang IN ('de','zh')` accepted because every data shard's
-    * sidecar value set is entirely inside or outside the wanted set —
-    * dropping partitions is unlinking their shards, zero bytes
-    * rewritten ([[GlprTable.canDeleteWhere]] value form). Survivors
-    * hash-match `documents WHERE lang NOT IN (…)`; the mixed-predicate
-    * and value-straddling declines are GlprCatalogSpec-pinned. */
-  def partitionDeletePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_pdel",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_pdel.corpus.docs", partitionedBy = "lang")
-      s2.sql("INSERT INTO glpr_pdel.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("DELETE FROM glpr_pdel.corpus.docs WHERE lang IN ('de', 'zh')")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-          |FROM glpr_pdel.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q310 — MANIFEST commit-point visibility: the corpus written
-    * through the job-committed path (manifest published), then a
-    * CRASHED FOREIGN JOB simulated — a task-level writer renames its
-    * shard in (task commit) but its job never reaches the manifest
-    * commit. The orphan is on disk, invisible: the read lists shards
-    * from the `_manifest` log, so the aggregate hash-matches the plain
-    * corpus oracle WITHOUT the orphan row — exactly-once job
-    * visibility, which the pre-manifest per-task-rename commit point
-    * could not give. [[rebuildManifest]] as the recovery tool (adopt
-    * the orphan) is GlprSpec-pinned. */
-  def manifestVisibilityPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-manifest").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text"), root)
-    val w = new GlprWriter(root, schema, 999999, 999999L)
-    w.write(org.apache.spark.sql.catalyst.InternalRow(-1L,
-      org.apache.spark.unsafe.types.UTF8String.fromString("xx"),
-      org.apache.spark.unsafe.types.UTF8String.fromString("orphan"),
-      org.apache.spark.unsafe.types.UTF8String.fromString(
-        "ORPHAN ROW from a crashed job - must stay invisible")))
-    w.commit(); w.close()
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q311 — TIME TRAVEL over the append history: the corpus staged in
-    * THREE successive batch appends (fixed doc_id slices `< 100`,
-    * `[100, 300)`, `>= 300` — nonempty at every test SF), each job
-    * commit snapshotting a manifest version (`_manifest.v<n>`), then
-    * read back pinned to VERSION 2 — the state after the first two
-    * commits. The oracle aggregates `documents WHERE doc_id < 300`:
-    * hash equality certifies the historical read returns exactly the
-    * first two appends, with rows appended LATER invisible — which also
-    * certifies the append-numbering contract (a same-name replace would
-    * bleed slice-3 bytes into version 2's shards). Version enumeration,
-    * the SQL `VERSION AS OF` front door, loud unknown-version /
-    * unlinked-shard / streaming rejections, read-only pinned tables,
-    * and replay-idempotent version minting are GlprSpec /
-    * GlprCatalogSpec-pinned. */
-  def timeTravelPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = timeTravelStagedRoot(spark, dir)
-    // version 2 = "after the first two appends"; an all-empty corpus
-    // mints only one (empty) version — appends that change nothing mint
-    // nothing — so clamp to the latest available version there
-    val pin = math.min(2L, listManifestVersions(root).lastOption.getOrElse(1L))
-    spark.read.format("graft.io.GlprSource")
-      .option("versionAsOf", pin.toString).load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-  /** The q311/q312 shared three-append staging: slices `< 100`,
-    * `[100, 300)`, `>= 300` of the documents table, one job commit (=
-    * one manifest version) each. APPEND-ONLY — both consumers only read
-    * it, so one staging serves both. */
-  private[io] def timeTravelStagedRoot(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    TempDirs.once(s"glpr-timetravel#$dir") {
-      import org.apache.spark.sql.functions._
-      val out = TempDirs.scratch("graft-glpr-timetravel").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 100), out) // version 1
-      write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), out) // v2
-      write(docs.filter(col("doc_id") >= 300), out) // version 3
-      out
-    }
-
-  /** q312 — INCREMENTAL READ between versions (append-only change data
-    * capture): `changesFromVersion=m` (+ optional `versionAsOf=n` upper
-    * pin) plans ONLY the shards added after version m — the incremental
-    * consumer's front door: "give me what landed since my last sync"
-    * costs the NEW shards' bytes, never a corpus rescan, at any corpus
-    * size. Runs over q311's shared three-append staging; changes 1→2
-    * must be exactly the SECOND append, so the oracle is the documents
-    * slice `[100, 300)` — a hash match certifies no old row leaks in
-    * and no new row is missed. Non-append histories fail loudly
-    * ([[changeShards]]); composition with pruning/stats and the loud
-    * rejections are GlprSpec-pinned. Chained with the q292 MERGE this
-    * is exactly-once incremental ingest. */
-  def changesPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = timeTravelStagedRoot(spark, dir)
-    val last = listManifestVersions(root).lastOption.getOrElse(1L)
-    spark.read.format("graft.io.GlprSource")
-      .option("changesFromVersion", math.min(1L, last).toString)
-      .option("versionAsOf", math.min(2L, last).toString)
-      .load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q313 — RESTORE TO VERSION: its own three-append staging (restore
-    * MUTATES the manifest, so q311's shared staging can't be reused),
-    * rolled back to version 2 — the third append's rows drop out of the
-    * LIVE view while staying on disk, readable through version 3. The
-    * oracle is the live read's twin, `documents WHERE doc_id < 300`.
-    * Version minting (restore = version 4 with version 2's content),
-    * restore-across-unlink refusal, and post-restore appends are
-    * GlprSpec-pinned. */
-  def restorePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-restore").toString
-    val docs = Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    write(docs.filter(col("doc_id") < 100), root) // version 1
-    write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), root) // v2
-    write(docs.filter(col("doc_id") >= 300), root) // version 3
-    restoreToVersion(root,
-      math.min(2L, listManifestVersions(root).lastOption.getOrElse(1L)))
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"))
-  }
-
-  /** The q328/q329 shared staging: three slice appends (versions 1-3),
-    * a shard-aligned CoW DELETE of the middle slice (version 4 — the
-    * slice shards are RETIRED, not unlinked), then a re-append of the
-    * first slice as fresh inserts (version 5). Read-only for both
-    * consumers. */
-  private[io] def cdfStagedRoot(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    TempDirs.once(s"glpr-cdf#$dir") {
-      import org.apache.spark.sql.functions._
-      val out = TempDirs.scratch("graft-glpr-cdf").toString
-      val docs = Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      write(docs.filter(col("doc_id") < 100), out) // version 1
-      write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), out) // v2
-      write(docs.filter(col("doc_id") >= 300), out) // version 3
-      // mutate ONLY when all three slices are nonempty (deterministic
-      // from the source table, like q316's guard): the consumers detect
-      // the mutated history by its version count (>= 5) and the oracles
-      // gate on the same slice counts — exact at every SF
-      val slicesOk = Seq(col("doc_id") < 100,
-        col("doc_id") >= 100 && col("doc_id") < 300, col("doc_id") >= 300)
-        .forall(p => docs.filter(p).limit(1).count() > 0)
-      if (slicesOk) {
-        GlprMaintenance.deleteIdRange(spark, out, 100L, 299L) // version 4
-        write(docs.filter(col("doc_id") < 100), out) // version 5 (re-insert)
-      }
-      out
-    }
-
-  /** q328 — FULL change data capture ACROSS a DELETE (round-16 verdict
-    * gap #2 closed by retention): `changeMode=cdf` +
-    * `changesFromVersion=3` over the staged history (3 appends, a
-    * retiring DELETE of slice `[100,300)`, a re-append of slice
-    * `< 100`) plans BOTH sides of the manifest diff — the retired
-    * slice-2 shards as `_change_type='delete'` rows (still readable:
-    * retention keeps them on disk for their versions) and the
-    * re-appended slice-1 shards as `'insert'` rows. The oracle derives
-    * the same change set relationally from the documents table; hash
-    * agreement certifies the diff is row-exact on both sides. The loud
-    * refusal now survives only where it must: a vacuumed (physically
-    * reclaimed) removed shard. */
-  def cdfPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = cdfStagedRoot(spark, dir)
-    // mutated history (delete v4 + re-append v5) diffs from the
-    // pre-delete version 3; a degenerate (append-only) staging diffs
-    // from its own tip — an exactly-empty change set
-    val last = listManifestVersions(root).lastOption.getOrElse(1L)
-    val fromV = if (last >= 5L) 3L else last
-    spark.read.format("graft.io.GlprSource")
-      .option("changesFromVersion", fromV.toString)
-      .option("changeMode", "cdf")
-      .load(root)
-      .select(col("_change_type"), col("lang"), col("doc_id"))
-      .groupBy(col("_change_type"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).cast("long").as("id_sum"))
-  }
-
-  /** q329 — TIME TRAVEL ACROSS A DELETE (round-16 verdict gap, closed
-    * by retention): the q328 staging's pre-delete version still reads
-    * the FULL corpus — the DELETE retired its shards instead of
-    * unlinking them, so `versionAsOf=3` (all three appends, before the
-    * delete and the re-append) reproduces the complete documents table
-    * byte-for-byte. The oracle is the plain full rollup. */
-  def timeTravelAcrossDeletePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = cdfStagedRoot(spark, dir)
-    // pre-delete pin on a mutated history; the tip of a degenerate
-    // (append-only) one — either way the read is the FULL corpus
-    val last = listManifestVersions(root).lastOption.getOrElse(1L)
-    val pin = if (last >= 5L) 3L else last
-    spark.read.format("graft.io.GlprSource")
-      .option("versionAsOf", pin.toString).load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q330 — the RETENTION HORIZON end to end: three slice appends, a
-    * retiring DELETE of `[100,300)`, then `expireVersions(keepLast=1)`
-    * + `vacuum` — the only path to physical removal. The staging
-    * REQUIRES that vacuum actually reclaimed the retired slice shards
-    * (when the slice was nonempty) and that the expired pre-delete
-    * version turned loud; the oracle certifies the live view was never
-    * touched by reclamation: the complement rollup. */
-  def expireVacuumPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-expire").toString
-    val docs = Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    write(docs.filter(col("doc_id") < 100), root)
-    write(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300), root)
-    write(docs.filter(col("doc_id") >= 300), root)
-    val deletable = docs.filter(col("doc_id") >= 100 && col("doc_id") < 300)
-      .limit(1).count() > 0
-    if (deletable) {
-      GlprMaintenance.deleteIdRange(spark, root, 100L, 299L)
-      GlprMaintenance.expireVersions(root, keepLast = 1)
-      require(GlprMaintenance.vacuum(root) > 0,
-        "vacuum must reclaim the retired slice shards once expired")
-      val gone = intercept(spark.read.format("graft.io.GlprSource")
-        .option("versionAsOf", "1").load(root).count())
-      require(gone, "expired version must fail loudly after vacuum")
-    }
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-  private def intercept(body: => Any): Boolean =
-    try { body; false } catch { case _: Exception => true }
-
-  /** q331 — TIME TRAVEL OVER DELETE-VECTOR MASKS (round-16 verdict gap
-    * #3, closed by dv GENERATIONS): the corpus staged range-clustered
-    * (version 1), then a merge-on-read delete of `[150,349]` — one
-    * versioned commit (version 2) recording each affected shard's new
-    * immutable `.dv.<gen>` file in its manifest line. The entry reads
-    * BOTH versions: the pre-delete pin is unmasked (full corpus), the
-    * delete's own version applies exactly the recorded generation
-    * (complement). The oracle computes both rollups relationally; at a
-    * degenerate SF where the range is empty the delete mints nothing
-    * and both sides read the full (= complement) corpus on both
-    * engines. */
-  def dvTimeTravelPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-dvtt").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    GlprMaintenance.deleteIdRangeMergeOnRead(root, 150L, 349L): Unit
-    val last = listManifestVersions(root).lastOption.getOrElse(1L)
-    def rollup(v: Long, phase: String): DataFrame =
-      spark.read.format("graft.io.GlprSource")
-        .option("versionAsOf", v.toString).load(root)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("id_sum"))
-        .withColumn("phase", lit(phase))
-    rollup(math.min(1L, last), "pre").unionByName(rollup(last, "post"))
-      .select("phase", "lang", "n_docs", "id_sum")
-  }
-
-  /** q344 — MERGE-ON-READ PREDICATE DELETE (`DELETE WHERE lang IN
-    * (…)` at zero data movement): the staged corpus value-deleted
-    * through [[GlprMaintenance.deleteWhereMergeOnRead]] — one
-    * distributed matching job, fresh immutable dv generations of the
-    * matched ids, ONE versioned manifest commit — then the live view
-    * rolled up: every read pays the mask at the id gate, so the oracle
-    * (the complement rollup) certifies the mask is row-exact. The
-    * capped-mask refusal toward COW and the time-travel/idempotence
-    * contracts are GlprDvIntegritySpec-pinned. */
-  def valueDeleteMorPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-valuedel").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    GlprMaintenance.deleteWhereMergeOnRead(
-      spark, root, "lang", Set("de", "zh")): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
-
-  /** q361 — MERGE-ON-READ UPDATE (round-19 verdict #1): the staged
-    * corpus normalized (`UPDATE SET lang = 'und' WHERE lang IN ('de',
-    * 'zh')`) through [[GlprMaintenance.updateWhereMergeOnRead]] — the
-    * matched rows MASKED by fresh dv generations, their replacements
-    * (assignment applied) appended distributed, ONE versioned manifest
-    * commit for both — then the live view rolled up BY the updated
-    * column. Rows move between groups, so a replacement lost, a victim
-    * unmasked, or a double-appear all break the hash against the
-    * relational oracle. COW-equality, bytes-bounded-by-matches,
-    * time-travel/CDF compose and idempotent re-run are
-    * GlprDvIntegritySpec-pinned. */
-  def updateMorPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-morupd").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartitionByRange(8, col("doc_id")), root)
-    GlprMaintenance.updateWhereMergeOnRead(
-      spark, root, "lang", Set("de", "zh"), "lang", "und"): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
-
-  /** q365 — MERGE-ON-READ MERGE (CDC-apply priced by the changeset):
-    * the corpus `doc_id < 300` staged, then a source slice `[100, 500)`
-    * with re-cased text upserted through
-    * [[GlprMaintenance.mergeMergeOnRead]] — `[100, 300)` are MATCHED
-    * (masked + replaced), `[300, 500)` INSERT — in one versioned
-    * commit. The oracle recomputes the merged state relationally; the
-    * hash certifies matched rows appear exactly once (new text), kept
-    * rows exactly once (old text), inserts exactly once. */
-  def mergeMorPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-mormerge").toString
-    val docs = Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    write(docs.filter(col("doc_id") < 300L)
-      .repartitionByRange(6, col("doc_id")), root)
-    GlprMaintenance.mergeMergeOnRead(spark, root,
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 500L)
-        .withColumn("text", upper(col("text")))): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
-
-  /** q345 — WRITE-AUDIT-PUBLISH (the Iceberg WAP pattern at manifest
-    * size): slice 1 INSERTed to main; a branch forked and slice 2
-    * STAGED onto it (`branch` writer option — on disk, owned by the
-    * branch chain, invisible to main readers); the AUDIT reads the
-    * branch head (`branch` reader option) and finds zero out-of-domain
-    * rows, so the branch PUBLISHES — one main commit adopting its
-    * lines. A second branch staged with garbage (lang='xx') FAILS its
-    * audit, is DROPPED, and vacuum reclaims its shards — main never saw
-    * them. The oracle is the two published slices exactly: a staging
-    * leak into main, a lost published row, or surviving garbage all
-    * break the hash. Isolation/vacuum-safety/append-only pins live in
-    * GlprDvIntegritySpec. */
-  def wapPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-wap").toString
-    val docs = Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    write(docs.filter(col("doc_id") < 100L).coalesce(2), root) // main
-    createBranch(root, "staging")
-    docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-      .coalesce(2).write.format("graft.io.GlprSource")
-      .option("branch", "staging").mode("append").save(root)
-    def audit(b: String): Long = spark.read.format("graft.io.GlprSource")
-      .option("branch", b).load(root)
-      .filter(col("lang") === "xx").count()
-    if (audit("staging") == 0L) publishBranch(root, "staging"): Unit
-    createBranch(root, "reject")
-    docs.filter(col("doc_id") < 50L)
-      .select((col("doc_id") + 9000000L).as("doc_id"),
-        lit("xx").as("lang"), col("source"), col("text"))
-      .coalesce(1).write.format("graft.io.GlprSource")
-      .option("branch", "reject").mode("append").save(root)
-    if (audit("reject") == 0L) publishBranch(root, "reject"): Unit
-    else { dropBranch(root, "reject"); GlprMaintenance.vacuum(root): Unit }
-    spark.read.format("graft.io.GlprSource").load(root)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-  }
-
-  /** q346 — the WAP AUDIT-FIX-PUBLISH loop (round-18 verdict #1): main
-    * holds slice 1; a branch forked, slice 2 staged onto it WITH
-    * garbage (a lang='xx' family and a corrupt out-of-domain id block).
-    * The SQL audit — `VERSION AS OF 'fixup'` — FINDS the bad rows;
-    * instead of dropping the whole branch (q345's only failed-audit
-    * exit), the branch is FIXED IN PLACE: `CALL sys.delete_where_mor
-    * (…, branch)` masks the lang garbage and a branch-scoped id-range
-    * MoR delete masks the corrupt block — both in the branch's own
-    * delete-vector namespace (`dvb=` tokens), invisible to main. The
-    * re-audit comes back clean, the branch PUBLISHES (masks translated
-    * to shared dv generations in the same flip), and the chain drops.
-    * Oracle = slice 1 + the FIXED slice 2 exactly: a mask leak into
-    * main, a mask lost at publish, or surviving garbage all break the
-    * hash. Isolation / translation / phantom-apply pins live in
-    * GlprDvIntegritySpec. */
-  /** q366 — WAP audit-FIX-publish with a branch-scoped MoR UPDATE:
-    * slice 2 staged onto a branch with a planted mislabel (every 10th
-    * doc lang='xx'), the AUDIT finds them, and the fix is an IN-PLACE
-    * `update_where_mor(..., branch)` — victims masked in the branch's
-    * dv namespace, relabeled replacements adopted onto the branch
-    * chain, ONE branch commit — then the re-audit passes and the
-    * branch PUBLISHES (masks translate to shared generations, the
-    * replacement lines adopt, one main commit). q346 closed the loop
-    * for deletes; this closes it for the far more common "fix the
-    * label, keep the row". Oracle = slice 1 + the relabeled slice 2
-    * exactly: a leaked mislabel, a lost replacement, or a double-appear
-    * all break the hash. */
-  def branchUpdateFixPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    catalogScenario(spark, "glpr_bu") { (s2, root) =>
-      createDocs(s2, "glpr_bu.ns.t")
-      s2.sql("INSERT INTO glpr_bu.ns.t SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      val path = new java.io.File(root, "ns/t").getAbsolutePath
-      createBranch(path, "relabel")
-      val docs = Tables(s2, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-        .select(col("doc_id"),
-          when(col("doc_id") % 10 === 0L, lit("xx"))
-            .otherwise(col("lang")).as("lang"),
-          col("source"), col("text"))
-        .coalesce(2).write.format("graft.io.GlprSource")
-        .option("branch", "relabel").mode("append").save(path)
-      def badCount(): Long = s2.sql(
-        "SELECT count(*) FROM glpr_bu.ns.t VERSION AS OF 'relabel' " +
-          "WHERE lang = 'xx'").collect()(0).getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) stages no mislabels —
-      // the fix is then a no-op and publish adopts the slice as-is
-      if (badCount() > 0L) {
-        GlprMaintenance.updateWhereMergeOnRead(s2, path,
-          "lang", Set("xx"), "lang", "und",
-          branch = Some("relabel")): Unit
-        require(badCount() == 0L, "q366 branch update left mislabels behind")
-      }
-      // the fix is invisible to main until publish
-      require(spark.read.format("graft.io.GlprSource").load(path)
-        .count() == s2.sql("SELECT count(*) FROM glpr_bu.ns.t " +
-          "WHERE doc_id < 100").collect()(0).getLong(0),
-        "q366 branch staging leaked into main before publish")
-      publishBranch(path, "relabel"): Unit
-      spark.read.format("graft.io.GlprSource").load(path)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("id_sum"),
-          sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-    }
-  }
-
-  def branchFixPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    catalogScenario(spark, "glpr_fix") { (s2, root) =>
-      createDocs(s2, "glpr_fix.ns.t")
-      s2.sql("INSERT INTO glpr_fix.ns.t SELECT doc_id, lang, source, text " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      val path = new java.io.File(root, "ns/t").getAbsolutePath
-      createBranch(path, "fixup")
-      val docs = Tables(s2, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-      docs.filter(col("doc_id") >= 100L && col("doc_id") < 300L)
-        .coalesce(2).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      docs.filter(col("doc_id") < 40L)
-        .select((col("doc_id") + 9000000L).as("doc_id"),
-          lit("xx").as("lang"), col("source"), col("text"))
-        .coalesce(1).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      docs.filter(col("doc_id") < 25L)
-        .select((col("doc_id") + 9500000L).as("doc_id"), col("lang"),
-          col("source"), lit("CORRUPT").as("text"))
-        .coalesce(1).write.format("graft.io.GlprSource")
-        .option("branch", "fixup").mode("append").save(path)
-      def badCount(): Long = s2.sql(
-        "SELECT count(*) FROM glpr_fix.ns.t VERSION AS OF 'fixup' " +
-          "WHERE lang = 'xx' OR doc_id >= 9000000").collect()(0).getLong(0)
-      // an all-empty corpus (RegistryEmptySpec) stages no garbage —
-      // the fix loop is then a no-op and publish flips nothing
-      if (badCount() > 0L) {
-        s2.sql(
-          "CALL glpr_fix.sys.delete_where_mor('ns.t', 'lang', 'xx', 'fixup')")
-          .collect(): Unit
-        GlprMaintenance.deleteIdRangeMergeOnRead(path, 9000000L,
-          Long.MaxValue, Some("fixup")): Unit
-        require(badCount() == 0L, "q346 branch fix left garbage behind")
-      }
-      // main must not have seen the staging OR the masks until publish
-      require(spark.read.format("graft.io.GlprSource").load(path)
-        .count() == s2.sql("SELECT count(*) FROM glpr_fix.ns.t " +
-          "WHERE doc_id < 100").collect()(0).getLong(0),
-        "q346 branch staging leaked into main before publish")
-      publishBranch(path, "fixup"): Unit
-      dropBranch(path, "fixup"): Unit
-      spark.read.format("graft.io.GlprSource").load(path)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("id_sum"),
-          max(col("doc_id")).cast("long").as("max_id"))
-    }
-  }
-
-  /** q326 — SQL `UPDATE` through the row-level-operation front door
-    * (round-16 verdict #2): the corpus in a catalog table, then plain
-    * `UPDATE … SET source = 'curated', text = concat(text, ' [ok]')
-    * WHERE doc_id < 100` — Spark rewrites it into a group-based
-    * copy-on-write ReplaceData over [[GlprRowLevelOperation]]: scanned
-    * shards are rewritten under fresh names and swapped in ONE manifest
-    * flip. The oracle applies the same assignments relationally; hash
-    * equality certifies no row was lost (the classic COW bug: a
-    * replaced shard's NON-matching rows must be copied — pinned by the
-    * group-prune-only scan contract), none double-updated, none
-    * spuriously updated. */
-  def sqlUpdatePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_upd") { (s2, _) =>
-      createDocs(s2, "glpr_upd.corpus.docs")
-      s2.sql("INSERT INTO glpr_upd.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("UPDATE glpr_upd.corpus.docs " +
-        "SET source = 'curated', text = concat(text, ' [ok]') " +
-        "WHERE doc_id < 100")
-      s2.sql(
-        """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-          |FROM glpr_upd.corpus.docs GROUP BY lang, source""".stripMargin)
-    }
-
-  /** q327 — SQL `MERGE INTO` (the lakehouse upsert): a deterministic
-    * updates source derived from the documents table — rows
-    * `[100, 300)` as matched updates (re-sourced + uppercased), rows
-    * `< 50` re-keyed to `doc_id + 1000000` as not-matched inserts —
-    * merged into the catalog table by plain SQL. The whole statement is
-    * ONE group-based ReplaceData commit. The oracle recomputes the
-    * merged state relationally: a missed/duplicated match, a lost
-    * unmatched row, or a dropped insert all break the hash. */
-  def sqlMergePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_mrg") { (s2, _) =>
-      createDocs(s2, "glpr_mrg.corpus.docs")
-      s2.sql("INSERT INTO glpr_mrg.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        s"""MERGE INTO glpr_mrg.corpus.docs t
-           |USING (
-           |  SELECT doc_id, lang, 'merged' AS source, upper(text) AS text
-           |  FROM parquet.`$dir/documents.parquet`
-           |  WHERE doc_id >= 100 AND doc_id < 300
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, lang, 'inserted', text
-           |  FROM parquet.`$dir/documents.parquet` WHERE doc_id < 50
-           |) u
-           |ON t.doc_id = u.doc_id
-           |WHEN MATCHED THEN UPDATE SET t.source = u.source, t.text = u.text
-           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      s2.sql(
-        """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS n_bytes
-          |FROM glpr_mrg.corpus.docs GROUP BY source, lang""".stripMargin)
-    }
-
-  /** q338 — CDC-APPLY through ONE SQL MERGE, every clause class in one
-    * statement (the first real MERGE a lakehouse user writes after
-    * q327's upsert): the events changelog is split at its temporal
-    * midpoint; the FIRST half is compacted relationally (latest change
-    * per key) and INSERTed as the table's seed state — plus sentinel
-    * rows the changelog never references — and the SECOND half,
-    * compacted to one latest change per key, is applied as a single
-    * `MERGE` with `WHEN MATCHED AND tombstone THEN DELETE`, `WHEN
-    * MATCHED THEN UPDATE`, `WHEN NOT MATCHED AND non-tombstone THEN
-    * INSERT`, and `WHEN NOT MATCHED BY SOURCE THEN DELETE` (purging the
-    * sentinels — the snapshot-reconciliation idiom). Latest-wins makes
-    * split-compact-apply equal to compacting the WHOLE changelog, so
-    * the read-back hash-matches the q207 window-rank oracle exactly.
-    * The CDC state is ENCODED into the fixed GLPR record layout
-    * (user_id→doc_id, last_type→lang, last_event_id→source,
-    * last_value→text; double→string→double round-trips exactly by
-    * Double.toString's shortest-unique-decimal contract) and decoded on
-    * read-back. The whole apply is ONE group-based ReplaceData commit. */
-  def cdcMergeSqlPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    catalogScenario(spark, "glpr_cdc",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true") { (s2, _) =>
-      val chg = graft.streaming.Events.convertTs(
-          s2.read.parquet(s"$dir/events.parquet"))
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id"), col("event_type"), col("value"))
-      chg.createOrReplaceTempView("glpr_cdc_changelog")
-      val mm = chg.agg(min("ts_ms"), max("ts_ms"), max("user_id")).head()
-      val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
-      // sentinel keys land strictly past every real user_id at ANY
-      // scale (a fixed base could collide with a larger fixture and
-      // turn a sentinel into a duplicate real row)
-      val sentinelBase =
-        (if (mm.isNullAt(2)) 0L else math.max(mm.getLong(2), 0L)) + 1000L
-      createDocs(s2, "glpr_cdc.state.compacted")
-      s2.sql(
-        s"""INSERT INTO glpr_cdc.state.compacted
-           |SELECT user_id AS doc_id, last.event_type AS lang,
-           |       CAST(last.event_id AS STRING) AS source,
-           |       CAST(last.value AS STRING) AS text
-           |FROM (SELECT user_id,
-           |        max(struct(ts_ms, event_id, event_type, value)) AS last
-           |      FROM glpr_cdc_changelog WHERE ts_ms <= $mid GROUP BY user_id)
-           |WHERE last.event_type <> 'error'
-           |UNION ALL
-           |SELECT $sentinelBase + id, 'sentinel', '0', '0.0' FROM range(5)
-           |""".stripMargin)
-      s2.sql(
-        s"""MERGE INTO glpr_cdc.state.compacted t
-           |USING (
-           |  SELECT user_id, last.event_id AS ev_id,
-           |         last.event_type AS ev_type, last.value AS ev_value
-           |  FROM (SELECT user_id,
-           |          max(struct(ts_ms, event_id, event_type, value)) AS last
-           |        FROM glpr_cdc_changelog WHERE ts_ms > $mid GROUP BY user_id)
-           |) u
-           |ON t.doc_id = u.user_id
-           |WHEN MATCHED AND u.ev_type = 'error' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET t.lang = u.ev_type,
-           |  t.source = CAST(u.ev_id AS STRING), t.text = CAST(u.ev_value AS STRING)
-           |WHEN NOT MATCHED AND u.ev_type <> 'error' THEN
-           |  INSERT (doc_id, lang, source, text)
-           |  VALUES (u.user_id, u.ev_type, CAST(u.ev_id AS STRING),
-           |          CAST(u.ev_value AS STRING))
-           |WHEN NOT MATCHED BY SOURCE AND t.lang = 'sentinel' THEN DELETE
-           |""".stripMargin)
-      s2.sql(
-        """SELECT doc_id AS user_id, CAST(source AS BIGINT) AS last_event_id,
-          |       lang AS last_type, CAST(text AS DOUBLE) AS last_value
-          |FROM glpr_cdc.state.compacted""".stripMargin)
-    }
-  }
-
-  /** q339 — TYPED SCHEMA EVOLUTION + METADATA-ONLY RENAME end to end
-    * (round-17 verdict #2): the corpus INSERTed under the base schema,
-    * `ALTER TABLE ADD COLUMN n_tokens BIGINT` + `ADD COLUMN score
-    * DOUBLE`, a second slice INSERTed WITH typed values (BIGINT/DOUBLE
-    * ride the byte stream as strings — `Long.toString`/`Double.toString`
-    * round-trip bit-exactly — and readers parse to the declared type),
-    * then `RENAME COLUMN n_tokens TO tok_count` — metadata-only: the
-    * marker token re-labels, shard sidecars keep the immutable physical
-    * name. The aggregate reads the MIXED layout under the renamed
-    * logical name: pre-evolution shards surface typed NULLs, evolved
-    * shards surface parsed values. Score values are exact binary
-    * fractions (quarters), so the double sum is order-independent. The
-    * oracle rebuilds the mixed typed table relationally. */
-  def typedEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_tev") { (s2, _) =>
-      createDocs(s2, "glpr_tev.corpus.docs")
-      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN n_tokens BIGINT")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs ADD COLUMN score DOUBLE")
-      s2.sql("INSERT INTO glpr_tev.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "CAST(octet_length(text) AS BIGINT) AS n_tokens, " +
-        "CAST(doc_id + 1000000 AS DOUBLE) / 4.0 AS score " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql("ALTER TABLE glpr_tev.corpus.docs RENAME COLUMN n_tokens TO tok_count")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(count(tok_count) AS BIGINT) AS n_typed,
-          | coalesce(CAST(sum(tok_count) AS BIGINT), 0) AS tok_sum,
-          | coalesce(round(sum(score), 6), CAST(0.0 AS DOUBLE)) AS score_sum
-          |FROM glpr_tev.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q362 — TYPE-WIDENING `ALTER COLUMN` end to end (round-19 verdict
-    * #3, the Iceberg-safe promotions): a table created with NARROW
-    * typed extras (`score INT`, `conf FLOAT`), a narrow era INSERTed,
-    * `ALTER COLUMN score TYPE BIGINT` + `ALTER COLUMN conf TYPE
-    * DOUBLE` — metadata-only: the marker token's type changes, shard
-    * sidecars keep each shard's write-time type — then a WIDE era
-    * INSERTed with values only the wide types hold (score past 2³¹).
-    * The aggregate spans both eras: readers bind decode kinds from the
-    * TABLE tokens ([[extraSlots]]), so narrow shards parse their
-    * decimal text straight to the wide type. Conf values are exact
-    * binary fractions (quarters/eighths), so the double sum is
-    * order-independent and the float→double re-parse is value-exact.
-    * The oracle rebuilds both eras relationally; unsafe-change
-    * rejections are GlprCatalogSpec-pinned. */
-  def typeWideningPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_tw") { (s2, _) =>
-      createDocs(s2, "glpr_tw.corpus.docs", extraCols = "score INT, conf FLOAT")
-      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "CAST(doc_id % 100 AS INT) AS score, " +
-        "CAST(doc_id % 8 AS FLOAT) / 4 AS conf " +
-        s"FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN score TYPE BIGINT")
-      s2.sql("ALTER TABLE glpr_tw.corpus.docs ALTER COLUMN conf TYPE DOUBLE")
-      s2.sql("INSERT INTO glpr_tw.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "doc_id + 4000000000 AS score, " +
-        "CAST(doc_id % 16 AS DOUBLE) / 8 AS conf " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(score) AS BIGINT) AS score_sum,
-          | CAST(sum(conf) AS DOUBLE) AS conf_sum
-          |FROM glpr_tw.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q363 — `ADD COLUMN ... DEFAULT <literal>` end to end (round-19
-    * verdict #6, the Iceberg INITIAL-default): a three-era table —
-    * era 1 under the base schema; `ADD COLUMN tier STRING` (default
-    * null, the q332 compat) then era 2 WITH tier values; `ADD COLUMN
-    * rank BIGINT DEFAULT 7` then era 3 WITH rank values. At read the
-    * marker-stored literal serves every shard that PREDATES the
-    * column — era-1 and era-2 shards surface rank 7 with zero shard
-    * touches, era-1 surfaces tier NULL (no default stored) — while
-    * post-evolution rows carry their own bytes. The aggregate spans
-    * all three eras; the oracle rebuilds them relationally. Explicit
-    * NULL-stays-NULL and non-literal refusals are
-    * GlprCatalogSpec-pinned. */
-  def addDefaultPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_dflt") { (s2, _) =>
-      createDocs(s2, "glpr_dflt.corpus.docs")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_dflt.corpus.docs ADD COLUMN tier STRING")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 200")
-      s2.sql("ALTER TABLE glpr_dflt.corpus.docs " +
-        "ADD COLUMN rank BIGINT DEFAULT 7")
-      s2.sql("INSERT INTO glpr_dflt.corpus.docs " +
-        "SELECT doc_id + 2000000, lang, source, text, " +
-        "concat('t', CAST(doc_id % 3 AS STRING)) AS tier, " +
-        "doc_id % 5 AS rank " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(count(tier) AS BIGINT) AS n_tier,
-          | CAST(sum(rank) AS BIGINT) AS rank_sum
-          |FROM glpr_dflt.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q347 — `ALTER TABLE DROP COLUMN` as a METADATA TOMBSTONE
-    * (round-18 verdict #2): two extras added (`note` STRING, `keep`
-    * BIGINT) and a slice INSERTed with values for both; `DROP COLUMN
-    * note` then removes the extra's marker token — one atomic metadata
-    * write, zero shard touches — and BURNS its physical name in the
-    * tombstone list. Scans exclude the column on MIXED shards (shards
-    * that still carry the bytes skip them via their sidecar layout;
-    * the q339 physical-name indirection is what makes the skip exact),
-    * a re-add of the same name REJECTS (re-binding would resurrect the
-    * dead bytes), the surviving extra keeps reading, and a post-drop
-    * slice INSERTs under the narrowed schema. Base columns keep
-    * rejecting. The oracle rebuilds the three-era table relationally;
-    * catalog pins (ifExists, partition-column guard, rename-then-drop)
-    * live in GlprCatalogSpec. */
-  def dropColumnPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_drop") { (s2, _) =>
-      createDocs(s2, "glpr_drop.corpus.docs")
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN note STRING")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs ADD COLUMN keep BIGINT")
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('n-', lang) AS note, " +
-        "CAST(octet_length(text) AS BIGINT) AS keep " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql("ALTER TABLE glpr_drop.corpus.docs DROP COLUMN note")
-      // the dropped name is BURNED: re-adding must refuse, or the old
-      // shards' note bytes would re-bind under the new column
-      val readd =
-        try { s2.sql("ALTER TABLE glpr_drop.corpus.docs " +
-          "ADD COLUMN note STRING"); None }
-        catch { case e: Throwable => Some(e) }
-      require(readd.exists { e =>
-        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-          .exists(t => Option(t.getMessage).exists(_.contains("dropped")))
-      }, s"q347 contract: re-adding a dropped column must refuse, got $readd")
-      // post-drop inserts carry the NARROWED schema (base + keep)
-      s2.sql("INSERT INTO glpr_drop.corpus.docs " +
-        "SELECT doc_id + 2000000, lang, source, text, " +
-        "CAST(doc_id AS BIGINT) AS keep " +
-        s"FROM parquet.`$dir/documents.parquet` " +
-        "WHERE doc_id >= 100 AND doc_id < 200")
-      val res = s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(count(keep) AS BIGINT) AS n_keep,
-          | coalesce(CAST(sum(keep) AS BIGINT), 0) AS keep_sum
-          |FROM glpr_drop.corpus.docs GROUP BY lang""".stripMargin)
-      require(!s2.table("glpr_drop.corpus.docs").columns.contains("note"),
-        "q347 contract: the dropped column must leave the table schema")
-      res
-    }
-
-  /** q340 — SIDECAR STATISTICS driving the broadcast decision
-    * (round-17 verdict #3): the corpus staged as a GLPR table whose
-    * commit sidecars surface (a) per-column stats — doc_id min/max/NDV,
-    * byte-counter avg lengths — through the DSv2 `columnStats` channel
-    * into Catalyst `attributeStats` (exact values GlprSpec-pinned), and
-    * (b) a PUSHDOWN-AWARE `sizeInBytes`/`numRows`: the scan scales each
-    * shard by its bounds overlap with the pushed doc_id range and drops
-    * statically-pruned shards, so the estimate is the scan OUTPUT, not
-    * the corpus total. The selective `doc_id < 50` probe estimates ~50
-    * rows (~16 KB) — under the 32 KB broadcast threshold — while the
-    * unfiltered corpus (~MBs at sf0.1) and the events fact side sit
-    * above it, so the join plans as BroadcastHashJoin at EVERY SF —
-    * asserted in-pipeline (the plan is the deliverable; the
-    * filtered-vs-full estimate and the no-broadcast control are
-    * GlprSpec-pinned). The oracle certifies the join result itself. */
-  def cboStatsJoinPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-cbostats").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-      .repartition(4), root)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    s2.conf.set("spark.sql.cbo.enabled", "true")
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", (32 * 1024).toString)
-    val corpus = s2.read.format("graft.io.GlprSource").load(root)
-      .filter(col("doc_id") < 50L).select(col("doc_id"), col("lang"), col("text"))
-    val ev = s2.read.parquet(s"$dir/events.parquet")
-      .select(col("user_id").as("doc_id"))
-    val res = ev.join(corpus, Seq("doc_id"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-    val plan = res.queryExecution.executedPlan.toString
-    require(plan.contains("BroadcastHashJoin"),
-      "q340 contract: CBO + sidecar column stats must broadcast the " +
-        s"range-filtered corpus side\n$plan")
-    rematerialize(spark, res)
-  }
-
-  /** q332 — SCHEMA EVOLUTION end to end: the corpus INSERTed under the
-    * base schema, `ALTER TABLE ADD COLUMN note STRING`, then a second
-    * slice INSERTed WITH the new column — the directory now mixes
-    * pre-evolution shards (no `note` field in their byte streams) and
-    * post-evolution shards (appended nullable field). The aggregate
-    * reads across both: old rows surface `note` as NULL (default-null
-    * read compat via the sidecar `cols=` channel), new rows carry their
-    * values. The oracle rebuilds the mixed table relationally — a
-    * misread field boundary or a non-null default breaks the hash. */
-  def addColumnPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_evo") { (s2, _) =>
-      createDocs(s2, "glpr_evo.corpus.docs")
-      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql("ALTER TABLE glpr_evo.corpus.docs ADD COLUMN note STRING")
-      s2.sql("INSERT INTO glpr_evo.corpus.docs " +
-        "SELECT doc_id + 1000000, lang, source, text, " +
-        "concat('tag-', source) AS note " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 100")
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(count(note) AS BIGINT) AS n_notes,
-          | CAST(sum(octet_length(coalesce(note, ''))) AS BIGINT) AS note_bytes,
-          | CAST(sum(octet_length(text)) AS BIGINT) AS text_bytes
-          |FROM glpr_evo.corpus.docs GROUP BY lang""".stripMargin)
-    }
-
-  /** q333 — DATE PARTITIONING, `PARTITIONED BY (days(ts))` over an
-    * ISO-8601 string column (the extra-column machinery supplies `ts`):
-    * each document gets a deterministic day (`2024-01-0(1 + doc_id%7)`),
-    * the INSERT self-clusters by day (the write's REQUIRED transform
-    * distribution, resolved through the catalog's empty-namespace
-    * transform functions — round 18; no manual DISTRIBUTE BY), and
-    * the query reads a two-day window — the scan prunes to the window's
-    * shards via the sidecar day sets (plan-pinned in GlprCatalogSpec).
-    * The oracle derives the same days relationally. */
-  def daysPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_days",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_days.corpus.docs", partitionedBy = "days(ts)",
-        extraCols = "ts STRING")
-      s2.sql("INSERT INTO glpr_days.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-01'), " +
-        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        """SELECT substr(ts, 1, 10) AS day, lang,
-          | CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_days.corpus.docs
-          |WHERE ts >= '2024-01-03' AND ts < '2024-01-05'
-          |GROUP BY 1, 2""".stripMargin)
-    }
-
-  /** q341 — MONTH PARTITIONING, `PARTITIONED BY (months(ts))` (round-17
-    * verdict #4): the same prefix-transform channel as q333's days —
-    * month = the first 7 ISO chars, tracked per shard at write time —
-    * with a one-month window read pruning to the month's shards via the
-    * sidecar month sets (prune pin in GlprCatalogSpec). Oracle derives
-    * the same deterministic months. */
-  def monthsPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_mon",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_mon.corpus.docs", partitionedBy = "months(ts)",
-        extraCols = "ts STRING")
-      s2.sql("INSERT INTO glpr_mon.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-15'), " +
-        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        """SELECT substr(ts, 1, 7) AS month, lang,
-          | CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_mon.corpus.docs
-          |WHERE ts >= '2024-02' AND ts <= '2024-02-29T23:59:59'
-          |GROUP BY 1, 2""".stripMargin)
-    }
-
-  /** q349 — PARTITION-SPEC EVOLUTION (round-18 verdict #4): era 1
-    * INSERTed under `days(ts)`; `CALL sys.set_partition_spec('…',
-    * 'months(ts)')` mints the new spec era — one atomic marker write;
-    * era 2 INSERTs then cluster and track sidecar values under
-    * months(). ONE predicate window straddling both eras prunes BOTH:
-    * shards keep their own recorded spec (`pcol`) and the scan
-    * truncates the raw bounds to each shard's width (days-era shards
-    * compare 10-char days, months-era shards 7-char months — prefix
-    * images preserve string order at every width, so each era's prune
-    * stays exact). Pruning is required in-pipeline via the plan events;
-    * per-era skip counts and the straddling-boundary exactness are
-    * GlprCatalogSpec-pinned. The oracle derives both eras relationally. */
-  def specEvolutionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    var tablePath = ""
-    val out = catalogScenario(spark, "glpr_sev",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, root) =>
-      createDocs(s2, "glpr_sev.corpus.docs", partitionedBy = "days(ts)",
-        extraCols = "ts STRING")
-      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-01-01'), " +
-        "  CAST(doc_id % 7 AS INT)), 'yyyy-MM-dd'), 'T12:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id < 250")
-      s2.sql("CALL glpr_sev.sys.set_partition_spec('corpus.docs', " +
-        "'months(ts)')").collect(): Unit
-      s2.sql("INSERT INTO glpr_sev.corpus.docs " +
-        "SELECT doc_id, lang, source, text, " +
-        "concat(date_format(date_add(to_date('2024-03-15'), " +
-        "  CAST((doc_id % 4) * 20 AS INT)), 'yyyy-MM-dd'), 'T08:00:00') AS ts " +
-        s"FROM parquet.`$dir/documents.parquet` WHERE doc_id >= 250")
-      tablePath = new java.io.File(root, "corpus/docs").getAbsolutePath
-      s2.sql(
-        """SELECT substr(ts, 1, 7) AS month,
-          | CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_sev.corpus.docs
-          |WHERE ts >= '2024-01-03' AND ts < '2024-04-20'
-          |GROUP BY 1""".stripMargin)
-    }
-    // the scan recorded its prune under the (now deleted) table path;
-    // an all-empty corpus (RegistryEmptySpec) has only empty shards,
-    // which always keep — the prune contract only binds on data
-    if (out.count() > 0)
-      Option(planEvents.get(tablePath)).foreach { case (kept, total) =>
-        // both eras contribute out-of-window shards (Jan 01/02 days,
-        // the May month) — the straddling window must prune
-        require(total < 2 || kept < total,
-          s"q349 contract: the window must prune mixed-era shards " +
-            s"(kept $kept of $total)")
-      }
-    out
-  }
-
-  /** q352 — AUTOMATIC per-shard value statistics (round 19): the corpus
-    * ingested as four per-feed slices (each append holds a quarter of
-    * the sources) with NO partition spec — the natural shape of
-    * multi-feed ingestion — and a two-source probe still prunes ¾ of
-    * the shards: every writer records its shard's distinct lang/source
-    * sets in the sidecar (`vlang=`/`vsource=`, capped at 32 like the
-    * partition channel), the per-file column statistics that make value
-    * predicates prune on ANY layout that happened to cluster. The
-    * residual row filter keeps the result exact either way (a mixed
-    * shard keeps), so the oracle certifies rows; the prune is required
-    * in-pipeline and pinned (with the legacy no-token fallback) in
-    * GlprCatalogSpec. */
-  def valueStatsPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-valstats").toString
-    val docs = Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text")
-    (0 until 4).foreach { g =>
-      val srcs = (0 until 20).filter(_ % 4 == g).map(i => s"src$i")
-      write(docs.filter(col("source").isin(srcs: _*)).coalesce(2), root)
-    }
-    val res = spark.read.format("graft.io.GlprSource").load(root)
-      .filter(col("source").isin("src2", "src6"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"),
-        sum(octet_length(col("text"))).cast("long").as("n_bytes"))
-    val out = res.collect()
-    if (out.nonEmpty)
-      Option(planEvents.get(root)).foreach { case (kept, total) =>
-        require(total < 2 || kept < total,
-          s"q352 contract: the source probe must prune un-partitioned " +
-            s"per-feed shards via the automatic value sets ($kept of $total)")
-      }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(out.toSeq.asJava, res.schema)
-  }
-
-  /** q342 — TRUNCATE PARTITIONING, `PARTITIONED BY (truncate(4,
-    * source))` (round-17 verdict #4): prefix width 4 over the src
-    * labels, tracked per shard; an IN probe on the raw column relaxes
-    * to its prefix image and prunes to the matching shards (residual
-    * keeps rows exact — 'src1' covers src1 and src10-19). The last of
-    * the Iceberg transform family on the same sidecar channel. */
-  def truncatePartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_trn",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_trn.corpus.docs", partitionedBy = "truncate(4, source)")
-      s2.sql("INSERT INTO glpr_trn.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_trn.corpus.docs
-          |WHERE source IN ('src7', 'src12')
-          |GROUP BY 1, 2""".stripMargin)
-    }
-
-  /** q334 — HASH-BUCKET PARTITIONING, `PARTITIONED BY (bucket(8,
-    * doc_id))`: bucket id = floorMod(doc_id, 8), tracked per shard at
-    * write time; a point-probe predicate (`doc_id IN (…)`) prunes to
-    * the probed buckets' shards even though the id LAYOUT is
-    * arbitrary — the lookup path hash layouts exist for. The oracle is
-    * the same point lookup relationally; the shard-skip pin lives in
-    * GlprCatalogSpec. */
-  def bucketPartitionPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_bkt",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { (s2, _) =>
-      createDocs(s2, "glpr_bkt.corpus.docs", partitionedBy = "bucket(8, doc_id)")
-      s2.sql("INSERT INTO glpr_bkt.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      s2.sql(
-        """SELECT doc_id, lang, source
-          |FROM glpr_bkt.corpus.docs
-          |WHERE doc_id IN (0, 8, 17, 42, 97)""".stripMargin)
-    }
-
-  /** q335 — `TIMESTAMP AS OF` through the SQL front door: three slice
-    * INSERTs, the version files' mtimes (the commit clock — immutable
-    * once CAS-linked) pinned to a FIXED schedule (t0, t0+10s, t0+20s),
-    * then a read pinned between the second and third commits — exactly
-    * the first two slices. Pinning the clock is what makes a
-    * wall-time-addressed read oracle-DETERMINISTIC; production Delta
-    * reads the same clock off its log files. Degenerate SFs clamp like
-    * q311 (empty slices mint nothing; the pin then resolves to the
-    * newest committed state, and the oracle's slice gating matches). */
-  def timestampAsOfPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val t0 = 1700000000000L
-    catalogScenario(spark, "glpr_ts") { (s2, root) =>
-      createDocs(s2, "glpr_ts.corpus.docs")
-      // degenerate-SF determinism: skip empty slices (q316's guard),
-      // so versions = nonempty slices and the oracle's gate matches
-      Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300", "doc_id >= 300")
-        .foreach { p =>
-          val n = s2.sql("SELECT count(*) AS n FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0)
-          if (n > 0)
-            s2.sql("INSERT INTO glpr_ts.corpus.docs " +
-              s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet` " +
-              s"WHERE $p")
-        }
-      val tdir = new java.io.File(root, "corpus/docs").getAbsolutePath
-      // pin the DURABLE commit clock (header + mtime mirror) to the
-      // fixed schedule the oracle's pin arithmetic assumes
-      listManifestVersions(tdir).foreach { v =>
-        pinVersionCommitMs(tdir, v, t0 + (v - 1) * 10000L)
-      }
-      // an all-empty corpus mints no versions: read the (empty) live view
-      val pin = if (listManifestVersions(tdir).isEmpty) ""
-        else s" TIMESTAMP AS OF timestamp_millis(${t0 + 15000L}L)"
-      s2.sql(
-        s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           | CAST(max(doc_id) AS BIGINT) AS max_id
-           |FROM glpr_ts.corpus.docs$pin
-           |GROUP BY lang""".stripMargin)
-    }
-  }
-
-  /** q336 — RECLUSTER (OPTIMIZE): the corpus staged HASH-distributed
-    * (every shard's bounds straddle the whole id space — the layout
-    * where bounds pruning is toothless), then `CALL sys.recluster` —
-    * one shuffle job rewrites it range-clustered behind one manifest
-    * flip — and a doc_id range read afterwards PRUNES (plan-pinned in
-    * GlprCatalogSpec). The oracle is the range rollup: hash equality
-    * certifies the rewrite moved every row exactly once. */
-  def reclusterPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = TempDirs.scratch("graft-glpr-recluster").toString
-    write(Tables(spark, dir, "documents")
-      .select("doc_id", "lang", "source", "text").repartition(8), root)
-    GlprMaintenance.recluster(spark, root, nShards = 8): Unit
-    spark.read.format("graft.io.GlprSource").load(root)
-      .filter(col("doc_id") >= 100 && col("doc_id") < 300)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q337 — STREAMING CHANGE DATA CAPTURE ([[GlprCdfMicroBatchStream]]):
-    * the q328 staging's WHOLE history consumed as a CDF stream under
-    * `Trigger.AvailableNow` — one micro-batch per manifest version, in
-    * commit order (appends as inserts, the retiring DELETE's shards as
-    * deletes, the re-append as inserts), aggregated in complete mode
-    * and settled. The oracle derives the same change totals
-    * relationally, gated on the q328 all-slices-nonempty condition; an
-    * append-only (degenerate) history streams pure inserts. Per-version
-    * batch boundaries, offset restarts and the CoW remove+re-add shape
-    * are GlprSpec-pinned. */
-  def cdfStreamPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val root = cdfStagedRoot(spark, dir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    val agg = s2.readStream.format("graft.io.GlprSource")
-      .option("changeMode", "cdf").load(root)
-      .groupBy(col("_change_type"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).cast("long").as("id_sum"))
-    val name = s"glpr_cdf_stream_${cdfStreamCounter.incrementAndGet()}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    val settled = s2.table(name)
-    val outSchema = settled.schema
-    val rows = graft.streaming.Events.guardedSettleRows(settled)
-    s2.catalog.dropTempView(name)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toSeq.asJava, outSchema)
-  }
-  private val cdfStreamCounter =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q343 — STREAMING MERGE through the SQL front door (round-17
-    * verdict #8; the Delta `readChangeFeed → foreachBatch MERGE`
-    * idiom): a SOURCE catalog table builds a five-step history — three
-    * slice INSERTs, a CoW DELETE of the middle slice (remove+re-add
-    * physics), a MoR delete-vector delete (dv-delta physics) — and a
-    * CDF STREAM replays it one version per micro-batch into a TARGET
-    * catalog table, each batch applied by ONE SQL MERGE: the batch is
-    * first netted to one row per key (a CoW rewrite emits remove+re-add
-    * of the same id in one version — the insert side wins), then
-    * `WHEN MATCHED AND delete THEN DELETE / WHEN MATCHED THEN UPDATE /
-    * WHEN NOT MATCHED AND insert THEN INSERT`. After the stream drains
-    * (AvailableNow), the target must equal the source's LIVE view —
-    * incremental ingest end-to-end SQL, certified by the batch oracle.
-    * Empty slices skip their INSERT and gate off the deletes (the
-    * q335/q337 determinism guard), mirrored by the oracle's `ok`
-    * gate. */
-  def streamCdfMergePipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    catalogScenario(spark, "glpr_scm") { (s2, root) =>
-      createDocs(s2, "glpr_scm.state.source")
-      createDocs(s2, "glpr_scm.state.target")
-      val slices = Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 300",
-        "doc_id >= 300")
-      val counts = slices.map(p => s2.sql("SELECT count(*) AS n FROM " +
-        s"parquet.`$dir/documents.parquet` WHERE $p").head().getLong(0))
-      slices.zip(counts).foreach { case (p, n) =>
-        if (n > 0)
-          s2.sql("INSERT INTO glpr_scm.state.source " +
-            "SELECT doc_id, lang, source, text FROM " +
-            s"parquet.`$dir/documents.parquet` WHERE $p")
-      }
-      val srcPath = new java.io.File(root, "state/source").getAbsolutePath
-      if (counts.forall(_ > 0)) {
-        GlprMaintenance.deleteIdRange(s2, srcPath, 100L, 299L)       // CoW
-        GlprMaintenance.deleteIdRangeMergeOnRead(srcPath, 0L, 49L): Unit // MoR
-      }
-      val stream = s2.readStream.format("graft.io.GlprSource")
-        .option("changeMode", "cdf").load(srcPath)
-      val q = stream.writeStream
-        .option("checkpointLocation",
-          new java.io.File(root, "ckpt").getAbsolutePath)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val s = b.sparkSession
-          b.createOrReplaceTempView("glpr_scm_batch")
-          s.sql(
-            """MERGE INTO glpr_scm.state.target t
-              |USING (
-              |  SELECT doc_id, last.lang AS lang, last.source AS source,
-              |         last.text AS text, last.ct AS ct
-              |  FROM (SELECT doc_id, max(struct(
-              |          CASE WHEN _change_type = 'insert' THEN 1 ELSE 0 END AS r,
-              |          lang, source, text, _change_type AS ct)) AS last
-              |        FROM glpr_scm_batch GROUP BY doc_id)
-              |) u
-              |ON t.doc_id = u.doc_id
-              |WHEN MATCHED AND u.ct = 'delete' THEN DELETE
-              |WHEN MATCHED THEN UPDATE SET t.lang = u.lang,
-              |  t.source = u.source, t.text = u.text
-              |WHEN NOT MATCHED AND u.ct <> 'delete' THEN
-              |  INSERT (doc_id, lang, source, text)
-              |  VALUES (u.doc_id, u.lang, u.source, u.text)
-              |""".stripMargin): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      s2.sql(
-        """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM glpr_scm.state.target GROUP BY lang""".stripMargin)
-    }
-
-  /** Shared staging for the partitioned-table entries (q304/q306):
-    * CREATE ... PARTITIONED BY (lang) + one clustered INSERT, once per
-    * dir; returns a fresh session with the catalog bound. AQE
-    * partition coalescing is pinned off for the INSERT so the clustered
-    * shards stay SINGLE-lang at test scale (at corpus scale lang
-    * clusters dwarf the advisory size and never coalesce) — the
-    * single-valued-shard invariant q306's metadata-only grouped count
-    * needs. The whole staging is the build, so a failed INSERT is
-    * retried by the next call instead of leaving an empty table. */
-  private def partitionedTableSession(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.SparkSession = {
-    val root = TempDirs.once(s"glpr-partitioned#$dir") {
-      val root = TempDirs.scratch("graft-glpr-partitioned").toString
-      val s2 = freshCatalogSession(spark, "glpr_part", root)
-      s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      createDocs(s2, "glpr_part.corpus.docs", partitionedBy = "lang")
-      s2.sql("INSERT INTO glpr_part.corpus.docs " +
-        s"SELECT doc_id, lang, source, text FROM parquet.`$dir/documents.parquet`")
-      root
-    }
-    freshCatalogSession(spark, "glpr_part", root)
-  }
-
-  /** q300 — GLPR-to-GLPR streaming relay: the staged corpus consumed
-    * through the custom SOURCE (admission-controlled micro-batches),
-    * filtered in flight (the schema-preserving gate an ingest relay
-    * applies), and written through the custom streaming SINK
-    * ([[GlprStreamingWrite]], epoch-idempotent shards) under
-    * `Trigger.AvailableNow` — custom source AND custom sink in one
-    * streaming query, the full connector loop closed. The relayed corpus
-    * is then read back through the batch scan and aggregated; the oracle
-    * is the same filter + aggregate over the parquet originals. */
-  def streamRelayPipeline(spark: org.apache.spark.sql.SparkSession,
-      dir: String, minTextBytes: Int = 50): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val sink = TempDirs.once(s"glpr-relay#$dir#$minTextBytes") {
-      val out = TempDirs.scratch("graft-glpr-relay")
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = s2.readStream.format("graft.io.GlprSource")
-        .option("maxShardsPerTrigger", "2").load(stagedPath(spark, dir))
-        .filter(octet_length(col("text")) >= minTextBytes)
-        .writeStream.format("graft.io.GlprSource")
-        .option("path", out.resolve("data").toString)
-        .option("checkpointLocation", out.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      out.resolve("data").toString
-    }
-    spark.read.format("graft.io.GlprSource").load(sink)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** Hash-distributed staging — the ANTI-clustered layout (q307): every
-    * shard holds a hash-spread slice of the id space, so its sidecar
-    * min/max spans (almost) everything and BOUNDS can prune nothing;
-    * only the sidecar blooms can. The unclustered case is what most
-    * corpora look like before any layout discipline is applied. */
-  private[io] def hashStagedPath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    TempDirs.once(s"glpr-hashed#$dir") {
-      val root = TempDirs.scratch("graft-glpr-hashed").toString
-      write(Tables(spark, dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .repartition(8, org.apache.spark.sql.functions.col("doc_id")), root)
-      root
-    }
-
-  /** q307 — BLOOM runtime pruning on an UNCLUSTERED corpus: the same
-    * selectively-filtered broadcast dim join as q295, but over the
-    * hash-distributed staging where every shard's id bounds span the
-    * corpus — so any shard skip is attributable to the sidecar BLOOMS
-    * alone (the Delta/parquet bloom-index trick: membership pruning
-    * where min/max is blind). Bloom-skip + stripped-bloom decline are
-    * GlprSpec-pinned; the oracle is the plain parquet join. */
-  def bloomPrunedDimJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val facts = spark.read.format("graft.io.GlprSource")
-      .load(hashStagedPath(spark, dir))
-    val dim = Tables(spark, dir, "supplier")
-      .filter(col("s_nationkey") === 3)
-      .select(col("s_suppkey").as("dim_id"))
-    facts.join(broadcast(dim), col("doc_id") === col("dim_id"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q295 — runtime (DPP-style) shard pruning end to end: GLPR facts
-    * joined on `doc_id` to a SELECTIVELY-FILTERED broadcast dimension
-    * (suppliers of one nation). The dimension filter is opaque to static
-    * pushdown (no doc_id bounds derivable from `s_nationkey = 3` at plan
-    * time); only the materialized broadcast key set, handed to
-    * [[GlprScan.filter]] by Spark's runtime filtering, can prune — so
-    * the shard-skip observed in [[planEvents]] is attributable to
-    * runtime pruning alone. Oracle is the plain parquet join. */
-  def runtimePrunedDimJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val facts = spark.read.format("graft.io.GlprSource")
-      .load(rangeStagedPath(spark, dir))
-    val dim = Tables(spark, dir, "supplier")
-      .filter(col("s_nationkey") === 3)
-      .select(col("s_suppkey").as("dim_id"))
-    facts.join(broadcast(dim), col("doc_id") === col("dim_id"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-  }
-
-  /** q285: the staged shards consumed as a STREAM through the connector's
-    * [[GlprMicroBatchStream]] and rolled into a per-language profile —
-    * certifying the custom streaming-source path (offsets, per-trigger
-    * shard planning, the same pruning reader) against the identical batch
-    * oracle. Complete-mode memory settle, re-materialized on the caller's
-    * session (the [[graft.streaming.Events]] settle shape; the collect
-    * goes through Events' shared row-cap guard — round-14 verdict closed
-    * the bypass here). */
-  def streamedLangProfile(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    langProfileVia(spark, dir) { (agg, name) =>
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-  /** q288: the same settled profile via `Trigger.AvailableNow` under
-    * `maxShardsPerTrigger` admission control — the "catch up then stop"
-    * backfill: the stream snapshots the staged shards, drains them in
-    * ⌈N/limit⌉ bounded micro-batches (never the whole corpus in one),
-    * TERMINATES on its own, and still settles to the identical batch
-    * oracle. The ⌈N/limit⌉-triggers contract itself is pinned in
-    * GlprSpec with staged shard arrivals. */
-  def backfillLangProfile(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxShardsPerTrigger: Int = 2): DataFrame =
-    langProfileVia(spark, dir,
-      readOpts = Map("maxShardsPerTrigger" -> maxShardsPerTrigger.toString)) {
-      (agg, name) =>
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // AvailableNow self-terminates once the snapshot is drained — the
-        // await IS the termination contract under test
-        try q.awaitTermination() finally q.stop()
-    }
-
-  /** q305 — SHARD-PRUNED STREAMING: the range-disjoint staged corpus
-    * ([[rangeStagedPath]]) consumed as a stream with an OPTION-seeded
-    * doc_id bound (`maxDocId` — streaming scans never see Catalyst
-    * filter pushdown, so bounds ride reader options, the Kafka
-    * startingOffsets idiom), so each micro-batch plans only the shards
-    * whose sidecar bounds intersect the range ([[GlprMicroBatchStream
-    * .planInputPartitions]]) — the streaming twin of q295's batch
-    * pruning: backfilling one id slice of a 100 TB corpus reads the
-    * slice, not the corpus. The redundant WHERE keeps the row semantics
-    * declared in the query itself. Settles to the identical filtered
-    * batch oracle; the shard-skip itself is GlprSpec-pinned. */
-  def streamedPrunedProfile(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxId: Long = 250L): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    val path = rangeStagedPath(spark, dir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = s2.readStream.format("graft.io.GlprSource")
-      .option("maxDocId", (maxId - 1).toString).load(path)
-      .filter(col("doc_id") < maxId)
-    val agg = stream.groupBy("lang").agg(count(lit(1)).as("n_docs"),
-      sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-    val name = s"graft_glpr_pruned_stream_${glprStreamCounter.incrementAndGet()}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val settled = s2.table(name)
-    val outSchema = settled.schema
-    val rows = graft.streaming.Events.guardedSettleRows(settled)
-    s2.catalog.dropTempView(name)
-    spark.createDataFrame(rows.toSeq.asJava, outSchema)
-  }
-
-  private def langProfileVia(spark: org.apache.spark.sql.SparkSession,
-      dir: String, readOpts: Map[String, String] = Map.empty)(
-      run: (DataFrame, String) => Unit): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    val path = stagedPath(spark, dir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    var reader = s2.readStream.format("graft.io.GlprSource")
-    readOpts.foreach { case (k, v) => reader = reader.option(k, v) }
-    val stream = reader.load(path)
-    val agg = stream.groupBy("lang").agg(count(lit(1)).as("n_docs"),
-      sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-    val name = s"graft_glpr_stream_${glprStreamCounter.incrementAndGet()}"
-    run(agg, name)
-    val settled = s2.table(name)
-    val outSchema = settled.schema
-    val rows = graft.streaming.Events.guardedSettleRows(settled)
-    s2.catalog.dropTempView(name)
-    spark.createDataFrame(rows.toSeq.asJava, outSchema)
-  }
-  private val glprStreamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q292 — the INGEST FRONT DOOR capstone, composing this round's
-    * admission control with the idempotent-MERGE egress: GLPR shards
-    * streamed under `maxShardsPerTrigger` (so the backlog arrives as
-    * MULTIPLE micro-batches — the one thing q268's single-batch file
-    * source can never exercise) through a `foreachBatch` keep-first
-    * dedup MERGE into a versioned parquet target, then read back.
-    *
-    * Merge algebra (the [[graft.streaming.Events.mergeBatchInto]]
-    * snapshot + atomic-pointer convention, with dedup state instead of
-    * latest-wins): per content hash keep `min(keeper_doc_id)` and
-    * `sum(n_docs)` — both folds associative and commutative, so ANY
-    * partitioning of records into micro-batches compacts to the same
-    * state, and the final snapshot equals the one-shot batch dedup (the
-    * DuckDB oracle). batchId-pointer check makes at-least-once replays
-    * no-ops (pinned by re-merging under the committed id); the snapshot
-    * publishes by atomic `_meta` rename, so a crash never exposes a
-    * half-written state. State is one row per distinct content — bounded
-    * by corpus uniqueness, not stream length.
-    *
-    * Cross-batch keeper/count correctness (duplicates SPLIT across
-    * batches must still fold to the global min/total) is pinned in
-    * GlprSpec with a 5-shard staged corpus under limit 2. */
-  def ingestDedupMerge(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxShardsPerTrigger: Int = 2): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val rootStr = TempDirs.once(s"glpr-ingest#$dir#$maxShardsPerTrigger") {
-      runIngestDedupMerge(spark, stagedPath(spark, dir), maxShardsPerTrigger)
-    }
-    readSnapshotPointer(java.nio.file.Paths.get(rootStr)) match {
-      case Some((_, snapshot)) => spark.read.parquet(snapshot)
-      case None => // empty corpus: no batch ever committed — typed empty
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("content_hash",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("keeper_doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_docs",
-              org.apache.spark.sql.types.LongType))))
-    }
-  }
-
-  /** Drive one AvailableNow ingest over `path`'s shards into a fresh
-    * merge target; returns the target root. Exposed for the GlprSpec
-    * staged-shards pin. */
-  private[io] def runIngestDedupMerge(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxShardsPerTrigger: Int): String = {
-    import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    val root = TempDirs.scratch("graft-glpr-ingest")
-    val src = s2.readStream.format("graft.io.GlprSource")
-      .option("maxShardsPerTrigger", maxShardsPerTrigger.toString).load(path)
-      .select(md5(col("text")).as("content_hash"),
-        col("doc_id").as("keeper_doc_id"), lit(1L).as("n_docs"))
-    val q = src.writeStream
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .foreachBatch((b: DataFrame, id: Long) => dedupMergeBatchInto(root, b, id))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // deliberate at-least-once replay under the committed batchId: the
-    // pointer check must no-op it (delivery content is irrelevant once
-    // the id is committed — replaying the WHOLE corpus is the stronger pin)
-    readSnapshotPointer(root).foreach { case (lastId, _) =>
-      val all = spark.read.format("graft.io.GlprSource").load(path)
-        .select(md5(col("text")).as("content_hash"),
-          col("doc_id").as("keeper_doc_id"), lit(1L).as("n_docs"))
-      dedupMergeBatchInto(root, all, lastId)
-    }
-    root.toString
-  }
-
-  /** One idempotent per-batch dedup MERGE (see [[ingestDedupMerge]]). */
-  private[io] def dedupMergeBatchInto(root: java.nio.file.Path,
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val meta = readSnapshotPointer(root)
-    if (meta.exists(_._1 >= batchId)) return // replayed batch: no-op
-    val spark = batch.sparkSession
-    val delta = batch.select("content_hash", "keeper_doc_id", "n_docs")
-    val state = meta match {
-      case Some((_, v)) => spark.read.parquet(v).unionByName(delta)
-      case None => delta
-    }
-    val compacted = state.groupBy("content_hash")
-      .agg(min(col("keeper_doc_id")).as("keeper_doc_id"),
-        sum(col("n_docs")).as("n_docs"))
-    val vdir = root.resolve(s"v$batchId")
-    compacted.write.mode("overwrite").parquet(vdir.toString)
-    val tmp = root.resolve("_meta.tmp")
-    java.nio.file.Files.writeString(tmp, s"$batchId,$vdir")
-    java.nio.file.Files.move(tmp, root.resolve("_meta"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Committed (lastBatchId, snapshot path) pointer, None before the
-    * first commit — the Events.readMergeMeta convention. */
-  private[io] def readSnapshotPointer(root: java.nio.file.Path): Option[(Long, String)] = {
-    val f = root.resolve("_meta")
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val parts = java.nio.file.Files.readString(f).trim.split(",", 2)
-      Some((parts(0).toLong, parts(1)))
-    }
-  }
-
   /** Committed shards only: the `_tmp-…` stage files a crashed or
     * speculative writer task leaves behind (its `abort()` never ran) are
     * NEVER visible to readers — batch scan, streaming listing and
@@ -2414,7 +463,7 @@ object GlprSource {
     * history is unknown). */
   private[io] def entryName(line: String): String =
     line.trim.split("\\s+").head
-  private[io] def entryDvGen(line: String): Option[Long] =
+  private[graft] def entryDvGen(line: String): Option[Long] =
     line.trim.split("\\s+").iterator.drop(1).collectFirst {
       case t if t.startsWith("dv=") => t.stripPrefix("dv=").toLong
     }
@@ -2669,7 +718,7 @@ object GlprSource {
     * header line in place and mirrors the instant into the mtime for
     * the legacy fallback. Never called by any production path — version
     * files are immutable once linked. */
-  private[io] def pinVersionCommitMs(path: String, v: Long, ms: Long): Unit = {
+  private[graft] def pinVersionCommitMs(path: String, v: Long, ms: Long): Unit = {
     val f = versionFile(path, v)
     val body = new String(java.nio.file.Files.readAllBytes(f.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -3567,7 +1616,7 @@ object GlprSource {
   }
   /** Live manifest ENTRIES (lines) — or the adopted directory listing
     * (bare names) for a manifest-less dir. */
-  private[io] def committedEntries(path: String): Seq[String] =
+  private[graft] def committedEntries(path: String): Seq[String] =
     readManifest(path) match {
       case Some(lines) => lines.filter(isShardLine)
       case None => listShardFiles(path).map(_.getName).toSeq
@@ -3842,7 +1891,7 @@ object GlprSource {
     * (kept, total) of the scan's LAST `planInputPartitions` per corpus
     * path — with runtime filtering the last planning is the
     * post-runtime-filter one. Test-only surface; never read by plans. */
-  private[io] val planEvents =
+  private[graft] val planEvents =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
 
   private[io] sealed trait GlprInputPartition extends InputPartition {

@@ -2,9 +2,12 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import com.univocity.parsers.csv.CsvParser
 import graft.matrix.CooMatrix
 
 /** Typed readers over the driver's parquet testdata (TESTDATA.md) and the
@@ -98,9 +101,29 @@ object CsvSources {
 
   /** The wide visits table (Keyword, one column per hour, TotalClicks) read
     * as strings — hour column set is data-dependent (FIXTURES.md: hours 4
-    * and 5 are absent). */
-  def readVisitsWide(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    * and 5 are absent). The header line is read on the driver and parsed
+    * by the parser and naming rules of Spark's own CSV inference, so the
+    * read gets the all-string schema inference would give without running
+    * its job. A path that is not one file, or a file with no header line,
+    * takes the inferring read. */
+  def readVisitsWide(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    val file = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = new CSVOptions(Map("header" -> "true"), columnPruning = false,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val isFile = scala.util.Try(file.getFileSystem(conf).getFileStatus(file).isFile)
+      .getOrElse(false)
+    val header = if (!isFile) None else CSVUtils.readHeaderLine(file, options, conf)
+      .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+    header match {
+      case Some(row) =>
+        val names = CSVUtils.makeSafeHeader(row,
+          spark.conf.get("spark.sql.caseSensitive").toBoolean, options)
+        reader.schema(StructType(names.toSeq.map(StructField(_, StringType)))).csv(path)
+      case None => reader.csv(path)
+    }
+  }
 
   /** The hour names of the wide header that `visits` was melted from. */
   def headerHours(visits: CooMatrix): Seq[String] =

@@ -535,8 +535,8 @@ object Events {
   }
 
   /** The ONE sanctioned collect on a settled memory-sink stream — every
-    * settle path in graft (this harness AND the GLPR connector's
-    * [[graft.io.GlprSource.streamedLangProfile]]/backfill settles, which
+    * settle path in graft (this harness AND the GLPR scenarios'
+    * [[graft.GlprScenarios.streamedLangProfile]]/backfill settles, which
     * bypassed the cap until the round-14 verdict flagged it) must route
     * its materialization through this guard.
     *

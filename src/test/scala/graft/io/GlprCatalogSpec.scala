@@ -363,11 +363,11 @@ class GlprCatalogSpec extends AnyFunSuite {
   test("q304 staging that fails at its INSERT is retried by the next call, not read as empty") {
     val dir = TempDirs.scratch("graft-glpr-retry")
     // no documents.parquet yet: CREATE TABLE commits, the INSERT throws
-    intercept[Exception](GlprSource.partitionedCatalogPipeline(spark, dir.toString))
+    intercept[Exception](graft.GlprScenarios.partitionedCatalogPipeline(spark, dir.toString))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${TestSpark.sfDir}/documents.parquet"),
       dir.resolve("documents.parquet"))
-    def rows(d: String) = GlprSource.partitionedCatalogPipeline(spark, d)
+    def rows(d: String) = graft.GlprScenarios.partitionedCatalogPipeline(spark, d)
       .collect().map(_.toString).sorted.toSeq
     val got = rows(dir.toString)
     assert(got.nonEmpty, "the retried staging must hold the corpus")
@@ -1783,7 +1783,7 @@ class GlprCatalogSpec extends AnyFunSuite {
         .getOrElse(Set.empty)
     val before = glprDirs()
     val runs = (1 to 3).map(_ =>
-      GlprSource.catalogSqlPipeline(spark, TestSpark.sfDir).collect()
+      graft.GlprScenarios.catalogSqlPipeline(spark, TestSpark.sfDir).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq)
     assert(runs.head.nonEmpty)
     assert(runs.forall(_ == runs.head))

@@ -12,7 +12,7 @@ class GlprSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
-  private def glpr = GlprSource.documentsVia(spark, dir)
+  private def glpr = graft.GlprScenarios.documentsVia(spark, dir)
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
     .select("doc_id", "lang", "source", "text")
 
@@ -384,7 +384,7 @@ class GlprSpec extends AnyFunSuite {
   }
 
   test("row contract (createReader) equals the columnar reader on the same shard, pruned + filtered") {
-    val root = GlprSource.stagedPath(spark, dir)
+    val root = graft.GlprScenarios.stagedPath(spark, dir)
     val shard = GlprSource.committedShards(root).head.getAbsolutePath
     val f = new GlprReaderFactory(idAndText, GlprSource.IdRange(50L, 300L)) // pushed id bounds
     val (viaRows, viaBatches) = rowsAndBatches(f, GlprSource.GlprPartition(shard))
@@ -434,9 +434,9 @@ class GlprSpec extends AnyFunSuite {
     shard(Seq((11L, "dup"), (3L, "c")), "part-0000000002.glpr")
     shard(Seq((4L, "d")), "part-0000000003.glpr")
     shard(Seq((12L, "dup"), (5L, "e")), "part-0000000004.glpr")
-    val target = GlprSource.runIngestDedupMerge(spark, root, maxShardsPerTrigger = 2)
-    val (lastId, snapshot) = GlprSource.readSnapshotPointer(
-      java.nio.file.Paths.get(target)).get
+    val target = TempDirs.scratch("graft-glpr-ingest")
+    graft.GlprScenarios.runIngestDedupMerge(spark, root, maxShardsPerTrigger = 2, target)
+    val (lastId, snapshot) = graft.GlprScenarios.readSnapshotPointer(target).get
     assert(lastId >= 2, s"5 shards under limit 2 must commit >= 3 batches, got $lastId")
     val got = spark.read.parquet(snapshot).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -603,12 +603,12 @@ class GlprSpec extends AnyFunSuite {
   }
 
   test("q307 end to end: the registry-form DPP join bloom-prunes the hash-staged corpus") {
-    val joined = GlprSource.bloomPrunedDimJoin(spark, dir)
+    val joined = graft.GlprScenarios.bloomPrunedDimJoin(spark, dir)
     assert(joined.collect().nonEmpty)
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"runtime filter missing from the q307 plan:\n${plan.take(1500)}")
-    val (kept, total) = GlprSource.planEvents.get(GlprSource.hashStagedPath(spark, dir))
+    val (kept, total) = GlprSource.planEvents.get(graft.GlprScenarios.hashStagedPath(spark, dir))
     assert(kept < total,
       s"the broadcast key set must bloom-prune hash shards: kept $kept of $total")
   }
@@ -1430,7 +1430,7 @@ class GlprSpec extends AnyFunSuite {
 
   test("q300 streaming sink: epoch-named shards, multiple epochs under admission control") {
     val dir2 = TestSpark.sfDir
-    graft.io.GlprSource.streamRelayPipeline(spark, dir2).collect() // ensure relay ran
+    graft.GlprScenarios.streamRelayPipeline(spark, dir2).collect() // ensure relay ran
     // find the relay sink dir through a fresh run on a scratch copy is
     // overkill — inspect the epoch naming contract via a direct write
     import spark.implicits._

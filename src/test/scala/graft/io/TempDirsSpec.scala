@@ -73,6 +73,27 @@ class TempDirsSpec extends AnyFunSuite {
     assert(!TempDirs.registered.contains(seen))
   }
 
+  test("path-staged GLPR scenarios leave no scratch behind, and their frames outlive the call") {
+    import scala.jdk.CollectionConverters._
+    val spark = graft.TestSpark.spark
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def glprDirs(): Set[String] =
+      Option(tmp.list()).map(_.filter(_.startsWith("graft-glpr-")).toSet)
+        .getOrElse(Set.empty)
+    def registered(): Set[java.nio.file.Path] = TempDirs.registered.asScala.toSet
+    val (registeredBefore, dirsBefore) = (registered(), glprDirs())
+    val frames = for {
+      _ <- 1 to 2
+      scenario <- Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        graft.GlprScenarios.compactionPipeline, graft.GlprScenarios.rowDeletePipeline)
+    } yield scenario(spark, graft.TestSpark.sfDir)
+    assert(registered() === registeredBefore)
+    assert(glprDirs() === dirsBefore)
+    val rows = frames.map(_.collect().map(_.toString).sorted.toSeq)
+    assert(rows.forall(_.nonEmpty))
+    assert(rows(0) === rows(2) && rows(1) === rows(3))
+  }
+
   /** (file name, previous line, line), trimmed, for every line of
     * `src/main/scala` that matches `pattern`. */
   private def sourceHits(pattern: scala.util.matching.Regex)
@@ -109,12 +130,31 @@ class TempDirsSpec extends AnyFunSuite {
       s"band keys come from Dedup.bandKeys alone; found $keys")
   }
 
+  test("GLPR scenarios live outside graft.io, and stage scratch only through once or their one scoped helper") {
+    val io = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/io"))
+    val inIo = try {
+      import scala.jdk.CollectionConverters._
+      io.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala
+          .filter(l => "def \\w+Pipeline|catalogScenario".r.findFirstIn(l).isDefined)
+          .map(l => s"${f.getFileName}: ${l.trim}")
+      }.toList
+    } finally io.close()
+    assert(inIo.isEmpty, s"registry scenarios belong in graft.GlprScenarios; found $inIo")
+    val scratch = sourceHits("TempDirs\\.scratch\\(".r).filter(_._1 == "GlprScenarios.scala")
+    assert(scratch.nonEmpty && scratch.forall(_._2.contains("TempDirs.once(")),
+      s"a per-call scenario root must come from the scoped scaffold; found $scratch")
+    val scoped = sourceHits("TempDirs\\.scoped\\(".r).filter(_._1 == "GlprScenarios.scala")
+    assert(scoped.length === 1 && scoped.head._2.contains("private def scenario("),
+      s"GlprScenarios has one scoped helper, `scenario`; found $scoped")
+  }
+
   test("no hand-rolled memo: only TempDirs and GlprSource.planEvents hold a ConcurrentHashMap") {
     val hits = sourceHits(
       "computeIfAbsent|new java\\.util\\.concurrent\\.ConcurrentHashMap".r)
       .map(h => (h._1, h._2))
     val (glpr, rest) = hits.partition(_._1 == "GlprSource.scala")
-    assert(glpr === List(("GlprSource.scala", "private[io] val planEvents =")),
+    assert(glpr === List(("GlprSource.scala", "private[graft] val planEvents =")),
       s"GlprSource may hold only the planEvents map; found $glpr")
     assert(rest.map(_._1).toSet === Set("TempDirs.scala"),
       "a new per-key memo belongs in TempDirs.once, and only once a second " +
